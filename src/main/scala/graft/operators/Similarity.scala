@@ -2,9 +2,11 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import graft.functions.VecDot
+import graft.functions.{PqEncode, PqLut, VecDot}
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Similarity search over an embedding column (`array<float>`).
@@ -231,32 +233,48 @@ object Similarity {
         T.StructField("cnorm2", T.DoubleType, nullable = false))))
   }
 
-  /** Final centroids only — the PQ per-subspace trainer's view of
-    * [[trainKmeans]]. */
-  private def trainKmeansOn(emb: DataFrame, idCol: String, vecCol: String,
-                            k: Int, iters: Int): IndexedSeq[IndexedSeq[Long]] =
-    trainKmeans(emb, idCol, vecCol, k, iters)._1
-
-  /** The Lloyd loop shared by [[kmeansCodebook]] and
-    * [[kmeansCentroidTable]]: returns the final quantized centroids plus
-    * the final iteration's per-cell (n_vecs, sum_ids) — collected inside
-    * the loop while the quantized input is still cached, so callers
-    * never re-run the assignment after the cache is dropped. */
+  /** [[kmeansCodebook]] and [[kmeansCentroidTable]]'s training: `iters`
+    * Lloyd rounds from the md5 seed codebook. */
   private def trainKmeans(emb: DataFrame, idCol: String, vecCol: String,
                           k: Int, iters: Int)
       : (IndexedSeq[IndexedSeq[Long]], Map[Long, (Long, Long)]) = {
     require(k > 0 && iters > 0)
-    val q = emb.select(col(idCol).cast("long").as("id"),
-        expr(s"transform($vecCol, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-          .as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cents: IndexedSeq[IndexedSeq[Long]] = q
-        .withColumn("h", md5(col("id").cast("string")))
-        .orderBy("h", "id").limit(k)
-        .select("qv").collect()
-        .map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
-      require(cents.size == k, s"corpus smaller than k=$k")
+    val q = microVecs(emb, idCol, vecCol)
+    lloyd(q, md5Seeds(q, k), iters)
+  }
+
+  /** Micro-quantization of an `array<float>` column: each element as
+    * `round(x * 1e6)` BIGINT — the exact-integer unit every quantized
+    * distance in this object is computed in. */
+  private def micro(vecCol: String): Column =
+    expr(s"transform($vecCol, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
+
+  /** (id, qv): BIGINT ids beside the micro-quantized vectors. */
+  private def microVecs(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).cast("long").as("id"), micro(vecCol).as("qv"))
+
+  /** The `k` vectors of an (id, qv) frame with the smallest `md5(id)`
+    * (ties to the lower id), in that order — the deterministic seed set
+    * of every codebook here (portable hash, no RNG), in one collect. */
+  private def md5Seeds(q: DataFrame, k: Int): IndexedSeq[IndexedSeq[Long]] = {
+    val seeds = q.withColumn("h", md5(col("id").cast("string")))
+      .orderBy("h", "id").limit(k)
+      .select("qv").collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
+    require(seeds.size == k, s"corpus smaller than k=$k")
+    seeds
+  }
+
+  /** `iters` Lloyd rounds over an (id, qv) frame from the `init`
+    * centroids (none when `iters = 0`): returns the final centroids plus
+    * the final round's per-cell (n_vecs, sum_ids) — collected inside the
+    * loop while the input is still cached, so callers never re-run the
+    * assignment after the cache is dropped. */
+  private def lloyd(q: DataFrame, init: IndexedSeq[IndexedSeq[Long]], iters: Int)
+      : (IndexedSeq[IndexedSeq[Long]], Map[Long, (Long, Long)]) = {
+    if (iters == 0) (init, Map.empty)
+    else try {
+      q.persist(StorageLevel.MEMORY_AND_DISK)
+      var cents = init
       var stats: Map[Long, (Long, Long)] = Map.empty
       for (_ <- 1 to iters) {
         val assigned = assignKmeansCells(q, cents)
@@ -285,13 +303,8 @@ object Similarity {
     * per-iteration assignment job this returns. */
   private[graft] def kmeansAssignmentForPlan(emb: DataFrame, idCol: String,
                                              vecCol: String, k: Int): DataFrame = {
-    val q = emb.select(col(idCol).cast("long").as("id"),
-      expr(s"transform($vecCol, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-        .as("qv"))
-    val seeds = q.withColumn("h", md5(col("id").cast("string")))
-      .orderBy("h", "id").limit(k)
-      .select("qv").collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
-    assignKmeansCells(q, seeds)
+    val q = microVecs(emb, idCol, vecCol)
+    assignKmeansCells(q, md5Seeds(q, k))
   }
 
   /** Map-side nearest-centroid assignment over quantized vectors: the
@@ -310,7 +323,7 @@ object Similarity {
     val flat = new Array[Long](cents.size * d)
     for (c <- cents.indices; i <- 0 until d) flat(c * d + i) = cents(c)(i)
     q.withColumn("cell", element_at(
-      GraftShim.column(graft.functions.PqEncode(
+      GraftShim.column(PqEncode(
         GraftShim.expression(col("qv")), flat, 1, d, cents.size,
         strict = true)), 1))
   }
@@ -334,24 +347,15 @@ object Similarity {
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
                     k: Int, iters: Int, threshold: Double): DataFrame = {
     require(k > 0 && iters >= 0)
-    val q = emb.select(col(idCol).cast("long").as("id"),
-      expr(s"transform($vecCol, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-        .as("qv"))
-    val cents: IndexedSeq[IndexedSeq[Long]] =
-      if (iters == 0) {
-        val seeds = q.withColumn("h", md5(col("id").cast("string")))
-          .orderBy("h", "id").limit(k)
-          .select("qv").collect().map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
-        require(seeds.size == k, s"corpus smaller than k=$k")
-        seeds
-      } else trainKmeans(emb, idCol, vecCol, k, iters)._1
+    val q = microVecs(emb, idCol, vecCol)
+    val cents = lloyd(q, md5Seeds(q, k), iters)._1
     // persist the assignment: BOTH sides of the in-cell self-join (and
     // the final flag projection) reference it — without the persist each
     // reference re-runs the assignment pass (the unionByName
     // double-compute lesson, generalized)
     val assigned = assignKmeansCells(q, cents)
       .withColumn("n2", vdotLong(col("qv"), col("qv")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val a = assigned.select(col("cell").as("a_cell"), col("id").as("a_id"),
       col("qv").as("a_qv"), col("n2").as("a_n2"))
     val b = assigned.select(col("cell").as("b_cell"), col("id").as("b_id"),
@@ -381,12 +385,20 @@ object Similarity {
     ivfTopK(emb, idCol, vecCol, queryPred, k,
       buildIvfCentroids(emb, idCol, vecCol, nCells))
 
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
+  /** The `k` first rows per `qid` of a (qid, nid, score) frame under
+    * `order`, ties to the lowest `nid` — the selection every top-k search
+    * here ends in, and so the one place `k` is checked. */
+  private def firstK(scored: DataFrame, k: Int, order: Column): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    val w = Window.partitionBy("qid").orderBy(order, col("nid"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), round(col("cos"), 4).as("cos"))
+      .drop("rn")
   }
+
+  /** Cosine top-k, `cos` rounded to 4 places. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    firstK(scored, k, col("cos").desc)
+      .select(col("qid"), col("nid"), round(col("cos"), 4).as("cos"))
 
   /** Embedding-cosine near-duplicate detection: candidate pairs are
     * generated ONLY within sign-LSH buckets (both sides shuffle once on
@@ -429,9 +441,142 @@ object Similarity {
       .agg(round(avg(col("cand").cast("double")), 6).as("avg_candidates"))
   }
 
-  /** recall@k of the ANN result against the exact result, averaged over
-    * queries (self-check harness for the LSH path). */
-  // ---- product quantization (PQ) -------------------------------------
+  // ---- quantized search (PQ, SQ8, BQ, Matryoshka prefix) ---------------
+
+  /** A quantized index over an (id, v) frame, `v` the raw vector: `code`
+    * is the corpus-side encoding, `query` the query-side form, and
+    * `dist(query, code)` the exact BIGINT distance between them
+    * (ascending = nearer), output as `distName`. Every quantized search
+    * is one of three shapes over this value — the broadcast-join top-k
+    * ([[quantizedTopK]]), the broadcast-fold enrich ([[quantizedEnrich]])
+    * and the exact re-rank of a top-k shortlist ([[exactRerank]]) — so
+    * the join, fold and ordering rules exist once, whatever the
+    * quantizer. */
+  private final case class Quantized(code: Column, query: Column,
+                                     dist: (Column, Column) => Column,
+                                     distName: String)
+
+  /** (id, v): the input frame of every quantized search. */
+  private def rawVecs(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+
+  /** Broadcast-join top-k over a quantized index: the queries
+    * (`queryPred` over the (id, v) frame) broadcast against the encoded
+    * corpus, which streams through — no shuffle of the big side. With
+    * `cells` = (corpus (id, cell), query (qid, cell) probes) the join is
+    * restricted to candidates in a probed cell: the (queries × nprobe)
+    * rows broadcast and the corpus streams through one hash join on the
+    * cell key (an item matches at most once — it lives in one cell).
+    * Self-matches are excluded. Returns (qid, nid, distName), the `k`
+    * nearest per query. */
+  private def quantizedTopK(vecs: DataFrame, queryPred: Column, k: Int,
+                            ix: Quantized,
+                            cells: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+    val encoded = vecs.select(col("id"), ix.code.as("code"))
+    val queries = vecs.filter(queryPred)
+      .select(col("id").as("qid"), ix.query.as("qcode"))
+    val pairs = cells match {
+      case None => broadcast(queries).join(encoded, col("qid") =!= col("id"))
+      case Some((corpusCells, probes)) =>
+        encoded.join(corpusCells, Seq("id"))
+          .join(broadcast(queries.join(probes, Seq("qid"))), Seq("cell"))
+          .filter(col("qid") =!= col("id"))
+    }
+    firstK(pairs.select(col("qid"), col("id").as("nid"),
+      ix.dist(col("qcode"), col("code")).as(ix.distName)), k, col(ix.distName))
+  }
+
+  /** Quantized top-k as a STREAM-SAFE enrichment: the corpus is encoded
+    * once and its (id, code) rows are collapsed into ONE broadcast
+    * array; each incoming query row computes its query side and folds
+    * the array to its top-k map-side. No shuffle, no window, no stateful
+    * op — pure projections over a broadcast, so the SAME operator runs on
+    * a batch frame or an append-mode stream (the serving-path shape:
+    * index in RAM, queries arriving). The (distance, nid) struct order
+    * makes `sort_array` rank exactly like [[quantizedTopK]], and the
+    * arithmetic is the same, so results are bit-equal. Scale note: one
+    * executor holds every code; past RAM, shard the corpus into several
+    * broadcast arrays and merge the per-shard top-k (same fold). */
+  private def quantizedEnrich(queries: DataFrame, corpus: DataFrame, k: Int,
+                              ix: Quantized): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
+    val index = corpus.select(struct(col("id"), ix.code.as("code")).as("e"))
+      .agg(sort_array(collect_list(col("e"))).as("corpus"))
+    val scored = transform(col("corpus"), c => struct(
+      ix.dist(col("qcode"), c.getField("code")).as(ix.distName),
+      c.getField("id").as("nid")))
+    val kept = filter(scored, s => s.getField("nid") =!= col("qid"))
+    queries.select(col("id").as("qid"), ix.query.as("qcode"))
+      .crossJoin(broadcast(index))
+      .withColumn("__top", slice(sort_array(kept), 1, k))
+      .select(col("qid"), posexplode(col("__top")).as(Seq("__rank", "s")))
+      .select(col("qid"), col("s").getField("nid").as("nid"),
+        col("s").getField(ix.distName).as(ix.distName))
+  }
+
+  /** The exact second stage every two-stage search shares: fetch ONLY
+    * the shortlisted rows' full vectors and score them exactly (squared
+    * L2 over the micro-quantized vectors — replayable BIGINTs). Returns
+    * (qid, nid, d2), the `k` nearest per query. */
+  private def exactRerank(emb: DataFrame, idCol: String, vecCol: String,
+                          queryPred: org.apache.spark.sql.Column, k: Int,
+                          shortWithScores: DataFrame): DataFrame = {
+    val short = shortWithScores.select("qid", "nid")
+    val q = microVecs(emb, idCol, vecCol)
+    val queries = q.filter(queryPred)
+      .select(col("id").as("qid"), col("qv").as("qqv"))
+    val corpus = q.select(col("id").as("nid"), col("qv").as("nv"))
+    // (queries × shortlist) rows — tiny; broadcast against the corpus
+    val withQ = short.join(broadcast(queries), Seq("qid"))
+    firstK(corpus.join(broadcast(withQ), Seq("nid"))
+      .select(col("qid"), col("nid"),
+        vl2Long(col("qqv"), col("nv")).as("d2")), k, col("d2"))
+  }
+
+  /** Per-subspace PQ codebooks (`cbs(j)(c)` = codeword c of subspace j)
+    * over an (id, qv) frame: the `ksub` lowest-md5(id) vectors, collected
+    * once and sliced into `m` subspaces (one seed set shared by every
+    * subspace), then `iters` Lloyd rounds per subspace over the corpus
+    * SUBVECTORS, so each subquantizer adapts to its own marginal
+    * distribution — 2·m·iters aggregate-only jobs, never rows to the
+    * driver. */
+  private def pqCodebooks(q: DataFrame, m: Int, ksub: Int,
+                          iters: Int): IndexedSeq[IndexedSeq[IndexedSeq[Long]]] = {
+    require(m > 0 && ksub > 0 && iters >= 0)
+    val seeds = md5Seeds(q, ksub)
+    // the dimension comes off the seed rows: no separate probe job
+    val d = seeds.head.size
+    require(d % m == 0, s"dimension $d not divisible by m=$m subspaces")
+    val ds = d / m
+    (0 until m).map { j =>
+      val sub = q.select(col("id"), slice(col("qv"), j * ds + 1, ds).as("qv"))
+      lloyd(sub, seeds.map(_.slice(j * ds, j * ds + ds)), iters)._1
+    }
+  }
+
+  /** PQ index: `code` = m codes per vector (the native
+    * [[graft.functions.PqEncode]], per-subspace argmin, ties to the
+    * lowest index), `query` = the flattened m·ksub per-query LUT (the
+    * native [[graft.functions.PqLut]]), distance = Σ_j lut[j·ksub +
+    * code_j + 1] — m lookups per candidate instead of a d-dim dot. The
+    * codebooks ride inside both expressions as one flat long[]
+    * (`cb((j*ksub + c)*ds + i)`), shipped once per task. */
+  private def pqIndex(vecs: DataFrame, m: Int, ksub: Int, iters: Int): Quantized = {
+    val cbs = pqCodebooks(microVecs(vecs, "id", "v"), m, ksub, iters)
+    val ds = cbs.head.head.size
+    val flat = new Array[Long](m * ksub * ds)
+    for (j <- 0 until m; c <- 0 until ksub; i <- 0 until ds)
+      flat((j * ksub + c) * ds + i) = cbs(j)(c)(i)
+    val qv = GraftShim.expression(micro("v"))
+    Quantized(
+      code = GraftShim.column(PqEncode(qv, flat, m, ds, ksub)),
+      query = GraftShim.column(PqLut(qv, flat, m, ds, ksub)),
+      dist = (lut, codes) => (0 until m)
+        .map(j => element_at(lut,
+          element_at(codes, j + 1).cast("int") + lit(j * ksub + 1)))
+        .reduce(_ + _),
+      distName = "adist")
+  }
 
   /**
    * Product-quantization ADC search (after Jégou et al.'s PQ recipe):
@@ -448,144 +593,24 @@ object Similarity {
    * corpus vectors (shared seed set across subspaces; no RNG), strict
    * `<` folds so code ties take the lowest index, BIGINT squared-L2
    * everywhere — the whole path replays bit-identically in SQL.
+   * `iters = 0` keeps those seed codebooks (one collect job); `iters > 0`
+   * TRAINS them first — that many Lloyd rounds per subspace, the real PQ
+   * index build ([[pqCodebooks]]).
    *
    * Scale shape: encoding is ONE map-side projection against broadcast
    * codebook literals (no join); the search is the brute-ADC form —
    * queries broadcast against the encoded corpus, each pair costing m
    * array lookups instead of a d-dim dot. The production composition
-   * IVF-then-PQ (probe cells, ADC within) follows by feeding
-   * [[ivfTopK]]'s candidate set through the same encoded frame.
+   * IVF-then-PQ is [[ivfPqTopK]].
    *
    * Returns (qid, nid, adist) — approximate squared L2 in micro²-units,
    * ascending = most similar — for the top `k` per query.
    */
-  /** (id, qv) micro-quantized BIGINT projection — the PQ family's
-    * shared input frame. */
-  private def microVecs(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
-    emb.select(col(idCol).cast("long").as("id"),
-      expr(s"transform($vecCol, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-        .as("qv"))
-
-  /** The PQ building blocks over a seed codebook: the encode column
-    * (`codes`: m codes as one array), the per-query flattened LUT
-    * column (`lutf`: m·ksub distances), and the ADC sum. Seeds come
-    * from the `ksub` lowest-md5(id) corpus vectors (shared seed set
-    * across subspaces; deterministic, no RNG). Encode and LUT are the
-    * native [[graft.functions.PqEncode]]/[[graft.functions.PqLut]]
-    * expressions (r20: the HOF forms evaluated interpreted — m·ksub·ds
-    * closure calls per corpus row — and dominated every PQ query). */
-  private final case class PqParts(seeds: IndexedSeq[IndexedSeq[Long]],
-                                   codesCol: Column,
-                                   lutCol: Column,
-                                   adist: Column)
-
-  private def pqParts(q: DataFrame, m: Int, ksub: Int): PqParts = {
-    require(m > 0 && ksub > 0)
-    val seeds: IndexedSeq[IndexedSeq[Long]] = q
-      .withColumn("h", md5(col("id").cast("string")))
-      .orderBy("h", "id").limit(ksub)
-      .select("qv").collect()
-      .map(_.getSeq[Long](0).toIndexedSeq).toIndexedSeq
-    require(seeds.size == ksub, s"corpus smaller than ksub=$ksub")
-    // r19: the dimension comes off the seed rows this collect already
-    // fetched — the seeded PQ paths used to pay a separate 1-row
-    // dimension-probe job per query construction (guide §1.2 job count)
-    val d = seeds.head.size
-    require(d % m == 0, s"dimension $d not divisible by m=$m subspaces")
-    val ds = d / m
-    pqPartsFromCodebooks(seeds,
-      (0 until m).map(j => seeds.map(_.slice(j * ds, j * ds + ds))), m, ds,
-      ksub)
-  }
-
-  /** The PQ column machinery over EXPLICIT per-subspace codebooks
-    * (`cbs(j)(c)` = codeword c of subspace j) — shared by the seeded
-    * and the TRAINED forms. */
-  private def pqPartsFromCodebooks(seeds: IndexedSeq[IndexedSeq[Long]],
-                                   cbs: Seq[IndexedSeq[IndexedSeq[Long]]],
-                                   m: Int, ds: Int, ksub: Int): PqParts = {
-    // flat long[] reference object shipped once per task inside the
-    // native expressions: cb((j*ksub + c)*ds + i)
-    val flat = new Array[Long](m * ksub * ds)
-    for (j <- 0 until m; c <- 0 until ksub; i <- 0 until ds)
-      flat((j * ksub + c) * ds + i) = cbs(j)(c)(i)
-    // ENCODE: per subspace, argmin over the codebook (ties -> lowest)
-    val codesCol = GraftShim.column(graft.functions.PqEncode(
-      GraftShim.expression(col("qv")), flat, m, ds, ksub)).as("codes")
-    val lutCol = GraftShim.column(graft.functions.PqLut(
-      GraftShim.expression(col("qv")), flat, m, ds, ksub)).as("lutf")
-    // the ADC sum stays a plain codegen expression: m flat-LUT lookups
-    // (1-based entry j*ksub + code + 1) — identical values to the old
-    // per-subspace element_at(lut_j, c_j + 1)
-    val adist = pqAdcSum(col("lutf"), j => element_at(col("codes"), j + 1),
-      m, ksub)
-    PqParts(seeds, codesCol, lutCol, adist)
-  }
-
-  /** Σ_j lutf[j·ksub + code_j + 1] — the ADC distance over the
-    * flattened LUT; `codeOf(j)` supplies subspace j's code column. */
-  private def pqAdcSum(lutf: Column, codeOf: Int => Column,
-                       m: Int, ksub: Int): Column =
-    (0 until m)
-      .map(j => element_at(lutf, codeOf(j).cast("int") + lit(j * ksub + 1)))
-      .reduce(_ + _)
-
-  private def pqTopKSelect(scored: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qid").orderBy(col("adist"), col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("adist"))
-  }
-
-  /** TRAINED per-subspace codebooks: one Lloyd run per subspace over
-    * the corpus SUBVECTORS (the shared exact-integer trainer — micro
-    * quantization, md5 seeds, truncating-division updates), so each
-    * 4-dim subquantizer adapts to its own marginal distribution — the
-    * real PQ index build. m·iters driver iterations, each an
-    * aggregates-only job (the standard iterative-ML loop; never rows to
-    * the driver). */
-  private def pqTrainedParts(emb: DataFrame, idCol: String, vecCol: String,
-                             d: Int, m: Int, ksub: Int,
-                             iters: Int): PqParts = {
-    require(m > 0 && ksub > 0 && iters > 0)
-    require(d % m == 0, s"dimension $d not divisible by m=$m subspaces")
-    val ds = d / m
-    val cbs = (0 until m).map { j =>
-      val sub = emb.select(col(idCol).as("__pq_id"),
-        expr(s"slice($vecCol, ${j * ds + 1}, $ds)").as("__pq_sub"))
-      trainKmeansOn(sub, "__pq_id", "__pq_sub", ksub, iters)
-    }
-    pqPartsFromCodebooks(IndexedSeq.empty, cbs, m, ds, ksub)
-  }
-
-  /** [[pqTopK]] with TRAINED codebooks ([[pqTrainedParts]]). */
-  def pqTopKTrained(emb: DataFrame, idCol: String, vecCol: String,
-                    queryPred: org.apache.spark.sql.Column, k: Int,
-                    m: Int, ksub: Int, iters: Int): DataFrame = {
-    require(k > 0)
-    val q = microVecs(emb, idCol, vecCol)
-    val d = emb.select(size(col(vecCol)).as("d")).head.getInt(0)
-    val pq = pqTrainedParts(emb, idCol, vecCol, d, m, ksub, iters)
-    val encoded = q.select(col("id"), pq.codesCol)
-    val queries = q.filter(queryPred)
-      .select(col("id").as("qid"), pq.lutCol)
-    pqTopKSelect(
-      broadcast(queries).join(encoded, col("qid") =!= col("id"))
-        .select(col("qid"), col("id").as("nid"), pq.adist.as("adist")), k)
-  }
-
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: org.apache.spark.sql.Column, k: Int,
-             m: Int, ksub: Int): DataFrame = {
-    require(k > 0)
-    val q = microVecs(emb, idCol, vecCol)
-    val pq = pqParts(q, m, ksub)
-    val encoded = q.select(col("id"), pq.codesCol)
-    val queries = q.filter(queryPred)
-      .select(col("id").as("qid"), pq.lutCol)
-    pqTopKSelect(
-      broadcast(queries).join(encoded, col("qid") =!= col("id"))
-        .select(col("qid"), col("id").as("nid"), pq.adist.as("adist")), k)
+             m: Int, ksub: Int, iters: Int = 0): DataFrame = {
+    val vecs = rawVecs(emb, idCol, vecCol)
+    quantizedTopK(vecs, queryPred, k, pqIndex(vecs, m, ksub, iters))
   }
 
   /**
@@ -595,69 +620,29 @@ object Similarity {
    * cell key at index-build time and a probe touches `nprobe/nCells` of
    * the data), and WITHIN those cells scoring is PQ-ADC over the
    * compressed codes (memory reduction — candidates cost m lookups, no
-   * full vector is fetched). This is the FAISS `IVFx,PQy` shape; both
-   * stages are the deterministic seed-codebook forms, so the whole path
-   * replays in SQL. Returns (qid, nid, adist), top `k` per query.
+   * full vector is fetched). This is the FAISS `IVFx,PQy` shape. By
+   * default both stages are the deterministic seed-codebook forms, so the
+   * whole path replays in SQL; `iters > 0` trains the PQ codebooks (as in
+   * [[pqTopK]]) and `coarseIters > 0` trains the coarse codebook too
+   * ([[kmeansCentroidTable]] — the `IVFx(trained),PQy(trained)` build):
+   * tighter cells raise recall per probe, at the cost of `coarseIters`
+   * extra aggregate-only training passes at index-build time. Returns
+   * (qid, nid, adist), top `k` per query.
    */
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
                 queryPred: org.apache.spark.sql.Column, k: Int,
-                nCells: Int, nprobe: Int, m: Int, ksub: Int): DataFrame = {
-    require(k > 0)
-    val all = prep(emb, idCol, vecCol)
-    val cents = buildIvfCentroids(emb, idCol, vecCol, nCells)
-    val assigned = assignCells(all, cents).select(col("id"), col("cell"))
-    val q = microVecs(emb, idCol, vecCol)
-    val pq = pqParts(q, m, ksub)
-    val encoded = q.select(col("id"), pq.codesCol)
-      .join(assigned, Seq("id"))
-    val qprobes = assignQueryCells(all.filter(queryPred), cents, nprobe)
-      .select(col("id").as("qid"), col("cell"))
-    val queries = q.filter(queryPred)
-      .select(col("id").as("qid"), pq.lutCol)
-      .join(qprobes, Seq("qid"))
-    // (queries × nprobe) rows broadcast; the encoded corpus streams
-    // through one hash join on the cell key — an item matches at most
-    // once (it lives in exactly one cell)
-    pqTopKSelect(
-      encoded.join(broadcast(queries), Seq("cell"))
-        .filter(col("qid") =!= col("id"))
-        .select(col("qid"), col("id").as("nid"), pq.adist.as("adist")), k)
-  }
-
-  /** [[ivfPqTopK]] with TRAINED PQ codebooks ([[pqTrainedParts]]) inside
-    * the cells — the full `IVFx,PQy(trained)` index build. The coarse
-    * IVF quantizer DEFAULTS to the deterministic seed form (keeping the
-    * PQ-training comparison the spec pins clean — which cells are
-    * probed stays fixed); `coarseIters > 0` opts into a Lloyd-trained
-    * coarse codebook too ([[kmeansCentroidTable]] — the
-    * `IVFx(trained),PQy(trained)` build): tighter cells raise recall
-    * per probe, at the cost of `coarseIters` extra aggregate-only
-    * training passes at index-build time. */
-  def ivfPqTopKTrained(emb: DataFrame, idCol: String, vecCol: String,
-                       queryPred: org.apache.spark.sql.Column, k: Int,
-                       nCells: Int, nprobe: Int, m: Int, ksub: Int,
-                       iters: Int, coarseIters: Int = 0): DataFrame = {
-    require(k > 0)
+                nCells: Int, nprobe: Int, m: Int, ksub: Int,
+                iters: Int = 0, coarseIters: Int = 0): DataFrame = {
     require(coarseIters >= 0, "coarseIters must be non-negative")
     val all = prep(emb, idCol, vecCol)
     val cents =
       if (coarseIters == 0) buildIvfCentroids(emb, idCol, vecCol, nCells)
       else kmeansCentroidTable(emb, idCol, vecCol, nCells, coarseIters)
-    val assigned = assignCells(all, cents).select(col("id"), col("cell"))
-    val q = microVecs(emb, idCol, vecCol)
-    val d = emb.select(size(col(vecCol)).as("d")).head.getInt(0)
-    val pq = pqTrainedParts(emb, idCol, vecCol, d, m, ksub, iters)
-    val encoded = q.select(col("id"), pq.codesCol)
-      .join(assigned, Seq("id"))
-    val qprobes = assignQueryCells(all.filter(queryPred), cents, nprobe)
-      .select(col("id").as("qid"), col("cell"))
-    val queries = q.filter(queryPred)
-      .select(col("id").as("qid"), pq.lutCol)
-      .join(qprobes, Seq("qid"))
-    pqTopKSelect(
-      encoded.join(broadcast(queries), Seq("cell"))
-        .filter(col("qid") =!= col("id"))
-        .select(col("qid"), col("id").as("nid"), pq.adist.as("adist")), k)
+    val vecs = rawVecs(emb, idCol, vecCol)
+    quantizedTopK(vecs, queryPred, k, pqIndex(vecs, m, ksub, iters),
+      Some((assignCells(all, cents).select(col("id"), col("cell")),
+        assignQueryCells(all.filter(queryPred), cents, nprobe)
+          .select(col("id").as("qid"), col("cell")))))
   }
 
   /**
@@ -669,116 +654,60 @@ object Similarity {
    * full-vector fetch touches `queries × shortlist` rows instead of the
    * corpus — the re-rank side broadcasts while the corpus streams
    * through one hash join. Distances are exact squared L2 over the
-   * micro-quantized vectors (BIGINT — replayable).
+   * micro-quantized vectors (BIGINT — replayable). `iters` trains the
+   * shortlist stage's codebooks as in [[pqTopK]].
    *
    * Returns (qid, nid, d2) for the top `k` per query, ascending d2.
    */
   def pqRerankTopK(emb: DataFrame, idCol: String, vecCol: String,
                    queryPred: org.apache.spark.sql.Column, k: Int,
-                   m: Int, ksub: Int, shortlist: Int): DataFrame = {
+                   m: Int, ksub: Int, shortlist: Int,
+                   iters: Int = 0): DataFrame = {
     require(shortlist >= k, "shortlist must be at least k")
     exactRerank(emb, idCol, vecCol, queryPred, k,
-      pqTopK(emb, idCol, vecCol, queryPred, shortlist, m, ksub))
-  }
-
-  /** [[pqRerankTopK]] with TRAINED codebooks for the shortlist stage. */
-  def pqRerankTopKTrained(emb: DataFrame, idCol: String, vecCol: String,
-                          queryPred: org.apache.spark.sql.Column, k: Int,
-                          m: Int, ksub: Int, shortlist: Int,
-                          iters: Int): DataFrame = {
-    require(shortlist >= k, "shortlist must be at least k")
-    exactRerank(emb, idCol, vecCol, queryPred, k,
-      pqTopKTrained(emb, idCol, vecCol, queryPred, shortlist, m, ksub, iters))
-  }
-
-  /** The exact second stage both rerank forms share: fetch ONLY the
-    * shortlisted rows' full vectors and score them exactly (squared L2
-    * over the micro-quantized vectors — replayable BIGINTs). */
-  private def exactRerank(emb: DataFrame, idCol: String, vecCol: String,
-                          queryPred: org.apache.spark.sql.Column, k: Int,
-                          shortWithScores: DataFrame): DataFrame = {
-    val short = shortWithScores.select("qid", "nid")
-    val q = microVecs(emb, idCol, vecCol)
-    val queries = q.filter(queryPred)
-      .select(col("id").as("qid"), col("qv").as("qqv"))
-    val corpus = q.select(col("id").as("nid"), col("qv").as("nv"))
-    // (queries × shortlist) rows — tiny; broadcast against the corpus
-    val withQ = short.join(broadcast(queries), Seq("qid"))
-    val scored = corpus.join(broadcast(withQ), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        vl2Long(col("qqv"), col("nv")).as("d2"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qid").orderBy(col("d2"), col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("d2"))
+      pqTopK(emb, idCol, vecCol, queryPred, shortlist, m, ksub, iters))
   }
 
   /**
-   * PQ ANN as a STREAM-SAFE enrichment: the corpus is PQ-encoded once
-   * and its (id, codes) rows — m small codes per vector, the
-   * RAM-resident form — are collapsed into ONE broadcast array; each
-   * incoming query row computes its LUTs and folds the code array to
-   * its top-k map-side. No shuffle, no window, no stateful op — pure
-   * projections over a broadcast, so the SAME operator runs on a batch
-   * frame or an append-mode stream (the serving-path shape: index in
-   * RAM, queries arriving). Scale note: one executor holds all codes —
-   * 16 bytes/vector means ~60 GB per billion vectors; past that, shard
-   * the corpus into several broadcast arrays and merge the per-shard
-   * top-k (same fold). Arithmetic is identical to [[pqTopK]] (exact
-   * BIGINT ADC, self-matches excluded), so results are bit-equal.
+   * PQ ANN as a STREAM-SAFE enrichment ([[quantizedEnrich]]): the
+   * corpus is PQ-encoded once — m small codes per vector, the
+   * RAM-resident form — and each query row folds the broadcast code
+   * array to its top-k. 16 bytes/vector means ~60 GB per billion
+   * vectors on one executor. Bit-equal to [[pqTopK]] with the same
+   * `iters` (train + encode once from the corpus, fold per query row).
    */
   def pqAnnEnrich(queries: DataFrame, idCol: String, vecCol: String,
                   corpus: DataFrame, corpusIdCol: String,
                   corpusVecCol: String, k: Int, m: Int,
-                  ksub: Int): DataFrame = {
-    require(k > 0)
-    val cq = microVecs(corpus, corpusIdCol, corpusVecCol)
-    enrichWithParts(queries, idCol, vecCol, cq, pqParts(cq, m, ksub), k,
-      m, ksub)
+                  ksub: Int, iters: Int = 0): DataFrame = {
+    val cv = rawVecs(corpus, corpusIdCol, corpusVecCol)
+    quantizedEnrich(rawVecs(queries, idCol, vecCol), cv, k,
+      pqIndex(cv, m, ksub, iters))
   }
 
-  /** [[pqAnnEnrich]] with TRAINED codebooks ([[pqTrainedParts]]) — the
-    * serving-path form of the trained index: train + encode once from
-    * the corpus, fold per query row; bit-equal to [[pqTopKTrained]]
-    * (same arithmetic, same ordering). */
-  def pqAnnEnrichTrained(queries: DataFrame, idCol: String, vecCol: String,
-                         corpus: DataFrame, corpusIdCol: String,
-                         corpusVecCol: String, k: Int, m: Int,
-                         ksub: Int, iters: Int): DataFrame = {
-    require(k > 0)
-    val cq = microVecs(corpus, corpusIdCol, corpusVecCol)
-    val d = corpus.select(size(col(corpusVecCol)).as("d")).head.getInt(0)
-    enrichWithParts(queries, idCol, vecCol, cq,
-      pqTrainedParts(corpus, corpusIdCol, corpusVecCol, d, m, ksub, iters),
-      k, m, ksub)
-  }
-
-  /** The broadcast-fold body both enrich forms share. */
-  private def enrichWithParts(queries: DataFrame, idCol: String,
-                              vecCol: String, cq: DataFrame, pq: PqParts,
-                              k: Int, m: Int, ksub: Int): DataFrame = {
-    // ONE row holding every (id, codes) struct — the broadcast index
-    val encodedArr = cq.select(col("id"), pq.codesCol)
-      .select(struct(col("id"), col("codes")).as("e"))
-      .agg(sort_array(collect_list(col("e"))).as("corpus"))
-    val q = queries.select(col(idCol).cast("long").as("id"),
-      expr(s"transform($vecCol, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-        .as("qv"))
-    val withLuts = q.select(col("id").as("qid"), pq.lutCol)
-      .crossJoin(broadcast(encodedArr))
-    // score every corpus entry with m lookups, sort, keep k — one fold
-    // per query row; (adist, nid) struct order makes sort_array rank by
-    // distance then id, exactly pqTopK's ordering
-    val scored = transform(col("corpus"), c => struct(
-      pqAdcSum(col("lutf"), j => element_at(c.getField("codes"), j + 1),
-        m, ksub).as("adist"),
-      c.getField("id").as("nid")))
-    val kept = filter(scored, s => s.getField("nid") =!= col("qid"))
-    withLuts
-      .withColumn("__top", slice(sort_array(kept), 1, k))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__rank", "s")))
-      .select(col("qid"), col("s").getField("nid").as("nid"),
-        col("s").getField("adist").as("adist"))
+  /** SQ8 index: per-dimension corpus [min, max] bounds from ONE
+    * aggregate (the whole "training"), then two projections of the
+    * micro-vector — `code`, the reconstructed candidate in (micro·255)
+    * units: `code·rng` where `code = ((x-mn)·255) div rng`, the pmod
+    * exact-integer idiom (operands non-negative so truncation == floor,
+    * the double division exact at ≤ ~5e8 « 2^53), and `query`, the exact
+    * query side `(x-mn)·255`. Distance = Σ (query - code)². */
+  private def sq8Index(vecs: DataFrame): Quantized = {
+    val d = vecs.select(size(col("v")).as("d")).head.getInt(0)
+    val boundsRow = microVecs(vecs, "id", "v").select((0 until d).flatMap(i => Seq(
+      min(element_at(col("qv"), i + 1)).as(s"mn$i"),
+      max(element_at(col("qv"), i + 1)).as(s"mx$i"))): _*).head
+    val mn: IndexedSeq[Long] = (0 until d).map(i => boundsRow.getLong(2 * i))
+    val rng: IndexedSeq[Long] =
+      (0 until d).map(i => boundsRow.getLong(2 * i + 1) - boundsRow.getLong(2 * i))
+    val mnLit = typedLit(mn)
+    val rngLit = typedLit(rng)
+    val qadj = zip_with(micro("v"), mnLit, (x, m) => (x - m) * lit(255L))
+    val codes = zip_with(qadj, rngLit,
+      (s, r) => when(r === 0L, lit(0L))
+        .otherwise(((s - pmod(s, r)) / r).cast("long")))
+    Quantized(code = zip_with(codes, rngLit, (c, r) => c * r), query = qadj,
+      dist = vl2Long, distName = "adist")
   }
 
   /**
@@ -804,88 +733,21 @@ object Similarity {
    * Returns (qid, nid, adist) — approximate squared L2 in (micro·255)²
    * units — for the top `k` per query, ascending.
    */
-  /** The SQ8 column machinery: per-dimension corpus [min, max] bounds
-    * from ONE aggregate (the whole "training"), then two projections of
-    * a `qv` micro-vector column — `scaled` (the reconstructed candidate
-    * in (micro·255) units: `code·rng` where
-    * `code = ((x-mn)·255) div rng`, the pmod exact-integer idiom —
-    * operands non-negative so truncation == floor, the double division
-    * exact at ≤ ~5e8 « 2^53) and `qadj` (the exact query side,
-    * `(x-mn)·255`). Asymmetric distance = Σ (qadj - scaled)². */
-  private final case class Sq8Parts(scaled: Column, qadj: Column)
-
-  private def sq8Parts(q: DataFrame, d: Int): Sq8Parts = {
-    val boundsRow = q.select((0 until d).flatMap(i => Seq(
-      min(element_at(col("qv"), i + 1)).as(s"mn$i"),
-      max(element_at(col("qv"), i + 1)).as(s"mx$i"))): _*).head
-    val mn: IndexedSeq[Long] = (0 until d).map(i => boundsRow.getLong(2 * i))
-    val rng: IndexedSeq[Long] =
-      (0 until d).map(i => boundsRow.getLong(2 * i + 1) - boundsRow.getLong(2 * i))
-    val mnLit = typedLit(mn)
-    val rngLit = typedLit(rng)
-    val codes = zip_with(
-      zip_with(col("qv"), mnLit, (x, m) => (x - m) * lit(255L)),
-      rngLit,
-      (s, r) => when(r === 0L, lit(0L))
-        .otherwise(((s - pmod(s, r)) / r).cast("long")))
-    Sq8Parts(
-      scaled = zip_with(codes, rngLit, (c, r) => c * r),
-      qadj = zip_with(col("qv"), mnLit, (x, m) => (x - m) * lit(255L)))
-  }
-
   def sq8TopK(emb: DataFrame, idCol: String, vecCol: String,
               queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    require(k > 0)
-    val q = microVecs(emb, idCol, vecCol)
-    val d = emb.select(size(col(vecCol)).as("d")).head.getInt(0)
-    val parts = sq8Parts(q, d)
-    val encoded = q.select(col("id"), parts.scaled.as("scaled"))
-    val queries = q.filter(queryPred)
-      .select(col("id").as("qid"), parts.qadj.as("qadj"))
-    pqTopKSelect(
-      broadcast(queries).join(encoded, col("qid") =!= col("id"))
-        .select(col("qid"), col("id").as("nid"),
-          vl2Long(col("qadj"), col("scaled")).as("adist")), k)
+    val vecs = rawVecs(emb, idCol, vecCol)
+    quantizedTopK(vecs, queryPred, k, sq8Index(vecs))
   }
 
-  /**
-   * SQ8 ANN as a STREAM-SAFE enrichment — the serving-path twin of
-   * [[sq8TopK]], shaped like [[pqAnnEnrich]]: the corpus is quantized
-   * once and collapsed into ONE broadcast array of (id, scaled) rows;
-   * each incoming query row computes its exact side and folds the array
-   * to its top-k map-side — pure projections over a broadcast, so the
-   * SAME operator runs on a batch frame or an append-mode stream.
-   * Arithmetic is identical to sq8TopK (exact BIGINTs, self-matches
-   * excluded), so results are bit-equal. Scale note: one executor holds
-   * all scaled codes — 8·d bytes/vector; past RAM, shard the corpus
-   * into several broadcast arrays and merge the per-shard top-k.
-   */
+  /** SQ8 ANN as a STREAM-SAFE enrichment ([[quantizedEnrich]]) — the
+    * serving-path twin of [[sq8TopK]], bit-equal to it: the corpus is
+    * quantized once into one broadcast array of (id, code) rows — 8·d
+    * bytes/vector on one executor. */
   def sq8AnnEnrich(queries: DataFrame, idCol: String, vecCol: String,
                    corpus: DataFrame, corpusIdCol: String,
                    corpusVecCol: String, k: Int): DataFrame = {
-    require(k > 0)
-    val cq = microVecs(corpus, corpusIdCol, corpusVecCol)
-    val d = corpus.select(size(col(corpusVecCol)).as("d")).head.getInt(0)
-    val parts = sq8Parts(cq, d)
-    val encodedArr = cq
-      .select(struct(col("id"), parts.scaled.as("scaled")).as("e"))
-      .agg(sort_array(collect_list(col("e"))).as("corpus"))
-    val q = queries.select(col(idCol).cast("long").as("id"),
-      expr(s"transform($vecCol, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-        .as("qv"))
-    val withQ = q.select(col("id").as("qid"), parts.qadj.as("qadj"))
-      .crossJoin(broadcast(encodedArr))
-    val scored = transform(col("corpus"), c => struct(
-      aggregate(zip_with(col("qadj"), c.getField("scaled"),
-          (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x).as("adist"),
-      c.getField("id").as("nid")))
-    val kept = filter(scored, s => s.getField("nid") =!= col("qid"))
-    withQ
-      .withColumn("__top", slice(sort_array(kept), 1, k))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__rank", "s")))
-      .select(col("qid"), col("s").getField("nid").as("nid"),
-        col("s").getField("adist").as("adist"))
+    val cv = rawVecs(corpus, corpusIdCol, corpusVecCol)
+    quantizedEnrich(rawVecs(queries, idCol, vecCol), cv, k, sq8Index(cv))
   }
 
   /** Two-stage SQ8 search: SQ8 shortlist, exact re-rank — the same
@@ -923,75 +785,48 @@ object Similarity {
     array(words: _*)
   }
 
-  /**
-   * Hamming top-k over binary-quantized vectors: queries (selected by
-   * `queryPred`) broadcast against the packed corpus codes, distance =
-   * one XOR + popcount fold over the word arrays (64 dims = 2 ints per
-   * row), ties broken on neighbor id. Returns (qid, nid, hdist). The
-   * production first stage of a two-stage search — see
-   * [[bqRerankTopK]]; at 10⁹ vectors the code table is 8 GB where the
-   * floats are 256 GB, which is the point.
-   */
-  def bqTopK(emb: DataFrame, idCol: String, vecCol: String,
-             queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    require(k > 0)
-    val d = emb.select(size(col(vecCol)).as("d")).head.getInt(0)
-    val coded = emb.select(col(idCol).cast("long").as("id"),
-      bqCodes(col(vecCol), d).as("code"))
-    val queries = coded.filter(queryPred)
-      .select(col("id").as("qid"), col("code").as("qcode"))
+  /** BQ index: the same packed sign code on both sides, distance = one
+    * XOR + popcount fold over the word arrays (64 dims = 2 ints per
+    * row). The signs come off the RAW vector, not the micro-quantized
+    * one, so a tiny positive element still codes as 1. */
+  private def bqIndex(vecs: DataFrame): Quantized = {
+    val d = vecs.select(size(col("v")).as("d")).head.getInt(0)
+    val code = bqCodes(col("v"), d)
     // GOTCHA: Spark's bit_count SIGN-EXTENDS an int argument to long
     // before counting — a negative 32-bit XOR word would gain 32
     // phantom high bits. Mask to the unsigned 32-bit value first.
-    val scored = broadcast(queries).join(coded, col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("nid"),
-        aggregate(zip_with(col("qcode"), col("code"),
-            (a, b) => bit_count(a.bitwiseXOR(b).cast("long")
-              .bitwiseAND(lit(0xFFFFFFFFL)))),
-          lit(0L), (acc, x) => acc + x).as("hdist"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qid").orderBy(col("hdist"), col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("hdist"))
+    Quantized(code, code,
+      dist = (a, b) => aggregate(zip_with(a, b,
+          (x, y) => bit_count(x.bitwiseXOR(y).cast("long")
+            .bitwiseAND(lit(0xFFFFFFFFL)))),
+        lit(0L), (acc, x) => acc + x),
+      distName = "hdist")
   }
 
   /**
-   * BQ ANN as a STREAM-SAFE enrichment — the broadcast-fold serving
-   * twin of [[bqTopK]] ([[sq8AnnEnrich]]'s shape on the cheapest
-   * index): the corpus is sign-packed ONCE and collapsed into one
-   * broadcast array of (id, code) rows; each incoming query row packs
-   * its own code and folds the array to its top-k map-side — pure
-   * projections over a broadcast, so the SAME operator runs on a batch
-   * frame or an append-mode stream, bit-equal to bqTopK (identical
-   * masked XOR/popcount, same (hdist, nid) tie-break via the struct
-   * sort). Scale note: one executor holds all codes — 4·ceil(d/32)
-   * bytes/vector, ~1 GB per 10⁹ 64-dim vectors, the RAM-resident-index
-   * point of BQ; past that, shard the corpus array and merge
-   * per-shard top-k. */
+   * Hamming top-k over binary-quantized vectors: queries (selected by
+   * `queryPred`) broadcast against the packed corpus codes, ties broken
+   * on neighbor id. Returns (qid, nid, hdist). The production first
+   * stage of a two-stage search — see [[bqRerankTopK]]; at 10⁹ vectors
+   * the code table is 8 GB where the floats are 256 GB, which is the
+   * point.
+   */
+  def bqTopK(emb: DataFrame, idCol: String, vecCol: String,
+             queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
+    val vecs = rawVecs(emb, idCol, vecCol)
+    quantizedTopK(vecs, queryPred, k, bqIndex(vecs))
+  }
+
+  /** BQ ANN as a STREAM-SAFE enrichment ([[quantizedEnrich]]) — the
+    * broadcast-fold serving twin of [[bqTopK]], bit-equal to it: the
+    * corpus is sign-packed ONCE into one broadcast array of (id, code)
+    * rows — 4·ceil(d/32) bytes/vector, ~1 GB per 10⁹ 64-dim vectors, the
+    * RAM-resident-index point of BQ. */
   def bqAnnEnrich(queries: DataFrame, idCol: String, vecCol: String,
                   corpus: DataFrame, corpusIdCol: String,
                   corpusVecCol: String, k: Int): DataFrame = {
-    require(k > 0)
-    val d = corpus.select(size(col(corpusVecCol)).as("d")).head.getInt(0)
-    val codedArr = corpus
-      .select(struct(col(corpusIdCol).cast("long").as("id"),
-        bqCodes(col(corpusVecCol), d).as("code")).as("e"))
-      .agg(sort_array(collect_list(col("e"))).as("corpus"))
-    val withQ = queries.select(col(idCol).cast("long").as("qid"),
-        bqCodes(col(vecCol), d).as("qcode"))
-      .crossJoin(broadcast(codedArr))
-    val scored = transform(col("corpus"), c => struct(
-      aggregate(zip_with(col("qcode"), c.getField("code"),
-          (a, b) => bit_count(a.bitwiseXOR(b).cast("long")
-            .bitwiseAND(lit(0xFFFFFFFFL)))),
-        lit(0L), (acc, x) => acc + x).as("hdist"),
-      c.getField("id").as("nid")))
-    val kept = filter(scored, s => s.getField("nid") =!= col("qid"))
-    withQ
-      .withColumn("__top", slice(sort_array(kept), 1, k))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__rank", "s")))
-      .select(col("qid"), col("s").getField("nid").as("nid"),
-        col("s").getField("hdist").as("hdist"))
+    val cv = rawVecs(corpus, corpusIdCol, corpusVecCol)
+    quantizedEnrich(rawVecs(queries, idCol, vecCol), cv, k, bqIndex(cv))
   }
 
   /** Two-stage BQ search: Hamming shortlist, exact micro-integer L2
@@ -1003,6 +838,14 @@ object Similarity {
     require(shortlist >= k, "shortlist must be at least k")
     exactRerank(emb, idCol, vecCol, queryPred, k,
       bqTopK(emb, idCol, vecCol, queryPred, shortlist))
+  }
+
+  /** Matryoshka prefix index: the first `prefixDims` micro-quantized
+    * dimensions on both sides, exact squared L2 between them. */
+  private def prefixIndex(prefixDims: Int): Quantized = {
+    require(prefixDims >= 1, "prefixDims must be >= 1")
+    val prefix = slice(micro("v"), 1, prefixDims)
+    Quantized(prefix, prefix, dist = vl2Long, distName = "adist")
   }
 
   /**
@@ -1019,17 +862,10 @@ object Similarity {
   def matryoshkaTopK(emb: DataFrame, idCol: String, vecCol: String,
                      queryPred: org.apache.spark.sql.Column, k: Int,
                      prefixDims: Int, shortlist: Int): DataFrame = {
-    require(k > 0 && shortlist >= k, "need k >= 1 and shortlist >= k")
-    require(prefixDims >= 1, "prefixDims must be >= 1")
-    val q = microVecs(emb, idCol, vecCol)
-    val pre = q.select(col("id"), expr(s"slice(qv, 1, $prefixDims)").as("pv"))
-    val queries = pre.filter(queryPred)
-      .select(col("id").as("qid"), col("pv").as("qpv"))
-    val scored = broadcast(queries).join(pre, col("qid") =!= col("id"))
-      .select(col("qid"), col("id").as("nid"),
-        aggregate(zip_with(col("qpv"), col("pv"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("adist"))
-    exactRerank(emb, idCol, vecCol, queryPred, k, pqTopKSelect(scored, shortlist))
+    require(shortlist >= k, "shortlist must be at least k")
+    exactRerank(emb, idCol, vecCol, queryPred, k,
+      quantizedTopK(rawVecs(emb, idCol, vecCol), queryPred, shortlist,
+        prefixIndex(prefixDims)))
   }
 
   /**
@@ -1061,6 +897,8 @@ object Similarity {
       .select(col("qid"), col("nid"), round(col("cos"), 4).as("cos"))
   }
 
+  /** recall@k of the ANN result against the exact result, averaged over
+    * queries (self-check harness for the LSH path). */
   def recallAtK(ann: DataFrame, exact: DataFrame): DataFrame = {
     val hits = ann.select(col("qid"), col("nid"))
       .join(exact.select(col("qid"), col("nid")), Seq("qid", "nid"))

@@ -288,6 +288,74 @@ class OperatorsSpec extends AnyFunSuite {
       iters = 2, threshold = 0.35).count() === total)
   }
 
+  test("every public top-k entry rejects k = 0") {
+    val emb = Seq(
+      (0L, Array(1.0f, 0.0f, 0.5f, 0.2f)), (1L, Array(0.9f, 0.1f, 0.4f, 0.3f)),
+      (2L, Array(-1.0f, 0.3f, 0.0f, 0.1f)), (3L, Array(0.2f, -0.7f, 0.6f, 0.9f))
+    ).toDF("vec_id", "embedding")
+    val q = col("id") === 0L
+    val cents = Similarity.buildIvfCentroids(emb, "vec_id", "embedding", 2)
+    val queries = emb.filter(col("vec_id") === 0L)
+    val entries: Seq[(String, () => Any)] = Seq(
+      "cosineTopK" -> (() => Similarity.cosineTopK(emb, "vec_id", "embedding", q, 0)),
+      "annSignLsh" -> (() => Similarity.annSignLsh(emb, "vec_id", "embedding", q, 0)),
+      "ivfTopK(centroids)" -> (() =>
+        Similarity.ivfTopK(emb, "vec_id", "embedding", q, 0, cents)),
+      "ivfTopK(nCells)" -> (() =>
+        Similarity.ivfTopK(emb, "vec_id", "embedding", q, 0, nCells = 2)),
+      "pqTopK" -> (() =>
+        Similarity.pqTopK(emb, "vec_id", "embedding", q, 0, m = 2, ksub = 2)),
+      "pqRerankTopK" -> (() => Similarity.pqRerankTopK(emb, "vec_id",
+        "embedding", q, 0, m = 2, ksub = 2, shortlist = 2)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+        q, 0, nCells = 2, nprobe = 1, m = 2, ksub = 2)),
+      "pqAnnEnrich" -> (() => Similarity.pqAnnEnrich(queries, "vec_id",
+        "embedding", emb, "vec_id", "embedding", 0, m = 2, ksub = 2)),
+      "sq8TopK" -> (() => Similarity.sq8TopK(emb, "vec_id", "embedding", q, 0)),
+      "sq8RerankTopK" -> (() =>
+        Similarity.sq8RerankTopK(emb, "vec_id", "embedding", q, 0, 2)),
+      "sq8AnnEnrich" -> (() => Similarity.sq8AnnEnrich(queries, "vec_id",
+        "embedding", emb, "vec_id", "embedding", 0)),
+      "bqTopK" -> (() => Similarity.bqTopK(emb, "vec_id", "embedding", q, 0)),
+      "bqRerankTopK" -> (() =>
+        Similarity.bqRerankTopK(emb, "vec_id", "embedding", q, 0, 2)),
+      "bqAnnEnrich" -> (() => Similarity.bqAnnEnrich(queries, "vec_id",
+        "embedding", emb, "vec_id", "embedding", 0)),
+      "matryoshkaTopK" -> (() => Similarity.matryoshkaTopK(emb, "vec_id",
+        "embedding", q, 0, prefixDims = 2, shortlist = 2)))
+    entries.foreach { case (name, call) =>
+      val ex = intercept[IllegalArgumentException](call())
+      assert(ex.getMessage.contains("k must be positive"), s"$name: ${ex.getMessage}")
+    }
+  }
+
+  test("seeded pqTopK and semanticDedup(iters = 0) start a pinned number of jobs") {
+    val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+    val sc = spark.sparkContext
+    // Spark jobs started while building and collecting `body`
+    def jobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet(): Unit
+      }
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      sc.addSparkListener(listener)
+      try { body; org.apache.spark.ListenerBusAccess.drain(sc); n.get() }
+      finally sc.removeSparkListener(listener)
+    }
+    // pqTopK: one codebook-seed collect shared by all 16 subspaces, then
+    // the search (a builder that seeded per subspace would start 15
+    // more); semanticDedup: one seed collect, then the dedup itself
+    val pq = jobs(Similarity.pqTopK(emb, "vec_id", "embedding", col("id") < 8,
+      k = 10, m = 16, ksub = 32).collect(): Unit)
+    assert(pq === 4, "seeded pqTopK job count moved")
+    val dedup = jobs(Similarity.semanticDedup(emb, "vec_id", "embedding",
+      k = 8, iters = 0, threshold = 0.35).collect(): Unit)
+    assert(dedup === 9, "semanticDedup(iters = 0) job count moved")
+  }
+
   test("ivfTopK over a TRAINED k-means codebook: end-to-end composition") {
     val emb = TestSpark.spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
     val trained = Similarity.kmeansCentroidTable(emb, "vec_id", "embedding",
@@ -428,7 +496,7 @@ class OperatorsSpec extends AnyFunSuite {
       plan.contains("BroadcastHashJoin"))
   }
 
-  test("pqTopKTrained: per-subspace Lloyd beats the seed codebooks") {
+  test("pqTopK(iters = 1): per-subspace Lloyd beats the seed codebooks") {
     val emb = TestSpark.spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
     val exact = Similarity.cosineTopK(emb, "vec_id", "embedding",
         col("id") < 8, 10)
@@ -437,7 +505,7 @@ class OperatorsSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet.count(exact)
     val seed = recall(Similarity.pqTopK(emb, "vec_id", "embedding",
       col("id") < 8, 10, m = 16, ksub = 32))
-    val trained = recall(Similarity.pqTopKTrained(emb, "vec_id", "embedding",
+    val trained = recall(Similarity.pqTopK(emb, "vec_id", "embedding",
       col("id") < 8, 10, m = 16, ksub = 32, iters = 1))
     // fully deterministic path (exact-integer Lloyd, md5 seeds): on this
     // corpus the measured values are 34 vs 40 of 80 — adapting each
@@ -446,31 +514,31 @@ class OperatorsSpec extends AnyFunSuite {
     assert(trained >= 38, s"trained recall regressed: $trained/80")
     // trained shortlist + exact re-rank composes; the exact second
     // stage can only improve on the raw trained ADC
-    val trainedRr = recall(Similarity.pqRerankTopKTrained(emb, "vec_id",
+    val trainedRr = recall(Similarity.pqRerankTopK(emb, "vec_id",
       "embedding", col("id") < 8, 10, m = 16, ksub = 32, shortlist = 50,
       iters = 1))
     assert(trainedRr >= trained,
       s"trained re-rank recall $trainedRr below raw trained $trained")
     // the trained broadcast-fold enrich is BIT-EQUAL to the trained join
     // form (same codebooks, same arithmetic, same ordering)
-    val trainedRows = Similarity.pqTopKTrained(emb, "vec_id", "embedding",
+    val trainedRows = Similarity.pqTopK(emb, "vec_id", "embedding",
         col("id") < 8, 10, m = 16, ksub = 32, iters = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val trainedEnr = Similarity.pqAnnEnrichTrained(
+    val trainedEnr = Similarity.pqAnnEnrich(
         emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         emb, "vec_id", "embedding", k = 10, m = 16, ksub = 32, iters = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(trainedEnr === trainedRows)
     // trained IVF+PQ at full probe must equal trained raw ADC exactly
     // (cell filtering is a no-op when every cell is probed)
-    val trainedIvf = Similarity.ivfPqTopKTrained(emb, "vec_id", "embedding",
+    val trainedIvf = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
         col("id") < 8, 10, nCells = 8, nprobe = 8, m = 16, ksub = 32,
         iters = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(trainedIvf === trainedRows)
     // ...and at a REAL probe budget the trained cells+codes still beat
     // the seed ADC's recall floor while scanning a fraction of the corpus
-    val trainedIvf2 = recall(Similarity.ivfPqTopKTrained(emb, "vec_id",
+    val trainedIvf2 = recall(Similarity.ivfPqTopK(emb, "vec_id",
       "embedding", col("id") < 8, 10, nCells = 8, nprobe = 4, m = 16,
       ksub = 32, iters = 1))
     assert(trainedIvf2 >= 20, s"trained IVF+PQ nprobe=4 recall: $trainedIvf2/80")
@@ -479,7 +547,7 @@ class OperatorsSpec extends AnyFunSuite {
     // At full probe the coarse form is irrelevant by construction: every
     // cell is probed, so trained-coarse IVF+PQ ≡ the trained raw ADC
     // bit-for-bit (the strongest structural check available).
-    val trainedBoth = Similarity.ivfPqTopKTrained(emb, "vec_id", "embedding",
+    val trainedBoth = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
         col("id") < 8, 10, nCells = 8, nprobe = 8, m = 16, ksub = 32,
         iters = 1, coarseIters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -490,10 +558,10 @@ class OperatorsSpec extends AnyFunSuite {
     // (sf0.001 queries id<8 ARE the seed centroids, so seed cells contain
     // their queries perfectly; on real data the trained cells win). Pin a
     // floor + probe monotonicity, not superiority.
-    val tc4 = recall(Similarity.ivfPqTopKTrained(emb, "vec_id", "embedding",
+    val tc4 = recall(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
       col("id") < 8, 10, nCells = 8, nprobe = 4, m = 16, ksub = 32,
       iters = 1, coarseIters = 2))
-    val tc2 = recall(Similarity.ivfPqTopKTrained(emb, "vec_id", "embedding",
+    val tc2 = recall(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
       col("id") < 8, 10, nCells = 8, nprobe = 2, m = 16, ksub = 32,
       iters = 1, coarseIters = 2))
     assert(tc4 >= 28, s"trained-coarse IVF+PQ nprobe=4 recall: $tc4/80")
@@ -530,7 +598,7 @@ class OperatorsSpec extends AnyFunSuite {
     def recall(df: org.apache.spark.sql.DataFrame): Int =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet.count(exact)
     def run(coarseIters: Int, nprobe: Int): Int =
-      recall(Similarity.ivfPqTopKTrained(emb, "vec_id", "embedding",
+      recall(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
         col("id") < 8, 10, nCells = 8, nprobe = nprobe, m = 8, ksub = 32,
         iters = 1, coarseIters = coarseIters))
     // measured on this deterministic fixture: 76/80 everywhere (the PQ

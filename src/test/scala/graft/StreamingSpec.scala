@@ -99,64 +99,60 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming PQ ANN enrich: append-mode top-k equals the batch result") {
-    import spark.implicits._
-    val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
-    // batch reference over the SAME queries (ids 0..3 are in-corpus, so
-    // the self-exclusion matches pqTopK's semantics exactly)
-    val batch = graft.operators.Similarity.pqTopK(
-        emb, "vec_id", "embedding",
-        org.apache.spark.sql.functions.col("id") < 4, k = 5, m = 16, ksub = 32)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val queryRows: Seq[(Long, Seq[Float])] = emb
-      .filter("vec_id < 4").select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).toSeq
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])](spark)
-    in.addData(queryRows.take(2))
-    val enriched = graft.operators.Similarity.pqAnnEnrich(
-      in.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      emb, "vec_id", "embedding", k = 5, m = 16, ksub = 32)
-    assert(enriched.isStreaming)
-    val q = enriched.writeStream.format("memory").queryName("pq_enrich")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-      in.addData(queryRows.drop(2)) // state-free: later batches just work
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("pq_enrich").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === batch)
+  // One enrich-vs-batch body, one registered test per quantizer: (test
+  // name, memory-sink name, batch top-k over the queries `q`, the same
+  // search as an enrich over a query stream `s`). Ids 0..3 are in-corpus,
+  // so the self-exclusion matches the batch semantics exactly.
+  private type Df = org.apache.spark.sql.DataFrame
+  private val annEnrichForms: Seq[(String, String,
+      (Df, org.apache.spark.sql.Column) => Df, (Df, Df) => Df)] = {
+    import graft.operators.Similarity
+    Seq(
+      ("streaming PQ ANN enrich: append-mode top-k equals the batch result", "pq",
+        (emb, q) => Similarity.pqTopK(emb, "vec_id", "embedding", q, k = 5,
+          m = 16, ksub = 32),
+        (emb, s) => Similarity.pqAnnEnrich(s, "vec_id", "embedding",
+          emb, "vec_id", "embedding", k = 5, m = 16, ksub = 32)),
+      ("streaming trained PQ ANN enrich (iters = 1): append-mode top-k equals the batch result",
+        "pq_trained",
+        (emb, q) => Similarity.pqTopK(emb, "vec_id", "embedding", q, k = 5,
+          m = 16, ksub = 32, iters = 1),
+        (emb, s) => Similarity.pqAnnEnrich(s, "vec_id", "embedding",
+          emb, "vec_id", "embedding", k = 5, m = 16, ksub = 32, iters = 1)),
+      ("streaming SQ8 ANN enrich: append-mode top-k equals the batch result", "sq8",
+        (emb, q) => Similarity.sq8TopK(emb, "vec_id", "embedding", q, k = 5),
+        (emb, s) => Similarity.sq8AnnEnrich(s, "vec_id", "embedding",
+          emb, "vec_id", "embedding", k = 5)),
+      ("streaming BQ ANN enrich: append-mode Hamming top-k equals batch", "bq",
+        (emb, q) => Similarity.bqTopK(emb, "vec_id", "embedding", q, k = 5),
+        (emb, s) => Similarity.bqAnnEnrich(s, "vec_id", "embedding",
+          emb, "vec_id", "embedding", k = 5)))
   }
 
-  test("streaming SQ8 ANN enrich: append-mode top-k equals the batch result") {
-    import spark.implicits._
-    val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
-    val batch = graft.operators.Similarity.sq8TopK(
-        emb, "vec_id", "embedding",
-        org.apache.spark.sql.functions.col("id") < 4, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val queryRows: Seq[(Long, Seq[Float])] = emb
-      .filter("vec_id < 4").select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).toSeq
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])](spark)
-    in.addData(queryRows.take(2))
-    val enriched = graft.operators.Similarity.sq8AnnEnrich(
-      in.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      emb, "vec_id", "embedding", k = 5)
-    assert(enriched.isStreaming)
-    val q = enriched.writeStream.format("memory").queryName("sq8_enrich")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-      in.addData(queryRows.drop(2))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("sq8_enrich").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === batch)
+  annEnrichForms.foreach { case (testName, name, batchTopK, enrich) =>
+    test(testName) {
+      import spark.implicits._
+      val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+      def triples(df: Df): Set[(Long, Long, Long)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val batch = triples(batchTopK(emb, col("id") < 4))
+      val queryRows: Seq[(Long, Seq[Float])] = emb
+        .filter("vec_id < 4").select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).toSeq
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, Seq[Float])](spark)
+      in.addData(queryRows.take(2))
+      val enriched = enrich(emb, in.toDS().toDF("vec_id", "embedding"))
+      assert(enriched.isStreaming)
+      val sq = enriched.writeStream.format("memory").queryName(s"${name}_enrich")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        sq.processAllAvailable()
+        in.addData(queryRows.drop(2)) // state-free: later batches just work
+        sq.processAllAvailable()
+      } finally sq.stop()
+      assert(triples(spark.table(s"${name}_enrich")) === batch)
+    }
   }
 
   test("gopher quality flags run unchanged on an append-mode stream") {
@@ -337,35 +333,6 @@ class StreamingSpec extends AnyFunSuite {
     // and cleaning is real: some survivor lost at least one line
     assert(streamed.exists { case (id, t) =>
       t.length < pages.find(_._1 == id).get._2.length })
-  }
-
-  test("streaming BQ ANN enrich: append-mode Hamming top-k equals batch") {
-    import spark.implicits._
-    val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
-    val batch = graft.operators.Similarity.bqTopK(
-        emb, "vec_id", "embedding",
-        org.apache.spark.sql.functions.col("id") < 4, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val queryRows: Seq[(Long, Seq[Float])] = emb
-      .filter("vec_id < 4").select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq)).toSeq
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])](spark)
-    in.addData(queryRows.take(2))
-    val enriched = graft.operators.Similarity.bqAnnEnrich(
-      in.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      emb, "vec_id", "embedding", k = 5)
-    assert(enriched.isStreaming)
-    val q = enriched.writeStream.format("memory").queryName("bq_enrich")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-      in.addData(queryRows.drop(2))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("bq_enrich").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === batch)
   }
 
   test("streaming asof enrich applies latest per-key reference state") {
