@@ -63,8 +63,9 @@ object Curation {
    * island windows. One reassembly shuffle on doc id. No all-pairs.
    *
    * CACHE HYGIENE (caller obligation, same contract as
-   * [[graft.operators.Dedup.minhashNearDups]]): the merged-islands
-   * frame persists MEMORY_AND_DISK (it feeds both the contamination
+   * [[graft.operators.Dedup.minhashNearDups]] and its persisted
+   * per-distinct-text group frame): the merged-islands frame persists
+   * MEMORY_AND_DISK (it feeds both the contamination
    * aggregate and the strip anti-join) and the returned frame depends
    * on it, so it cannot be unpersisted here — repeated invocations in
    * one long-lived session accumulate span-scale cache entries until
@@ -657,8 +658,10 @@ object Curation {
    * THROUGH the prefix-sum scaffolding as a carried payload column
    * (never joined back), so `docs` is referenced exactly twice: the
    * per-part totals aggregate and the phase-2 running sum. CALLER
-   * CACHE OBLIGATION (the [[graft.operators.Dedup.minhashNearDupsAgainst]]
-   * convention): when the segment input is itself an expensive pipeline
+   * CACHE OBLIGATION (the convention of
+   * [[graft.operators.Dedup.minhashNearDupsAgainst]], whose per-side
+   * shingle-set frames persist for the caller to clear): when the
+   * segment input is itself an expensive pipeline
    * (e.g. [[graft.operators.TextAnalysis.bpeSegments]]' word explode +
    * vocab join + reassembly), persist `docs` around the action or that
    * pipeline evaluates twice.

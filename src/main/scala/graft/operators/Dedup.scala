@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
+
+import graft.functions.MinhashBands
 
 /**
  * Document deduplication operators for large-scale training-data
@@ -9,9 +11,10 @@ import org.apache.spark.sql.functions._
  * Catalyst plans the shuffles:
  *
  *  - exact dedup: hash-partition on a content hash; one shuffle.
- *  - MinHash+LSH near-dedup: shuffle on (band, band-signature) buckets and
+ *  - MinHash+LSH near-dedup: one row per document carrying its shingle
+ *    set as an array; shuffle on (band, band-signature) buckets and
  *    generate candidate pairs ONLY within buckets — never all-pairs — then
- *    verify candidates with exact shingle-set Jaccard. Scales as
+ *    verify candidates with exact array Jaccard. Scales as
  *    O(docs × shingles × hashes) map-side plus bucket-local joins, which
  *    survives a 100× scale-up as long as bucket cardinality does (the
  *    band signature keys are ~uniform md5 strings, so it does).
@@ -20,7 +23,8 @@ import org.apache.spark.sql.functions._
  *
  * The minhash family is double hashing over one md5 per shingle —
  * deliberately engine-portable so the DuckDB oracle can reproduce
- * signatures bit-for-bit (see `minhashBandKeys`).
+ * signatures bit-for-bit; the one implementation is the native
+ * [[graft.functions.MinhashBands]] kernel (see `minhashBandKeys`).
  */
 object Dedup {
 
@@ -29,58 +33,82 @@ object Dedup {
     docs.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Distinct word n-gram shingles per document: (id, sh). */
+  /** Rows of `df` whose `textCol` has at least `n` tokens, with the
+    * token array `__gf_w` added. Tokens are `split(lower(text), " ")`,
+    * so runs of spaces yield empty tokens. */
+  private def tokenized(df: DataFrame, textCol: String, n: Int): DataFrame =
+    df.withColumn("__gf_w", split(lower(col(textCol)), " "))
+      .filter(size(col("__gf_w")) >= n)
+
+  /** The distinct `n`-grams of [[tokenized]]'s token array, in first-
+    * occurrence order: the per-document shingle set every MinHash
+    * operator works on — no row per shingle, no distinct shuffle. Use it
+    * as an expression (select it, or explode it directly): a Generate
+    * over a column holding it makes the optimizer infer a non-empty
+    * filter and push it, with this whole expression inlined, below the
+    * projection that computes it. */
+  private def shingleSet(n: Int): Column =
+    expr(s"array_distinct(${ngrams("__gf_w", n)})")
+
+  /** SQL for the array of every `n`-token window of array column `w`,
+    * tokens joined by ' ' (callers gate on `size(w) >= n`). */
+  private def ngrams(w: String, n: Int): String =
+    s"transform(sequence(0, size($w) - $n), i -> concat_ws(' ', ${
+      (0 until n).map(j => s"$w[i + $j]").mkString(", ")}))"
+
+  /** Distinct word n-gram shingles per document: (id, sh) — the
+    * exploded [[shingleSet]]. The final distinct keeps the pairs
+    * distinct even when `idCol` is not a key. */
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"), split(lower(col(textCol)), " ").as("w"))
-    toks.filter(size(col("w")) >= n)
-      .select(col("id"), explode(expr(
-        s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', ${(0 until n).map(j => s"w[i + $j]").mkString(", ")}))"
-      )).as("sh"))
+    require(n > 0, s"shingle size n must be positive, got $n")
+    tokenized(docs.select(col(idCol).as("id"), col(textCol)), textCol, n)
+      .select(col("id"), explode(shingleSet(n)).as("sh"))
       .distinct()
   }
 
-  /** Largest prime below 2^53: the double-hashing modulus. 53 bits keeps
-    * every intermediate (x1 + 17·x2 < 2^57) inside BIGINT range in BOTH
-    * engines — DuckDB raises on signed-64 overflow rather than wrapping. */
-  val MinhashPrime: Long = 9007199254740881L
+  /** Largest prime below 2^53: the double-hashing modulus (see
+    * [[graft.functions.MinhashBands]]). */
+  val MinhashPrime: Long = MinhashBands.Prime
+
+  /** (id, band, band_key) rows of a per-document shingle-set frame
+    * (id, ss) — the one signature implementation, the native
+    * [[graft.functions.MinhashBands]] kernel. Rows without a shingle
+    * set produce none. */
+  private def bandKeys(sets: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
+    sets.select(col("id"), posexplode(GraftShim.column(MinhashBands(
+        GraftShim.expression(col("ss")), numBands, rowsPerBand)))
+      .as(Seq("band", "band_key")))
 
   /**
-   * MinHash signatures: `numBands` bands × `rowsPerBand` min-hashes.
-   * The hash family is double hashing (Kirsch–Mitzenmacher 2006): ONE
-   * md5 per shingle, split into two 13-hex-digit (52-bit) halves x1/x2,
-   * and hash h ∈ [0, bands·rows) is (x1 + h·x2) mod P. One md5 instead
-   * of 18 cuts the dominant map-side cost ~9× while staying engine-
-   * portable bit-for-bit (DuckDB: CAST('0x'||substring(md5,…) AS
-   * BIGINT)). Band key = the band's min-hashes joined in hash order.
+   * MinHash signatures: `numBands` bands × `rowsPerBand` min-hashes over
+   * (id, sh) shingle rows. The hash family is double hashing
+   * (Kirsch–Mitzenmacher 2006): ONE md5 per shingle, split into two
+   * 13-hex-digit (52-bit) halves x1/x2, and hash h ∈ [0, bands·rows) is
+   * (x1 + h·x2) mod P — engine-portable bit-for-bit (DuckDB:
+   * CAST('0x'||substring(md5,…) AS BIGINT)). Band key = the band's
+   * min-hashes joined in hash order. The rows are collected per id and
+   * signed by the [[graft.functions.MinhashBands]] kernel.
    * Returns (id, band, band_key).
    */
   def minhashBandKeys(sh: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    // All hashes are computed map-side as columns of one projection and
-    // min-aggregated in a single shuffle — no row explosion. At N shingle
-    // rows this shuffles N×1 rows with k columns instead of N×k rows.
-    val hashed = sh
-      .withColumn("m", md5(col("sh")))
-      .withColumn("x1", conv(substring(col("m"), 1, 13), 16, 10).cast("long"))
-      .withColumn("x2", conv(substring(col("m"), 14, 13), 16, 10).cast("long"))
-      .select(
-        col("id") +: (0 until numHashes).map(h =>
-          ((col("x1") + lit(h.toLong) * col("x2")) % lit(MinhashPrime))
-            .as(s"h$h")): _*)
-    val mins = hashed.groupBy("id").agg(
-      min(col("h0")).as("h0"),
-      (1 until numHashes).map(h => min(col(s"h$h")).as(s"h$h")): _*)
-    // band key = the band's row-hashes joined in hash order, then unpivot
-    // to (id, band, band_key) rows for the bucket join
-    val withBands = mins.select(
-      col("id") +: (0 until numBands).map { b =>
-        concat_ws(",", (0 until rowsPerBand).map(r =>
-          col(s"h${b * rowsPerBand + r}")): _*).as(s"band_$b")
-      }: _*)
-    val stackArgs = (0 until numBands).map(b => s"$b, band_$b").mkString(", ")
-    withBands.select(col("id"),
-      expr(s"stack($numBands, $stackArgs) AS (band, band_key)"))
+    require(numBands > 0 && rowsPerBand > 0,
+      s"numBands and rowsPerBand must be positive, got $numBands × $rowsPerBand")
+    bandKeys(sh.groupBy("id").agg(collect_list(col("sh")).as("ss")),
+      numBands, rowsPerBand)
   }
+
+  /** Band keys of buckets holding at most `maxBucket` ids (all of them
+    * at the default). The bucket-size window shares the (band,
+    * band_key) partitioning a bucket join needs anyway — one extra sort
+    * within partitions, no shuffle. */
+  private def capBuckets(bandKeys: DataFrame, maxBucket: Int): DataFrame =
+    if (maxBucket == Int.MaxValue) bandKeys
+    else {
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_key")
+      bandKeys.withColumn("__bucket_n", count(lit(1)).over(w))
+        .filter(col("__bucket_n") <= maxBucket)
+        .drop("__bucket_n")
+    }
 
   /** Candidate pairs = distinct (a < b) sharing any band bucket. The join
     * is bucket-local: shuffle on (band, band_key), never all-pairs.
@@ -95,31 +123,14 @@ object Dedup {
     * The default keeps exact all-pairs-within-bucket semantics and the
     * original plan shape (no window inserted). */
   def lshCandidates(bandKeys: DataFrame, maxBucket: Int = Int.MaxValue): DataFrame = {
-    val src =
-      if (maxBucket == Int.MaxValue)
-        // r20: the band-key frame feeds BOTH sides of the self-join
-        // below, and without a persist the whole signature chain (the
-        // 18-hash projection + per-id min aggregate over every shingle
-        // row — the pipeline's heaviest map-side compute) evaluated
-        // once per side (two aggregate instances in the r20 before-
-        // plan). Rows are (id, band, band_key) — docs×bands scale,
-        // tiny; caller clears the cache between runs (same convention
-        // as minhashNearDups).
-        bandKeys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else {
-        // bucket-size window shares the (band, band_key) partitioning the
-        // join needs anyway — one extra sort within partitions, no
-        // shuffle. The filtered frame feeds BOTH sides of the self-join
-        // below; persisted so the window (and the band-key computation
-        // under it) runs once, not once per side. Rows are (id, band,
-        // band_key) — small; spills rather than OOMs. Caller clears the
-        // cache between runs (same convention as minhashNearDups).
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_key")
-        bandKeys.withColumn("__bucket_n", count(lit(1)).over(w))
-          .filter(col("__bucket_n") <= maxBucket)
-          .drop("__bucket_n")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    // the (capped) band keys feed BOTH sides of the self-join below;
+    // persisted so whatever computes them (the signature aggregate of
+    // `minhashBandKeys`, the bucket-size window) runs once, not once
+    // per side. Rows are (id, band, band_key) — docs×bands scale, small;
+    // spills rather than OOMs. Caller clears the cache between runs
+    // (same convention as minhashNearDups).
+    val src = capBuckets(bandKeys, maxBucket)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = src.select(col("band"), col("band_key"), col("id").as("a"))
     val b = src.select(col("band"), col("band_key"), col("id").as("b"))
     a.join(b, Seq("band", "band_key"))
@@ -153,38 +164,51 @@ object Dedup {
     withHash.join(reps, "ch").select("rep", "member")
   }
 
-  /** Exact Jaccard over shingle sets for given candidate pairs. */
-  def jaccard(pairs: DataFrame, sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val inter = pairs
-      .join(sh.select(col("id").as("a"), col("sh")), "a")
-      .join(sh.select(col("id").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("id").as("a"), col("n_sh").as("n_a")), "a")
-      .join(sizes.select(col("id").as("b"), col("n_sh").as("n_b")), "b")
-      .select(col("a"), col("b"),
-        (col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")).cast("double")).as("jac"))
-  }
+  /** Exact shingle-set Jaccard of candidate pairs (a, b), kept at
+    * jac ≥ threshold — the one verification of the MinHash family.
+    * `sa` is (a, sa, …) and `sb` is (b, sb, …): shingle-set frames keyed
+    * by each side's id; their other columns ride along, the sets do
+    * not. jac = |sa ∩ sb| / (|sa| + |sb| − |sa ∩ sb|) as a double. */
+  private def verified(cands: DataFrame, sa: DataFrame, sb: DataFrame,
+                       threshold: Double): DataFrame =
+    cands.join(sa, "a").join(sb, "b")
+      .withColumn("__ni", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jac", col("__ni").cast("double") /
+        (size(col("sa")) + size(col("sb")) - col("__ni")).cast("double"))
+      .filter(col("jac") >= threshold)
+      .drop("sa", "sb", "__ni")
 
-  /** Full MinHash-LSH near-dup pipeline: verified pairs with jac ≥ threshold.
+  /** Full MinHash-LSH near-dup pipeline: verified pairs (a_id < b_id,
+    * jac) with jac ≥ threshold. `idCol` must be a key.
     *
-    * Mega-bucket guard: byte-identical texts share EVERY band key, so a
-    * duplicate-heavy corpus (the norm in web-scale training data) would
-    * put each whole duplicate group into single LSH buckets and the
-    * candidate join would go quadratic in the group size. The pipeline
-    * therefore collapses each distinct text to one representative
-    * (lowest id) BEFORE shingling — LSH + Jaccard verification run over
-    * DISTINCT texts only — and fans verified pairs back out to group
-    * members at the end. The output is exactly the uncollapsed all-pairs
-    * semantics (members share their representative's shingle set, so
-    * cross-group Jaccard is unchanged, and intra-group pairs are
-    * jac = 1.0 by definition — emitted only for texts long enough to
-    * shingle, matching the uncollapsed pipeline), but COMPUTE is linear
-    * in distinct texts: 1000 copies of one doc cost the same as one.
-    * Output cardinality is still inherently quadratic in dup-group size
-    * — that is the price of asking for all pairs, paid only at emission.
+    * Per-document plan: ONE aggregate on md5(text) yields a group row
+    * per distinct text — rep = min(id), the sorted member ids and the
+    * text's shingle set as an array; texts with fewer than `shingleN`
+    * tokens have none and drop out (they pair with nothing, not even
+    * their exact duplicates). Byte-identical texts share EVERY band key, so
+    * a duplicate-heavy corpus (the norm in web-scale training data)
+    * would otherwise put each whole duplicate group into single LSH
+    * buckets and the candidate join would go quadratic in the group
+    * size; instead signatures (the native
+    * [[graft.functions.MinhashBands]] kernel, one row per group), the
+    * bucket join and the Jaccard verification run over DISTINCT texts
+    * only. Verified representative pairs fan out through the two
+    * groups' member arrays; intra-group pairs (jac = 1.0 by definition,
+    * only for texts long enough to shingle) come from the same group
+    * rows — each member paired with its larger members, so no row holds
+    * more than one group's member list. The output is exactly the
+    * uncollapsed all-pairs semantics (members share their
+    * representative's shingle set), but COMPUTE is linear in distinct
+    * texts: 1000 copies of one doc cost the same as one. Output
+    * cardinality is still inherently quadratic in dup-group size — the
+    * price of asking for all pairs, paid only at emission.
+    *
+    * Cache hygiene: the group frame persists MEMORY_AND_DISK (it feeds
+    * the signatures, both verification sides and the intra-group
+    * pairs), as do the band keys inside [[lshCandidates]]; the returned
+    * frame depends on both, so they cannot be unpersisted here —
+    * repeated invocations in one session should clear between runs
+    * (`spark.catalog.clearCache()`), as Bench does.
     *
     * `maxBucket` (opt-in) additionally caps candidate generation for
     * near-identical-but-not-byte-identical floods; see `lshCandidates`
@@ -193,82 +217,38 @@ object Dedup {
                       numBands: Int = 6, rowsPerBand: Int = 3,
                       shingleN: Int = 3, threshold: Double = 0.5,
                       maxBucket: Int = Int.MaxValue): DataFrame = {
-    // The narrow (content-hash, id, shingleable) projection is computed
-    // once and persisted: it feeds the dup-group aggregate AND the
-    // dup-member mapping. The TEXT column is deliberately NOT cached —
-    // a corpus-sized cache is the riskier bet at scale (r10 A/B).
-    // `shingleable` rides along so the intra-pair gate (does the group's
-    // text shingle at all?) never needs a corpus-scale distinct over the
-    // shingle set: lower()/split() preserve token count, so
-    // size(split(lower(text))) >= n  ⟺  the doc survives `shingles`.
-    val keyed = docs
-      .select(md5(col(textCol)).as("ch"), col(idCol).as("member"),
-        (size(split(lower(col(textCol)), " ")) >= shingleN).as("shingleable"))
+    require(numBands > 0 && rowsPerBand > 0 && shingleN > 0,
+      s"numBands, rowsPerBand and shingleN must be positive, got " +
+        s"$numBands, $rowsPerBand, $shingleN")
+    // the text crosses the md5 exchange once, as one value per group
+    // (texts within a group are identical; first() picks one), and is
+    // shingled after it — once per distinct text
+    val groups = tokenized(
+        docs.groupBy(md5(col(textCol)).as("ch"))
+          .agg(min(col(idCol)).as("rep"),
+            array_sort(collect_list(col(idCol))).as("members"),
+            first(col(textCol)).as("txt")),
+        "txt", shingleN)
+      .select(col("rep"), col("members"), shingleSet(shingleN).as("ss"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE corpus-scale aggregate keyed on the content hash (narrow rows:
-    // hash + id + bool — the text never shuffles anywhere in this
-    // pipeline, r20). Groups with >1 member are the ONLY ones the
-    // fan-out machinery has to know about; on a duplicate-light corpus
-    // (post-exact-dedup web data, every bench fixture) `dupGroups` is
-    // tiny and every join below it becomes a map-side broadcast under
-    // AQE — the fan-out cost scales with DUPLICATES, not the corpus.
-    val dupGroups = keyed.groupBy("ch")
-      .agg(min(col("member")).as("rep"), count(lit(1)).as("nm"),
-        max(col("shingleable")).as("shingleable"))
-      .filter(col("nm") > 1)
-    // (rep, member, shingleable) for dup-group members only; feeds the
-    // two fan-out left-joins and the intra self-join (both sides) — the
-    // group-level shingleable flag rides along so the intra gate is a
-    // filter on this one persisted frame, not a second group aggregate
-    val dupM = keyed.select("ch", "member")
-      .join(dupGroups.select("ch", "rep", "shingleable"), "ch")
-      .select("rep", "member", "shingleable")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one representative row per distinct text WITHOUT re-hashing or
-    // shuffling the text (the old collapseExact groupBy moved the whole
-    // text column through an exchange): drop the non-representative
-    // members of dup groups — a broadcast anti-join against the tiny
-    // non-rep id set — and rename in place. Identical (id, txt) set:
-    // within a group texts are byte-identical and min(id) survives.
-    val nonReps = dupM.filter(col("member") =!= col("rep"))
-      .select(col("member").as("__gf_nr"))
-    val reps = docs
-      .join(nonReps, docs(idCol) === nonReps("__gf_nr"), "left_anti")
-      .select(col(idCol).as("id"), col(textCol).as("txt"))
-    // The shingle set feeds three consumers (signatures, both Jaccard
-    // sides); without a persist the text would be re-scanned and
-    // re-shingled per consumer — at corpus scale that multiplies the
-    // dominant cost. MEMORY_AND_DISK spills instead of OOMing. The
-    // cache entry lives until the caller drops it
-    // (`spark.catalog.clearCache()` or unpersist) — repeated invocations
-    // in one session should clear between runs, as Bench does.
-    val sh = shingles(reps, "id", "txt", shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = lshCandidates(minhashBandKeys(sh, numBands, rowsPerBand), maxBucket)
-    val repPairs = jaccard(cands, sh).filter(col("jac") >= threshold)
-    // fan cross-group rep pairs out to all member pairs. A rep absent
-    // from dupM is its own single member (coalesce) — the left joins
-    // touch ONLY dup-group rows, never a corpus-scale identity map.
-    // Member ids may order differently than rep ids, so re-normalize
-    // with least/greatest.
-    val cross = repPairs
-      .join(dupM.select(col("rep").as("a"), col("member").as("ma")),
-        Seq("a"), "left")
-      .join(dupM.select(col("rep").as("b"), col("member").as("mb")),
-        Seq("b"), "left")
-      .select(least(coalesce(col("ma"), col("a")), coalesce(col("mb"), col("b"))).as("a"),
-        greatest(coalesce(col("ma"), col("a")), coalesce(col("mb"), col("b"))).as("b"),
-        col("jac"))
-    // intra-group pairs: jac = 1.0 exactly (identical shingle sets), only
-    // for groups whose text shingles at all — too-short texts produce no
-    // candidates in the uncollapsed pipeline either. The gate is the
-    // precomputed `shingleable` flag, not a join against the shingle set.
-    val dupMembers = dupM.filter(col("shingleable"))
-    val intra = dupMembers.select(col("rep"), col("member").as("a"))
-      .join(dupMembers.select(col("rep"), col("member").as("b")), "rep")
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), lit(1.0).as("jac"))
-      .filter(lit(1.0) >= threshold)
+    val cands = lshCandidates(
+      bandKeys(groups.select(col("rep").as("id"), col("ss")), numBands, rowsPerBand),
+      maxBucket)
+    def side(k: String) = groups.select(col("rep").as(k), col("ss").as(s"s$k"),
+      col("members").as(s"m$k"))
+    // cross-group pairs: every member of one group × every member of
+    // the other; member ids may order differently than rep ids, so
+    // re-normalize with least/greatest
+    val cross = verified(cands, side("a"), side("b"), threshold)
+      .select(explode(col("ma")).as("ma"), col("mb"), col("jac"))
+      .select(col("ma"), explode(col("mb")).as("mb"), col("jac"))
+      .select(least(col("ma"), col("mb")).as("a"),
+        greatest(col("ma"), col("mb")).as("b"), col("jac"))
+    // intra-group pairs: member i (0-based, sorted) × members i+1..
+    val intra = groups.filter(size(col("members")) > 1 && lit(1.0) >= threshold)
+      .select(posexplode(col("members")).as(Seq("i", "a")), col("members"))
+      .select(col("a"), explode(slice(col("members"), col("i") + 2,
+        size(col("members")) - col("i") - 1)).as("b"), lit(1.0).as("jac"))
     cross.unionByName(intra)
       .select(col("a").as("a_id"), col("b").as("b_id"), round(col("jac"), 6).as("jac"))
   }
@@ -277,19 +257,22 @@ object Dedup {
     * corpus B at document grain (the train-vs-benchmark decontamination
     * shape: which training docs near-duplicate an eval doc; the
     * substring-grain companion is
-    * [[graft.operators.Curation.decontaminateSpans]]). Same LSH
-    * machinery as [[minhashNearDups]], but candidates come from a
-    * LEFT-keys × RIGHT-keys bucket join — only cross-side pairs are ever
-    * generated, and within-side duplicates are never compared. Returns
+    * [[graft.operators.Curation.decontaminateSpans]]). Same per-document
+    * machinery as [[minhashNearDups]] — one shingle-set row per doc,
+    * signatures from the [[graft.functions.MinhashBands]] kernel, array
+    * Jaccard verification — but candidates come from a LEFT-keys ×
+    * RIGHT-keys bucket join: only cross-side pairs are ever generated,
+    * and within-side duplicates are never compared. Returns
     * (left_id, right_id, jac) at jac ≥ threshold; ids may collide across
-    * corpora (they are independent keyspaces). Scale note: a flood of
-    * byte-identical docs on ONE side makes its buckets large — run
-    * [[collapseExact]] per side first when that is a real shape (the
-    * same discipline minhashNearDups bakes in), or cap with
-    * `maxBucket` (per-side bucket exclusion, audited by
-    * [[lshOversizeBuckets]] — a recall trade the caller opts into).
+    * corpora (they are independent keyspaces), and each side's id column
+    * must be a key. Scale note: a flood of byte-identical docs on ONE
+    * side makes its buckets large — run [[collapseExact]] per side first
+    * when that is a real shape (the same discipline minhashNearDups
+    * bakes in), or cap with `maxBucket` (per-side bucket exclusion,
+    * audited by [[lshOversizeBuckets]] — a recall trade the caller opts
+    * into).
     * Cache hygiene (same contract as [[minhashNearDups]]): both sides'
-    * shingle frames persist MEMORY_AND_DISK and the returned frame
+    * shingle-set frames persist MEMORY_AND_DISK and the returned frame
     * depends on them, so they cannot be unpersisted here — repeated
     * invocations in one session accumulate corpus-sized cache entries
     * until the caller clears them (`spark.catalog.clearCache()` or
@@ -302,45 +285,31 @@ object Dedup {
                              shingleN: Int = 3,
                              threshold: Double = 0.5,
                              maxBucket: Int = Int.MaxValue): DataFrame = {
-    // each shingle set feeds band keys + the Jaccard intersection + its
-    // size aggregate — persist per side, same rationale as the self form
-    val shL = shingles(left, leftIdCol, leftTextCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shR = shingles(right, rightIdCol, rightTextCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    require(numBands > 0 && rowsPerBand > 0 && shingleN > 0,
+      s"numBands, rowsPerBand and shingleN must be positive, got " +
+        s"$numBands, $rowsPerBand, $shingleN")
+    // each side's (id, ss) frame feeds its band keys and its
+    // verification side — persisted, so it is shingled once
+    def sets(df: DataFrame, idCol: String, textCol: String) =
+      tokenized(df.select(col(idCol).as("id"), col(textCol).as("txt")),
+          "txt", shingleN)
+        .select(col("id"), shingleSet(shingleN).as("ss"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sL = sets(left, leftIdCol, leftTextCol)
+    val sR = sets(right, rightIdCol, rightTextCol)
     // `maxBucket` is the same safety valve as the self form's: a bucket
     // holding B_l left ids and B_r right ids yields B_l·B_r candidate
     // pairs, so a flood of near-identical docs on EITHER side can go
-    // quadratic. The cap applies PER SIDE (window over the bucket key,
-    // sharing the join's partitioning); audit the drops with
+    // quadratic. The cap applies PER SIDE; audit the drops with
     // [[lshOversizeBuckets]] on each side's band keys.
-    def capped(keys: DataFrame): DataFrame =
-      if (maxBucket == Int.MaxValue) keys
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_key")
-        keys.withColumn("__bucket_n", count(lit(1)).over(w))
-          .filter(col("__bucket_n") <= maxBucket)
-          .drop("__bucket_n")
-      }
-    val kL = capped(minhashBandKeys(shL, numBands, rowsPerBand))
+    val kL = capBuckets(bandKeys(sL, numBands, rowsPerBand), maxBucket)
       .select(col("band"), col("band_key"), col("id").as("a"))
-    val kR = capped(minhashBandKeys(shR, numBands, rowsPerBand))
+    val kR = capBuckets(bandKeys(sR, numBands, rowsPerBand), maxBucket)
       .select(col("band"), col("band_key"), col("id").as("b"))
     val cands = kL.join(kR, Seq("band", "band_key"))
       .select("a", "b").distinct()
-    val inter = cands
-      .join(shL.select(col("id").as("a"), col("sh")), "a")
-      .join(shR.select(col("id").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(shL.groupBy("id").agg(count(lit(1)).as("n_a"))
-        .select(col("id").as("a"), col("n_a")), "a")
-      .join(shR.groupBy("id").agg(count(lit(1)).as("n_b"))
-        .select(col("id").as("b"), col("n_b")), "b")
-      .withColumn("jac", col("n_inter").cast("double") /
-        (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-      .filter(col("jac") >= threshold)
+    verified(cands, sL.select(col("id").as("a"), col("ss").as("sa")),
+        sR.select(col("id").as("b"), col("ss").as("sb")), threshold)
       .select(col("a").as("left_id"), col("b").as("right_id"),
         round(col("jac"), 6).as("jac"))
   }
@@ -378,10 +347,7 @@ object Dedup {
       struct(blockCols.map(col): _*).as("blk"),
       split(lower(col(textCol)), " ").as("w"))
     val sh = toks.filter(size(col("w")) >= shingleN)
-      .select(col("id"), col("blk"), explode(expr(
-        s"transform(sequence(0, size(w) - $shingleN), i -> concat_ws(' ', ${
-          (0 until shingleN).map(j => s"w[i + $j]").mkString(", ")}))"
-      )).as("sh"))
+      .select(col("id"), col("blk"), explode(expr(ngrams("w", shingleN))).as("sh"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // shingle-first co-occurrence join: only shingles two block-mates share

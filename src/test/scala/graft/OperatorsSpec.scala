@@ -129,6 +129,143 @@ class OperatorsSpec extends AnyFunSuite {
     assert(pairs.find(p => (p._1, p._2) == (1L, 2L)).get._3 == 1.0)
   }
 
+  test("MinHash operators reject non-positive bands, rows and shingle size") {
+    val sh = Dedup.shingles(docs, "doc_id", "text")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "shingles(n = 0)" -> (() => Dedup.shingles(docs, "doc_id", "text", 0)),
+      "minhashBandKeys(0, 3)" -> (() => Dedup.minhashBandKeys(sh, 0, 3)),
+      "minhashBandKeys(6, 0)" -> (() => Dedup.minhashBandKeys(sh, 6, 0))) ++
+      Seq((0, 3, 3), (6, 0, 3), (6, 3, 0)).flatMap { case (b, r, n) => Seq(
+        s"minhashNearDups($b, $r, $n)" -> (() => Dedup.minhashNearDups(docs,
+          "doc_id", "text", numBands = b, rowsPerBand = r, shingleN = n)),
+        s"minhashNearDupsAgainst($b, $r, $n)" -> (() =>
+          Dedup.minhashNearDupsAgainst(docs, "doc_id", "text", docs, "doc_id",
+            "text", numBands = b, rowsPerBand = r, shingleN = n)))
+      }
+    calls.foreach { case (name, call) =>
+      intercept[IllegalArgumentException](call())
+      info(s"$name rejected")
+    }
+  }
+
+  test("MinhashBands equals the md5/conv/substring column formula") {
+    import graft.functions.MinhashBands
+    import org.apache.spark.sql.GraftShim
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val rnd = new scala.util.Random(17)
+    val pool = Seq("a", "b", "z", " ", "é", "ß", "日", "本", "🙂", "x y")
+    def str() = Seq.fill(rnd.nextInt(10))(pool(rnd.nextInt(pool.size))).mkString
+    val arrays: Seq[(Long, Seq[String])] =
+      (0L until 40L).map(i => i -> Seq.fill(1 + rnd.nextInt(6))(str())) ++ Seq(
+        100L -> Seq(""), 101L -> Seq("a", null, "b", null),
+        102L -> Seq.empty[String], 103L -> Seq("naïve café", "日本語 テキスト", ""))
+    val df = arrays.toDF("id", "arr")
+    // the exploded-row signature: one md5 per shingle, 13-hex-digit
+    // halves, per-hash min aggregate, band keys joined in hash order
+    def formula(bands: Int, rows: Int) = {
+      val k = bands * rows
+      val mins = df.select(col("id"), explode(col("arr")).as("sh"))
+        .withColumn("m", md5(col("sh")))
+        .withColumn("x1", conv(substring(col("m"), 1, 13), 16, 10).cast("long"))
+        .withColumn("x2", conv(substring(col("m"), 14, 13), 16, 10).cast("long"))
+        .groupBy("id").agg(min(col("x1") % lit(Dedup.MinhashPrime)).as("h0"),
+          (1 until k).map(h => min((col("x1") + lit(h.toLong) * col("x2")) %
+            lit(Dedup.MinhashPrime)).as(s"h$h")): _*)
+      mins.collect().flatMap { r =>
+        (0 until bands).map(b => (r.getLong(0), b,
+          (0 until rows).map(j => r.getLong(1 + b * rows + j)).mkString(",")))
+      }.toSet
+    }
+    def rowsOf(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    for ((bands, rows) <- Seq((6, 3), (2, 5))) {
+      val expected = formula(bands, rows)
+      assert(expected.map(_._1) === (arrays.map(_._1).toSet - 102L))
+      val kernel = df.select(col("id"), posexplode(GraftShim.column(MinhashBands(
+        GraftShim.expression(col("arr")), bands, rows))).as(Seq("band", "band_key")))
+      assert(rowsOf(kernel) === expected, s"kernel ($bands × $rows)")
+      val public = Dedup.minhashBandKeys(
+        df.select(col("id"), explode(col("arr")).as("sh")), bands, rows)
+      assert(rowsOf(public) === expected, s"minhashBandKeys ($bands × $rows)")
+      // the interpreted path agrees with the generated code
+      arrays.foreach { case (id, arr) =>
+        val got = MinhashBands(Literal.create(arr, ArrayType(StringType)), bands, rows)
+          .eval().asInstanceOf[ArrayData].toObjectArray(StringType)
+          .zipWithIndex.map { case (key, b) => (id, b, key.toString) }.toSet
+        assert(got === expected.filter(_._1 == id), s"eval of doc $id")
+      }
+    }
+    assert(MinhashBands(Literal.create(null, ArrayType(StringType)), 6, 3).eval() == null)
+  }
+
+  test("minhashNearDups and minhashNearDupsAgainst equal a driver-side brute force") {
+    val rnd = new scala.util.Random(5)
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "naïve", "café", "日本",
+      "straße", "eta", "theta")
+    val bases = Seq.fill(4)(Seq.fill(9)(vocab(rnd.nextInt(vocab.size))))
+    // near-duplicates: one or two tokens of a base replaced
+    val near = (0 until 24).map { _ =>
+      val b = bases(rnd.nextInt(bases.size)).toArray
+      (0 until 1 + rnd.nextInt(2)).foreach(_ => b(rnd.nextInt(b.length)) = vocab(rnd.nextInt(vocab.size)))
+      b.mkString(" ")
+    }
+    val fixed = Seq(
+      "the quick brown fox jumps over the lazy dog",
+      "the quick brown fox jumps over the lazy dog", // exact-dup group of 3
+      "the quick brown fox jumps over the lazy dog",
+      "the quick  brown fox jumps over the lazy dog", // double space
+      "The Quick brown fox jumps over the lazy dog", // same shingles, other text
+      "the quick brown fox jumps over the lazy cat",
+      "one two", "one two", // too-short duplicate pair
+      null, "", "", "  ")
+    val corpus = (fixed ++ near).zipWithIndex.map { case (t, i) => (i.toLong * 3 + 1, t) }
+      .toDF("doc_id", "text")
+    def keyed(d: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashBandKeys(Dedup.shingles(d, "doc_id", "text"), 6, 3).collect()
+        .map(r => (r.getInt(1), r.getString(2)) -> r.getLong(0)).toSeq
+    def jac(a: Set[String], b: Set[String]): Double = {
+      val ni = (a & b).size
+      BigDecimal(ni.toDouble / (a.size + b.size - ni).toDouble)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    def triples(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+    // shingle sets and band keys of the UNCOLLAPSED corpus
+    val sh = Dedup.shingles(corpus, "doc_id", "text").collect()
+      .groupMap(_.getLong(0))(_.getString(1)).map { case (id, s) => id -> s.toSet }
+    val expected = (for {
+      ids <- keyed(corpus).groupMap(_._1)(_._2).values.toSeq
+      a <- ids; b <- ids if a < b
+      j = jac(sh(a), sh(b)) if j >= 0.5
+    } yield (a, b, j)).toSet
+    assert(expected.exists(_._3 == 1.0) && expected.exists(_._3 < 1.0))
+    assert(triples(Dedup.minhashNearDups(corpus, "doc_id", "text")) === expected)
+
+    // cross-corpus: each side signed on its own, pairs share a bucket
+    val left = corpus.filter(col("doc_id") % 2 === 1)
+    val right = corpus.filter(col("doc_id") % 2 === 0)
+    val rightBuckets = keyed(right).groupMap(_._1)(_._2)
+    val expectedCross = (for {
+      (key, l) <- keyed(left); r <- rightBuckets.getOrElse(key, Nil)
+      j = jac(sh(l), sh(r)) if j >= 0.5
+    } yield (l, r, j)).toSet
+    assert(expectedCross.exists(_._3 == 1.0) && expectedCross.exists(_._3 < 1.0))
+    assert(triples(Dedup.minhashNearDupsAgainst(left, "doc_id", "text",
+      right, "doc_id", "text")) === expectedCross)
+  }
+
+  test("minhashNearDups over documents.parquet starts a pinned number of jobs") {
+    val d = spark.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
+    spark.catalog.clearCache()
+    val n = TestSpark.jobs(Dedup.minhashNearDups(d, "doc_id", "text", numBands = 6,
+      rowsPerBand = 3, shingleN = 3, threshold = 0.5).collect(): Unit)
+    spark.catalog.clearCache()
+    assert(n === 9, "minhashNearDups job count moved")
+  }
+
   test("keepBestPerGroup: per-component argmax by score, ties to lowest id") {
     import spark.implicits._
     // two components: path {1,2,3} and pair {7,9}; scores favor 2 in
@@ -331,20 +468,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("seeded pqTopK and semanticDedup(iters = 0) start a pinned number of jobs") {
     val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
-    val sc = spark.sparkContext
-    // Spark jobs started while building and collecting `body`
-    def jobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet(): Unit
-      }
-      org.apache.spark.ListenerBusAccess.drain(sc)
-      sc.addSparkListener(listener)
-      try { body; org.apache.spark.ListenerBusAccess.drain(sc); n.get() }
-      finally sc.removeSparkListener(listener)
-    }
+    import TestSpark.jobs
     // pqTopK: one codebook-seed collect shared by all 16 subspaces, then
     // the search (a builder that seeded per subspace would start 15
     // more); semanticDedup: one seed collect, then the dedup itself
