@@ -1,6 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{IcebergIO, IcebergWrite}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFieldName,
+  UnresolvedProcedure, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression,
+  NamedArgumentExpression}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AlterColumnSpec,
+  AlterColumns, AnalyzeColumn, AnalyzeTable, Assignment, Call, DeleteAction,
+  DeleteFromTable, DropColumns, InsertAction, InsertIntoStatement, InsertStarAction,
+  LogicalPlan, MergeAction, MergeIntoTable, QualifiedColType, RenameColumn,
+  ShowColumns, ShowTableProperties, ShowTables, SubqueryAlias, TruncateTable,
+  UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType}
 
 /**
  * Session facade mirroring the reference engine's `BallistaContext`
@@ -392,157 +407,131 @@ final class GraftSession private (val spark: SparkSession) {
     df.write.format("avro").mode("overwrite").save(path)
 
   /**
-   * SQL entry point (reference: context.rs:377-521). Handles the
-   * reference-dialect `CREATE EXTERNAL TABLE` by translating it to Spark
-   * DDL, and gates SHOW statements on the information-schema toggle just
-   * like the reference (context.rs:342-371, core/src/config.rs:200-202).
+   * SQL entry point (reference: context.rs:377-521). ONE grammar, like the
+   * reference's single `sqlparser` front end: each statement is parsed
+   * once by Spark's own parser and the plan node picks the route.
+   *
+   *  - `DELETE` / `UPDATE` / `MERGE INTO` on a single-part name, and
+   *    `INSERT` / `TRUNCATE` / `ALTER TABLE … COLUMN` / `ANALYZE` /
+   *    `SHOW TBLPROPERTIES` on a REGISTERED Iceberg name, go to the
+   *    merge-on-read [[graft.sources.IcebergWrite]] verbs, the parsed
+   *    expressions passed as Columns ([[claimed]] lists the exact shapes);
+   *  - `CALL system.<proc>(…)` goes to the maintenance procedures;
+   *  - `SHOW TABLES` / `SHOW COLUMNS` are gated on the information-schema
+   *    toggle (context.rs:342-371, core/src/config.rs:200-202);
+   *  - everything else — including text Spark cannot parse, such as the
+   *    reference dialect's `CREATE EXTERNAL TABLE … WITH HEADER ROW` — goes
+   *    to [[ExternalTableDdl]] and then `spark.sql`, untouched.
+   *
+   * The time-travel and `SIMILAR TO` text rewrites run before the parse,
+   * so an `INSERT … SELECT` query gets both.
    */
   def sql(sqlText: String): DataFrame = {
-    val trimmed = sqlText.trim
-    if (isShowStatement(trimmed) && !informationSchemaEnabled)
+    val escaped = spark.conf
+      .getOption("spark.sql.parser.escapedStringLiterals")
+      .exists(_.equalsIgnoreCase("true"))
+    val (rewritten, pinViews) = rewriteTimeTravel(sqlText)
+    // spark.sql analyzes eagerly (Dataset.ofRows asserts analysis),
+    // inlining each pinned view's plan — dropping them once the statement
+    // has run keeps the catalog from accumulating one view per query
+    try {
+      val text = SimilarTo.rewrite(rewritten, escaped)
+      val plan =
+        try Some(GraftShim.parsePlan(spark, text))
+        catch { case _: ParseException => None }
+      plan.collect(claimed).getOrElse(unclaimed(sqlText.trim, text))
+    } finally pinViews.foreach(v => spark.catalog.dropTempView(v): Unit)
+  }
+
+  /** The parsed statements this surface serves. Only these exact shapes
+    * are claimed; any other (a column list, `PARTITION`, `BY NAME`,
+    * `NOSCAN`, `FOR ALL COLUMNS`, a property key, `WITH SCHEMA
+    * EVOLUTION`, a multi-part name, …) runs as Spark's own statement. */
+  private def claimed: PartialFunction[LogicalPlan, DataFrame] = {
+    case _: ShowTables | _: ShowColumns if !informationSchemaEnabled =>
       throw new IllegalStateException(
         "SHOW statements are disabled; enable with config " +
           s"'$InformationSchemaKey=true' (reference semantics: " +
           "ballista/client/src/context.rs:384-393)")
-    // SQL DML over registered native-Iceberg tables: DELETE / UPDATE /
-    // whole-row MERGE route to the merge-on-read writer verbs. Only
-    // statements that SHAPE-match are claimed — everything else falls
-    // through to spark.sql untouched.
-    DmlSql.parse(trimmed) match {
-      // INSERT/ALTER are claimed only for REGISTERED Iceberg targets —
-      // catalog parquet tables keep Spark's own INSERT/ALTER paths
-      case Some(DmlSql.Insert(t, _)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.InsertOverwrite(t, _)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.Truncate(t)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.AlterAddColumn(t, _, _, _)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.AlterRenameColumn(t, _, _)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.AlterDropColumn(t, _)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.AlterWidenColumn(t, _, _)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.AnalyzeTable(t, _)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.ShowTblProperties(t)) if icebergPathOpt(t).isEmpty =>
-      case Some(DmlSql.ShowTblProperties(t)) =>
-        import spark.implicits._
-        return graft.sources.IcebergIO.loadMetadata(icebergPathOf(t))
-          .properties.toSeq.sortBy(_._1).toDF("key", "value")
-      // CALL has no Spark-native fallback (needs a catalog plugin):
-      // always claimed, unknown procedures fail loudly
-      case Some(DmlSql.Call(proc, args)) =>
-        return callProcedure(proc, args)
-      case Some(DmlSql.AnalyzeTable(t, cols)) =>
-        import spark.implicits._
-        return Seq(graft.sources.IcebergWrite.computeTableStats(
-          spark, icebergPathOf(t), cols)).toDF("statistics_path")
-      case Some(stmt) =>
-        import org.apache.spark.sql.functions.{expr, lit}
-        stmt match {
-          case DmlSql.Insert(t, query) =>
-            val path = icebergPathOf(t)
-            graft.sources.IcebergWrite.append(
-              alignToTable(t, path, sql(query), "INSERT INTO"), path)
-          case DmlSql.InsertOverwrite(t, query) =>
-            val path = icebergPathOf(t)
-            graft.sources.IcebergWrite.overwrite(
-              alignToTable(t, path, sql(query), "INSERT OVERWRITE"), path)
-          case DmlSql.Truncate(t) =>
-            // an overwrite snapshot with no files: metadata-only, prior
-            // snapshots stay time-travelable — never a full rewrite
-            val path = icebergPathOf(t)
-            val schema = graft.sources.IcebergIO.loadMetadata(path).schema
-            graft.sources.IcebergWrite.overwrite(
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-              path)
-          case DmlSql.Delete(t, where) =>
-            graft.sources.IcebergWrite.deleteWhere(spark, icebergPathOf(t),
-              where.map(expr).getOrElse(lit(true)))
-          case DmlSql.Update(t, sets, where) =>
-            graft.sources.IcebergWrite.updateWhere(spark, icebergPathOf(t),
-              where.map(expr).getOrElse(lit(true)),
-              sets.map { case (c, e) => c -> expr(e) }.toMap)
-          case DmlSql.Merge(t, source, keys, tAlias, sAlias, clauses) =>
-            import graft.sources.IcebergWrite
-            val path = icebergPathOf(t)
-            clauses match {
-              // canonical whole-row pair -> the upsert fast path. On v2
-              // that is the equality-delete commit (no position-pair
-              // scan); on v3 the IDENTITY-PRESERVING form — ANSI MERGE
-              // UPDATE is an in-place update, so a matched row must keep
-              // its _row_id exactly like the conditional-clause path
-              // below does (the two MERGE spellings may not disagree on
-              // row identity).
-              case Seq(DmlSql.WhenUpdate(None, _, true),
-                       DmlSql.WhenInsert(None, _, _, true)) =>
-                val v3 = graft.sources.IcebergIO.loadMetadata(path)
-                  .formatVersion >= 3
-                IcebergWrite.upsert(spark.table(source), path, keys,
-                  preserveLineage = v3)
-              case _ =>
-                val schema = graft.sources.IcebergIO.loadMetadata(path).schema
-                // star forms expand to every table column from the
-                // source alias; expression text resolves against the
-                // statement's own aliases
-                def allFromSource: Map[String, org.apache.spark.sql.Column] =
-                  schema.fieldNames.map(n =>
-                    n -> org.apache.spark.sql.functions.col(s"$sAlias.$n")).toMap
-                val built = clauses.map {
-                  case DmlSql.WhenUpdate(c, _, true) =>
-                    IcebergWrite.WhenMatchedUpdate(allFromSource, c.map(expr))
-                  case DmlSql.WhenUpdate(c, sets, false) =>
-                    IcebergWrite.WhenMatchedUpdate(
-                      sets.map { case (n, e) => n -> expr(e) }.toMap, c.map(expr))
-                  case DmlSql.WhenDelete(c) =>
-                    IcebergWrite.WhenMatchedDelete(c.map(expr))
-                  case DmlSql.WhenInsert(c, _, _, true) =>
-                    IcebergWrite.WhenNotMatchedInsert(allFromSource, c.map(expr))
-                  case DmlSql.WhenInsert(c, cols, exprs, false) =>
-                    IcebergWrite.WhenNotMatchedInsert(
-                      cols.zip(exprs.map(expr)).toMap, c.map(expr))
-                  case DmlSql.WhenSourceDelete(c) =>
-                    IcebergWrite.WhenNotMatchedBySourceDelete(c.map(expr))
-                  case DmlSql.WhenSourceUpdate(c, sets) =>
-                    IcebergWrite.WhenNotMatchedBySourceUpdate(
-                      sets.map { case (n, e) => n -> expr(e) }.toMap,
-                      c.map(expr))
-                }
-                IcebergWrite.merge(spark, path, spark.table(source), keys,
-                  built, targetAlias = tAlias, sourceAlias = sAlias)
-            }
-          // schema evolution is metadata-only, but the LIVE view's
-          // attribute set was captured at registration — re-register so
-          // the next query sees the evolved schema
-          case DmlSql.AlterAddColumn(t, name, tpe, dflt) =>
-            val dt = org.apache.spark.sql.types.DataType.fromDDL(tpe)
-            dflt match {
-              case None =>
-                graft.sources.IcebergWrite.addColumn(icebergPathOf(t), name, dt)
-              case Some(litText) =>
-                // evaluate the literal ONCE at ALTER time (DDL
-                // semantics) to the external value the writer's
-                // single-value serializer expects
-                val v = spark.range(1)
-                  .select(expr(litText).cast(dt)).head.get(0)
-                require(v != null,
-                  s"DEFAULT literal '$litText' evaluated to NULL for $tpe " +
-                    "— omit DEFAULT for a null-filled column")
-                graft.sources.IcebergWrite.addColumnWithDefault(
-                  icebergPathOf(t), name, dt, v)
-            }
-            registerIceberg(t, icebergPathOf(t))
-          case DmlSql.AlterRenameColumn(t, from, to) =>
-            graft.sources.IcebergWrite.renameColumn(icebergPathOf(t), from, to)
-            registerIceberg(t, icebergPathOf(t))
-          case DmlSql.AlterDropColumn(t, name) =>
-            graft.sources.IcebergWrite.dropColumn(spark, icebergPathOf(t), name)
-            registerIceberg(t, icebergPathOf(t))
-          case DmlSql.AlterWidenColumn(t, name, tpe) =>
-            graft.sources.IcebergWrite.widenColumn(icebergPathOf(t), name,
-              org.apache.spark.sql.types.DataType.fromDDL(tpe))
-            registerIceberg(t, icebergPathOf(t))
-          case _: DmlSql.Call => throw new IllegalStateException("unreachable")
-        }
-        return spark.emptyDataFrame
-      case None =>
-    }
+    case DeleteFromTable(Named(t), cond) =>
+      IcebergWrite.deleteWhere(spark, icebergPathOf(t), GraftShim.column(cond))
+      spark.emptyDataFrame
+    case UpdateTable(Named(t), assignments, cond) =>
+      val path = icebergPathOf(t)
+      IcebergWrite.updateWhere(spark, path,
+        cond.map(GraftShim.column).getOrElse(lit(true)), setList(assignments))
+      spark.emptyDataFrame
+    case m @ MergeIntoTable(Aliased(tAlias, Named(t)), Aliased(sAlias, source),
+        _, _, _, _, false) =>
+      mergeInto(t, tAlias, source, sAlias, m)
+      spark.emptyDataFrame
+    // INSERT / TRUNCATE / ALTER / ANALYZE / SHOW TBLPROPERTIES are claimed
+    // only for REGISTERED Iceberg names — catalog tables keep Spark's paths
+    case InsertIntoStatement(Named(t), part, cols, query, overwrite, _, false)
+        if registered(t) && part.isEmpty && cols.isEmpty =>
+      val path = icebergPathOf(t)
+      val verb = if (overwrite) "INSERT OVERWRITE" else "INSERT INTO"
+      val df = alignToTable(t, path, GraftShim.dataFrame(spark, query), verb)
+      if (overwrite) IcebergWrite.overwrite(df, path)
+      else IcebergWrite.append(df, path)
+      spark.emptyDataFrame
+    case TruncateTable(Named(t)) if registered(t) =>
+      // an overwrite snapshot with no files: metadata-only, prior
+      // snapshots stay time-travelable — never a full rewrite
+      val path = icebergPathOf(t)
+      val schema = IcebergIO.loadMetadata(path).schema
+      IcebergWrite.overwrite(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), path)
+      spark.emptyDataFrame
+    // schema evolution is metadata-only, but the LIVE view's attribute set
+    // was captured at registration — re-register so the next query sees
+    // the evolved schema
+    case AddColumns(Named(t), Seq(QualifiedColType(None, name, dt, true, None, None, dflt)))
+        if registered(t) =>
+      val path = icebergPathOf(t)
+      dflt match {
+        case None => IcebergWrite.addColumn(path, name, dt)
+        case Some(d) =>
+          // evaluate the default ONCE at ALTER time (DDL semantics) to
+          // the external value the writer's single-value serializer expects
+          val v = spark.range(1).select(GraftShim.column(d.child).cast(dt)).head.get(0)
+          require(v != null,
+            s"DEFAULT literal '${d.originalSQL}' evaluated to NULL for ${dt.sql} " +
+              "— omit DEFAULT for a null-filled column")
+          IcebergWrite.addColumnWithDefault(path, name, dt, v)
+      }
+      reregister(t, path)
+    case RenameColumn(Named(t), UnresolvedFieldName(Seq(from)), to) if registered(t) =>
+      val path = icebergPathOf(t)
+      IcebergWrite.renameColumn(path, from, to)
+      reregister(t, path)
+    case DropColumns(Named(t), Seq(UnresolvedFieldName(Seq(name))), false) if registered(t) =>
+      val path = icebergPathOf(t)
+      IcebergWrite.dropColumn(spark, path, name)
+      reregister(t, path)
+    case AlterColumns(Named(t), Seq(AlterColumnSpec(UnresolvedFieldName(Seq(name)),
+        Some(dt), None, None, None, None, false))) if registered(t) =>
+      val path = icebergPathOf(t)
+      IcebergWrite.widenColumn(path, name, dt)
+      reregister(t, path)
+    case AnalyzeTable(Named(t), part, false) if registered(t) && part.isEmpty =>
+      tableStats(t, Nil)
+    case AnalyzeColumn(Named(t), Some(cols), false) if registered(t) =>
+      tableStats(t, cols)
+    case ShowTableProperties(Named(t), None, _) if registered(t) =>
+      import spark.implicits._
+      IcebergIO.loadMetadata(icebergPathOf(t))
+        .properties.toSeq.sortBy(_._1).toDF("key", "value")
+    // CALL has no Spark-native fallback (needs a catalog plugin): always
+    // claimed, unknown procedures fail loudly
+    case Call(UnresolvedProcedure(SystemProcedure(proc)), args, _) =>
+      callProcedure(proc, args)
+  }
+
+  /** The statements [[claimed]] does not serve, as before the parse:
+    * reference-dialect DDL first, then Spark's own `sql` (which parses
+    * again — keeping its parse-phase tracking and SQL scripting). */
+  private def unclaimed(trimmed: String, text: String): DataFrame =
     ExternalTableDdl.translateIceberg(trimmed) match {
       case Some((ifNotExists, name, location, ctas)) =>
         // `STORED AS ICEBERG` has no Spark USING connector here — it
@@ -563,21 +552,129 @@ final class GraftSession private (val spark: SparkSession) {
           }
           registerIceberg(name, location)
         }
-        return spark.emptyDataFrame
-      case None =>
+        spark.emptyDataFrame
+      case None => spark.sql(ExternalTableDdl.translate(trimmed).getOrElse(text))
     }
-    ExternalTableDdl.translate(trimmed) match {
-      case Some(translated) => spark.sql(translated)
-      case None =>
-        val escaped = spark.conf
-          .getOption("spark.sql.parser.escapedStringLiterals")
-          .exists(_.equalsIgnoreCase("true"))
-        val (rewritten, pinViews) = rewriteTimeTravel(sqlText)
-        // spark.sql analyzes eagerly (Dataset.ofRows asserts analysis),
-        // inlining each pinned view's plan — dropping them right after
-        // keeps the catalog from accumulating one view per query
-        try spark.sql(SimilarTo.rewrite(rewritten, escaped))
-        finally pinViews.foreach(v => spark.catalog.dropTempView(v): Unit)
+
+  /** The single-part table name of a parsed relation reference. */
+  private object Named {
+    def unapply(p: LogicalPlan): Option[String] = (p match {
+      case r: UnresolvedRelation => r.multipartIdentifier
+      case r: UnresolvedTable => r.multipartIdentifier
+      case r: UnresolvedTableOrView => r.multipartIdentifier
+      case _ => Nil
+    }) match {
+      case Seq(name) => Some(name)
+      case _ => None
+    }
+  }
+
+  /** A MERGE side and its alias: `SubqueryAlias`, else the table name. */
+  private object Aliased {
+    def unapply(p: LogicalPlan): Option[(String, LogicalPlan)] = p match {
+      case SubqueryAlias(id, child) => Some((id.name, child))
+      case Named(t) => Some((t, p))
+      case _ => None
+    }
+  }
+
+  /** `system.<proc>` or `graft.system.<proc>`, lower-cased. */
+  private object SystemProcedure {
+    def unapply(parts: Seq[String]): Option[String] =
+      parts.map(_.toLowerCase(java.util.Locale.ROOT)) match {
+        case Seq("system", proc) => Some(proc)
+        case Seq("graft", "system", proc) => Some(proc)
+        case _ => None
+      }
+  }
+
+  private def registered(name: String): Boolean = icebergPathOpt(name).isDefined
+
+  private def reregister(name: String, path: String): DataFrame = {
+    registerIceberg(name, path)
+    spark.emptyDataFrame
+  }
+
+  private def tableStats(name: String, cols: Seq[String]): DataFrame = {
+    import spark.implicits._
+    Seq(IcebergWrite.computeTableStats(spark, icebergPathOf(name), cols))
+      .toDF("statistics_path")
+  }
+
+  /** `SET col = expr, …` (UPDATE, MERGE UPDATE, MERGE INSERT column
+    * lists) as the writer's assignment map; targets are plain names. */
+  private def setList(as: Seq[Assignment]): Map[String, Column] = as.map {
+    case Assignment(UnresolvedAttribute(Seq(name)), v) => name -> GraftShim.column(v)
+    case Assignment(k, _) => throw new IllegalArgumentException(
+      s"SET target must be a plain column name, got '${k.sql}'")
+  }.toMap
+
+  /** `MERGE INTO` → [[graft.sources.IcebergWrite]]: Spark's three action
+    * lists map in order onto the writer's clauses (which keep that order
+    * within each kind: the first applicable clause wins per row). */
+  private def mergeInto(t: String, tAlias: String, source: LogicalPlan,
+                        sAlias: String, m: MergeIntoTable): Unit = {
+    val path = icebergPathOf(t)
+    val keys = mergeKeys(m.mergeCondition, tAlias, sAlias)
+    def cond(c: Option[Expression]) = c.map(GraftShim.column)
+    // the parser puts only these action kinds in each list
+    def unsupported(a: MergeAction) = throw new IllegalArgumentException(
+      s"unsupported MERGE action: $a")
+    // star forms expand to every table column from the source alias
+    def allFromSource: Map[String, Column] =
+      IcebergIO.loadMetadata(path).schema.fieldNames
+        .map(n => n -> col(s"$sAlias.$n")).toMap
+    (m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions) match {
+      // canonical whole-row pair -> the upsert fast path. On v2 that is
+      // the equality-delete commit (no position-pair scan); on v3 the
+      // IDENTITY-PRESERVING form — ANSI MERGE UPDATE is an in-place
+      // update, so a matched row must keep its _row_id exactly like the
+      // conditional-clause path does (the two MERGE spellings may not
+      // disagree on row identity).
+      case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq()) =>
+        IcebergWrite.upsert(GraftShim.dataFrame(spark, source), path, keys,
+          preserveLineage = IcebergIO.loadMetadata(path).formatVersion >= 3)
+      case _ =>
+        val clauses: Seq[IcebergWrite.MergeClause] =
+          m.matchedActions.map {
+            case UpdateStarAction(c) => IcebergWrite.WhenMatchedUpdate(allFromSource, cond(c))
+            case UpdateAction(c, as, _) => IcebergWrite.WhenMatchedUpdate(setList(as), cond(c))
+            case DeleteAction(c) => IcebergWrite.WhenMatchedDelete(cond(c))
+            case a => unsupported(a)
+          } ++ m.notMatchedActions.map {
+            case InsertStarAction(c) => IcebergWrite.WhenNotMatchedInsert(allFromSource, cond(c))
+            case InsertAction(c, as) => IcebergWrite.WhenNotMatchedInsert(setList(as), cond(c))
+            case a => unsupported(a)
+          } ++ m.notMatchedBySourceActions.map {
+            case DeleteAction(c) => IcebergWrite.WhenNotMatchedBySourceDelete(cond(c))
+            case UpdateAction(c, as, _) =>
+              IcebergWrite.WhenNotMatchedBySourceUpdate(setList(as), cond(c))
+            case a => unsupported(a)
+          }
+        IcebergWrite.merge(spark, path, GraftShim.dataFrame(spark, source), keys,
+          clauses, targetAlias = tAlias, sourceAlias = sAlias)
+    }
+  }
+
+  /** MERGE key columns from the ON condition: an AND spine of
+    * `t.col = s.col` equalities naming the SAME column on both sides
+    * (that is what a keyed upsert means); anything else is refused
+    * loudly rather than silently mis-keyed. */
+  private def mergeKeys(on: Expression, tAlias: String, sAlias: String): Seq[String] = {
+    def spine(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => spine(l) ++ spine(r)
+      case other => Seq(other)
+    }
+    spine(on).map {
+      case EqualTo(UnresolvedAttribute(Seq(q1, c1)), UnresolvedAttribute(Seq(q2, c2))) =>
+        val ok = c1.equalsIgnoreCase(c2) && (
+          (q1.equalsIgnoreCase(tAlias) && q2.equalsIgnoreCase(sAlias)) ||
+          (q1.equalsIgnoreCase(sAlias) && q2.equalsIgnoreCase(tAlias)))
+        require(ok, s"MERGE ON term '$q1.$c1 = $q2.$c2' is not a " +
+          s"target/source equality on one column (aliases: $tAlias, $sAlias)")
+        c1
+      case other => throw new IllegalArgumentException(
+        s"MERGE ON supports a pure-AND spine of t.col = s.col equalities; got '${other.sql}'")
     }
   }
 
@@ -588,7 +685,7 @@ final class GraftSession private (val spark: SparkSession) {
     * catalog tables, so the session rewrites each clause into a
     * fresh PINNED temp view over the same table (the one existing
     * pin-resolution policy, [[graft.sources.IcebergIO]]
-    * `resolveSnapshotId`) before handing the statement to spark.sql.
+    * `resolveSnapshotId`) before the statement is parsed.
     * When no alias follows the clause, the pinned view is aliased back
     * to the ORIGINAL name so qualified column refs (`t.col`) keep
     * resolving. Unregistered names pass through untouched and fail with
@@ -735,33 +832,37 @@ final class GraftSession private (val spark: SparkSession) {
 
   /** `CALL system.<proc>(...)` dispatch — the runtime jar's Spark
     * procedure surface (table maintenance over registered names),
-    * served by [[graft.sources.IcebergWrite]]'s verbs. Results come
-    * back as DataFrames, like the real procedures. */
+    * served by [[graft.sources.IcebergWrite]]'s verbs. Arguments are
+    * positional constants: a string literal, or an integral one (`-5`
+    * folds). Results come back as DataFrames, like the real procedures. */
   private def callProcedure(proc: String,
-                            args: Seq[String]): DataFrame = {
+                            args: Seq[Expression]): DataFrame = {
     import spark.implicits._
-    def str(i: Int): String = {
+    args.collectFirst { case n: NamedArgumentExpression =>
+      throw new IllegalArgumentException(
+        s"CALL system.$proc: named argument '${n.key}' is not supported; " +
+          "pass arguments by position")
+    }
+    // the constant value of argument i when its type passes `ok`
+    def const(i: Int, kind: String)(ok: DataType => Boolean): Any = {
       val a = args.lift(i).getOrElse(throw new IllegalArgumentException(
         s"CALL system.$proc: missing argument ${i + 1}"))
-      require(a.length >= 2 && a.head == '\'' && a.last == '\'',
-        s"CALL system.$proc: argument ${i + 1} must be a 'string' literal, got $a")
-      a.substring(1, a.length - 1)
+      require(a.resolved && a.foldable && ok(a.dataType),
+        s"CALL system.$proc: argument ${i + 1} must be $kind, got ${a.sql}")
+      a.eval()
     }
-    def num(i: Int): Long = {
-      val a = args.lift(i).getOrElse(throw new IllegalArgumentException(
-        s"CALL system.$proc: missing argument ${i + 1}"))
-      try a.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"CALL system.$proc: argument ${i + 1} must be an integer literal, got $a")
-      }
-    }
+    def str(i: Int): String =
+      const(i, "a 'string' literal")(_.isInstanceOf[StringType]).toString
+    def num(i: Int): Long = const(i, "an integer literal") {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }.asInstanceOf[Number].longValue
     def numOpt(i: Int): Option[Long] = args.lift(i).map(_ => num(i))
     def strOpt(i: Int): Option[String] = args.lift(i).map(_ => str(i))
     def arity(n: Int, m: Int): Unit =
       require(args.length >= n && args.length <= m,
         s"CALL system.$proc: expected $n${if (m > n) s"-$m" else ""} " +
           s"argument(s), got ${args.length}")
-    import graft.sources.{IcebergIO, IcebergWrite}
     proc match {
       case "rewrite_data_files" | "compact" =>
         // optional second arg: a WHERE predicate string — only files
@@ -771,8 +872,7 @@ final class GraftSession private (val spark: SparkSession) {
         val path = icebergPathOf(str(0))
         val sid =
           if (args.length == 1) IcebergWrite.compact(spark, path)
-          else IcebergWrite.compactWhere(spark, path,
-            org.apache.spark.sql.functions.expr(str(1)))
+          else IcebergWrite.compactWhere(spark, path, expr(str(1)))
         Seq(sid).toDF("snapshot_id")
       case "rewrite_manifests" =>
         arity(1, 1)
@@ -871,11 +971,6 @@ final class GraftSession private (val spark: SparkSession) {
           "create_branch, drop_ref, fast_forward, cherrypick_snapshot, " +
           "upgrade_format_version, create_changelog_view)")
     }
-  }
-
-  private def isShowStatement(s: String): Boolean = {
-    val u = s.toUpperCase(java.util.Locale.ROOT)
-    u.startsWith("SHOW TABLES") || u.startsWith("SHOW COLUMNS")
   }
 }
 

@@ -718,7 +718,7 @@ object IcebergQueries {
     IcebergIO.read(s, dir).orderBy("n_nationkey")
   }
 
-  /** SQL DML surface ([[graft.GraftSession]] `sql` + [[graft.DmlSql]]):
+  /** SQL DML surface ([[graft.GraftSession]] `sql`, Spark-parsed plans):
     * DELETE FROM / UPDATE ... SET / whole-row MERGE INTO against a
     * registered native-Iceberg view, routed to the merge-on-read
     * writer verbs. The oracle replays the three statements as
@@ -775,7 +775,7 @@ object IcebergQueries {
   }
 
   /** Conditional `MERGE INTO` ([[graft.sources.IcebergWrite]] `merge` via
-    * the [[graft.DmlSql]] SQL surface): three clauses — conditional
+    * the [[graft.GraftSession]] `sql` surface): three clauses — conditional
     * DELETE, conditional UPDATE that MOVES partitions (SET touches the
     * partition source), and a column-list INSERT for unmatched source
     * keys — applied first-match-wins in ONE atomic snapshot
@@ -857,7 +857,7 @@ object IcebergQueries {
       "WHERE o_orderkey % 4 = 1 ORDER BY o_orderkey")
   }
 
-  /** SQL DDL/maintenance surface ([[graft.DmlSql]] ALTER TABLE + CALL
+  /** SQL DDL/maintenance surface ([[graft.GraftSession]] ALTER TABLE + CALL
     * system.*): ADD COLUMN (old rows read NULL), INSERT carrying the
     * new column, RENAME COLUMN (field-id resolution keeps pre-rename
     * bytes addressable), then `CALL system.rewrite_data_files` folds

@@ -112,6 +112,11 @@ object GraftShim {
     conv(e)
   }
 
+  /** Parse one SQL statement with the session's own parser (no analysis)
+    * — the single grammar behind `GraftSession.sql`. */
+  def parsePlan(spark: SparkSession, text: String): catalyst.plans.logical.LogicalPlan =
+    spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parsePlan(text)
+
   /** Build a DataFrame over a raw logical plan (`Dataset.ofRows` is
     * private[sql]). */
   def dataFrame(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =

@@ -51,8 +51,11 @@ class DdlSessionSpec extends AnyFunSuite {
     spark.conf.unset(GraftSession.InformationSchemaKey)
     val g = GraftSession.wrap(spark)
     g.registerParquet("show_t", s"${TestSpark.sfDir}/region.parquet")
-    intercept[IllegalStateException] { g.sql("SHOW TABLES") }
-    intercept[IllegalStateException] { g.sql("SHOW COLUMNS IN show_t") }
+    // the gate matches the parsed plan, so no spelling slips past it
+    Seq("SHOW TABLES", "SHOW COLUMNS IN show_t", "SHOW  TABLES",
+        "-- c\nSHOW TABLES", "show\ncolumns in show_t").foreach { q =>
+      intercept[IllegalStateException](g.sql(q))
+    }
     spark.conf.set(GraftSession.InformationSchemaKey, "true")
     assert(g.sql("SHOW TABLES").columns.nonEmpty)
     assert(g.sql("SHOW COLUMNS IN show_t").collect()
@@ -171,19 +174,106 @@ class DdlSessionSpec extends AnyFunSuite {
       g.sql("DELETE FROM dml_t WHERE id = 1"))
     g.registerIceberg("dml_t", dir) // re-registering restores DML
     g.sql("DELETE FROM dml_t WHERE id = 999") // resolves again (no-op)
-    // SET-list splitter respects parens and quoted commas
-    assert(DmlSql.splitTopLevel("a = coalesce(x, 0), b = 'p,q'")
-      === Seq("a = coalesce(x, 0)", "b = 'p,q'"))
-    // the SET/WHERE boundary is quote- and paren-aware
-    assert(DmlSql.splitAtTopLevelWhere("a = 'x WHERE y' WHERE id = 1")
-      === (("a = 'x WHERE y'", Some("id = 1"))))
-    assert(DmlSql.splitAtTopLevelWhere("a = f(' WHERE ', b)")
-      === (("a = f(' WHERE ', b)", None)))
-    DmlSql.parse("UPDATE t SET a = 'x WHERE y' WHERE id = 1") match {
-      case Some(DmlSql.Update("t", sets, Some("id = 1"))) =>
-        assert(sets === Seq("a" -> "'x WHERE y'"))
-      case other => fail(s"unexpected parse: $other")
+  }
+
+  /** A fresh registered v2 Iceberg table over (id, v, note) with rows
+    * (i, i.0, "n<i>") for i < n; returns its directory. */
+  private def noteTable(g: GraftSession, name: String, n: Int = 3): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toString + "/t"
+    g.writeIceberg(spark.range(n).selectExpr("id", "CAST(id AS DOUBLE) AS v",
+      "concat('n', id) AS note"), dir)
+    g.registerIceberg(name, dir)
+    dir
+  }
+
+  private def noteRows(g: GraftSession, name: String): Seq[(Long, Double, String)] =
+    g.sql(s"SELECT id, v, note FROM $name ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+
+  test("SQL UPDATE: quoted WHERE, quoted and nested commas stay inside the SET list") {
+    val g = GraftSession.wrap(spark)
+    noteTable(g, "upd_q")
+    // a quoted WHERE is part of the value; the real WHERE picks one row
+    g.sql("UPDATE upd_q SET note = 'x WHERE y' WHERE id = 1")
+    assert(noteRows(g, "upd_q") ===
+      Seq((0L, 0.0, "n0"), (1L, 1.0, "x WHERE y"), (2L, 2.0, "n2")))
+    // a WHERE inside a call's quoted argument is no top-level WHERE:
+    // every row updates
+    g.sql("UPDATE upd_q SET note = concat(' WHERE ', note)")
+    assert(noteRows(g, "upd_q").map(_._3) ===
+      Seq(" WHERE n0", " WHERE x WHERE y", " WHERE n2"))
+    // commas inside parentheses and quotes do not split assignments
+    g.sql("UPDATE upd_q SET v = coalesce(v, 0) + 10, note = 'p,q' WHERE id = 2")
+    assert(noteRows(g, "upd_q").last === ((2L, 12.0, "p,q")))
+  }
+
+  test("SQL UPDATE: a trailing -- comment hides the WHERE, so every row updates") {
+    val g = GraftSession.wrap(spark)
+    noteTable(g, "cmt_upd")
+    g.sql("UPDATE cmt_upd SET v = 0D -- WHERE id = 1")
+    assert(noteRows(g, "cmt_upd").map(_._2) === Seq(0.0, 0.0, 0.0))
+  }
+
+  test("SQL MERGE: a commented-out WHEN clause does not run") {
+    val g = GraftSession.wrap(spark)
+    noteTable(g, "cmt_mrg")
+    spark.sql("SELECT * FROM VALUES (1L, 9.0D, 'm1'), (8L, 8.0D, 'm8') " +
+      "AS s(id, v, note)").createOrReplaceTempView("cmt_mrg_src")
+    g.sql("MERGE INTO cmt_mrg t USING cmt_mrg_src s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v -- WHEN NOT MATCHED THEN INSERT *")
+    assert(noteRows(g, "cmt_mrg") ===
+      Seq((0L, 0.0, "n0"), (1L, 9.0, "n1"), (2L, 2.0, "n2")))
+  }
+
+  test("SQL DML: leading and inline comments and backticked names route to the writer") {
+    val g = GraftSession.wrap(spark)
+    noteTable(g, "cmt_rt", n = 5)
+    g.sql("-- c\nDELETE FROM cmt_rt WHERE id = 0")
+    g.sql("UPDATE /* c */ cmt_rt SET v = 7D WHERE id = 2")
+    g.sql("DELETE /* c */ FROM cmt_rt WHERE id = 3")
+    g.sql("DELETE FROM `cmt_rt` WHERE id = 4")
+    g.sql("INSERT INTO `cmt_rt` VALUES (5, 5.0D, 'n5')")
+    assert(noteRows(g, "cmt_rt") ===
+      Seq((1L, 1.0, "n1"), (2L, 7.0, "n2"), (5L, 5.0, "n5")))
+  }
+
+  test("SQL UPDATE: a backslash-escaped quote and a comma stay in the string value") {
+    val g = GraftSession.wrap(spark)
+    noteTable(g, "esc_upd")
+    g.sql("UPDATE esc_upd SET note = 'it\\'s, ok' WHERE id = 1")
+    assert(noteRows(g, "esc_upd").map(_._3) === Seq("n0", "it's, ok", "n2"))
+  }
+
+  test("SQL refusals start no Spark job") {
+    import org.apache.spark.sql.catalyst.parser.ParseException
+    val g = GraftSession.wrap(spark)
+    val dir = noteTable(g, "ref_t")
+    g.registerIceberg("ref_pin", dir,
+      snapshotId = Some(graft.sources.IcebergIO.snapshotIds(dir).head))
+    noteTable(g, "ref_gone")
+    spark.catalog.dropTempView("ref_gone")
+    spark.sql("SELECT 1L AS id, 1.0D AS v, 'a' AS note").createOrReplaceTempView("ref_src")
+    val iae = classOf[IllegalArgumentException]
+    Seq(
+      "MERGE INTO ref_t t USING ref_src s ON t.id > s.id " +
+        "WHEN MATCHED THEN UPDATE SET *" -> iae,
+      "DELETE FROM ref_pin WHERE id = 1" -> iae,
+      "UPDATE ref_gone SET v = 1" -> iae,
+      "UPDATE ref_t SET ref_t.v = 1" -> iae,
+      "CALL system.nope('ref_t')" -> iae,
+      "CALL system.expire_snapshots('ref_t', 'soon')" -> iae,
+      "CALL system.rewrite_data_files(table => 'ref_t')" -> iae,
+      "MERGE INTO ref_t t USING ref_src s ON t.id = s.id " +
+        "WHEN NOT MATCHED THEN INSERT * WHEN MATCHED THEN DELETE" ->
+        classOf[ParseException]
+    ).foreach { case (q, cls) =>
+      val jobs = TestSpark.jobs {
+        val e = intercept[Exception](g.sql(q))
+        assert(cls.isInstance(e), s"$q raised $e")
+      }
+      assert(jobs === 0, q)
     }
+    assert(noteRows(g, "ref_t").map(_._2) === Seq(0.0, 1.0, 2.0))
   }
 
   test("SQL INSERT OVERWRITE / TRUNCATE / create_changelog_view") {
@@ -239,52 +329,17 @@ class DdlSessionSpec extends AnyFunSuite {
     assert(got === Seq((0L, 0.0), (1L, 11.0), (3L, 3.0), (4L, 4.0),
       (5L, 5.0), (20L, 5.0)))
 
-    // parse-level checks: quoted THEN survives; clause split is the
-    // MATCHED-lookahead (a string containing WHEN does not split)
-    DmlSql.parse("MERGE INTO a t USING b s ON t.k = s.k " +
-      "WHEN MATCHED AND s.x = 'a THEN b' THEN UPDATE SET y = 'WHEN MATCHED' " +
-      "WHEN NOT MATCHED THEN INSERT *") match {
-      case Some(DmlSql.Merge("a", "b", Seq("k"), "t", "s", cs)) =>
-        assert(cs === Seq(
-          DmlSql.WhenUpdate(Some("s.x = 'a THEN b'"),
-            Seq("y" -> "'WHEN MATCHED'"), star = false),
-          DmlSql.WhenInsert(None, Nil, Nil, star = true)))
-      case other => fail(s"unexpected parse: $other")
+    // malformed clauses are Spark parse errors: BY SOURCE + INSERT (there
+    // is no source row), NOT MATCHED + DELETE, MATCHED + INSERT, and a
+    // column/value count mismatch
+    Seq("WHEN NOT MATCHED BY SOURCE THEN INSERT *",
+        "WHEN NOT MATCHED THEN DELETE",
+        "WHEN MATCHED THEN INSERT *",
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (1)").foreach { w =>
+      intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+        g.sql(s"MERGE INTO cm_t t USING cm_s s ON t.id = s.id $w"))
     }
-    // canonical whole-row form still parses (upsert fast path shape)
-    DmlSql.parse("MERGE INTO a USING b ON a.k = b.k WHEN MATCHED THEN " +
-      "UPDATE SET * WHEN NOT MATCHED THEN INSERT *") match {
-      case Some(DmlSql.Merge("a", "b", Seq("k"), "a", "b", Seq(
-        DmlSql.WhenUpdate(None, Nil, true),
-        DmlSql.WhenInsert(None, Nil, Nil, true)))) =>
-      case other => fail(s"unexpected parse: $other")
-    }
-    // BY SOURCE clauses parse (DELETE, conditional UPDATE SET, and the
-    // explicit BY TARGET spelling of the plain NOT MATCHED)
-    DmlSql.parse("MERGE INTO a t USING b s ON t.k = s.k " +
-      "WHEN NOT MATCHED BY SOURCE AND t.v = 'gone' THEN DELETE " +
-      "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET y = 'stale' " +
-      "WHEN NOT MATCHED BY TARGET THEN INSERT *") match {
-      case Some(DmlSql.Merge("a", "b", Seq("k"), "t", "s", cs)) =>
-        assert(cs === Seq(
-          DmlSql.WhenSourceDelete(Some("t.v = 'gone'")),
-          DmlSql.WhenSourceUpdate(None, Seq("y" -> "'stale'")),
-          DmlSql.WhenInsert(None, Nil, Nil, star = true)))
-      case other => fail(s"unexpected parse: $other")
-    }
-    // BY SOURCE supports UPDATE SET / DELETE only (no INSERT — there is
-    // no source row)
-    intercept[IllegalArgumentException](DmlSql.parse(
-      "MERGE INTO a t USING b s ON t.k = s.k " +
-        "WHEN NOT MATCHED BY SOURCE THEN INSERT *"))
-    // guards: NOT MATCHED + DELETE, MATCHED + INSERT, count mismatch
-    intercept[IllegalArgumentException](DmlSql.parse(
-      "MERGE INTO a t USING b s ON t.k = s.k WHEN NOT MATCHED THEN DELETE"))
-    intercept[IllegalArgumentException](DmlSql.parse(
-      "MERGE INTO a t USING b s ON t.k = s.k WHEN MATCHED THEN INSERT *"))
-    intercept[IllegalArgumentException](DmlSql.parse(
-      "MERGE INTO a t USING b s ON t.k = s.k " +
-        "WHEN NOT MATCHED THEN INSERT (x, y) VALUES (1)"))
+    assert(g.sql("SELECT count(*) FROM cm_t").head.getLong(0) === 6L)
     // SQL cardinality rule surfaces through the session layer
     spark.sql("SELECT * FROM VALUES (1L, 1.0D), (1L, 2.0D) AS s(id, d)")
       .createOrReplaceTempView("cm_dup")
@@ -292,6 +347,49 @@ class DdlSessionSpec extends AnyFunSuite {
       g.sql("MERGE INTO cm_t t USING cm_dup s ON t.id = s.id " +
         "WHEN MATCHED THEN UPDATE SET v = s.d"))
     assert(e.getMessage.contains("cardinality"))
+  }
+
+  test("SQL MERGE: quoted THEN, BY TARGET / BY SOURCE, alias-free upsert fast path") {
+    val g = GraftSession.wrap(spark)
+    val dir = noteTable(g, "mq_t", n = 4)
+    spark.sql("SELECT * FROM VALUES (1L, 1.5D, 'a THEN b'), (2L, 2.5D, 'x'), " +
+      "(9L, 9.0D, 'new') AS s(id, v, note)").createOrReplaceTempView("mq_s")
+    // a quoted THEN in a condition, a 'WHEN MATCHED' string value
+    g.sql("MERGE INTO mq_t t USING mq_s s ON t.id = s.id " +
+      "WHEN MATCHED AND s.note = 'a THEN b' THEN UPDATE SET note = 'WHEN MATCHED' " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    assert(noteRows(g, "mq_t") === Seq((0L, 0.0, "n0"), (1L, 1.0, "WHEN MATCHED"),
+      (2L, 2.0, "n2"), (3L, 3.0, "n3"), (9L, 9.0, "new")))
+    // BY TARGET spells the plain NOT MATCHED; BY SOURCE clauses act on
+    // target rows the source lacks, first applicable clause wins
+    spark.sql("SELECT * FROM VALUES (0L, 0.0D, 'n0'), (3L, 3.0D, 'n3'), " +
+      "(7L, 7.0D, 'n7') AS s(id, v, note)").createOrReplaceTempView("mq_sync")
+    g.sql("MERGE INTO mq_t t USING mq_sync s ON (t.id = s.id) " +
+      "WHEN NOT MATCHED BY TARGET THEN INSERT * " +
+      "WHEN NOT MATCHED BY SOURCE AND t.note = 'n2' THEN DELETE " +
+      "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET note = 'stale'")
+    assert(noteRows(g, "mq_t") === Seq((0L, 0.0, "n0"), (1L, 1.0, "stale"),
+      (3L, 3.0, "n3"), (7L, 7.0, "n7"), (9L, 9.0, "stale")))
+    // the alias-free canonical pair takes the upsert fast path (an
+    // equality-delete commit on v2); a conditional clause takes merge
+    // (position deletes)
+    def deleteFiles(content: Int): Long =
+      graft.sources.IcebergIO.files(spark, dir).filter(s"content = $content").count()
+    val (eq0, pos0) = (deleteFiles(2), deleteFiles(1))
+    spark.sql("SELECT * FROM VALUES (3L, 30.0D, 'u3'), (11L, 11.0D, 'n11') " +
+      "AS s(id, v, note)").createOrReplaceTempView("mq_up")
+    g.sql("MERGE INTO mq_t USING mq_up ON mq_t.id = mq_up.id " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    assert((deleteFiles(2), deleteFiles(1)) === ((eq0 + 1, pos0)))
+    g.sql("MERGE INTO mq_t USING mq_up ON mq_t.id = mq_up.id " +
+      "WHEN MATCHED AND mq_up.v > 20 THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    assert((deleteFiles(2), deleteFiles(1)) === ((eq0 + 1, pos0 + 1)))
+    assert(noteRows(g, "mq_t") === Seq((0L, 0.0, "n0"), (1L, 1.0, "stale"),
+      (3L, 30.0, "u3"), (7L, 7.0, "n7"), (9L, 9.0, "stale"), (11L, 11.0, "n11")))
+    // a subquery source binds through its alias
+    g.sql("MERGE INTO mq_t t USING (SELECT id, v + 1 AS v FROM mq_up) s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v")
+    assert(noteRows(g, "mq_t").map(_._2) === Seq(0.0, 1.0, 31.0, 7.0, 9.0, 12.0))
   }
 
   test("ALTER TABLE ADD/RENAME/DROP COLUMN routes to schema evolution; view refreshes") {
@@ -312,8 +410,9 @@ class DdlSessionSpec extends AnyFunSuite {
     // ALTER on an unregistered name falls through to Spark's own path
     intercept[org.apache.spark.sql.AnalysisException](
       g.sql("ALTER TABLE not_a_graft_table ADD COLUMN x INT"))
-    // unsupported ALTER forms fall through too (parse returns None)
-    assert(DmlSql.parse("ALTER TABLE alt_t SET TBLPROPERTIES ('a'='b')").isEmpty)
+    // unsupported ALTER forms fall through too: Spark refuses a view
+    intercept[org.apache.spark.sql.AnalysisException](
+      g.sql("ALTER TABLE alt_t SET TBLPROPERTIES ('a'='b')"))
   }
 
   test("CALL system.upgrade_format_version: v3 + DV deletes over SQL DML") {
