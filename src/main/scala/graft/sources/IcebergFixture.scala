@@ -549,13 +549,19 @@ object IcebergFixture {
     /** Position-delete `positions` of `dataFilePath`; commits a snapshot
       * with a delete manifest (v2 only). */
     def deletePositions(dataFilePath: String, positions: Seq[Long]): Long = {
+      import spark.implicits._
+      deletePositionRows(positions.sorted.map(p => (dataFilePath, p))
+        .toDF("file_path", "pos"))
+    }
+
+    /** Commit `delDf` verbatim as one position-delete file: the spec's
+      * `file_path` and `pos`, plus any column a foreign writer adds (the
+      * optional `row`). */
+    def deletePositionRows(delDf: DataFrame): Long = {
       require(formatVersion >= 2, "position deletes require format v2")
       require(partitionCols.isEmpty,
         "fixture delete files are unpartitioned-table only")
       val next = seq + 1
-      import spark.implicits._
-      val delDf = positions.sorted.map(p => (dataFilePath, p))
-        .toDF("file_path", "pos")
       val target = new File(dataDir, f"delete-$next%05d.parquet")
       val (rows, bytes) = writeParquetFile(delDf, target)
       val fm = FileMeta(rec(target.getAbsolutePath), 1, rows, bytes)

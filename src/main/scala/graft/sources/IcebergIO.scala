@@ -725,8 +725,7 @@ object IcebergIO {
       new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), valSchema)
     val joined = base
-      .withColumn("__gf_injkey0",
-        regexp_replace(col("__gf_fileraw"), "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/"))
+      .withColumn("__gf_injkey0", normalizedPath(col("__gf_fileraw")))
       .join(broadcast(mapDf), col("__gf_injkey0") === col("__gf_injkey"), "left")
     val proj = meta.schema.fields.toSeq.map { f =>
       if (f.dataType == NullType) lit(null).as(f.name)
@@ -1016,7 +1015,14 @@ object IcebergIO {
     * comparison key — never as a read path, which must keep its scheme
     * so object-store URIs resolve to the right FileSystem). */
   private[graft] def normalizePath(p: String): String =
-    p.replaceFirst("^[A-Za-z][A-Za-z0-9+.-]*:/+", "/")
+    p.replaceFirst(SchemePrefix, "/")
+
+  /** [[normalizePath]] as a Column, for path keys compared inside a plan
+    * (`_metadata.file_path`, a delete row's `file_path`). */
+  private[graft] def normalizedPath(p: Column): Column =
+    regexp_replace(p, SchemePrefix, "/")
+
+  private final val SchemePrefix = "^[A-Za-z][A-Za-z0-9+.-]*:/+"
 
   /** Below this manifest count, planning stays a driver loop (a Spark
     * job per read would dominate at toy table sizes); at or above it,
@@ -1871,21 +1877,6 @@ object IcebergIO {
     * path) and `__gf_pos` (row ordinal in that file) — which is what
     * makes a before/after anti-join well-defined without comparing row
     * values (two equal rows in different files stay distinct). */
-  /** Decode one deletion-vector blob into (target file, pos) rows —
-    * runs INSIDE an executor task (object-level so the RDD lambda
-    * captures no enclosing state); the iterator streams bitmap
-    * positions without materializing them. */
-  private[sources] def dvDeleteRows(path: String, offset: Long, length: Long,
-                                    target: String,
-                                    sconf: GraftFs.SerializableConf)
-      : Iterator[Row] = {
-    val it = PuffinIO.readDv(path, offset, length, sconf.value).getLongIterator
-    new Iterator[Row] {
-      override def hasNext: Boolean = it.hasNext
-      override def next(): Row = Row(target, it.next())
-    }
-  }
-
   private[sources] def mergeRead(spark: SparkSession, meta: TableMetadata,
                                  files: Seq[ContentFile],
                                  withIdentity: Boolean,
@@ -1894,7 +1885,6 @@ object IcebergIO {
       "withRowId requires withIdentity (lineage derivation needs file+pos)")
     // v3 deletion vectors: content-1 entries in PUFFIN format reference
     // a data file + a blob byte range instead of holding parquet rows
-    val dvFiles = files.filter(f => f.content == 1 && f.format == "PUFFIN")
     val badFmt = files.filter(f => f.format != "PARQUET" &&
       !(f.content == 1 && f.format == "PUFFIN"))
     if (badFmt.nonEmpty)
@@ -1902,8 +1892,7 @@ object IcebergIO {
         s"non-parquet Iceberg content files are not supported: " +
           badFmt.map(f => s"${f.format}:${f.path}").take(3).mkString(", "))
     val dataFiles = files.filter(_.content == 0)
-    val delPaths  = files.filter(f => f.content == 1 && f.format != "PUFFIN")
-      .map(_.path)
+    val posFiles  = files.filter(_.content == 1)
     val eqFiles   = files.filter(_.content == 2)
     val identityFields = Seq(
       StructField("__gf_file", StringType, nullable = true),
@@ -1937,7 +1926,7 @@ object IcebergIO {
     // stamped files, by mapped name for a table upgraded via
     // addNameMapping) — ONE frame, and a plan identical to a plain
     // read, in the common single-group cases.
-    if (delPaths.isEmpty && dvFiles.isEmpty && eqFiles.isEmpty && !withIdentity)
+    if (posFiles.isEmpty && eqFiles.isEmpty && !withIdentity)
       return stripFieldIds(
         dataBranches(spark, meta, dataFiles, withPos = false)
           .reduce(_ unionByName _))
@@ -1947,46 +1936,16 @@ object IcebergIO {
     // compares equal to manifest-recorded paths.
     var data = dataBranches(spark, meta, dataFiles, withPos = true,
         withRowId = withRowId)
-      .map(_.withColumn("__gf_file",
-        regexp_replace(col("__gf_fileraw"), "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/"))
+      .map(_.withColumn("__gf_file", normalizedPath(col("__gf_fileraw")))
         .drop("__gf_fileraw"))
       .reduce(_ unionByName _)
 
-    if (delPaths.nonEmpty || dvFiles.nonEmpty) {
-      // v2 position deletes, merge-on-read: delete files are parquet rows
-      // of (file_path, pos). The delete is a distributed left-anti join on
-      // (file, row-ordinal) — no row ever touches the driver.
-      val parquetDels =
-        if (delPaths.isEmpty) None
-        else Some(spark.read.parquet(delPaths: _*).select(
-          regexp_replace(col("file_path"), "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/")
-            .as("__gf_file"),
-          col("pos").as("__gf_pos")))
-      // v3 deletion vectors: each entry's roaring bitmap decodes in an
-      // EXECUTOR task (one task per DV, never on the driver) into the
-      // same (file, pos) shape, then rides the same single anti-join
-      val dvDels =
-        if (dvFiles.isEmpty) None
-        else {
-          val sconf = GraftFs.serializableConf()
-          val infos = dvFiles.map { f =>
-            def missing(what: String) = throw new IllegalStateException(
-              s"deletion-vector entry ${f.path} lacks $what")
-            (f.path,
-              f.contentOffset.getOrElse(missing("content_offset")),
-              f.contentSize.getOrElse(missing("content_size_in_bytes")),
-              normalizePath(f.referencedDataFile.getOrElse(
-                missing("referenced_data_file"))))
-          }
-          val rdd = spark.sparkContext
-            .parallelize(infos, math.max(1, math.min(infos.size, 32)))
-            .flatMap { case (p, off, len, target) =>
-              dvDeleteRows(p, off, len, target, sconf) }
-          Some(spark.createDataFrame(rdd, StructType(Seq(
-            StructField("__gf_file", StringType, nullable = false),
-            StructField("__gf_pos", LongType, nullable = false)))))
-        }
-      val dels = (parquetDels.toSeq ++ dvDels.toSeq).reduce(_ unionByName _)
+    if (posFiles.nonEmpty) {
+      // position deletes (parquet files and v3 deletion vectors) are
+      // (file, pos) rows; the delete is a distributed left-anti join on
+      // (file, row-ordinal) — no row ever touches the driver
+      val dels = PositionDeletes.read(spark, posFiles)
+        .select(col("__gf_file"), col("pos").as("__gf_pos"))
       data = data.join(dels, Seq("__gf_file", "__gf_pos"), "left_anti")
     }
 
@@ -2467,9 +2426,9 @@ object IcebergIO {
           val posTargets: Set[String] =
             newDv.flatMap(_.referencedDataFile).map(normalizePath).toSet ++
               (if (newPosParquet.isEmpty) Set.empty[String]
-               else spark.read.parquet(newPosParquet.map(_.path): _*)
-                 .select("file_path").distinct().collect()
-                 .map(r => normalizePath(r.getString(0))).toSet)
+               else PositionDeletes.read(spark, newPosParquet)
+                 .select("__gf_file").distinct().collect()
+                 .map(_.getString(0)).toSet)
           // eq-delete candidates honor the delete files' PARTITION scope
           // (a partition-scoped upsert diffs only its partitions, not the
           // whole parent table): a parent file is a candidate when some
@@ -3237,61 +3196,33 @@ object IcebergIO {
     val snap = snapshotOf(meta, snapshotId, tablePath)
     val allPos = liveFiles(spark, snap).filter(_.content == 1)
       .sortBy(f => (f.seq, baseName(f.path)))
-    // v3 deletion vectors surface through the same relation: each blob
-    // decodes (executor-side) into its target's (file, pos) rows, the
-    // owning "delete file" being the puffin container
-    val (dvEntries, posFiles) = allPos.partition(_.format == "PUFFIN")
-    val dvDf: Option[DataFrame] =
-      if (dvEntries.isEmpty) None
-      else {
-        val sconf = GraftFs.serializableConf()
-        val infos = dvEntries.map { f =>
-          def missing(what: String) = throw new IllegalStateException(
-            s"deletion-vector entry ${f.path} lacks $what")
-          (f.path, f.contentOffset.getOrElse(missing("content_offset")),
-            f.contentSize.getOrElse(missing("content_size_in_bytes")),
-            f.referencedDataFile.getOrElse(missing("referenced_data_file")),
-            f.seq)
-        }
-        val rdd = spark.sparkContext
-          .parallelize(infos, math.max(1, math.min(infos.size, 32)))
-          .flatMap { case (p, off, len, target, seq) =>
-            val base = p.split('/').last
-            val tbase = target.split('/').last
-            dvDeleteRows(p, off, len, tbase, sconf)
-              .map(r => Row(r.getString(0), r.getLong(1), base, seq))
-          }
-        Some(spark.createDataFrame(rdd, positionDeletesSchema))
-      }
-    if (posFiles.isEmpty && dvDf.isEmpty)
+    if (allPos.isEmpty)
       return spark.createDataFrame(
         new java.util.ArrayList[Row](), positionDeletesSchema)
-    if (posFiles.isEmpty) return dvDf.get
+    // v3 deletion vectors surface through the same relation, the owning
+    // "delete file" being the puffin container (several vectors may
+    // share one, hence one map row per distinct path)
     val mapSchema = StructType(Seq(
       StructField("__gf_dkey", StringType, nullable = false),
       StructField("delete_file_name", StringType, nullable = false),
       StructField("sequence_number", LongType, nullable = false)))
-    val mapRows: Seq[Row] = posFiles.flatMap(f =>
+    val mapRows: Seq[Row] = allPos.distinctBy(_.path).flatMap(f =>
       pathJoinKeys(f.path).map(k => Row(k, baseName(f.path), f.seq)))
     val mapDf = spark.createDataFrame(
       new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(mapRows).asJava), mapSchema)
-    val parquetDf = spark.read.parquet(posFiles.map(_.path): _*)
-      .withColumn("__gf_dkey0",
-        regexp_replace(col("_metadata.file_path"),
-          "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/"))
-      .join(broadcast(mapDf), col("__gf_dkey0") === col("__gf_dkey"), "left")
+    PositionDeletes.read(spark, allPos)
+      .join(broadcast(mapDf), col("__gf_delfile") === col("__gf_dkey"), "left")
       .select(
         element_at(split(col("file_path"), "/"), -1).as("file_name"),
-        col("pos").cast("long").as("pos"),
+        col("pos"),
         // loud on a path-key miss — an inner join would silently drop
         // the delete rows instead
         when(col("__gf_dkey").isNotNull, col("delete_file_name"))
           .otherwise(raise_error(concat(
             lit("position_deletes: unmatched delete-file path "),
-            col("_metadata.file_path"))).cast("string"))
+            col("__gf_delfile"))).cast("string"))
           .as("delete_file_name"),
         col("sequence_number"))
-    dvDf.map(parquetDf.unionByName(_)).getOrElse(parquetDf)
   }
 }

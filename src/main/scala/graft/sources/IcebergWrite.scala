@@ -1147,7 +1147,8 @@ object IcebergWrite {
             spark, meta, IcebergIO.liveFiles(spark, s)))
           .getOrElse(IcebergIO.read(spark, tablePath))
       } else IcebergIO.read(spark, tablePath)
-    commitData(rows, tablePath, maxRecordsPerFile, operation = "replace")
+    commitData(rows, tablePath, maxRecordsPerFile, operation = "replace",
+      base = Some(meta))
   }
 
   /**
@@ -1415,13 +1416,8 @@ object IcebergWrite {
     // already) — "rewrite" = consolidate every live DV into ONE puffin
     // file, dropping dangling targets; eq entries carry EXISTING
     if (meta.formatVersion >= 3) {
-      val emptyMatches = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("file_path", StringType, nullable = false),
-          StructField("pos", LongType, nullable = false))))
       return commitDvDelete(spark, tablePath, meta, root, priorVersion,
-        emptyMatches, operation = "replace", consolidate = true,
+        PositionDeletes.empty(spark), operation = "replace", consolidate = true,
         summaryExtra = Map(
           "rewritten-manifests" -> "true",
           "rewritten-position-deletes" -> "true",
@@ -1446,14 +1442,10 @@ object IcebergWrite {
         dataFiles.map(f => org.apache.spark.sql.Row(
           IcebergIO.normalizePath(f.path))).asJava),
       StructType(Seq(StructField("__gf_lp", StringType, nullable = false))))
-    val raw = spark.read.parquet(posFiles.map(_.path): _*)
-      .select(col("file_path").cast("string").as("file_path"),
-        col("pos").cast("long").as("pos"))
-    val consolidated = raw
+    val consolidated = PositionDeletes.read(spark, posFiles)
       .join(org.apache.spark.sql.functions.broadcast(livePathsDf),
-        regexp_replace(col("file_path"),
-          "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/") === col("__gf_lp"),
-        "leftsemi")
+        col("__gf_file") === col("__gf_lp"), "leftsemi")
+      .select("file_path", "pos")
       .distinct()
       .coalesce(1).sortWithinPartitions("file_path", "pos")
     // a 0-record consolidated file (every entry dangling) is not
@@ -2168,21 +2160,7 @@ object IcebergWrite {
     // tuple / stats provably exclude `cond` holds no position to delete
     // — a partition-scoped DELETE must not raw-scan a 100 TB table
     val pruned = IcebergIO.pruneDataFilesWhere(meta, dataFiles, cond)
-    // raw scan WITHOUT applying existing deletes — re-deleting an
-    // already-removed position changes nothing in the reader's anti-join
-    val dec = org.apache.spark.sql.functions.udf((s: String) => decodeSparkPath(s))
-    val matches =
-      if (pruned.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("file_path", StringType, nullable = false),
-            StructField("pos", LongType, nullable = false))))
-      else IcebergIO.dataBranches(spark, meta, pruned, withPos = true)
-        .map(_.filter(cond)
-          .select(dec(col("__gf_fileraw")).as("file_path"),
-            col("__gf_pos").as("pos")))
-        .reduce(_ unionByName _)
+    val matches = matchedPositions(spark, meta, pruned)(_.filter(cond))
     // format v3: matched positions become DELETION VECTORS (one puffin
     // blob per affected file) — the spec disallows new parquet
     // position-delete files on v3 tables
@@ -2317,7 +2295,10 @@ object IcebergWrite {
     * partition SOURCE columns work — the rewritten rows land in their
     * new partitions (the stored tuple is recomputed from the new
     * values) while the position delete removes them from the old ones.
-    * Matching no rows commits a no-op snapshot. Returns the snapshot
+    * Matching no rows commits a no-op snapshot. Each SET value is cast
+    * to its column's type under Spark's ANSI store-assignment rule; a
+    * value type the rule rejects raises `IllegalArgumentException`
+    * before any Spark job. Returns the snapshot
     * id. Reference analog: DML over registered tables
     * (`reference/ballista/client/src/context.rs:522-553` writes; the
     * reference itself has no UPDATE — this rounds out the writer's
@@ -2334,6 +2315,7 @@ object IcebergWrite {
         s"assignment column '$n' not in table schema " +
           s"(known: ${meta.schema.fieldNames.sorted.mkString(", ")})")
     }
+    val assigned = storeAssigned(emptyTable(spark, meta), meta, assignments)
     val snap = meta.currentSnapshotId
       .flatMap(id => meta.snapshots.find(_.snapshotId == id))
       .getOrElse(throw new IllegalArgumentException(
@@ -2344,24 +2326,10 @@ object IcebergWrite {
     val newSeq =
       Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
 
-    // (1) position pairs from the RAW files (existing deletes NOT
-    // applied — re-deleting an already-removed position is a no-op in
-    // the reader's anti-join, same contract as deleteWhere). Pruned
-    // first: files whose tuple/stats exclude `cond` hold no match.
+    // (1) position pairs of the matching rows, pruned first: files
+    // whose tuple/stats exclude `cond` hold no match.
     val prunedRaw = IcebergIO.pruneDataFilesWhere(meta, rawFiles, cond)
-    val dec = org.apache.spark.sql.functions.udf((s: String) => decodeSparkPath(s))
-    val posRows =
-      if (prunedRaw.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("file_path", StringType, nullable = false),
-            StructField("pos", LongType, nullable = false))))
-      else IcebergIO.dataBranches(spark, meta, prunedRaw, withPos = true)
-        .map(_.filter(cond)
-          .select(dec(col("__gf_fileraw")).as("file_path"),
-            col("__gf_pos").as("pos")))
-        .reduce(_ unionByName _)
+    val posRows = matchedPositions(spark, meta, prunedRaw)(_.filter(cond))
 
     // format v3: the position side becomes DELETION VECTORS; the
     // rewritten rows ride the same snapshot as a separate data manifest,
@@ -2376,7 +2344,7 @@ object IcebergWrite {
           prunedRaw ++ deleteFiles)
         .filter(cond)
         .select(meta.schema.fields.toSeq.map { f =>
-          assignments.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
+          assigned.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
         } :+ col(LineageCarryCol): _*)
       requireTableSchema(updated.drop(LineageCarryCol), meta)
       val (dataFiles, partColTypes) =
@@ -2396,7 +2364,7 @@ object IcebergWrite {
       // projection applies every assignment against the old row.
       val updated = IcebergIO.readWhere(spark, tablePath, cond)
         .select(meta.schema.fields.toSeq.map { f =>
-          assignments.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
+          assigned.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
         }: _*)
       requireTableSchema(updated, meta)
       val (dataFiles, partColTypes) =
@@ -2419,6 +2387,27 @@ object IcebergWrite {
         throw e
     }
   }
+
+  /** Each assigned value cast to its column's type under Spark's ANSI
+    * store-assignment rule, the one `INSERT` applies (numeric to numeric,
+    * any atomic type to STRING, never STRING to a number or a date). The
+    * value types resolve against `scope`, a frame with no rows (see
+    * [[emptyTable]]), so a value the rule rejects fails here, before any
+    * Spark job. */
+  private def storeAssigned(scope: DataFrame, meta: IcebergIO.TableMetadata,
+                            assignments: Map[String, Column]): Map[String, Column] =
+    assignments.map { case (n, v) =>
+      val to = meta.schema(n).dataType
+      val from = scope.select(v).schema.head.dataType
+      require(org.apache.spark.sql.catalyst.expressions.Cast.canANSIStoreAssign(from, to),
+        s"cannot assign a ${from.sql} value to column '$n' of type ${to.sql}")
+      n -> v.cast(to)
+    }
+
+  /** A frame of the table schema holding no rows: resolves value types
+    * without reading the table. */
+  private def emptyTable(spark: SparkSession, meta: IcebergIO.TableMetadata): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), meta.schema)
 
   /** One clause of a conditional [[merge]]. Conditions and assignment /
     * insert-value expressions reference target columns as
@@ -2469,6 +2458,8 @@ object IcebergWrite {
     * instead of applying an arbitrary one. Keys compare with plain
     * equality — NULL keys never match (SQL join semantics; note
     * [[upsert]]'s equality deletes are null-safe, the spec's `<=>`).
+    * SET and INSERT values follow [[updateWhere]]'s store-assignment
+    * rule: a value type the rule rejects fails before any Spark job.
     *
     * Scale shape: the matched pairs (target ∩ source — bounded by the
     * source size, not the table) are persisted once and reused by the
@@ -2531,6 +2522,15 @@ object IcebergWrite {
     val newSeq =
       Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
     val src = source.alias(sourceAlias)
+    // each value resolves where its clause runs; the values' own casts
+    // below are then store assignments
+    val target = emptyTable(spark, meta).alias(targetAlias)
+    clauses.foreach {
+      case WhenMatchedUpdate(as, _) => storeAssigned(target.crossJoin(src), meta, as)
+      case WhenNotMatchedBySourceUpdate(as, _) => storeAssigned(target, meta, as)
+      case WhenNotMatchedInsert(vs, _) => storeAssigned(src, meta, vs)
+      case _ =>
+    }
     val keyJoin: Column = keyCols
       .map(k => col(s"$targetAlias.$k") === col(s"$sourceAlias.$k"))
       .reduce(_ && _)
@@ -2584,47 +2584,19 @@ object IcebergWrite {
       }
 
       // ---- (1) position pairs of every AFFECTED target row, from the
-      // RAW files (existing deletes not applied; re-deleting a dead
-      // position is a no-op in the reader's anti-join)
-      val anyMatchedCond =
-        matchedClauses.map(_.cond.getOrElse(lit(true))).reduceOption(_ || _)
-      val dec = org.apache.spark.sql.functions.udf((s: String) => decodeSparkPath(s))
-      // typed empty (file_path, pos) frame — also the degenerate result
-      // when the table holds a current snapshot but ZERO live data files
-      // (post-TRUNCATE): dataBranches returns no branch there, and a
-      // reduce over none would throw (latent until round 16)
-      def emptyPos = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("file_path", StringType, nullable = false),
-          StructField("pos", LongType, nullable = false))))
-      val posRows = anyMatchedCond match {
-        case None => emptyPos // no MATCHED clause: nothing to delete
-        case _ if rawFiles.isEmpty => emptyPos
-        case Some(c) =>
-          IcebergIO.dataBranches(spark, meta, rawFiles, withPos = true)
-            .map(_.alias(targetAlias).join(src, keyJoin, "inner").filter(c)
-              .select(dec(col(s"$targetAlias.__gf_fileraw")).as("file_path"),
-                col(s"$targetAlias.__gf_pos").as("pos")))
-            .reduce(_ unionByName _)
-      }
-      // ---- (1b) NOT MATCHED BY SOURCE: positions of target rows whose
-      // key matches NO source row and some clause applies (UPDATE
-      // rewrites and DELETE drops both remove the old position; the OR
-      // of the clause conditions is exactly "first applicable exists").
-      // Same raw-scan contract as (1): dead rows may re-delete, a no-op.
-      val anyBySourceCond =
-        bySourceClauses.map(_.cond.getOrElse(lit(true))).reduceOption(_ || _)
-      val bsPosRows = anyBySourceCond.filter(_ => rawFiles.nonEmpty).map { c =>
-        IcebergIO.dataBranches(spark, meta, rawFiles, withPos = true)
-          .map(_.alias(targetAlias).join(src, keyJoin, "left_anti").filter(c)
-            .select(dec(col(s"$targetAlias.__gf_fileraw")).as("file_path"),
-              col(s"$targetAlias.__gf_pos").as("pos")))
-          .reduce(_ unionByName _)
-      }
-      val allPosRows = bsPosRows match {
-        case Some(b) => posRows.unionByName(b)
-        case None => posRows
-      }
+      // RAW files: matched rows some MATCHED clause applies to, and rows
+      // whose key matches NO source row some NOT MATCHED BY SOURCE
+      // clause applies to (UPDATE rewrites and DELETE drops both remove
+      // the old position; the OR of the clause conditions is exactly
+      // "first applicable exists")
+      def positionsWhere(join: String, clauses: Seq[MergeClause]): Option[DataFrame] =
+        clauses.map(_.cond.getOrElse(lit(true))).reduceOption(_ || _).map(c =>
+          matchedPositions(spark, meta, rawFiles)(
+            _.alias(targetAlias).join(src, keyJoin, join).filter(c)))
+      val allPosRows = (positionsWhere("inner", matchedClauses) ++
+          positionsWhere("left_anti", bySourceClauses))
+        .reduceOption(_ unionByName _).getOrElse(PositionDeletes.empty(spark))
+
       {
         // ---- (2) rewrites: first applicable clause per matched pair;
         // UPDATE rows project through their assignments (old row +
@@ -2806,14 +2778,19 @@ object IcebergWrite {
     // delete files carry field ids too: position deletes the spec's
     // reserved ids, equality deletes the table ids they key on
     val idByName =
-      if (content == 1) PosDeleteFieldIds
+      if (content == 1) PositionDeletes.FieldIds
       else rows.columns.zip(equalityIds).toMap
     stampFieldIds(rows, idByName).write.mode("overwrite").parquet(tmp)
     try {
       val staged = listParquetLeaves(tmp)
       require(staged.size == 1,
         s"expected one staged delete file, got ${staged.size}")
-      val records = spark.read.parquet(staged.head.getPath.toString).count()
+      val records = {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            staged.head.getPath, GraftFs.conf()))
+        try r.getRecordCount finally r.close()
+      }
       val kind = if (content == 1) "posdelete" else "eqdelete"
       val to = GraftFs.child(GraftFs.child(tablePath, "data"),
         s"$kind-$snapshotId-${staged.head.getPath.getName}")
@@ -2904,9 +2881,9 @@ object IcebergWrite {
       if (staged.isEmpty) return Nil // no current row matches: no-op
       // per-file record count + the (constant-per-file) stored tuple in
       // ONE read-back agg — same discipline as the data commit
-      val rb = spark.read.parquet(staged.map(_.getPath.toString): _*)
-        .withColumn("__gf_f", regexp_replace(col("_metadata.file_path"),
-          "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/"))
+      val rb = spark.read.schema(rowsIds.schema)
+        .parquet(staged.map(_.getPath.toString): _*)
+        .withColumn("__gf_f", IcebergIO.normalizedPath(col("_metadata.file_path")))
       val aggs = count(lit(1)) +:
         partSources.indices.map(i => min(col(s"__gf_s$i")))
       val stats: Map[String, (Long, Seq[Any])] =
@@ -2992,10 +2969,8 @@ object IcebergWrite {
       .filter(f => f.content == 1 && f.format != "PUFFIN")
     if (posFiles.isEmpty) return snapOpt.map(_.snapshotId).getOrElse(-1L)
     val (root3, pv3) = loadRawMetadata(meta3.metadataFile)
-    val rows = spark.read.parquet(posFiles.map(_.path): _*)
-      .select(col("file_path").cast("string").as("file_path"),
-        col("pos").cast("long").as("pos"))
-    commitDvDelete(spark, tablePath, meta3, root3, pv3, rows,
+    commitDvDelete(spark, tablePath, meta3, root3, pv3,
+      PositionDeletes.read(spark, posFiles).select("file_path", "pos"),
       operation = "replace", absorbLegacyPos = true,
       summaryExtra = Map(
         "rewritten-manifests" -> "true",
@@ -3291,6 +3266,21 @@ object IcebergWrite {
     }
   }
 
+  /** `(file_path, pos)` of every row `keep` retains from a RAW scan of
+    * `files` — existing deletes not applied: re-deleting an
+    * already-removed position changes nothing in the reader's anti-join.
+    * `file_path` is the row's data file as Spark names it, URL-decoded;
+    * no file (or a table of none, post-TRUNCATE) gives an empty frame. */
+  private def matchedPositions(spark: SparkSession, meta: IcebergIO.TableMetadata,
+                               files: Seq[IcebergIO.ContentFile])
+                              (keep: DataFrame => DataFrame): DataFrame = {
+    val dec = org.apache.spark.sql.functions.udf((s: String) => decodeSparkPath(s))
+    IcebergIO.dataBranches(spark, meta, files, withPos = true)
+      .map(b => keep(b).select(dec(col("__gf_fileraw")).as("file_path"),
+        col("__gf_pos").as("pos")))
+      .reduceOption(_ unionByName _).getOrElse(PositionDeletes.empty(spark))
+  }
+
   /** Decode SparkPath's URL-encoding without structural changes —
     * literal '+' is preserved (plain URLDecoder would space it). */
   private def decodeSparkPath(s: String): String =
@@ -3322,10 +3312,6 @@ object IcebergWrite {
       }
       case _ => srcType
     }
-
-  /** Reserved spec field ids of the position-delete file schema
-    * (Iceberg spec "Reserved field ids"). */
-  private val PosDeleteFieldIds = Map("file_path" -> 2147483546, "pos" -> 2147483545)
 
   /** Internal column name a rewrite verb uses to thread each surviving
     * row's v3 lineage id into [[stageDataFiles]] (written out as the
@@ -3370,8 +3356,13 @@ object IcebergWrite {
                          maxRecordsPerFile: Option[Long],
                          operation: String,
                          summaryExtra: Map[String, String] = Map.empty,
-                         branch: Option[String] = None): Long = {
-    val meta = IcebergIO.loadMetadata(tablePath)
+                         branch: Option[String] = None,
+                         // the metadata `df` was planned against: a
+                         // rewrite raced by another commit must fail as
+                         // a concurrent commit, not replace that
+                         // commit's files with rows read before it
+                         base: Option[IcebergIO.TableMetadata] = None): Long = {
+    val meta = base.getOrElse(IcebergIO.loadMetadata(tablePath))
     val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     // v3 lineage carry ([[compact]]'s id-preserving rewrite): the frame
     // is a full-schema table read plus the internal lineage column —
@@ -4219,8 +4210,7 @@ object IcebergWrite {
       if (floating(f.dataType)) when(isnan(col(f.name)), null).otherwise(col(f.name))
       else col(f.name)
     val rb = spark.read.schema(schema).parquet(paths: _*)
-      .withColumn("__gf_f",
-        regexp_replace(col("_metadata.file_path"), "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/"))
+      .withColumn("__gf_f", IcebergIO.normalizedPath(col("_metadata.file_path")))
     val aggs = Seq(count(lit(1))) ++
       boundFields.flatMap(f => Seq(min(nonNan(f)), max(nonNan(f)))) ++
       allCols.map(n => sum(when(col(n).isNull, 1L).otherwise(0L))) ++

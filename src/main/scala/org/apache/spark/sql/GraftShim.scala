@@ -39,10 +39,17 @@ object GraftShim {
     * derivation sees a cast node, matches `Other`, and pruning silently
     * skips (perf-only — the exact filter still runs — but silent). The
     * SQL path never needed this: constant folding runs before the scan
-    * rule sees the predicate. */
+    * rule sees the predicate. A Catalyst expression wrapped as a Column
+    * (a parsed `WHERE` from `GraftSession.sql`) and an `expr(...)` string
+    * convert through [[predicateTreeOf]]. */
   def predicateTree(c: Column): PredNode = {
     import org.apache.spark.sql.internal
     def conv(n: internal.ColumnNode): PredNode = n match {
+      case e: ExpressionColumnNode => predicateTreeOf(e.expression)
+      case e: internal.SqlExpression =>
+        try predicateTreeOf(
+          catalyst.parser.CatalystSqlParser.parseExpression(e.expression))
+        catch { case scala.util.control.NonFatal(_) => PredNode.Other }
       case f: internal.UnresolvedFunction =>
         PredNode.Fn(f.functionName, f.arguments.map(conv))
       case a: internal.UnresolvedAttribute =>
@@ -76,8 +83,9 @@ object GraftShim {
     } catch { case scala.util.control.NonFatal(_) => PredNode.Other }
   }
 
-  /** Convert an ANALYZED catalyst predicate to the neutral view — the
-    * SQL-surface analog of [[predicateTree]]: same `Fn` operator names,
+  /** Convert a catalyst predicate to the neutral view — the SQL-surface
+    * analog of [[predicateTree]], analyzed or straight from the parser
+    * (an unresolved attribute reads by its name parts): same `Fn` operator names,
     * literals converted back to external Scala values
     * (`CatalystTypeConverters.convertToScala` — UTF8String → String,
     * int days → java.sql.Date, long micros → java.sql.Timestamp) so the
@@ -106,6 +114,8 @@ object GraftShim {
       // LIKE 'ab%' reaches the scan rule as StartsWith (LikeSimplification)
       case StartsWith(l, r)         => PredNode.Fn("startswith", Seq(conv(l), conv(r)))
       case a: AttributeReference    => PredNode.Attr(a.name)
+      case a: catalyst.analysis.UnresolvedAttribute =>
+        PredNode.Attr(a.nameParts.mkString("."))
       case l: Literal               => lit(l.value, l.dataType)
       case _                        => PredNode.Other
     }

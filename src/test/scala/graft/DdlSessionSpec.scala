@@ -244,6 +244,54 @@ class DdlSessionSpec extends AnyFunSuite {
     assert(noteRows(g, "esc_upd").map(_._3) === Seq("n0", "it's, ok", "n2"))
   }
 
+  test("SQL UPDATE and MERGE: a SET value takes its column's type; a type store assignment rejects fails before any job") {
+    val g = GraftSession.wrap(spark)
+    noteTable(g, "cast_upd")
+    g.sql("UPDATE cast_upd SET v = 0 WHERE id = 1")
+    assert(noteRows(g, "cast_upd") ===
+      Seq((0L, 0.0, "n0"), (1L, 0.0, "n1"), (2L, 2.0, "n2")))
+    g.sql("UPDATE cast_upd SET note = id + 10, v = v * 2 WHERE id = 2")
+    assert(noteRows(g, "cast_upd").last === ((2L, 4.0, "12")))
+    spark.sql("SELECT 0L AS id, 'x' AS w, 7 AS n").createOrReplaceTempView("cast_src")
+    g.sql("MERGE INTO cast_upd t USING cast_src s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.n")
+    assert(noteRows(g, "cast_upd").head === ((0L, 7.0, "n0")))
+    Seq("UPDATE cast_upd SET v = 'x' WHERE id = 1",
+        "UPDATE cast_upd SET id = DATE'2020-01-01'",
+        "MERGE INTO cast_upd t USING cast_src s ON t.id = s.id " +
+          "WHEN MATCHED THEN UPDATE SET v = s.w",
+        "MERGE INTO cast_upd t USING cast_src s ON t.id = s.id " +
+          "WHEN NOT MATCHED THEN INSERT (id, v, note) VALUES (s.id, s.w, s.w)").foreach { q =>
+      val jobs = TestSpark.jobs(intercept[IllegalArgumentException](g.sql(q)))
+      assert(jobs === 0, q)
+    }
+    assert(noteRows(g, "cast_upd").map(_._2) === Seq(7.0, 0.0, 4.0))
+  }
+
+  test("SQL DELETE prunes data files by its WHERE like the Column DSL does") {
+    import org.apache.spark.sql.GraftShim
+    import org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable
+    import org.apache.spark.sql.functions.{col, expr}
+    import graft.sources.IcebergIO
+    val g = GraftSession.wrap(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_prune_del").toString + "/t"
+    g.writeIceberg(spark.range(0, 10, 1, 4).toDF("id"), dir)
+    g.registerIceberg("prune_del", dir)
+    graft.sources.IcebergWrite.append(spark.range(10, 20, 1, 4).toDF("id"), dir)
+    assert(IcebergIO.files(spark, dir).count() === 8L)
+    val parsed = GraftShim.parsePlan(spark, "DELETE FROM prune_del WHERE id >= 15") match {
+      case d: DeleteFromTable => GraftShim.column(d.condition)
+    }
+    // the Column GraftSession.sql hands the writer, expr() and the DSL
+    // all keep the same 2 of 8 files
+    Seq(col("id") >= 15, parsed, expr("id >= 15")).foreach { c =>
+      assert(IcebergIO.readWhere(spark, dir, c).inputFiles.length === 2, c)
+    }
+    g.sql("DELETE FROM prune_del WHERE id >= 15")
+    assert(g.sql("SELECT id FROM prune_del ORDER BY id").collect()
+      .map(_.getLong(0)).toSeq === (0L until 15L))
+  }
+
   test("SQL refusals start no Spark job") {
     import org.apache.spark.sql.catalyst.parser.ParseException
     val g = GraftSession.wrap(spark)
