@@ -1386,6 +1386,24 @@ object IcebergIO {
         s"${other.getClass.getSimpleName} has no stored-form normalization")
   }
 
+  /** Does a filter literal's runtime type already carry the column's
+    * Spark type? Derived partition equalities prune only then: an
+    * unanalyzed `d = '2020-01-01'` (a String against a DATE column, as a
+    * parsed SQL `WHERE` or a DSL `col("d") === "2020-01-01"` arrives)
+    * matches rows after an implicit cast the derivation never sees, so
+    * the literal's own stored form would miss every file. Integral
+    * widening is exact, so int and long mix. */
+  private def literalOfType(dt: DataType, v: Any): Boolean = (dt, v) match {
+    case (IntegerType | LongType, _: Int | _: Long)                   => true
+    case (StringType, _: String)                                      => true
+    case (BooleanType, _: Boolean)                                    => true
+    case (BinaryType, _: Array[Byte])                                 => true
+    case (DateType, _: java.sql.Date | _: java.time.LocalDate)        => true
+    case (TimestampType, _: java.sql.Timestamp | _: java.time.Instant) => true
+    case (TimestampNTZType, _: java.time.LocalDateTime)               => true
+    case _                                                            => false
+  }
+
   private val truncRe  = "^truncate\\[(\\d+)\\]$".r
   private val bucketRe = "^bucket\\[(\\d+)\\]$".r
 
@@ -1707,8 +1725,9 @@ object IcebergIO {
       : (Map[String, Any], StatsPred) = {
     import org.apache.spark.sql.GraftShim.PredNode
     // partition source -> transform. A derived equality prunes partitions
-    // whenever [[storedPartitionValue]] can resolve the literal for the
-    // column's transform — the DSL's node literals carry raw JVM objects
+    // whenever the literal has the column's type ([[literalOfType]]) and
+    // [[storedPartitionValue]] can resolve it for the column's
+    // transform — the DSL's node literals carry raw JVM objects
     // (java.sql.Date / Timestamp included), so identity, truncate, bucket
     // AND the time transforms all derive. The Try below is the contract
     // guard: an unconvertible literal (e.g. a decimal under truncate)
@@ -1747,7 +1766,7 @@ object IcebergIO {
     // spine: only there may a partition equality prune.
     def leaf(n: String, op: String, v: Any, conj: Boolean): StatsPred = {
       val dt = meta.schema(n).dataType
-      if (conj && op == "=" &&
+      if (conj && op == "=" && literalOfType(dt, v) &&
           partitionSources.get(n).exists(partitionPrunable(_, v)))
         partBuf(n) = v
       if (statsPrunable(dt) && scala.util.Try(normalizeStat(dt, v)).isSuccess)

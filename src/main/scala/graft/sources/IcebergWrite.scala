@@ -2487,49 +2487,51 @@ object IcebergWrite {
     require(!source.columns.exists(_.startsWith("__gf")),
       "__gf-prefixed source columns collide with internal names")
     require(targetAlias != sourceAlias, "target and source aliases must differ")
-    val matchedClauses = clauses.filter {
-      case _: WhenNotMatchedInsert => false
-      case _: WhenNotMatchedBySourceDelete => false
-      case _: WhenNotMatchedBySourceUpdate => false
-      case _ => true
-    }
-    val insertClauses = clauses.collect { case c: WhenNotMatchedInsert => c }
-    val bySourceClauses: Seq[MergeClause] = clauses.filter {
-      case _: WhenNotMatchedBySourceDelete => true
-      case _: WhenNotMatchedBySourceUpdate => true
-      case _ => false
-    }
-    matchedClauses.foreach {
+    clauses.foreach {
       case WhenMatchedUpdate(as, _) =>
         require(as.nonEmpty, "UPDATE clause needs at least one assignment")
         as.keys.foreach(n => require(meta.schema.fieldNames.contains(n),
           s"assignment column '$n' not in table schema"))
-      case _ =>
-    }
-    bySourceClauses.foreach {
       case WhenNotMatchedBySourceUpdate(as, _) =>
         require(as.nonEmpty,
           "NOT MATCHED BY SOURCE UPDATE needs at least one assignment")
         as.keys.foreach(n => require(meta.schema.fieldNames.contains(n),
           s"assignment column '$n' not in table schema"))
+      case WhenNotMatchedInsert(vs, _) =>
+        vs.keys.foreach(n => require(meta.schema.fieldNames.contains(n),
+          s"insert column '$n' not in table schema"))
       case _ =>
     }
-    insertClauses.foreach(c => c.values.keys.foreach(n =>
-      require(meta.schema.fieldNames.contains(n),
-        s"insert column '$n' not in table schema")))
 
     val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val newSeq =
       Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
     val src = source.alias(sourceAlias)
-    // each value resolves where its clause runs; the values' own casts
-    // below are then store assignments
+    // every SET / INSERT value store-assigned to its column, resolved
+    // where its clause runs (matched UPDATE: target x source; NOT
+    // MATCHED BY SOURCE UPDATE: target; INSERT: source) — the
+    // projections below take the values as they are
     val target = emptyTable(spark, meta).alias(targetAlias)
-    clauses.foreach {
-      case WhenMatchedUpdate(as, _) => storeAssigned(target.crossJoin(src), meta, as)
-      case WhenNotMatchedBySourceUpdate(as, _) => storeAssigned(target, meta, as)
-      case WhenNotMatchedInsert(vs, _) => storeAssigned(src, meta, vs)
-      case _ =>
+    val typed: Seq[MergeClause] = clauses.map {
+      case c @ WhenMatchedUpdate(as, _) =>
+        c.copy(assignments = storeAssigned(target.crossJoin(src), meta, as))
+      case c @ WhenNotMatchedBySourceUpdate(as, _) =>
+        c.copy(assignments = storeAssigned(target, meta, as))
+      case c @ WhenNotMatchedInsert(vs, _) =>
+        c.copy(values = storeAssigned(src, meta, vs))
+      case c => c
+    }
+    val matchedClauses = typed.filter {
+      case _: WhenNotMatchedInsert => false
+      case _: WhenNotMatchedBySourceDelete => false
+      case _: WhenNotMatchedBySourceUpdate => false
+      case _ => true
+    }
+    val insertClauses = typed.collect { case c: WhenNotMatchedInsert => c }
+    val bySourceClauses: Seq[MergeClause] = typed.filter {
+      case _: WhenNotMatchedBySourceDelete => true
+      case _: WhenNotMatchedBySourceUpdate => true
+      case _ => false
     }
     val keyJoin: Column = keyCols
       .map(k => col(s"$targetAlias.$k") === col(s"$sourceAlias.$k"))
@@ -2613,9 +2615,8 @@ object IcebergWrite {
               val old = col(s"$targetAlias.${f.name}")
               matchedClauses.zipWithIndex.foldRight(old) {
                 case ((c: WhenMatchedUpdate, i), acc) =>
-                  val v = c.assignments.get(f.name)
-                    .map(_.cast(f.dataType)).getOrElse(old)
-                  when(col("__gf_action") === i, v).otherwise(acc)
+                  when(col("__gf_action") === i,
+                    c.assignments.getOrElse(f.name, old)).otherwise(acc)
                 case (_, acc) => acc
               }.as(f.name)
             } ++ (if (v3)
@@ -2640,9 +2641,8 @@ object IcebergWrite {
               val old = col(s"$targetAlias.${f.name}")
               bySourceClauses.zipWithIndex.foldRight(old) {
                 case ((c: WhenNotMatchedBySourceUpdate, i), acc) =>
-                  val v = c.assignments.get(f.name)
-                    .map(_.cast(f.dataType)).getOrElse(old)
-                  when(col("__gf_action") === i, v).otherwise(acc)
+                  when(col("__gf_action") === i,
+                    c.assignments.getOrElse(f.name, old)).otherwise(acc)
                 case (_, acc) => acc
               }.as(f.name)
             } ++ (if (v3)
@@ -2706,8 +2706,8 @@ object IcebergWrite {
 
   /** Project `frame` (source rows, aliased) through the first applicable
     * NOT MATCHED clause into full-table-schema insert rows; unlisted
-    * columns insert NULL, every value casts to the declared type (SQL
-    * INSERT semantics). No applicable clause drops the row. */
+    * columns insert NULL, listed values arrive store-assigned to their
+    * column (SQL INSERT semantics). No applicable clause drops the row. */
   private def insertRows(frame: DataFrame, insertClauses: Seq[WhenNotMatchedInsert],
                          idx: Column, meta: IcebergIO.TableMetadata): DataFrame = {
     require(insertClauses.nonEmpty,
@@ -2717,8 +2717,7 @@ object IcebergWrite {
       .select(meta.schema.fields.toSeq.map { f =>
         val nul = lit(null).cast(f.dataType)
         insertClauses.zipWithIndex.foldRight(nul: Column) { case ((c, i), acc) =>
-          when(col("__gf_action") === i,
-            c.values.get(f.name).map(_.cast(f.dataType)).getOrElse(nul))
+          when(col("__gf_action") === i, c.values.getOrElse(f.name, nul))
             .otherwise(acc)
         }.as(f.name)
       }: _*)

@@ -292,6 +292,38 @@ class DdlSessionSpec extends AnyFunSuite {
       .map(_.getLong(0)).toSeq === (0L until 15L))
   }
 
+  test("SQL DELETE/UPDATE: a string literal against a DATE, TIMESTAMP or INT partition column matches after its implicit cast") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import graft.sources.{IcebergIO, IcebergWrite}
+    val g = GraftSession.wrap(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_part_lit").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("d", DateType), StructField("ts", TimestampType),
+      StructField("p", IntegerType)))
+    IcebergWrite.create(spark, dir, schema, partitionCols = Seq("d", "ts", "p"))
+    val rows = (0 until 5).map(i => Row(i.toLong,
+      java.sql.Date.valueOf(s"2020-01-0${i + 1}"),
+      java.sql.Timestamp.valueOf(s"2020-01-01 0$i:00:00"), i + 5))
+    IcebergWrite.append(spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema), dir)
+    g.registerIceberg("part_lit", dir)
+    def ids(): Seq[Long] = g.sql("SELECT id FROM part_lit ORDER BY id")
+      .collect().map(_.getLong(0)).toSeq
+    // the Column DSL spelling reads the row its implicit cast matches
+    assert(IcebergIO.readWhere(spark, dir, col("d") === "2020-01-02")
+      .collect().map(_.getLong(0)).toSeq === Seq(1L))
+    g.sql("DELETE FROM part_lit WHERE d = '2020-01-01'")
+    assert(ids() === Seq(1L, 2L, 3L, 4L))
+    g.sql("UPDATE part_lit SET id = 10 WHERE d = '2020-01-02'")
+    assert(ids() === Seq(2L, 3L, 4L, 10L))
+    g.sql("DELETE FROM part_lit WHERE ts = '2020-01-01 02:00:00'")
+    assert(ids() === Seq(3L, 4L, 10L))
+    g.sql("DELETE FROM part_lit WHERE p = '08'")
+    assert(ids() === Seq(4L, 10L))
+  }
+
   test("SQL refusals start no Spark job") {
     import org.apache.spark.sql.catalyst.parser.ParseException
     val g = GraftSession.wrap(spark)
