@@ -43,7 +43,8 @@ object ScaleStress {
     "embed_pq_adc",
     // round-14: BPE training (vocab-grain merge loop — the vocab grows
     // sublinearly in corpus size, so the per-iteration aggregates must
-    // too) and vocab-grain segmentation (distinct-word fold + re-join)
+    // too) and segmentation (one per-row projection through the merge
+    // kernel — linear in corpus size)
     "text_bpe_train", "text_bpe_apply",
     // round-14: substring dedup (one corpus-wide shuffle on the window
     // hash + per-doc island windows) and SQ8 ADC (bounds agg + linear

@@ -639,8 +639,9 @@ object Curation {
    * [[graft.operators.TextAnalysis.bpeSegments]]' streams and both the
    * placement (counts = `size(segs)`, exactly what
    * [[packShuffledByCount]] over [[graft.operators.TextAnalysis
-   * .bpeSegmentCount]] budgets — the two route every word through the
-   * same vocab fold) and the bin contents are cut at BPE-segment grain.
+   * .bpeSegmentCount]] budgets — the two apply the same merge kernel,
+   * [[graft.functions.BpeMerge]]) and the bin contents are cut at
+   * BPE-segment grain.
    * This closes the gap between "bins are budgeted right" and "the
    * dataloader reads the right bytes".
    *
@@ -661,10 +662,10 @@ object Curation {
    * CACHE OBLIGATION (the convention of
    * [[graft.operators.Dedup.minhashNearDupsAgainst]], whose per-side
    * shingle-set frames persist for the caller to clear): when the
-   * segment input is itself an expensive pipeline
-   * (e.g. [[graft.operators.TextAnalysis.bpeSegments]]' word explode +
-   * vocab join + reassembly), persist `docs` around the action or that
-   * pipeline evaluates twice.
+   * segment input is itself expensive to compute (e.g.
+   * [[graft.operators.TextAnalysis.bpeSegments]]' per-word merges over
+   * a large corpus), persist `docs` around the action or it evaluates
+   * twice.
    */
   def packShuffledBinsSegs(docs: DataFrame, idCol: String, copyCol: String,
                            segsCol: String, binTokens: Long,

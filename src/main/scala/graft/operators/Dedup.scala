@@ -485,10 +485,7 @@ object Dedup {
     var cur = base.filter(col("u") =!= col("v")) // self-pairs add nothing
     var rounds = 0
     var converged = false
-    val debug = sys.props.contains("graft.cc.debug") ||
-      sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && rounds < maxIter) {
-      val t0 = System.nanoTime()
       val afterLarge = phase(symmetrize(cur), large = true)
         .localCheckpoint(true)
       val afterSmall = phase(symmetrize(afterLarge), large = false)
@@ -499,9 +496,6 @@ object Dedup {
       // the first differing edge instead of counting them all)
       converged = symDiff(cur, afterLarge)
         .unionByName(symDiff(afterLarge, afterSmall)).isEmpty
-      if (debug)
-        println(f"cc round $rounds converged=$converged " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
       if (rounds > 0) cur.unpersist() // round-0 input is the shared base
       afterLarge.unpersist()
       cur = afterSmall

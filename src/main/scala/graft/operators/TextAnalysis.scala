@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.BpeMerge
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /**
@@ -635,31 +636,16 @@ object TextAnalysis {
 
   // ---- BPE tokenizer TRAINING (corpus-scale merge learning) ----------
 
-  /** Escape a learned symbol for embedding as a SQL string literal inside
-    * an `expr(...)` lambda (Spark uses backslash escaping). */
-  private def sqlLit(s: String): String =
-    "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+  /** Character-symbol sequence of a word: `(.)`-split with empties
+    * dropped ('.' matches a full code point in both java.util.regex and
+    * RE2, so multibyte text symbolizes identically across engines). */
+  private def charSyms(w: Column): Column =
+    filter(split(regexp_replace(w, lit("(.)"), lit("$1 ")), " "), x => x =!= "")
 
-  /** Character-symbol sequence of a word, as a SQL expression over
-    * column `w`: `(.)`-split with empties dropped ('.' matches a full
-    * code point in both java.util.regex and RE2, so multibyte text
-    * symbolizes identically across engines). */
-  private val charSymsExpr =
-    "filter(split(regexp_replace(w, '(.)', '$1 '), ' '), x -> x != '')"
-
-  /** One greedy-left BPE merge application as a SQL fold over a symbol
-    * array: scan symbols left to right, fusing `l`+`r` whenever the
-    * accumulator's last symbol is `l` and the next is `r`. Exactly the
-    * reference greedy semantics — a fused symbol (`l||r` ≠ `l`, since
-    * `r` is nonempty) can never immediately re-fuse, and overlapping
-    * `l=r` runs fuse every other pair, left first. Pure per-row
-    * projection: NO shuffle per merge application. */
-  private def mergeFold(symsExpr: String, l: String, r: String): String =
-    s"aggregate($symsExpr, CAST(array() AS ARRAY<STRING>), (acc, s) -> " +
-      s"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = ${sqlLit(l)} " +
-      s"AND s = ${sqlLit(r)} " +
-      s"THEN concat(slice(acc, 1, size(acc) - 1), array(${sqlLit(l + r)})) " +
-      s"ELSE concat(acc, array(s)) END)"
+  /** Apply a merge list to a symbol array: the one greedy-merge kernel,
+    * [[graft.functions.BpeMerge]]. */
+  private def bpeMerge(syms: Column, merges: Seq[(String, String)]): Column =
+    GraftShim.column(BpeMerge(GraftShim.expression(syms), merges))
 
   /** The weighted word vocabulary BPE trains on: one corpus shuffle
     * keyed on the whitespace word — everything after runs at VOCAB
@@ -677,8 +663,9 @@ object TextAnalysis {
    * symbol pairs weighted by word frequency (a vocab-grain aggregate),
    * pick the most frequent pair (ties: count desc, then pair bytes asc —
    * deterministic on any engine), and fuse it greedily in every vocab
-   * word via [[mergeFold]] (per-row, no shuffle). The driver sees ONE
-   * row per iteration (the argmax pair) — aggregates only. No
+   * word via [[graft.functions.BpeMerge]] (per-row, no shuffle). The
+   * driver sees ONE row per iteration (the argmax pair) — aggregates
+   * only. No
    * end-of-word marker (pure inner-word merges; adding one is a
    * symbolization change, not a loop change).
    *
@@ -706,7 +693,7 @@ object TextAnalysis {
     // LRU eviction). The job-count win is untouched — no extra action.
     var parent: Option[DataFrame] = None
     var cur = wordVocab(docs, textCol)
-      .withColumn("syms", expr(charSymsExpr))
+      .withColumn("syms", charSyms(col("w")))
       .select(col("cnt"), col("syms")).persist()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     try {
@@ -730,7 +717,7 @@ object TextAnalysis {
         merges += ((l, r))
         if (k < nMerges) { // the last fused vocab is never re-scanned
           parent = Some(cur)
-          cur = cur.withColumn("syms", expr(mergeFold("syms", l, r)))
+          cur = cur.withColumn("syms", bpeMerge(col("syms"), Seq((l, r))))
             .persist()
         }
       }
@@ -738,175 +725,59 @@ object TextAnalysis {
       parent.foreach(_.unpersist())
       cur.unpersist()
     }
-    import org.apache.spark.sql.{Row, types => T}
-    val rows = merges.toSeq.zipWithIndex.map { case ((l, r), i) =>
-      Row((i + 1).toLong, l, r)
-    }
+    import scala.jdk.CollectionConverters._
     spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava),
-      T.StructType(Seq(
-        T.StructField("merge_rank", T.LongType, nullable = false),
-        T.StructField("lhs", T.StringType, nullable = false),
-        T.StructField("rhs", T.StringType, nullable = false))))
+      merges.zipWithIndex.map { case ((l, r), i) =>
+        org.apache.spark.sql.Row((i + 1).toLong, l, r) }.asJava,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "merge_rank BIGINT NOT NULL, lhs STRING NOT NULL, rhs STRING NOT NULL"))
   }
 
-  /** Each nested fold adds one recursion level to parse/analyze/eval of
-    * the single merge-chain expression — fine for the tens of merges a
-    * study or a filter-stage tokenizer uses, but a production-size merge
-    * list (thousands) would blow the expression tree up. The per-row
-    * form caps loudly at this depth; [[bpeSegmentCount]] materializes
-    * the vocabulary every [[MergeChunk]] folds instead, so IT has no
-    * cap (the trainer's own iterative shape). */
-  val MaxInlineMerges = 64
-
-  /** [[bpeSegmentCount]]'s per-step fold count: merges apply in chunks
-    * of this many nested folds per materialized vocabulary pass. */
-  val MergeChunk = 16
-
-  /** Per-ROW BPE token count under PRE-TRAINED merges, as one Column —
-    * a pure projection (no explode, no join, no shuffle), so the SAME
-    * expression runs on a batch frame or an append-mode stream: the
-    * serving-path twin of [[bpeSegmentCount]] (identical per-word fold,
-    * so counts are bit-equal; the batch form's vocab-grain join is the
-    * cheaper shape when words repeat across a large corpus, this form
-    * is the right one for rows arriving one at a time). A NULL text
-    * counts 0, matching the batch form's wordless-doc row. At most
-    * [[MaxInlineMerges]] merges (the whole chain is ONE nested
-    * expression here — see the cap's scaladoc); bigger merge lists
-    * belong on the vocab-grain path. Outer lambda variables are named
-    * apart from the fold's (`tacc`/`w` vs `acc`/`s`) — Spark resolves
-    * nested lambda variables by name. */
-  def bpeTokenCountTrained(textColName: String,
-                           merges: Seq[(String, String)]): Column = {
-    require(merges.size <= MaxInlineMerges,
-      s"${merges.size} merges exceed the $MaxInlineMerges-deep inline " +
-        "expression cap — segment via bpeSegmentCount (vocab-grain, " +
-        "uncapped) instead")
-    val foldedExpr = merges.foldLeft(charSymsExpr) {
-      case (e, (l, r)) => mergeFold(e, l, r)
-    }
-    coalesce(
-      expr(s"aggregate(filter(split($textColName, ' '), x -> x != ''), " +
-        s"CAST(0 AS BIGINT), (tacc, w) -> tacc + size($foldedExpr))"),
-      lit(0L))
-  }
-
-  /** Per-ROW BPE segment ARRAY under PRE-TRAINED merges, as one
-    * Column — the array-valued twin of [[bpeTokenCountTrained]] (same
-    * inline fold, same [[MaxInlineMerges]] cap) and the serving-path
-    * twin of [[bpeSegments]] (bit-equal arrays: both apply the same
-    * greedy fold per word in word order): a pure projection, so the
-    * SAME expression runs on a batch frame or an append-mode stream —
-    * the shape a streaming gate uses to tokenize arriving docs with a
-    * batch-trained tokenizer. A NULL text yields an EMPTY array,
-    * matching the batch form's wordless-doc row. */
+  /** Per-ROW BPE segment ARRAY under PRE-TRAINED merges, as one Column:
+    * split the text into words, symbolize each word, apply the merges
+    * with the one kernel ([[graft.functions.BpeMerge]]) and flatten, so
+    * the stream is in word order. A pure projection (no explode, no
+    * join, no shuffle), so the SAME expression runs on a batch frame
+    * or an append-mode stream. A NULL or wordless text yields an EMPTY
+    * array. A merge with a NULL or empty side raises
+    * `IllegalArgumentException` here, before any Spark job. */
   def bpeSegmentsTrained(textColName: String,
-                         merges: Seq[(String, String)]): Column = {
-    require(merges.size <= MaxInlineMerges,
-      s"${merges.size} merges exceed the $MaxInlineMerges-deep inline " +
-        "expression cap — segment via bpeSegments (vocab-grain, " +
-        "uncapped) instead")
-    val foldedExpr = merges.foldLeft(charSymsExpr) {
-      case (e, (l, r)) => mergeFold(e, l, r)
-    }
+                         merges: Seq[(String, String)]): Column =
     coalesce(
-      expr(s"flatten(transform(filter(split($textColName, ' '), " +
-        s"x -> x != ''), w -> $foldedExpr))"),
+      flatten(transform(filter(split(col(textColName), " "), x => x =!= ""),
+        w => bpeMerge(charSyms(w), merges))),
       expr("CAST(array() AS ARRAY<STRING>)"))
-  }
 
-  /**
-   * Segment the corpus with a learned merge list and count the resulting
-   * BPE tokens per document: each DISTINCT word is symbolized and folded
-   * through the merges ONCE (vocab grain — the merge chain is a pure
-   * projection), then documents re-join their words and sum. Wordless
-   * documents keep a 0 row. Returns (id, n_bpe).
-   */
+  /** Per-ROW BPE token count under PRE-TRAINED merges: the size of
+    * [[bpeSegmentsTrained]]'s array as BIGINT (0 for a NULL or
+    * wordless text). */
+  def bpeTokenCountTrained(textColName: String,
+                           merges: Seq[(String, String)]): Column =
+    size(bpeSegmentsTrained(textColName, merges)).cast("long")
+
+  /** Segment the corpus with a learned merge list and count the
+    * resulting BPE tokens per document: [[bpeTokenCountTrained]] over
+    * every row. `idCol` must be a key (one row per id, non-NULL).
+    * Wordless documents count 0. Returns (id, n_bpe). */
   def bpeSegmentCount(docs: DataFrame, idCol: String, textCol: String,
-                      merges: Seq[(String, String)]): DataFrame = {
-    val words = docs.select(col(idCol).as("id"),
-        explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-    val vocab = foldedVocabSyms(words.select("w").distinct(), merges)
-      .select(col("w"), size(col("syms")).cast("long").as("n_tok"))
-    val perDoc = words.join(vocab, Seq("w"))
-      .groupBy("id").agg(sum("n_tok").as("n_bpe"))
-    docs.select(col(idCol).as("id")).distinct()
-      .join(perDoc, Seq("id"), "left")
-      .select(col("id"), coalesce(col("n_bpe"), lit(0L)).as("n_bpe"))
-  }
-
-  /** Fold the merge chain over a DISTINCT-word vocabulary frame (one
-    * `w` column) in chunks of [[MergeChunk]] nested folds per
-    * materialized pass (persist the fused frame, drop the prior — the
-    * trainer's own iterative shape), so ANY merge-list size works:
-    * expression depth stays bounded while the corpus is only ever
-    * touched by the caller's one explode + final join. Returns
-    * (w, syms). Shared by [[bpeSegmentCount]] (counting) and
-    * [[bpeSegments]] (materialized per-document streams) so the two
-    * can never disagree on a word's segmentation.
-    *
-    * NOTE: intermediate vocab frames stay cached until the caller's
-    * action completes; they are vocab-sized (small) and MEMORY_AND_DISK
-    * by default. The LAST chunk is left unmaterialized so single-chunk
-    * calls (the common case) keep the original one-pass plan. */
-  private def foldedVocabSyms(distinctWords: DataFrame,
-                              merges: Seq[(String, String)]): DataFrame = {
-    val chunks = merges.grouped(MergeChunk).toSeq
-    var cur = distinctWords.withColumn("syms", expr(charSymsExpr))
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val folded = chunk.foldLeft("syms") {
-        case (e, (l, r)) => mergeFold(e, l, r)
-      }
-      cur = cur.withColumn("syms", expr(folded))
-      if (i < chunks.size - 1) { // intermediate pass: materialize + swap
-        cur = cur.persist()
-        cur.count(): Unit
-        persisted.lastOption.foreach(_.unpersist())
-        persisted += cur
-      }
-    }
-    cur
-  }
+                      merges: Seq[(String, String)]): DataFrame =
+    docs.select(col(idCol).as("id"),
+      bpeTokenCountTrained(textCol, merges).as("n_bpe"))
 
   /** Materialized per-document BPE segment STREAMS under a learned
-    * merge list — the array-valued twin of [[bpeSegmentCount]]
-    * (`size(segs)` is bit-equal to its `n_bpe` by construction: both
-    * route every word through [[foldedVocabSyms]]'s one fold): each
-    * DISTINCT word folds through the merges ONCE (vocab grain), then
-    * documents reassemble their words' segment arrays in word order.
-    * Wordless documents keep an EMPTY-array row. Returns (id, segs).
+    * merge list: [[bpeSegmentsTrained]] over every row, so
+    * `size(segs)` equals [[bpeSegmentCount]]'s `n_bpe`. `idCol` must be
+    * a key (one row per id, non-NULL). Wordless documents keep an
+    * EMPTY array. Returns (id, segs).
     *
     * This is the tokenize-then-MATERIALIZE shape
     * [[graft.operators.Curation.packShuffledBinsSegs]] consumes: bins
     * budgeted in real BPE units get their contents cut at BPE-segment
-    * grain, not whitespace grain.
-    *
-    * Scale shape: the corpus pays one word explode + one vocab join +
-    * one doc-grain reassembly aggregate (per-doc state = that doc's own
-    * segments — never corpus-sized); the merge fold itself runs at
-    * vocab grain only. */
+    * grain, not whitespace grain. */
   def bpeSegments(docs: DataFrame, idCol: String, textCol: String,
-                  merges: Seq[(String, String)]): DataFrame = {
-    val words = docs.select(col(idCol).as("id"),
-        posexplode(split(col(textCol), " ")).as(Seq("wpos", "w")))
-      .filter(length(col("w")) > 0)
-    val vocab = foldedVocabSyms(words.select("w").distinct(), merges)
-    // array_sort of (wpos, syms) structs orders by the first field, so
-    // flatten rebuilds the document's segment stream in word order
-    val perDoc = words.join(vocab, Seq("w"))
-      .groupBy("id")
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("wpos"), col("syms")))),
-        p => p.getField("syms"))).as("segs"))
-    docs.select(col(idCol).as("id")).distinct()
-      .join(perDoc, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("segs"), expr("CAST(array() AS ARRAY<STRING>)"))
-          .as("segs"))
-  }
+                  merges: Seq[(String, String)]): DataFrame =
+    docs.select(col(idCol).as("id"),
+      bpeSegmentsTrained(textCol, merges).as("segs"))
 
   /** GOPHER-style quality-rule bundle (Rae et al. 2021, the standard
     * pre-training document filter set), reduced to EXACT-INTEGER per-row

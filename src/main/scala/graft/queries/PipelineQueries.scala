@@ -1035,10 +1035,10 @@ object PipelineQueries {
   /** BPE tokenizer TRAINING ([[TextAnalysis.trainBpeMerges]]): the
     * Sennrich merge-learning loop at corpus scale — ONE corpus shuffle
     * builds the weighted word vocabulary, then each merge is a
-    * vocab-grain pair aggregate + argmax + a per-row greedy fusion fold
-    * (no shuffle). The oracle replays all three iterations, expressing
-    * greedy-left fusion as a gaps-and-islands window (equivalent to the
-    * Spark fold: overlapping pair sites only chain when lhs = rhs, and
+    * vocab-grain pair aggregate + argmax + a per-row greedy fusion
+    * ([[graft.functions.BpeMerge]], no shuffle). The oracle replays all
+    * three iterations, expressing greedy-left fusion as a
+    * gaps-and-islands window (equivalent to the Spark kernel: overlapping pair sites only chain when lhs = rhs, and
     * greedy keeps alternate sites within a chain). */
   val textBpeTrain = dfQ("text_bpe_train",
     bpeBaseCtes(3) + """
@@ -1052,10 +1052,10 @@ object PipelineQueries {
   }
 
   /** Segment the corpus with the merges just learned
-    * ([[TextAnalysis.bpeSegmentCount]]): distinct words fold through the
-    * merge chain once, documents re-join and sum — the vocab-grain
-    * tokenization shape. The oracle joins each document's words against
-    * the final fused vocabulary `v3` of the training replay. */
+    * ([[TextAnalysis.bpeSegmentCount]]): one projection applies the
+    * merge kernel to every word of every document and counts the
+    * segments. The oracle joins each document's words against the final
+    * fused vocabulary `v3` of the training replay. */
   val textBpeApply = dfQ("text_bpe_apply",
     bpeBaseCtes(3) + """,
       |dw AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -1172,10 +1172,10 @@ object PipelineQueries {
     val ms = TextAnalysis.collectMerges(
       TextAnalysis.trainBpeMerges(docs, "doc_id", "text", 3))
     // packShuffledBinsSegs' documented caller cache obligation: the
-    // bpeSegments pipeline is expensive (word explode + vocab join +
-    // reassembly) and the materializer reads it twice — persist, then
-    // materialize the bin-scale aggregate locally so the cache releases
-    // before the frame returns (the pipe_crawl_epoch pattern)
+    // materializer reads the segments twice, so persist them (the merges
+    // run once per word), then materialize the bin-scale aggregate
+    // locally so the cache releases before the frame returns (the
+    // pipe_crawl_epoch pattern)
     val segs = TextAnalysis.bpeSegments(docs, "doc_id", "text", ms)
       .withColumn("cp", pmod(col("id"), lit(2L)))
       .persist()
@@ -4055,9 +4055,9 @@ object PipelineQueries {
         Seq("doc_id"))
     val ms = TextAnalysis.collectMerges(
       TextAnalysis.trainBpeMerges(trainDocs, "doc_id", "text", 3))
-    // packShuffledBinsSegs' caller cache obligation: the crawl-chain-fed
-    // segment pipeline is the expensive kind — persist it for the
-    // materializer's two reads
+    // packShuffledBinsSegs' caller cache obligation: the segments sit on
+    // the whole crawl chain — persist them for the materializer's two
+    // reads
     val segs = TextAnalysis.bpeSegments(trainDocs, "doc_id", "text", ms)
       .withColumn("cp", lit(0L))
       .persist()
@@ -4158,8 +4158,8 @@ object PipelineQueries {
     * training (prefix `fz`), then APPLIES the frozen pairs to the
     * delta's OWN word vocabulary via the fusion-only [[bpeApplyCte]]
     * (delta words unseen in the base corpus segment under the same
-    * greedy folds — the Spark fold does exactly this), the snapshot
-    * split, and the full hash-order bin materialization. */
+    * greedy merges — the Spark merge kernel does exactly this), the
+    * snapshot split, and the full hash-order bin materialization. */
   val pipeIncrementalBpeBins = dfQ("pipe_incremental_bpe_bins",
     "WITH bdocs AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),\n" +
     bpeBodyCtes(3, "bdocs", "fz") + """,
@@ -4223,8 +4223,9 @@ object PipelineQueries {
         "text", 3))
     IcebergWrite.append(docs.filter(pmod(col("doc_id"), lit(3L)) === 0L), dir)
     val delta = IcebergIO.readIncremental(s, dir, snap1)
-    // packShuffledBinsSegs' caller cache obligation (expensive segment
-    // input): persist, materialize the bin aggregate locally, release
+    // packShuffledBinsSegs' caller cache obligation (the segments sit on
+    // an incremental table read): persist, materialize the bin
+    // aggregate locally, release
     val segs = TextAnalysis.bpeSegments(delta, "doc_id", "text", ms)
       .withColumn("cp", lit(0L))
       .persist()

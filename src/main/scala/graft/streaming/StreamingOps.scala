@@ -173,11 +173,13 @@ object StreamingOps {
     * batch-side ([[graft.operators.TextAnalysis.trainBpeMerges]]) — the
     * deploy-time token-budget meter: train the tokenizer once on the
     * existing corpus, bill every incoming document as it lands. The
-    * per-row fold ([[graft.operators.TextAnalysis.bpeTokenCountTrained]])
-    * is a pure projection — no explode, no join, no state — so the
-    * stream stays append-mode-safe and counts are bit-equal to the
-    * batch [[graft.operators.TextAnalysis.bpeSegmentCount]] (identical
-    * greedy fold per word). Emits (id, n_bpe) per arriving doc. */
+    * per-row count ([[graft.operators.TextAnalysis.bpeTokenCountTrained]],
+    * the one merge kernel [[graft.functions.BpeMerge]] per word) is a
+    * pure projection — no explode, no join, no state — so the stream
+    * stays append-mode-safe and counts equal the batch
+    * [[graft.operators.TextAnalysis.bpeSegmentCount]], which is the
+    * same Column over a batch frame. Emits (id, n_bpe) per arriving
+    * doc. */
   def bpeCountStream(docs: DataFrame, idCol: String, textCol: String,
                      merges: Seq[(String, String)]): DataFrame =
     docs.select(col(idCol).as("id"),

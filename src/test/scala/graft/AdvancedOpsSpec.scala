@@ -139,8 +139,8 @@ class AdvancedOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // lowaa -> [low, aa] = 2; zzz -> [z,z,z] = 3
     assert(oov === Seq((9L, 5L)))
-    // wordless documents keep a 0 row; quote-bearing words embed safely
-    // in the fold's SQL literals
+    // wordless documents keep a 0 row; quote-bearing symbols merge
+    // like any other
     val edge = TextAnalysis.bpeSegmentCount(
       Seq((1L, ""), (2L, "d'or d'or")).toDF("doc_id", "text"),
       "doc_id", "text", Seq(("d", "'"), ("d'", "o")))
@@ -152,9 +152,8 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       TextAnalysis.trainBpeMerges(tiny, "doc_id", "text", 3))
     assert(e.getMessage.contains("exhausted"))
-    // a merge list past one chunk (> MergeChunk) exercises the
-    // materialize-per-chunk path and still matches a sequential
-    // reference application
+    // a longer merge list still matches a sequential reference
+    // application
     def refFold(syms: Seq[String], l: String, r: String): Seq[String] =
       syms.foldLeft(Vector.empty[String]) { (acc, s) =>
         if (acc.nonEmpty && acc.last == l && s == r) acc.init :+ (l + r)
@@ -165,24 +164,17 @@ class AdvancedOpsSpec extends AnyFunSuite {
       ("aa", "bb"), ("ab", "ab"), ("abab", "a"), ("aaa", "b"),
       ("bab", "a"), ("aab", "b"), ("bba", "a"), ("a", "bab"),
       ("abab", "abab"), ("b", "aa"), ("baa", "b"))
-    assert(chain.size > TextAnalysis.MergeChunk)
     val corpus = Seq((1L, "abababa bbbaaa"), (2L, "aaaa babab"))
       .toDF("doc_id", "text")
-    val gotChunked = TextAnalysis
+    val gotChain = TextAnalysis
       .bpeSegmentCount(corpus, "doc_id", "text", chain)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     def refCount(text: String): Long = text.split(" ").filter(_.nonEmpty)
       .map(w => chain.foldLeft(w.map(_.toString): Seq[String]) {
         case (s, (l, r)) => refFold(s, l, r)
       }.size.toLong).sum
-    assert(gotChunked === Seq(1L -> refCount("abababa bbbaaa"),
+    assert(gotChain === Seq(1L -> refCount("abababa bbbaaa"),
       2L -> refCount("aaaa babab")))
-    // the per-row inline form caps loudly past MaxInlineMerges
-    val big = (1 to TextAnalysis.MaxInlineMerges + 1)
-      .map(i => (s"x$i", "y"))
-    val capped = intercept[IllegalArgumentException](
-      TextAnalysis.bpeTokenCountTrained("text", big))
-    assert(capped.getMessage.contains("bpeSegmentCount"))
   }
 
   test("bpeSegments: per-doc streams match the reference fold in word " +
@@ -212,41 +204,34 @@ class AdvancedOpsSpec extends AnyFunSuite {
       refSegs(r.getString(1)))).sortBy(_._1).toSeq
     assert(got === want)
     assert(got.find(_._1 == 3L).get._2 === Seq.empty[String])
-    // size(segs) is bit-equal to the counting twin — both route every
-    // word through the same vocab fold
+    // size(segs) is bit-equal to the counting form
     val counts = TextAnalysis.bpeSegmentCount(docs, "doc_id", "text", merges)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got.map { case (i, s) => (i, s.size.toLong) } === counts)
-    // a merge list past one chunk exercises the materialize-per-chunk
-    // path on the segments form too
+    // a longer merge list on the segments form too
     val chain = Seq(("a", "b"), ("ab", "a"), ("aba", "b"), ("a", "a"),
       ("aa", "a"), ("b", "b"), ("bb", "a"), ("b", "a"), ("ba", "b"),
       ("aa", "bb"), ("ab", "ab"), ("abab", "a"), ("aaa", "b"),
       ("bab", "a"), ("aab", "b"), ("bba", "a"), ("a", "bab"))
-    assert(chain.size > TextAnalysis.MergeChunk)
     val corpus = Seq((1L, "abababa bbbaaa"), (2L, "aaaa babab"))
       .toDF("doc_id", "text")
-    val gotChunked = TextAnalysis.bpeSegments(corpus, "doc_id", "text", chain)
+    val gotChain = TextAnalysis.bpeSegments(corpus, "doc_id", "text", chain)
       .orderBy("id").collect().map(_.getSeq[String](1)).toSeq
     def refChain(text: String): Seq[String] = text.split(" ")
       .filter(_.nonEmpty).toSeq.flatMap(w =>
         chain.foldLeft(w.map(_.toString): Seq[String]) {
           case (s, (l, r)) => refFold(s, l, r)
         })
-    assert(gotChunked === Seq(refChain("abababa bbbaaa"),
+    assert(gotChain === Seq(refChain("abababa bbbaaa"),
       refChain("aaaa babab")))
-    // the inline per-row Column form (streaming-safe serving path) is
-    // bit-equal to the vocab-grain batch form — including the
-    // wordless-doc empty array — and caps loudly past MaxInlineMerges
+    // the per-row Column form (streaming-safe serving path) is
+    // bit-equal to the batch form — including the wordless-doc empty
+    // array
     val inline = docs.select(col("doc_id").as("id"),
         TextAnalysis.bpeSegmentsTrained("text", merges).as("segs"))
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getSeq[String](1))).toSeq
     assert(inline === got)
-    val big = (1 to TextAnalysis.MaxInlineMerges + 1).map(i => (s"x$i", "y"))
-    val cappedSegs = intercept[IllegalArgumentException](
-      TextAnalysis.bpeSegmentsTrained("text", big))
-    assert(cappedSegs.getMessage.contains("bpeSegments"))
   }
 
   test("BPE greedy fold ≡ chain-parity window selection (the oracle's " +
@@ -299,7 +284,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
         assert(a === b, s"trial $t: fold $a != islands $b on $word ($l,$r)")
       }
     }
-    // ...and the SQL fold expression the operator executes agrees with
+    // ...and the merge kernel the operator executes agrees with
     // the Scala fold on a run-heavy corpus through REAL training
     import spark.implicits._
     import graft.operators.TextAnalysis

@@ -448,10 +448,10 @@ class ScaleSpec extends AnyFunSuite {
     val p = Curation.packShuffledBinsSegs(segs, "id", "cp", "segs",
         binTokens = 128L, partSpan = 1L << 55)
       .orderBy("bin").queryExecution.executedPlan.toString
-    // same contract as the whitespace form: the BPE chain (vocab fold +
-    // doc reassembly) adds its own narrow/keyed stages but the bin
-    // reassembly stays ONE bin-keyed shuffle with map-side partial
-    // collect_list, and no join anywhere degrades to a nested loop
+    // same contract as the whitespace form: the BPE segmentation is a
+    // per-row projection, the bin reassembly stays ONE bin-keyed
+    // shuffle with map-side partial collect_list, and no join anywhere
+    // degrades to a nested loop
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), s"plan:\n$p")
     assert(p.contains("partial_collect_list"), s"plan:\n$p")

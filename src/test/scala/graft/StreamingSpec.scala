@@ -1098,8 +1098,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed(999999L) === 0L)
     val streamedDocs = streamed - 999999L
     assert(streamedDocs.size === 30)
-    // identical greedy fold per word — counts are bit-equal to the
-    // batch vocab-grain segmenter
+    // the batch counter is the same per-row Column — counts are
+    // bit-equal
     streamedDocs.foreach { case (id, n) => assert(n === batch(id),
       s"doc $id: streaming $n != batch ${batch(id)}") }
   }
