@@ -677,7 +677,7 @@ object TextAnalysis {
    * size. Iterations persist their fused vocabulary and drop the prior
    * one, so lineage stays one fold deep regardless of `nMerges`.
    */
-  def trainBpeMerges(docs: DataFrame, idCol: String, textCol: String,
+  def trainBpeMerges(docs: DataFrame, textCol: String,
                      nMerges: Int): DataFrame = {
     require(nMerges > 0, "nMerges must be positive")
     val spark = docs.sparkSession

@@ -1047,7 +1047,7 @@ object PipelineQueries {
       |  UNION ALL SELECT 2, l, r FROM t1
       |  UNION ALL SELECT 3, l, r FROM t2
       |) ORDER BY merge_rank""".stripMargin) { (s, _) =>
-    TextAnalysis.trainBpeMerges(s.table("documents"), "doc_id", "text", 3)
+    TextAnalysis.trainBpeMerges(s.table("documents"), "text", 3)
       .orderBy("merge_rank")
   }
 
@@ -1068,7 +1068,7 @@ object PipelineQueries {
       |LEFT JOIN ag a USING (doc_id) ORDER BY id""".stripMargin) { (s, _) =>
     val docs = s.table("documents")
     val ms = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(docs, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(docs, "text", 3))
     TextAnalysis.bpeSegmentCount(docs, "doc_id", "text", ms)
       .orderBy("id")
   }
@@ -1109,7 +1109,7 @@ object PipelineQueries {
     bench = false) { (s, _) =>
     val docs = s.table("documents")
     val ms = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(docs, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(docs, "text", 3))
     val counts = TextAnalysis.bpeSegmentCount(docs, "doc_id", "text", ms)
       .withColumn("cp", pmod(col("id"), lit(2L)))
     Curation.packShuffledByCount(counts, "id", "cp", "n_bpe",
@@ -1170,7 +1170,7 @@ object PipelineQueries {
     bench = false) { (s, _) =>
     val docs = s.table("documents")
     val ms = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(docs, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(docs, "text", 3))
     // packShuffledBinsSegs' documented caller cache obligation: the
     // materializer reads the segments twice, so persist them (the merges
     // run once per word), then materialize the bin-scale aggregate
@@ -4054,7 +4054,7 @@ object PipelineQueries {
       .join(extracted.select(col("id").as("doc_id"), col("text")),
         Seq("doc_id"))
     val ms = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(trainDocs, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(trainDocs, "text", 3))
     // packShuffledBinsSegs' caller cache obligation: the segments sit on
     // the whole crawl chain — persist them for the materializer's two
     // reads
@@ -4219,8 +4219,7 @@ object PipelineQueries {
     // back from the table (collectMerges is eager — the merge list is
     // materialized BEFORE the delta lands)
     val ms = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(IcebergIO.read(s, dir), "doc_id",
-        "text", 3))
+      TextAnalysis.trainBpeMerges(IcebergIO.read(s, dir), "text", 3))
     IcebergWrite.append(docs.filter(pmod(col("doc_id"), lit(3L)) === 0L), dir)
     val delta = IcebergIO.readIncremental(s, dir, snap1)
     // packShuffledBinsSegs' caller cache obligation (the segments sit on

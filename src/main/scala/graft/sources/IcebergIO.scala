@@ -84,8 +84,9 @@ object IcebergIO {
       // new writes use; files written under older specs are matched
       // against their own spec via the manifest's recorded spec id.
       specsById: Map[Int, Seq[(String, String, Int)]] = Map.empty,
-      // default spec's partition field ids, aligned with partitionFields
-      partitionFieldIds: Seq[Int] = Seq.empty,
+      // every spec's partition field ids, aligned with its fields in
+      // `specsById` (a field without one takes the spec default 1000 + i)
+      specFieldIds: Map[Int, Seq[Int]] = Map.empty,
       // the default sort order's IDENTITY source column names, in order
       // (spec `sort-orders` / `default-sort-order-id`); empty = unsorted
       // (order 0) or an order this engine can't produce. The writer
@@ -118,7 +119,15 @@ object IcebergIO {
       // (snapshot-id, statistics-path) — written by
       // [[IcebergWrite.computeTableStats]] (exact per-column NDV blobs),
       // served by [[tableStats]]
-      statisticsFiles: Seq[(Long, String)] = Seq.empty)
+      statisticsFiles: Seq[(Long, String)] = Seq.empty,
+      // the counters a commit advances: `last-sequence-number` and the
+      // v3 `next-row-id` (0 when absent)
+      lastSequenceNumber: Long = 0L,
+      nextRowId: Long = 0L,
+      // each ref's retention fields (`max-ref-age-ms`,
+      // `max-snapshot-age-ms`, `min-snapshots-to-keep`) where set —
+      // what [[IcebergWrite.expireSnapshots]] keeps
+      refRetention: Map[String, Map[String, Long]] = Map.empty)
 
   /** One v3 default-valued column: spec "Default values" — `initial`
     * (`initial-default`) is what rows written BEFORE the field existed
@@ -434,34 +443,35 @@ object IcebergIO {
         if (f.has("source-id")) f.get("source-id").asInt() else -1)
     val defaultSpecId =
       if (root.has("default-spec-id")) root.get("default-spec-id").asInt() else 0
-    val specsById: Map[Int, Seq[(String, String, Int)]] =
+    val specNodes: Map[Int, Seq[JsonNode]] =
       if (root.has("partition-specs"))
         root.get("partition-specs").elements().asScala.map { s =>
-          s.get("spec-id").asInt() ->
-            s.get("fields").elements().asScala.map(specField).toSeq
+          s.get("spec-id").asInt() -> s.get("fields").elements().asScala.toSeq
         }.toMap
       else if (root.has("partition-spec"))
-        Map(0 -> root.get("partition-spec").elements().asScala.map(specField).toSeq)
+        Map(0 -> root.get("partition-spec").elements().asScala.toSeq)
       else Map.empty
+    val specsById: Map[Int, Seq[(String, String, Int)]] =
+      specNodes.map { case (id, fs) => id -> fs.map(specField) }
+    val specFieldIds: Map[Int, Seq[Int]] = specNodes.map { case (id, fs) =>
+      id -> fs.zipWithIndex.map { case (f, i) =>
+        if (f.has("field-id")) f.get("field-id").asInt() else 1000 + i }
+    }
     val partitionFields: Seq[(String, String, Int)] =
       specsById.getOrElse(defaultSpecId, Nil)
-    val partitionFieldIds: Seq[Int] =
-      if (root.has("partition-specs"))
-        root.get("partition-specs").elements().asScala
-          .find(_.get("spec-id").asInt() == defaultSpecId)
-          .map(_.get("fields").elements().asScala.map(f =>
-            if (f.has("field-id")) f.get("field-id").asInt() else -1).toSeq)
-          .getOrElse(Nil)
-      else Nil
     // named refs (branches and tags): "refs": {name: {"snapshot-id": N,
-    // "type": "branch"|"tag"}} — both kinds resolve to a snapshot here
-    // (read-only scan; retention policies are a writer concern)
-    val refs: Map[String, Long] =
+    // "type": "branch"|"tag"}} — both kinds resolve to a snapshot here;
+    // their retention fields only matter to expiration
+    val refNodes: Map[String, JsonNode] =
       if (root.has("refs"))
-        root.get("refs").properties().asScala.map { e =>
-          e.getKey -> e.getValue.get("snapshot-id").asLong()
-        }.toMap
+        root.get("refs").properties().asScala.map(e => e.getKey -> e.getValue).toMap
       else Map.empty
+    val refs: Map[String, Long] =
+      refNodes.map { case (n, r) => n -> r.get("snapshot-id").asLong() }
+    val refRetention: Map[String, Map[String, Long]] = refNodes.map {
+      case (n, r) => n -> Seq("max-ref-age-ms", "max-snapshot-age-ms",
+        "min-snapshots-to-keep").filter(r.has).map(k => k -> r.get(k).asLong()).toMap
+    }
     // snapshot-log: the MAIN-lineage (timestamp, snapshot) history — the
     // correct basis for as-of resolution (a side-branch commit's
     // timestamp must not win time travel on the main table)
@@ -497,8 +507,8 @@ object IcebergIO {
         root.get("metadata-log").elements().asScala.map(e =>
           (e.get("timestamp-ms").asLong(), e.get("metadata-file").asText())).toSeq
       else Seq.empty
-    val lastUpdatedMs: Long =
-      if (root.has("last-updated-ms")) root.get("last-updated-ms").asLong() else 0L
+    def longOr0(field: String): Long =
+      if (root.has(field)) root.get(field).asLong() else 0L
     def statsList(field: String): Seq[(Long, String)] =
       if (root.has(field))
         root.get(field).elements().asScala.map(e =>
@@ -508,12 +518,13 @@ object IcebergIO {
     val schema = schemaOf(root)
     TableMetadata(fv, root.get("location").asText(), current, snaps,
       schema, fieldIdsOf(root), partitionFields, mdFile, refs,
-      snapshotLog, properties, defaultSpecId, specsById, partitionFieldIds,
-      sortOrderFields, defaultSortOrderId, metadataLog, lastUpdatedMs,
+      snapshotLog, properties, defaultSpecId, specsById, specFieldIds,
+      sortOrderFields, defaultSortOrderId, metadataLog, longOr0("last-updated-ms"),
       defaultsOf(root, schema, properties),
       statsList("partition-statistics"), nsColumnsOf(root),
       geoColumnsOf(root),
-      statsList("statistics"))
+      statsList("statistics"), longOr0("last-sequence-number"),
+      longOr0("next-row-id"), refRetention)
   }
 
   // ------------------------------------------------- field-id resolution

@@ -3,7 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -35,7 +35,9 @@ import org.apache.spark.sql.types._
  *  - Commits are optimistic: the new `vN.metadata.json` is created with
  *    overwrite = false, so two racing writers publish exactly one
  *    winner; the loser fails with a clear concurrent-commit error and
- *    its data files are cleaned up.
+ *    its data files are cleaned up. Every snapshot goes through one
+ *    producer ([[produce]]) and every metadata change through one tail
+ *    ([[updateMetadata]]).
  *
  * The manifest/metadata serialization shares [[IcebergFixture]]'s Avro
  * schema builders (one copy of the spec's field-id layout); prior
@@ -59,11 +61,12 @@ object IcebergWrite {
                                    nanCounts: Seq[(Int, Long)],
                                    content: Int = 0,
                                    equalityIds: Seq[Int] = Nil,
-                                   // set on a CARRIED (rewriteManifests)
-                                   // entry: status EXISTING + this
-                                   // explicit sequence number — the data
-                                   // seq must survive the rewrite or the
-                                   // delete-application rule breaks
+                                   // set on a rewritten live entry
+                                   // ([[existingEntry]]): status EXISTING
+                                   // + this explicit sequence number —
+                                   // the data seq must survive the
+                                   // rewrite or the delete-application
+                                   // rule breaks
                                    existingSeq: Option[Long] = None,
                                    // the snapshot that originally added
                                    // the file (EXISTING entries)
@@ -76,7 +79,10 @@ object IcebergWrite {
                                    dvRef: Option[(String, Long, Long)] = None,
                                    // v3 row lineage: explicit
                                    // first_row_id for ADDED data files
-                                   firstRowId: Option[Long] = None)
+                                   firstRowId: Option[Long] = None,
+                                   // the partition spec the tuple
+                                   // follows (None = the default spec)
+                                   specId: Option[Int] = None)
 
   /** Table-creation entry point: writes `metadata/v1.metadata.json` (+
     * version hint) for an EMPTY table — readable immediately (zero
@@ -264,7 +270,6 @@ object IcebergWrite {
   def addFiles(spark: SparkSession, tablePath: String,
                sourceDir: String): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(!IcebergIO.resolveByFieldIds(meta),
       s"table resolves columns by field id (${IcebergIO.FieldIdsProp}) " +
         "but imported files carry none — import into a name-resolution " +
@@ -387,11 +392,6 @@ object IcebergWrite {
         s"(first: ${dupes.head.getPath}) — re-import double-counts " +
         "or resurrects old deletes")
 
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      if (meta.formatVersion >= 2)
-        Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-      else snapshotId
     val fieldIdByName: Map[String, Int] = meta.fieldById.map(_.swap)
     val stats = perFileStats(spark, fileSchema, fieldIdByName,
       leafPaths, storedCols = Nil)
@@ -427,22 +427,13 @@ object IcebergWrite {
         nullCounts = nulls ++ partNulls, nanCounts = nans)
     }
     require(files.nonEmpty, s"every file under $sourceDir is empty")
-    // stamp the injection property in the SAME commit (publishSnapshot
-    // deep-copies root, so this mutation only reaches disk with the
-    // snapshot it belongs to)
-    if (hive) {
-      val props = Option(root.get("properties")) match {
-        case Some(o: ObjectNode) => o
-        case _ => root.putObject("properties")
-      }
-      props.put(IcebergIO.HiveImportProp, "true"): Unit
-    }
-    // commitSnapshot directly — NEVER commitStaged: a lost optimistic
-    // race must not delete the USER'S source files
-    commitSnapshot(tablePath, meta, root, priorVersion,
-      deletePartColTypes(meta), files, snapshotId, newSeq,
-      operation = "append", carryForward = true,
-      summaryExtra = Map("added-files-source" -> sourceDir))
+    // the injection property lands in the SAME commit as the files it
+    // describes; a lost optimistic race must not delete the USER'S
+    // source files (ownsAdded = false)
+    produce(tablePath, meta, "append", added = files,
+      summary = Map("added-files-source" -> sourceDir),
+      properties = if (hive) Map(IcebergIO.HiveImportProp -> "true") else Map.empty,
+      ownsAdded = false)
   }
 
   /** Directory-value parseability for hive-layout import. */
@@ -567,7 +558,6 @@ object IcebergWrite {
     * field takes `last-column-id + 1`. */
   def addColumn(tablePath: String, name: String, dataType: DataType): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     // same boundary as create(): a v1/v2 metadata.json declaring a
     // v3-only type would be unreadable to spec readers
     if (dataType == VariantType)
@@ -579,23 +569,27 @@ object IcebergWrite {
           "upgradeFormatVersion first")
     require(!meta.schema.fieldNames.contains(name),
       s"column '$name' already exists in $tablePath")
-    require(!droppedNames(root).contains(name),
+    require(!droppedNames(meta).contains(name),
       s"column name '$name' was previously dropped — re-adding it would " +
         "resurrect the old bytes under name-based column resolution; " +
         "pick a fresh name")
-    val newRoot = root.deepCopy()
-    val fid = Option(newRoot.get("last-column-id")).map(_.asInt)
+    updateMetadata(tablePath, meta)(addField(_, meta, name, dataType): Unit)
+  }
+
+  /** Append optional field `name` to the current schema of `root` at id
+    * `last-column-id + 1`; returns the new field's node. */
+  private def addField(root: ObjectNode, meta: IcebergIO.TableMetadata,
+                       name: String, dataType: DataType): ObjectNode = {
+    val fid = Option(root.get("last-column-id")).map(_.asInt)
       .getOrElse(meta.schema.size) + 1
-    newRoot.put("last-column-id", fid)
-    evolveSchema(newRoot) { schemaNode =>
-      val f = schemaNode.get("fields")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-      f.put("id", fid)
-      f.put("name", name)
-      f.put("required", false)
-      f.put("type", IcebergFixture.icebergType(dataType)): Unit
-    }
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+    root.put("last-column-id", fid)
+    val f = mapper.createObjectNode()
+    f.put("id", fid)
+    f.put("name", name)
+    f.put("required", false)
+    f.put("type", IcebergFixture.icebergType(dataType))
+    evolveSchema(root)(_.get("fields").asInstanceOf[ArrayNode].add(f): Unit)
+    f
   }
 
   /** Spec "JSON single-value serialization" for the default-capable
@@ -634,7 +628,6 @@ object IcebergWrite {
                            default: Any,
                            writeDefault: Option[Any] = None): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 3,
       s"column defaults require format v3 (got v${meta.formatVersion}) — " +
         "run upgradeFormatVersion first")
@@ -649,30 +642,16 @@ object IcebergWrite {
       "default must be non-null — use addColumn for a null-filled column")
     require(!meta.schema.fieldNames.contains(name),
       s"column '$name' already exists in $tablePath")
-    require(!droppedNames(root).contains(name),
+    require(!droppedNames(meta).contains(name),
       s"column name '$name' was previously dropped — pick a fresh name")
-    val newRoot = root.deepCopy()
-    val fid = Option(newRoot.get("last-column-id")).map(_.asInt)
-      .getOrElse(meta.schema.size) + 1
-    newRoot.put("last-column-id", fid)
-    evolveSchema(newRoot) { schemaNode =>
-      val f = schemaNode.get("fields")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-      f.put("id", fid)
-      f.put("name", name)
-      f.put("required", false)
-      f.put("type", IcebergFixture.icebergType(dataType))
+    updateMetadata(tablePath, meta) { root =>
+      val f = addField(root, meta, name, dataType)
       singleValueJson(f, "initial-default", default, dataType)
       singleValueJson(f, "write-default", writeDefault.getOrElse(default), dataType)
+      objectNode(root, "properties").put(
+        s"${IcebergIO.DefaultSeqPropPrefix}${f.get("id").asInt}",
+        meta.lastSequenceNumber.toString): Unit
     }
-    val lastSeq =
-      Option(newRoot.get("last-sequence-number")).map(_.asLong).getOrElse(0L)
-    val props = Option(newRoot.get("properties")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("properties")
-    }
-    props.put(s"${IcebergIO.DefaultSeqPropPrefix}$fid", lastSeq.toString)
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
   }
 
   /** Schema evolution: WIDEN a column's type — the spec's primitive type
@@ -694,7 +673,6 @@ object IcebergWrite {
     * decimal-width changes, so it would need a rewrite, not metadata. */
   def widenColumn(tablePath: String, name: String, to: DataType): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.schema.fieldNames.contains(name),
       s"column '$name' not in table schema " +
         s"(have: ${meta.schema.fieldNames.mkString(", ")})")
@@ -716,16 +694,14 @@ object IcebergWrite {
     require(!zcols.contains(name),
       s"column '$name' is a z-order column (32-bit Morton interleave); " +
         "clear the z-order first")
-    val newRoot = root.deepCopy()
-    evolveSchema(newRoot) { schemaNode =>
-      val arr = schemaNode.get("fields")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-      (0 until arr.size).map(arr.get).find(_.get("name").asText == name)
-        .foreach { f => f.asInstanceOf[ObjectNode]
-          .put("type", IcebergFixture.icebergType(to)): Unit }
-    }
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+    updateMetadata(tablePath, meta)(evolveSchema(_)(schemaField(_, name)
+      .put("type", IcebergFixture.icebergType(to)): Unit))
   }
+
+  /** The field named `name` of a schema node. */
+  private def schemaField(schemaNode: ObjectNode, name: String): ObjectNode =
+    schemaNode.get("fields").elements().asScala.find(_.get("name").asText == name)
+      .get.asInstanceOf[ObjectNode]
 
   /** Schema evolution: DROP a column (metadata-only commit). Existing
     * data files keep the bytes, but the reader's projection — always the
@@ -740,7 +716,6 @@ object IcebergWrite {
     * resurrect into the supposedly-fresh column. */
   def dropColumn(spark: SparkSession, tablePath: String, name: String): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.schema.fieldNames.contains(name),
       s"column '$name' not in table schema " +
         s"(have: ${meta.schema.fieldNames.mkString(", ")})")
@@ -752,30 +727,19 @@ object IcebergWrite {
         !meta.partitionFields.map(_._3).contains(fid),
       s"column '$name' (field id $fid) is a partition source — a " +
         "partition spec (current or prior) depends on it")
-    val eqRefs = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id)).toSeq
+    val eqRefs = currentSnapshot(meta).toSeq
       .flatMap(s => IcebergIO.liveFiles(spark, s))
       .filter(f => f.content == 2 && f.equalityIds.contains(fid))
     require(eqRefs.isEmpty,
       s"column '$name' is referenced by ${eqRefs.size} live equality-" +
         "delete file(s); compact the table first to fold them away")
-    val newRoot = root.deepCopy()
-    evolveSchema(newRoot) { schemaNode =>
-      val arr = schemaNode.get("fields")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-      val kept = (0 until arr.size).map(arr.get)
-        .filterNot(_.get("name").asText == name)
-      arr.removeAll()
-      kept.foreach(arr.add)
+    updateMetadata(tablePath, meta) { root =>
+      evolveSchema(root)(schemaNode => retain(
+        schemaNode.get("fields").asInstanceOf[ArrayNode])(_.get("name").asText != name))
+      objectNode(root, "properties").put(DroppedColumnsProp,
+        (meta.properties.get(DroppedColumnsProp).filter(_.nonEmpty).toSeq :+ name)
+          .mkString(",")): Unit
     }
-    val props = Option(newRoot.get("properties")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("properties")
-    }
-    val prior = Option(props.get("graft.dropped-columns"))
-      .map(_.asText).filter(_.nonEmpty)
-    props.put("graft.dropped-columns", (prior.toSeq :+ name).mkString(","))
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
   }
 
   /** Upgrade an EXTERNAL (property-less) table to field-id column
@@ -793,7 +757,6 @@ object IcebergWrite {
     * refused when the table already resolves by id. */
   def addNameMapping(tablePath: String): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2,
       "addNameMapping requires format v2 — sequence numbers are what " +
         "split pre-upgrade (name-mapped) files from id-stamped ones")
@@ -817,16 +780,12 @@ object IcebergWrite {
       e.put("field-id", fieldIdByName(f.name))
       e.putArray("names").add(f.name): Unit
     }
-    val newRoot = root.deepCopy()
-    val props = Option(newRoot.get("properties")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("properties")
+    updateMetadata(tablePath, meta) { root =>
+      val props = objectNode(root, "properties")
+      props.put(IcebergIO.NameMappingProp, mapper.writeValueAsString(arr))
+      props.put(IcebergIO.NameMappingSeqProp, meta.lastSequenceNumber.toString)
+      props.put(IcebergIO.FieldIdsProp, "true"): Unit
     }
-    props.put(IcebergIO.NameMappingProp, mapper.writeValueAsString(arr))
-    props.put(IcebergIO.NameMappingSeqProp,
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L).toString)
-    props.put(IcebergIO.FieldIdsProp, "true")
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
   }
 
   /** Schema evolution: RENAME a top-level column (metadata-only commit —
@@ -841,7 +800,6 @@ object IcebergWrite {
     * spec FIELD name, e.g. `x_bucket`, is its own name and stays). */
   def renameColumn(tablePath: String, oldName: String, newName: String): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(IcebergIO.resolveByFieldIds(meta),
       s"renameColumn needs field-id column resolution (table property " +
         s"${IcebergIO.FieldIdsProp}=true, stamped by IcebergWrite.create): " +
@@ -855,18 +813,11 @@ object IcebergWrite {
       s"column '$newName' already exists in $tablePath")
     require(newName.nonEmpty && !newName.startsWith("__gf"),
       s"invalid new column name '$newName'")
-    require(!droppedNames(root).contains(newName),
+    require(!droppedNames(meta).contains(newName),
       s"column name '$newName' was previously dropped — reusing it " +
         "invites confusion with the tombstoned column; pick a fresh name")
-    val newRoot = root.deepCopy()
-    evolveSchema(newRoot) { schemaNode =>
-      val arr = schemaNode.get("fields")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
-      (0 until arr.size).map(arr.get)
-        .find(_.get("name").asText == oldName)
-        .foreach(f => f.asInstanceOf[ObjectNode].put("name", newName): Unit)
-    }
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+    updateMetadata(tablePath, meta)(evolveSchema(_)(schemaField(_, oldName)
+      .put("name", newName): Unit))
   }
 
   /** Set the table's DEFAULT SORT ORDER (metadata-only commit; spec
@@ -881,7 +832,6 @@ object IcebergWrite {
     * passing `Nil` restores the unsorted order 0. */
   def setSortOrder(tablePath: String, cols: Seq[String]): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(cols.forall(meta.schema.fieldNames.contains),
       s"sort columns ${cols.mkString(",")} not all in table schema " +
         s"(have: ${meta.schema.fieldNames.mkString(", ")})")
@@ -893,37 +843,36 @@ object IcebergWrite {
       s"table declares a z-order ($ZorderProp); clear it " +
         "(zorderBy(path, Nil)) before setting a sort order")
     val fieldIdByName = meta.fieldById.map(_.swap)
-    val newRoot = root.deepCopy()
-    val orders = arrayNode(newRoot, "sort-orders")
-    val existing: Seq[(Int, Seq[Int])] = (0 until orders.size).map { i =>
-      val o = orders.get(i)
-      val fs = (0 until o.get("fields").size).map(o.get("fields").get)
-      (o.get("order-id").asInt,
-        if (fs.forall(_.get("transform").asText == "identity"))
-          fs.map(_.get("source-id").asInt).toSeq
-        else Seq(-1))
-    }
-    val orderId =
-      if (cols.isEmpty) 0 // unsorted order 0, written by create
-      else {
-        val wanted = cols.map(fieldIdByName)
-        existing.find(_._2 == wanted).map(_._1).getOrElse {
-          val id = (existing.map(_._1) :+ 0).max + 1
-          val o = orders.addObject()
-          o.put("order-id", id)
-          val fs = o.putArray("fields")
-          wanted.foreach { srcId =>
-            val f = fs.addObject()
-            f.put("transform", "identity")
-            f.put("source-id", srcId)
-            f.put("direction", "asc")
-            f.put("null-order", "nulls-first"): Unit
+    updateMetadata(tablePath, meta) { root =>
+      val orders = arrayNode(root, "sort-orders")
+      val existing: Seq[(Int, Seq[Int])] = orders.elements().asScala.map { o =>
+        val fs = o.get("fields").elements().asScala.toSeq
+        (o.get("order-id").asInt,
+          if (fs.forall(_.get("transform").asText == "identity"))
+            fs.map(_.get("source-id").asInt)
+          else Seq(-1))
+      }.toSeq
+      val orderId =
+        if (cols.isEmpty) 0 // unsorted order 0, written by create
+        else {
+          val wanted = cols.map(fieldIdByName)
+          existing.find(_._2 == wanted).map(_._1).getOrElse {
+            val id = (existing.map(_._1) :+ 0).max + 1
+            val o = orders.addObject()
+            o.put("order-id", id)
+            val fs = o.putArray("fields")
+            wanted.foreach { srcId =>
+              val f = fs.addObject()
+              f.put("transform", "identity")
+              f.put("source-id", srcId)
+              f.put("direction", "asc")
+              f.put("null-order", "nulls-first"): Unit
+            }
+            id
           }
-          id
         }
-      }
-    newRoot.put("default-sort-order-id", orderId)
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+      root.put("default-sort-order-id", orderId): Unit
+    }
   }
 
   /** Table property naming the Z-ORDER clustering columns (graft
@@ -945,7 +894,6 @@ object IcebergWrite {
     * rejected loudly rather than clustered approximately). */
   def zorderBy(tablePath: String, cols: Seq[String]): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     if (cols.nonEmpty) {
       require(cols.size >= 2 && cols.size <= 4,
         s"zorderBy interleaves 2 to 4 columns, got ${cols.size}")
@@ -962,14 +910,11 @@ object IcebergWrite {
         "table has a default sort order; clear it (setSortOrder(path, Nil)) " +
           "before declaring a z-order — the writer cannot honor both")
     }
-    val newRoot = root.deepCopy()
-    val props = Option(newRoot.get("properties")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("properties")
+    updateMetadata(tablePath, meta) { root =>
+      val props = objectNode(root, "properties")
+      if (cols.isEmpty) props.remove(ZorderProp): Unit
+      else props.put(ZorderProp, cols.mkString(",")): Unit
     }
-    if (cols.isEmpty) props.remove(ZorderProp)
-    else props.put(ZorderProp, cols.mkString(","))
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
   }
 
   /** 32→64-bit Morton bit-spread (the classic magic-mask cascade) —
@@ -1029,11 +974,8 @@ object IcebergWrite {
   def updatePartitionSpec(tablePath: String, partitionCols: Seq[String],
                           partitionTransforms: Map[String, String] = Map.empty): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2,
       "partition-spec evolution requires format v2")
-    require(root.has("partition-specs"),
-      "table metadata has no partition-specs array (legacy v1 layout)")
     require(partitionCols.distinct == partitionCols,
       s"duplicate partition columns: ${partitionCols.mkString(",")}")
     require(partitionCols.forall(meta.schema.fieldNames.contains),
@@ -1053,46 +995,43 @@ object IcebergWrite {
       IcebergTransforms.storedColumn(t, c0, meta.schema(c0).dataType): Unit
     }
     val fieldIdByName = meta.fieldById.map(_.swap)
-    val newRoot = root.deepCopy()
-    val specs = newRoot.get("partition-specs")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
     // (source-id, transform) -> existing partition-field id, across ALL
     // prior specs (the spec's id-reuse rule)
-    val existingIds: Map[(Int, String), Int] =
-      (0 until specs.size).flatMap { i =>
-        val fields = specs.get(i).get("fields")
-        (0 until fields.size).map(fields.get).map { f =>
-          (f.get("source-id").asInt, f.get("transform").asText) ->
-            f.get("field-id").asInt
-        }
-      }.toMap
-    val newSpecId =
-      (0 until specs.size).map(specs.get(_).get("spec-id").asInt).max + 1
-    var lastPartId =
-      Option(newRoot.get("last-partition-id")).map(_.asInt).getOrElse(999)
-    val spec = specs.addObject()
-    spec.put("spec-id", newSpecId)
-    val arr = spec.putArray("fields")
-    partitionCols.foreach { c0 =>
-      val t = partitionTransforms.getOrElse(c0, "identity")
-      val srcId = fieldIdByName(c0)
-      val fid = existingIds.getOrElse((srcId, t), { lastPartId += 1; lastPartId })
-      val f = arr.addObject()
-      f.put("name", partFieldName(c0, t))
-      f.put("transform", t)
-      f.put("source-id", srcId)
-      f.put("field-id", fid): Unit
+    val existingIds: Map[(Int, String), Int] = meta.specsById.toSeq.flatMap {
+      case (sid, fields) => fields.zip(meta.specFieldIds(sid)).map {
+        case ((_, t, srcId), fid) => (srcId, t) -> fid }
+    }.toMap
+    updateMetadata(tablePath, meta) { root =>
+      require(root.has("partition-specs"),
+        "table metadata has no partition-specs array (legacy v1 layout)")
+      val specs = root.get("partition-specs").asInstanceOf[ArrayNode]
+      val newSpecId = meta.specsById.keys.max + 1
+      var lastPartId =
+        Option(root.get("last-partition-id")).map(_.asInt).getOrElse(999)
+      val spec = specs.addObject()
+      spec.put("spec-id", newSpecId)
+      val arr = spec.putArray("fields")
+      partitionCols.foreach { c0 =>
+        val t = partitionTransforms.getOrElse(c0, "identity")
+        val srcId = fieldIdByName(c0)
+        val fid = existingIds.getOrElse((srcId, t), { lastPartId += 1; lastPartId })
+        val f = arr.addObject()
+        f.put("name", partFieldName(c0, t))
+        f.put("transform", t)
+        f.put("source-id", srcId)
+        f.put("field-id", fid): Unit
+      }
+      root.put("default-spec-id", newSpecId)
+      root.put("last-partition-id", lastPartId): Unit
     }
-    newRoot.put("default-spec-id", newSpecId)
-    newRoot.put("last-partition-id", lastPartId)
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
   }
 
+  /** Table property tombstoning the names [[dropColumn]] removed. */
+  private val DroppedColumnsProp = "graft.dropped-columns"
+
   /** Names tombstoned by [[dropColumn]] (empty when none). */
-  private def droppedNames(root: ObjectNode): Set[String] =
-    Option(root.get("properties"))
-      .flatMap(p => Option(p.get("graft.dropped-columns")))
-      .map(_.asText).filter(_.nonEmpty)
+  private def droppedNames(meta: IcebergIO.TableMetadata): Set[String] =
+    meta.properties.get(DroppedColumnsProp).filter(_.nonEmpty)
       .map(_.split(",").toSet).getOrElse(Set.empty)
 
   /** Apply `mutate` to a copy of the CURRENT schema node: v2 appends the
@@ -1101,8 +1040,7 @@ object IcebergWrite {
     * schemaJson — external tables may carry non-positional field ids. */
   private def evolveSchema(newRoot: ObjectNode)(mutate: ObjectNode => Unit): Unit =
     if (newRoot.has("schemas")) {
-      val schemas = newRoot.get("schemas")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+      val schemas = newRoot.get("schemas").asInstanceOf[ArrayNode]
       val curId = newRoot.get("current-schema-id").asInt
       val cur = (0 until schemas.size).map(schemas.get)
         .find(_.get("schema-id").asInt == curId)
@@ -1139,17 +1077,29 @@ object IcebergWrite {
   def compact(spark: SparkSession, tablePath: String,
               maxRecordsPerFile: Option[Long] = None): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val rows =
-      if (meta.formatVersion >= 3) {
-        val snap = meta.currentSnapshotId
-          .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-        snap.map(s => IcebergIO.lineageRead(
-            spark, meta, IcebergIO.liveFiles(spark, s)))
-          .getOrElse(IcebergIO.read(spark, tablePath))
-      } else IcebergIO.read(spark, tablePath)
-    commitData(rows, tablePath, maxRecordsPerFile, operation = "replace",
-      base = Some(meta))
+    val live = currentSnapshot(meta).toSeq.flatMap(IcebergIO.liveFiles(spark, _))
+    commitData(liveRows(spark, meta, live), tablePath, maxRecordsPerFile,
+      operation = "replace", base = Some(meta))
   }
+
+  /** The rows `files` hold with their deletes applied — v3: with each
+    * row's lineage pair, which a rewrite materializes into the new files
+    * (rewrites must not change row identity). */
+  private def liveRows(spark: SparkSession, meta: IcebergIO.TableMetadata,
+                       files: Seq[IcebergIO.ContentFile]): DataFrame =
+    if (meta.formatVersion >= 3) IcebergIO.lineageRead(spark, meta, files)
+    else IcebergIO.mergeRead(spark, meta, files, withIdentity = false)
+
+  /** The current snapshot of `meta` (None for an empty table). */
+  private def currentSnapshot(meta: IcebergIO.TableMetadata): Option[IcebergIO.SnapshotInfo] =
+    meta.currentSnapshotId.flatMap(id => meta.snapshots.find(_.snapshotId == id))
+
+  /** The current snapshot, or `IllegalArgumentException("cannot <what>
+    * an empty table")`. */
+  private def requireSnapshot(meta: IcebergIO.TableMetadata, tablePath: String,
+                              what: String): IcebergIO.SnapshotInfo =
+    currentSnapshot(meta).getOrElse(throw new IllegalArgumentException(
+      s"cannot $what an empty table: $tablePath"))
 
   /**
    * FILTERED compaction — the runtime jar's `rewrite_data_files(table,
@@ -1170,22 +1120,19 @@ object IcebergWrite {
    * untouched old-seq files, and the rewritten rows move to the new
    * sequence number as post-delete survivors — exactly the rows the
    * delete would have left. Row visibility is unchanged BY
-   * CONSTRUCTION, so the `replace` snapshot is skipped by
-   * CDC/incremental/streaming readers. Selecting EVERY data file
-   * degenerates to [[compact]]. Returns the snapshot id (no file
+   * CONSTRUCTION, so the changelog skips the `replace` snapshot; it
+   * adds data files at a new sequence number, so incremental reads
+   * across it fail loudly (as across [[compact]]). Selecting EVERY data
+   * file degenerates to [[compact]]. Returns the snapshot id (no file
    * selected → no-op, the current id).
    */
   def compactWhere(spark: SparkSession, tablePath: String,
                    cond: org.apache.spark.sql.Column,
                    maxRecordsPerFile: Option[Long] = None): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2,
       "compactWhere requires format v2 (explicit sequence numbers)")
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot compact an empty table: $tablePath"))
+    val snap = requireSnapshot(meta, tablePath, "compact")
     val live = IcebergIO.liveFiles(spark, snap)
     val dataFiles = live.filter(_.content == 0)
     val deletes = live.filter(_.content != 0)
@@ -1195,111 +1142,22 @@ object IcebergWrite {
     val selectedNorm = selected.map(f => IcebergIO.normalizePath(f.path)).toSet
     val kept = dataFiles.filterNot(f =>
       selectedNorm(IcebergIO.normalizePath(f.path)))
-    if (kept.isEmpty) return compact(spark, tablePath, maxRecordsPerFile)
-    val metaDir = GraftFs.child(tablePath, "metadata")
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-
-    // post-delete rows of ONLY the selected files (deletes fold away);
-    // v3: with each survivor's lineage id, materialized into the
-    // rewritten files (rewrites must not change row identity)
-    val rows =
-      if (meta.formatVersion >= 3)
-        IcebergIO.lineageRead(spark, meta, selected ++ deletes)
-      else IcebergIO.mergeRead(spark, meta, selected ++ deletes,
-        withIdentity = false)
-    val (staged, stagedPct) =
-      stageDataFiles(rows, tablePath, meta, snapshotId, maxRecordsPerFile)
-    try {
-      val fieldIdsBySpec: Map[Int, Seq[Int]] =
-        Option(root.get("partition-specs")).map { specs =>
-          specs.elements().asScala.map { s =>
-            s.get("spec-id").asInt() ->
-              s.get("fields").elements().asScala.map(f =>
-                if (f.has("field-id")) f.get("field-id").asInt() else -1).toSeq
-          }.toMap
-        }.getOrElse(Map.empty)
-      // carried set: untouched data + every delete file except DVs of
-      // rewritten targets
-      val carriedFiles = kept ++ deletes.filterNot(f =>
-        f.content == 1 && f.format == "PUFFIN" &&
-          f.referencedDataFile.exists(r =>
-            selectedNorm(IcebergIO.normalizePath(r))))
-      val carriedAdded = carriedFiles
-        .groupBy(f => (if (f.content > 0) 1 else 0, f.specId))
-        .toSeq.sortBy { case ((kind, sid), _) => (kind, sid) }
-        .map { case ((kind, sid), group) =>
-          val specFields = meta.specsById.getOrElse(sid, Nil)
-          val pct: Seq[(String, DataType, Boolean)] =
-            specFields.map { case (name, transform, srcId) =>
-              val src = meta.fieldById.getOrElse(srcId,
-                throw new IllegalArgumentException(
-                  s"partition source field id $srcId not in table schema"))
-              (name, storedType(transform, meta.schema(src).dataType), true)
-            }
-          val nfs = group.map(existingEntry(_, pct))
-          val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-            meta.schema, pct, nfs, snapshotId, newSeq,
-            manifestContent = kind, specId = sid,
-            specFieldIds = fieldIdsBySpec.getOrElse(sid, Nil))
-          ((mPath, mLen, kind, snapshotId, newSeq,
-            nfs.map(_.records).sum, nfs.size), sid)
-        }
-      // the rewritten files, ADDED at the new seq (v3: fresh row ids)
-      val rowIdBase =
-        if (meta.formatVersion >= 3)
-          Option(root.get("next-row-id")).map(_.asLong).getOrElse(0L)
-        else 0L
-      val stagedStamped =
-        if (meta.formatVersion < 3) staged
-        else {
-          var next = rowIdBase
-          staged.map { f =>
-            val a = f.copy(firstRowId = Some(next)); next += f.records; a }
-        }
-      val addedNew =
-        if (staged.isEmpty) Nil
-        else {
-          val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-            meta.schema, stagedPct, stagedStamped, snapshotId, newSeq,
-            manifestContent = 0, specId = meta.defaultSpecId,
-            specFieldIds = meta.partitionFieldIds)
-          Seq(((mPath, mLen, 0, snapshotId, newSeq,
-            stagedStamped.map(_.records).sum, stagedStamped.size),
-            meta.defaultSpecId))
-        }
-      val added = carriedAdded ++ addedNew
-      val mlPath = writeManifestList(metaDir, meta.formatVersion,
-        carried = Nil, added = added.map(_._1), snapshotId,
-        specId = meta.defaultSpecId, addedSpecIds = added.map(_._2))
-      publishSnapshot(meta, root, priorVersion, metaDir, mlPath,
-        snapshotId, newSeq, operation = "replace",
-        summaryExtra = Map(
-          "rewritten-manifests" -> "true",
-          "rewritten-data-files" -> selected.size.toString,
-          "added-data-files" -> staged.size.toString),
-        nextRowId =
-          if (meta.formatVersion >= 3)
-            Some(rowIdBase + stagedStamped.map(_.records).sum)
-          else None)
-    } catch {
-      case e: Throwable =>
-        staged.foreach(f =>
-          try { GraftFs.delete(f.path, recursive = false): Unit }
-          catch { case _: Exception => () })
-        throw e
-    }
+    // post-delete rows of ONLY the selected files (deletes fold away)
+    val files = stageDataFiles(liveRows(spark, meta, selected ++ deletes),
+      tablePath, meta, maxRecordsPerFile)
+    // selecting every data file degenerates to compact: nothing carries;
+    // else untouched data + every delete file except DVs of rewritten
+    // targets carry EXISTING
+    val existing =
+      if (kept.isEmpty) Nil
+      else kept ++ deletes.filterNot(f => f.content == 1 &&
+        f.format == "PUFFIN" && f.referencedDataFile.exists(r =>
+          selectedNorm(IcebergIO.normalizePath(r))))
+    produce(tablePath, meta, "replace", added = files, existing = existing,
+      carry = CarryNone,
+      summary = Map("rewritten-data-files" -> selected.size.toString))
   }
 
-  /** Expire snapshots older than `olderThanMs` (metadata-only commit:
-    * snapshots + snapshot-log entries are dropped; data/manifest files
-    * stay on disk — removing them is a separate GC concern). The current
-    * snapshot, every ref target, and the `retainLast` most recent
-    * snapshots always survive, mirroring the reference maintenance
-    * action's safety rails. Dangling parent-snapshot-ids are fine: the
-    * incremental reader's lineage walk degrades gracefully. Returns the
-    * number of snapshots expired. */
   /** MANIFEST compaction (metadata-only): fold the current snapshot's
     * live entries into ONE manifest per (content kind, partition spec)
     * and publish a `replace` snapshot whose list names only those — a
@@ -1318,62 +1176,12 @@ object IcebergWrite {
     * v2 only. Returns the snapshot id. */
   def rewriteManifests(spark: SparkSession, tablePath: String): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2,
       "rewriteManifests requires format v2 (explicit sequence numbers)")
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot rewrite manifests of an empty table: $tablePath"))
-    val files = IcebergIO.liveFiles(spark, snap)
+    val files = IcebergIO.liveFiles(spark,
+      requireSnapshot(meta, tablePath, "rewrite manifests of"))
     require(files.nonEmpty, s"no live content files in $tablePath")
-    val metaDir = GraftFs.child(tablePath, "metadata")
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-
-    // per-spec partition field ids, straight off the raw metadata (the
-    // parsed TableMetadata only retains the default spec's)
-    val fieldIdsBySpec: Map[Int, Seq[Int]] =
-      Option(root.get("partition-specs")).map { specs =>
-        specs.elements().asScala.map { s =>
-          s.get("spec-id").asInt() ->
-            s.get("fields").elements().asScala.map(f =>
-              if (f.has("field-id")) f.get("field-id").asInt() else -1).toSeq
-        }.toMap
-      }.getOrElse(Map.empty)
-
-    val groups = files.groupBy(f => (if (f.content > 0) 1 else 0, f.specId))
-      .toSeq.sortBy { case ((kind, sid), _) => (kind, sid) }
-    val added = groups.map { case ((kind, sid), group) =>
-        val specFields = meta.specsById.getOrElse(sid, Nil)
-        // rewritten manifests declare every partition field NULLABLE:
-        // the group may mix files whose ORIGINAL manifests differed
-        // (delete manifests are nullable already; identity values can
-        // be null) — nullability is not load-bearing for any reader
-        val pct: Seq[(String, DataType, Boolean)] =
-          specFields.map { case (name, transform, srcId) =>
-            val src = meta.fieldById.getOrElse(srcId,
-              throw new IllegalArgumentException(
-                s"partition source field id $srcId not in table schema"))
-            (name, storedType(transform, meta.schema(src).dataType), true)
-          }
-        val nfs = group.map(existingEntry(_, pct))
-        val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-          meta.schema, pct, nfs, snapshotId, newSeq,
-          manifestContent = kind, specId = sid,
-          specFieldIds = fieldIdsBySpec.getOrElse(sid, Nil))
-        (mPath, mLen, kind, snapshotId, newSeq,
-          nfs.map(_.records).sum, nfs.size)
-      }
-    // each manifest-list entry records ITS manifest's spec — the reader
-    // keys per-file spec resolution (pruning, delete scoping) on it
-    val mlPath = writeManifestList(metaDir, meta.formatVersion,
-      carried = Nil, added, snapshotId, specId = meta.defaultSpecId,
-      addedSpecIds = groups.map(_._1._2))
-    publishSnapshot(meta, root, priorVersion, metaDir, mlPath,
-      snapshotId, newSeq, operation = "replace",
-      summaryExtra = Map("rewritten-manifests" -> "true"))
+    produce(tablePath, meta, "replace", existing = files, carry = CarryNone)
   }
 
   /** POSITION-DELETE compaction (the runtime jar's
@@ -1402,125 +1210,48 @@ object IcebergWrite {
     * rewrite). */
   def rewritePositionDeletes(spark: SparkSession, tablePath: String): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2,
       "rewritePositionDeletes requires format v2 (position deletes)")
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot rewrite deletes of an empty table: $tablePath"))
+    val snap = requireSnapshot(meta, tablePath, "rewrite deletes of")
     val files = IcebergIO.liveFiles(spark, snap)
     val posFiles = files.filter(_.content == 1)
     if (posFiles.isEmpty) return snap.snapshotId
-    // format v3: position deletes are DELETION VECTORS (one per target
-    // already) — "rewrite" = consolidate every live DV into ONE puffin
-    // file, dropping dangling targets; eq entries carry EXISTING
-    if (meta.formatVersion >= 3) {
-      return commitDvDelete(spark, tablePath, meta, root, priorVersion,
-        PositionDeletes.empty(spark), operation = "replace", consolidate = true,
-        summaryExtra = Map(
-          "rewritten-manifests" -> "true",
-          "rewritten-position-deletes" -> "true",
-          "removed-delete-files" -> posFiles.size.toString))
-    }
     val dataFiles = files.filter(_.content == 0)
     val eqFiles = files.filter(_.content == 2)
-    val metaDir = GraftFs.child(tablePath, "metadata")
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-
-    // Consolidated rows: union of the live delete files' (file_path,
-    // pos) pairs, restricted to paths that still name a LIVE data file
-    // (a dangling entry's target was compacted/overwritten away —
-    // dropping it changes nothing any reader can see), deduplicated,
-    // sorted into one file. The live-path set is planning metadata
-    // (O(files)) and rides a broadcast semi-join, never a shuffle of
-    // the delete rows.
-    val livePathsDf = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        dataFiles.map(f => org.apache.spark.sql.Row(
-          IcebergIO.normalizePath(f.path))).asJava),
-      StructType(Seq(StructField("__gf_lp", StringType, nullable = false))))
-    val consolidated = PositionDeletes.read(spark, posFiles)
-      .join(org.apache.spark.sql.functions.broadcast(livePathsDf),
-        col("__gf_file") === col("__gf_lp"), "leftsemi")
-      .select("file_path", "pos")
-      .distinct()
-      .coalesce(1).sortWithinPartitions("file_path", "pos")
-    // a 0-record consolidated file (every entry dangling) is not
-    // committed — the snapshot then simply DROPS the old delete files
-    val newDelete: Seq[NewFile] = {
-      val nf = stageSingleDeleteFile(spark, tablePath, consolidated,
-        snapshotId, content = 1, equalityIds = Nil)
-      if (nf.records == 0L) { GraftFs.delete(nf.path, recursive = false); Nil }
-      else Seq(nf)
-    }
-
-    // per-spec partition field ids off the raw metadata (the parsed
-    // TableMetadata retains only the default spec's)
-    val fieldIdsBySpec: Map[Int, Seq[Int]] =
-      Option(root.get("partition-specs")).map { specs =>
-        specs.elements().asScala.map { s =>
-          s.get("spec-id").asInt() ->
-            s.get("fields").elements().asScala.map(f =>
-              if (f.has("field-id")) f.get("field-id").asInt() else -1).toSeq
-        }.toMap
-      }.getOrElse(Map.empty)
-    def entryNum(r: GenericRecord, f: String): Long =
-      if (r.getSchema.getField(f) == null) 0L
-      else r.get(f) match { case n: Number => n.longValue(); case _ => 0L }
-    // DATA manifests carry verbatim; the delete side is rebuilt:
-    // equality entries EXISTING at their original seqs (one manifest
-    // per spec, like rewriteManifests), plus the consolidated file
-    val carriedData = priorManifestEntries(meta, Some(snap.snapshotId))
-      .filter(r => entryNum(r, "content") == 0L)
-    val eqAdded = eqFiles.groupBy(_.specId).toSeq.sortBy(_._1)
-      .map { case (sid, group) =>
-        val specFields = meta.specsById.getOrElse(sid, Nil)
-        val pct: Seq[(String, DataType, Boolean)] =
-          specFields.map { case (name, transform, srcId) =>
-            val src = meta.fieldById.getOrElse(srcId,
-              throw new IllegalArgumentException(
-                s"partition source field id $srcId not in table schema"))
-            (name, storedType(transform, meta.schema(src).dataType), true)
-          }
-        val nfs = group.map(existingEntry(_, pct))
-        val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-          meta.schema, pct, nfs, snapshotId, newSeq,
-          manifestContent = 1, specId = sid,
-          specFieldIds = fieldIdsBySpec.getOrElse(sid, Nil))
-        ((mPath, mLen, 1, snapshotId, newSeq,
-          nfs.map(_.records).sum, nfs.size), sid)
+    // format v3: position deletes are DELETION VECTORS (one per target
+    // already) — "rewrite" = consolidate every live DV into ONE puffin
+    // file, dropping dangling targets
+    val added =
+      if (meta.formatVersion >= 3)
+        stageDvs(spark, tablePath, meta, files, PositionDeletes.empty(spark),
+          consolidate = true).added
+      else {
+        // Consolidated rows: union of the live delete files' (file_path,
+        // pos) pairs, restricted to paths that still name a LIVE data
+        // file (a dangling entry's target was compacted/overwritten away
+        // — dropping it changes nothing any reader can see),
+        // deduplicated, sorted into one file. The live-path set is
+        // planning metadata (O(files)) and rides a broadcast semi-join,
+        // never a shuffle of the delete rows.
+        val livePathsDf = spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](
+            dataFiles.map(f => org.apache.spark.sql.Row(
+              IcebergIO.normalizePath(f.path))).asJava),
+          StructType(Seq(StructField("__gf_lp", StringType, nullable = false))))
+        stagePositionDeletes(spark, tablePath, meta,
+          PositionDeletes.read(spark, posFiles)
+            .join(org.apache.spark.sql.functions.broadcast(livePathsDf),
+              col("__gf_file") === col("__gf_lp"), "leftsemi")
+            .select("file_path", "pos")
+            .distinct()
+            .coalesce(1).sortWithinPartitions("file_path", "pos"))
       }
-    val posAdded = newDelete.map { nf =>
-      val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-        meta.schema, deletePartColTypes(meta), Seq(nf), snapshotId, newSeq,
-        manifestContent = 1, specId = meta.defaultSpecId,
-        specFieldIds = meta.partitionFieldIds)
-      ((mPath, mLen, 1, snapshotId, newSeq, nf.records, 1),
-        meta.defaultSpecId)
-    }
-    val added = eqAdded ++ posAdded
-    val mlPath = writeManifestList(metaDir, meta.formatVersion,
-      carried = carriedData, added = added.map(_._1), snapshotId,
-      specId = meta.defaultSpecId, addedSpecIds = added.map(_._2))
-    // losing the optimistic race must not orphan OUR consolidated file
-    // (source data is never touched — commitStaged's discipline)
-    try publishSnapshot(meta, root, priorVersion, metaDir, mlPath,
-      snapshotId, newSeq, operation = "replace",
-      summaryExtra = Map(
-        "rewritten-manifests" -> "true",
-        "rewritten-position-deletes" -> "true",
-        "added-delete-files" -> newDelete.size.toString,
+    // data manifests carry verbatim; equality entries EXISTING at their
+    // original seqs
+    produce(tablePath, meta, "replace", added = added, existing = eqFiles,
+      carry = CarryData,
+      summary = Map("rewritten-position-deletes" -> "true",
         "removed-delete-files" -> posFiles.size.toString))
-    catch {
-      case e: Throwable =>
-        newDelete.foreach(f =>
-          try { GraftFs.delete(f.path, recursive = false): Unit }
-          catch { case _: Exception => () })
-        throw e
-    }
   }
 
   /** Convert accumulated EQUALITY deletes to POSITION deletes — the
@@ -1547,22 +1278,14 @@ object IcebergWrite {
     * [[rewritePositionDeletes]] to fold everything into one file. */
   def convertEqualityDeletes(spark: SparkSession, tablePath: String): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2,
       "convertEqualityDeletes requires format v2")
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot convert deletes of an empty table: $tablePath"))
+    val snap = requireSnapshot(meta, tablePath, "convert deletes of")
     val files = IcebergIO.liveFiles(spark, snap)
     val eqFiles = files.filter(_.content == 2)
     if (eqFiles.isEmpty) return snap.snapshotId
     val dataFiles = files.filter(_.content == 0)
     val posFiles = files.filter(_.content == 1)
-    val metaDir = GraftFs.child(tablePath, "metadata")
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
 
     // rows the equality deletes kill = identity diff of the view
     // without vs with them (both apply the position deletes, so the
@@ -1572,128 +1295,67 @@ object IcebergWrite {
       .select(col("__gf_file"), col("__gf_pos"))
     val withEq = IcebergIO.mergeRead(spark, meta, files, withIdentity = true)
       .select(col("__gf_file"), col("__gf_pos"))
-    val killedRaw = withoutEq
+    val killed = withoutEq
       .join(withEq, Seq("__gf_file", "__gf_pos"), "left_anti")
       .select(col("__gf_file").as("file_path"),
         col("__gf_pos").cast("long").as("pos"))
-    // format v3: the killed pairs become DELETION VECTORS (merged into
-    // any existing DVs); the equality manifests are DROPPED
-    if (meta.formatVersion >= 3)
-      return commitDvDelete(spark, tablePath, meta, root, priorVersion,
-        killedRaw, operation = "replace", dropEq = true,
-        summaryExtra = Map(
-          "rewritten-manifests" -> "true",
-          "converted-equality-deletes" -> eqFiles.size.toString))
-    val killed = killedRaw
-      .coalesce(1).sortWithinPartitions("file_path", "pos")
-    // dangling/no-op equality deletes kill nothing -> the snapshot
-    // simply DROPS them
-    val newDelete: Seq[NewFile] = {
-      val nf = stageSingleDeleteFile(spark, tablePath, killed,
-        snapshotId, content = 1, equalityIds = Nil)
-      if (nf.records == 0L) { GraftFs.delete(nf.path, recursive = false); Nil }
-      else Seq(nf)
-    }
-
-    def entryNum(r: GenericRecord, f: String): Long =
-      if (r.getSchema.getField(f) == null) 0L
-      else r.get(f) match { case n: Number => n.longValue(); case _ => 0L }
-    val carriedData = priorManifestEntries(meta, Some(snap.snapshotId))
-      .filter(r => entryNum(r, "content") == 0L)
-    // ONE rebuilt delete manifest: prior position-delete files EXISTING
-    // at their original seqs + the conversion file ADDED at the new seq
-    // (position deletes carry no partition scope — tuple stays unset)
-    val delNfs = posFiles.sortBy(f => (f.seq, f.path)).map { f =>
-      NewFile(f.path, f.recordCount, f.bytes,
-        partitionValues = Nil, bounds = Nil, nullCounts = Nil,
-        nanCounts = Nil, content = 1, equalityIds = Nil,
-        existingSeq = Some(f.seq), addedSnapshotId = f.snapshotId)
-    } ++ newDelete
-    val added =
-      if (delNfs.isEmpty) Nil
-      else {
-        val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-          meta.schema, deletePartColTypes(meta), delNfs, snapshotId, newSeq,
-          manifestContent = 1, specId = meta.defaultSpecId,
-          specFieldIds = meta.partitionFieldIds)
-        Seq(((mPath, mLen, 1, snapshotId, newSeq,
-          delNfs.map(_.records).sum, delNfs.size), meta.defaultSpecId))
-      }
-    val mlPath = writeManifestList(metaDir, meta.formatVersion,
-      carried = carriedData, added = added.map(_._1), snapshotId,
-      specId = meta.defaultSpecId, addedSpecIds = added.map(_._2))
-    // same lost-race cleanup as rewritePositionDeletes: drop OUR file
-    try publishSnapshot(meta, root, priorVersion, metaDir, mlPath,
-      snapshotId, newSeq, operation = "replace",
-      summaryExtra = Map(
-        "rewritten-manifests" -> "true",
-        "converted-equality-deletes" -> eqFiles.size.toString,
-        "added-delete-files" -> newDelete.size.toString))
-    catch {
-      case e: Throwable =>
-        newDelete.foreach(f =>
-          try { GraftFs.delete(f.path, recursive = false): Unit }
-          catch { case _: Exception => () })
-        throw e
-    }
+    // the killed pairs become one position-delete file (v3: DELETION
+    // VECTORS merged into the existing ones) and the equality entries
+    // drop; prior position deletes carry EXISTING at their original seqs
+    // (dangling/no-op equality deletes kill nothing -> they simply drop)
+    val (added, keptDeletes) =
+      if (meta.formatVersion >= 3) {
+        val dv = stageDvs(spark, tablePath, meta, files, killed)
+        (dv.added, dv.kept)
+      } else (stagePositionDeletes(spark, tablePath, meta,
+        killed.coalesce(1).sortWithinPartitions("file_path", "pos")), posFiles)
+    produce(tablePath, meta, "replace", added = added, existing = keptDeletes,
+      carry = CarryData,
+      summary = Map("converted-equality-deletes" -> eqFiles.size.toString))
   }
 
+  /** Expire snapshots older than `olderThanMs` (metadata-only commit:
+    * snapshots + snapshot-log entries are dropped; data/manifest files
+    * stay on disk — removing them is a separate GC concern). The current
+    * snapshot, every ref target, and the `retainLast` most recent
+    * snapshots always survive, mirroring the reference maintenance
+    * action's safety rails. Dangling parent-snapshot-ids are fine: the
+    * incremental reader's lineage walk degrades gracefully. Returns the
+    * number of snapshots expired. */
   def expireSnapshots(tablePath: String, olderThanMs: Long,
                       retainLast: Int = 1): Int = {
     require(retainLast >= 1, "retainLast must be >= 1")
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
+    def retention(ref: String, field: String): Option[Long] =
+      meta.refRetention.getOrElse(ref, Map.empty).get(field)
     // spec ref retention (`max-ref-age-ms`, non-main refs only): a ref
     // whose referenced snapshot is older than its age cap is DROPPED by
     // expiration — its snapshot then unpins like any other (the Iceberg
     // RemoveSnapshots rule; ref age is measured off the snapshot's
     // timestamp, since refs carry none of their own)
     val now = System.currentTimeMillis()
-    val agedOutRefs: Set[String] = Option(root.get("refs")).toSeq
-      .flatMap(_.properties().asScala).flatMap { e =>
-        val name = e.getKey
-        val n = e.getValue
-        if (name == "main" || !n.has("max-ref-age-ms")) None
-        else {
-          val sid = n.get("snapshot-id").asLong
-          val ts = meta.snapshots.find(_.snapshotId == sid)
-            .map(_.timestampMs).getOrElse(Long.MaxValue)
-          if (now - ts > n.get("max-ref-age-ms").asLong) Some(name) else None
-        }
-      }.toSet
-    val liveRefs = meta.refs.filterNot(r => agedOutRefs(r._1))
+    val byId = meta.snapshots.map(sn => sn.snapshotId -> sn).toMap
+    val agedOutRefs: Set[String] = meta.refs.collect {
+      case (name, sid) if name != "main" && retention(name, "max-ref-age-ms")
+          .exists(cap => now - byId.get(sid).map(_.timestampMs)
+            .getOrElse(Long.MaxValue) > cap) => name
+    }.toSet
+    val liveRefs = meta.refs -- agedOutRefs
     // spec BRANCH retention: a branch ref carrying max-snapshot-age-ms /
     // min-snapshots-to-keep extends the keep set with its own ANCESTRY
     // (lineage snapshots within the age cap, plus at least the newest
     // min-snapshots-to-keep of the lineage — the head is lineage[0] and
     // always kept via the ref pin)
-    val byId = meta.snapshots.map(sn => sn.snapshotId -> sn).toMap
-    val branchKeeps: Set[Long] = Option(root.get("refs")).toSeq
-      .flatMap(_.properties().asScala).flatMap { e =>
-        val n = e.getValue
-        if (agedOutRefs(e.getKey)) Nil
-        else if (!n.has("max-snapshot-age-ms") &&
-          !n.has("min-snapshots-to-keep")) Nil
-        else {
-          val lineage = scala.collection.mutable.ArrayBuffer
-            .empty[IcebergIO.SnapshotInfo]
-          var cur = byId.get(n.get("snapshot-id").asLong)
-          while (cur.isDefined) {
-            lineage += cur.get
-            cur = cur.get.parentId.flatMap(byId.get)
-          }
-          val byAge =
-            if (!n.has("max-snapshot-age-ms")) Nil
-            else lineage.filter(sn =>
-              now - sn.timestampMs <= n.get("max-snapshot-age-ms").asLong)
-              .map(_.snapshotId)
-          val byCount =
-            if (!n.has("min-snapshots-to-keep")) Nil
-            else lineage.take(n.get("min-snapshots-to-keep").asInt)
-              .map(_.snapshotId)
-          byAge ++ byCount
-        }
-      }.toSet
+    val branchKeeps: Set[Long] = liveRefs.toSeq.flatMap { case (name, head) =>
+      val maxAge = retention(name, "max-snapshot-age-ms")
+      val minKeep = retention(name, "min-snapshots-to-keep")
+      val lineage =
+        if (maxAge.isEmpty && minKeep.isEmpty) Nil
+        else Iterator.iterate(byId.get(head))(_.flatMap(_.parentId).flatMap(byId.get))
+          .takeWhile(_.isDefined).map(_.get).toSeq
+      maxAge.toSeq.flatMap(a => lineage.filter(sn => now - sn.timestampMs <= a)) ++
+        minKeep.toSeq.flatMap(k => lineage.take(k.toInt))
+    }.map(_.snapshotId).toSet
     val keep: Set[Long] = {
       val pinned = meta.currentSnapshotId.toSet ++ liveRefs.values ++
         branchKeeps
@@ -1705,29 +1367,16 @@ object IcebergWrite {
     }
     val expired = meta.snapshots.map(_.snapshotId).filterNot(keep).toSet
     if (expired.isEmpty && agedOutRefs.isEmpty) return 0
-    val newRoot = root.deepCopy()
-    agedOutRefs.foreach { name =>
-      Option(newRoot.get("refs")).foreach {
-        case o: ObjectNode => o.remove(name): Unit
-        case _ =>
-      }
+    updateMetadata(tablePath, meta) { root =>
+      agedOutRefs.foreach(objectNode(root, "refs").remove(_): Unit)
+      // statistics files of expired snapshots are unreachable (the
+      // reader looks up stats by CURRENT snapshot id) — drop their
+      // entries so removeOrphanFiles can sweep the files (it keeps every
+      // path the metadata still registers)
+      Seq("snapshots", "snapshot-log", "statistics", "partition-statistics")
+        .foreach(name => retain(arrayNode(root, name))(n =>
+          !expired.contains(n.get("snapshot-id").asLong)))
     }
-    def filterArray(name: String, idField: String): Unit = {
-      val arr = arrayNode(newRoot, name)
-      val kept = (0 until arr.size).map(arr.get)
-        .filterNot(n => expired.contains(n.get(idField).asLong))
-      arr.removeAll()
-      kept.foreach(arr.add)
-    }
-    filterArray("snapshots", "snapshot-id")
-    filterArray("snapshot-log", "snapshot-id")
-    // statistics files of expired snapshots are unreachable (the reader
-    // looks up stats by CURRENT snapshot id) — drop their entries so
-    // removeOrphanFiles can sweep the files (it keeps every path the
-    // metadata still registers)
-    filterArray("statistics", "snapshot-id")
-    filterArray("partition-statistics", "snapshot-id")
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
     expired.size
   }
 
@@ -1812,42 +1461,18 @@ object IcebergWrite {
     * the file itself is partition-count-sized. Returns the stats path. */
   def computePartitionStats(spark: SparkSession, tablePath: String): String = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot compute partition stats of an empty table: $tablePath"))
+    val snap = requireSnapshot(meta, tablePath, "compute partition stats of")
     val files = IcebergIO.liveFiles(spark, snap)
 
     // unified partition struct: every spec's fields at their spec field
     // ids (the reuse rule gives one id per (source, transform) — dedupe
     // by id), typed as the STORED representation, all nullable (a file
     // of spec A has nulls in spec B's fields)
-    val unified: Seq[(Int, String, DataType)] = {
-      val b = scala.collection.mutable.LinkedHashMap.empty[Int, (String, DataType)]
-      def addField(f: JsonNode, fallbackId: Int): Unit = {
-        val fid = if (f.has("field-id")) f.get("field-id").asInt() else fallbackId
-        if (!b.contains(fid)) {
-          val name = f.get("name").asText()
-          val transform = f.get("transform").asText()
-          val srcId = if (f.has("source-id")) f.get("source-id").asInt() else -1
-          val srcType = meta.fieldById.get(srcId)
-            .map(n => meta.schema(n).dataType).getOrElse(IntegerType)
-          b += fid -> ((name, storedType(transform, srcType))): Unit
-        }
-      }
-      Option(root.get("partition-specs")).toSeq
-        .flatMap(_.elements().asScala).foreach { s =>
-          s.get("fields").elements().asScala.zipWithIndex
-            .foreach { case (f, i) => addField(f, 1000 + i) }
-        }
-      // v1 legacy single-spec form (field ids default 1000+ordinal)
-      if (b.isEmpty)
-        Option(root.get("partition-spec")).toSeq
-          .flatMap(_.elements().asScala).zipWithIndex
-          .foreach { case (f, i) => addField(f, 1000 + i) }
-      b.toSeq.sortBy(_._1).map { case (fid, (n, t)) => (fid, n, t) }
-    }
+    val unified: Seq[(Int, String, DataType)] =
+      meta.specsById.keys.toSeq.sorted.flatMap { sid =>
+        val (pct, fids) = partitionType(meta, sid)
+        fids.zip(pct).map { case (fid, (n, t, _)) => (fid, n, t) }
+      }.distinctBy(_._1).sortBy(_._1)
     val partStruct = StructType(unified.map { case (fid, n, t) =>
       StructField(n, t, nullable = true, new MetadataBuilder()
         .putLong("parquet.field.id", fid.toLong).build())
@@ -1913,24 +1538,23 @@ object IcebergWrite {
 
     // register: replace any prior entry for this snapshot (recompute),
     // keep other snapshots' entries (time travel may still want them)
-    try {
-      val newRoot = root.deepCopy()
-      val arr = arrayNode(newRoot, "partition-statistics")
-      val kept = (0 until arr.size).map(arr.get)
-        .filterNot(_.get("snapshot-id").asLong == snap.snapshotId)
-      arr.removeAll()
-      kept.foreach(arr.add)
-      val e = arr.addObject()
-      e.put("snapshot-id", snap.snapshotId)
-      e.put("statistics-path", to)
+    updateMetadata(tablePath, meta, created = Seq(to)) { root =>
+      val e = statsEntry(root, "partition-statistics", snap.snapshotId, to)
       e.put("file-size-in-bytes",
-        GraftFs.status(to).map(_.getLen).getOrElse(0L))
-      publish(metaDir, priorVersion + 1, newRoot)
-    } catch {
-      case t: Throwable =>
-        GraftFs.delete(to, recursive = false); throw t
+        GraftFs.status(to).map(_.getLen).getOrElse(0L)): Unit
     }
     to
+  }
+
+  /** A fresh `list` entry registering stats file `path` for
+    * `snapshotId`, replacing any prior entry for that snapshot. */
+  private def statsEntry(root: ObjectNode, list: String, snapshotId: Long,
+                         path: String): ObjectNode = {
+    val e = retain(arrayNode(root, list))(_.get("snapshot-id").asLong != snapshotId)
+      .addObject()
+    e.put("snapshot-id", snapshotId)
+    e.put("statistics-path", path)
+    e
   }
 
   /** Compute and REGISTER a table-statistics Puffin file for the current
@@ -1955,11 +1579,7 @@ object IcebergWrite {
                         columns: Seq[String] = Nil,
                         approximate: Boolean = false): String = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot compute table stats of an empty table: $tablePath"))
+    val snap = requireSnapshot(meta, tablePath, "compute table stats of")
     def atomic(dt: DataType): Boolean = dt match {
       case _: StructType | _: ArrayType | _: MapType | BinaryType => false
       // the v3 `unknown` bottom type stores no values — an NDV blob for
@@ -2000,16 +1620,8 @@ object IcebergWrite {
       s"table-stats-${snap.snapshotId}-" +
         s"${java.util.UUID.randomUUID().toString.take(8)}.puffin")
     PuffinIO.writePuffin(to, blobs, snap.snapshotId, snap.sequenceNumber)
-    try {
-      val newRoot = root.deepCopy()
-      val arr = arrayNode(newRoot, "statistics")
-      val kept = (0 until arr.size).map(arr.get)
-        .filterNot(_.get("snapshot-id").asLong == snap.snapshotId)
-      arr.removeAll()
-      kept.foreach(arr.add)
-      val e = arr.addObject()
-      e.put("snapshot-id", snap.snapshotId)
-      e.put("statistics-path", to)
+    updateMetadata(tablePath, meta, created = Seq(to)) { root =>
+      val e = statsEntry(root, "statistics", snap.snapshotId, to)
       e.put("file-size-in-bytes", GraftFs.status(to).map(_.getLen).getOrElse(0L))
       e.put("file-footer-size-in-bytes", PuffinIO.footerSize(to))
       val bm = e.putArray("blob-metadata")
@@ -2023,10 +1635,6 @@ object IcebergWrite {
         val props = n.putObject("properties")
         b.properties.foreach { case (k, v) => props.put(k, v) }
       }
-      publish(metaDir, priorVersion + 1, newRoot)
-    } catch {
-      case t: Throwable =>
-        GraftFs.delete(to, recursive = false); throw t
     }
     to
   }
@@ -2039,26 +1647,12 @@ object IcebergWrite {
     * reads and as-of time travel resolve to the restored state. */
   def setCurrentSnapshot(tablePath: String, snapshotId: Long): Unit = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.snapshots.exists(_.snapshotId == snapshotId),
       s"snapshot $snapshotId not in table (have: " +
         s"${meta.snapshots.map(_.snapshotId).sorted.mkString(", ")})")
     if (meta.currentSnapshotId.contains(snapshotId)) return
-    val now = System.currentTimeMillis()
-    val newRoot = root.deepCopy()
-    newRoot.put("current-snapshot-id", snapshotId)
-    newRoot.put("last-updated-ms", now)
-    val slog = arrayNode(newRoot, "snapshot-log").addObject()
-    slog.put("timestamp-ms", now)
-    slog.put("snapshot-id", snapshotId)
-    val refs = Option(newRoot.get("refs")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("refs")
-    }
-    val mainRef = refs.putObject("main")
-    mainRef.put("snapshot-id", snapshotId)
-    mainRef.put("type", "branch")
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+    updateMetadata(tablePath, meta)(
+      moveMain(_, snapshotId, Seq(snapshotId), System.currentTimeMillis()))
   }
 
   /** Create a named TAG pinning `snapshotId` (immutable bookmark; the
@@ -2085,26 +1679,14 @@ object IcebergWrite {
                         minSnapshotsToKeep: Option[Int] = None): Unit = {
     require(name != "main", "'main' moves with commits/setCurrentSnapshot")
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.snapshots.exists(_.snapshotId == snapshotId),
       s"snapshot $snapshotId not in table (have: " +
         s"${meta.snapshots.map(_.snapshotId).sorted.mkString(", ")})")
     require(!meta.refs.contains(name), s"ref '$name' already exists")
-    val newRoot = root.deepCopy()
-    val refs = Option(newRoot.get("refs")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("refs")
-    }
-    val r = refs.putObject(name)
-    r.put("snapshot-id", snapshotId)
-    r.put("type", refType)
     // spec ref retention: [[expireSnapshots]] DROPS this ref once its
     // referenced snapshot is older than the age cap (the Iceberg
     // RemoveSnapshots basis — snapshots carry timestamps, refs don't)
-    maxRefAgeMs.foreach { a =>
-      require(a >= 0, "max-ref-age-ms must be >= 0")
-      r.put("max-ref-age-ms", a): Unit
-    }
+    require(maxRefAgeMs.forall(_ >= 0), "max-ref-age-ms must be >= 0")
     // spec BRANCH retention: [[expireSnapshots]] keeps this branch's
     // ANCESTRY per these fields (lineage snapshots younger than the age
     // cap, and at least min-snapshots-to-keep newest) — the branch's
@@ -2112,16 +1694,14 @@ object IcebergWrite {
     require(refType == "branch" ||
         (maxSnapshotAgeMs.isEmpty && minSnapshotsToKeep.isEmpty),
       "max-snapshot-age-ms / min-snapshots-to-keep apply to branches only")
-    maxSnapshotAgeMs.foreach { a =>
-      require(a >= 0, "max-snapshot-age-ms must be >= 0")
-      r.put("max-snapshot-age-ms", a): Unit
+    require(maxSnapshotAgeMs.forall(_ >= 0), "max-snapshot-age-ms must be >= 0")
+    require(minSnapshotsToKeep.forall(_ >= 1), "min-snapshots-to-keep must be >= 1")
+    updateMetadata(tablePath, meta) { root =>
+      val r = setRef(root, name, snapshotId, refType)
+      maxRefAgeMs.foreach(r.put("max-ref-age-ms", _))
+      maxSnapshotAgeMs.foreach(r.put("max-snapshot-age-ms", _))
+      minSnapshotsToKeep.foreach(r.put("min-snapshots-to-keep", _))
     }
-    minSnapshotsToKeep.foreach { k =>
-      require(k >= 1, "min-snapshots-to-keep must be >= 1")
-      r.put("min-snapshots-to-keep", k): Unit
-    }
-    newRoot.put("last-updated-ms", System.currentTimeMillis())
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
   }
 
   /** Drop a named ref (tag or branch). `main` is not droppable. A
@@ -2129,13 +1709,9 @@ object IcebergWrite {
   def dropRef(tablePath: String, name: String): Unit = {
     require(name != "main", "cannot drop the main branch")
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.refs.contains(name),
       s"ref '$name' not found (have: ${meta.refs.keys.toSeq.sorted.mkString(", ")})")
-    val newRoot = root.deepCopy()
-    newRoot.get("refs").asInstanceOf[ObjectNode].remove(name): Unit
-    newRoot.put("last-updated-ms", System.currentTimeMillis())
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+    updateMetadata(tablePath, meta)(objectNode(_, "refs").remove(name): Unit)
   }
 
   /** Merge-on-read DELETE by predicate: rows of the current snapshot
@@ -2148,30 +1724,17 @@ object IcebergWrite {
     * id. */
   def deleteWhere(spark: SparkSession, tablePath: String, cond: Column): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2, "position deletes require format v2")
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot delete from an empty table: $tablePath"))
-    val dataFiles = IcebergIO.liveFiles(spark, snap).filter(_.content == 0)
+    val live = IcebergIO.liveFiles(spark,
+      requireSnapshot(meta, tablePath, "delete from"))
+    val dataFiles = live.filter(_.content == 0)
     require(dataFiles.nonEmpty, s"no live data files in $tablePath")
     // planning-time pruning of the DELETE's scan: a file whose partition
     // tuple / stats provably exclude `cond` holds no position to delete
     // — a partition-scoped DELETE must not raw-scan a 100 TB table
     val pruned = IcebergIO.pruneDataFilesWhere(meta, dataFiles, cond)
-    val matches = matchedPositions(spark, meta, pruned)(_.filter(cond))
-    // format v3: matched positions become DELETION VECTORS (one puffin
-    // blob per affected file) — the spec disallows new parquet
-    // position-delete files on v3 tables
-    if (meta.formatVersion >= 3)
-      commitDvDelete(spark, tablePath, meta, root, priorVersion, matches)
-    else
-      commitDelete(spark, tablePath, meta, root, priorVersion,
-        // spec: position delete rows sorted by (file, position); coalesce
-        // AFTER the sort keeps the order in the single output file
-        matches.orderBy("file_path", "pos").coalesce(1),
-        content = 1, equalityIds = Nil)
+    commitRowDelta(spark, tablePath, meta, live, "delete",
+      matchedPositions(spark, meta, pruned)(_.filter(cond)))
   }
 
   /** Equality DELETE: any current-or-earlier row equal to a `values` row
@@ -2185,26 +1748,14 @@ object IcebergWrite {
     * the snapshot id. */
   def deleteEquality(values: DataFrame, tablePath: String,
                      summaryExtra: Map[String, String] = Map.empty): Long = {
-    val spark = values.sparkSession
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2, "equality deletes require format v2")
     require(values.columns.nonEmpty, "deleteEquality needs at least one column")
     require(!values.columns.exists(_.startsWith("__gf")),
       "__gf-prefixed delete columns collide with internal names")
-    val ids = resolveEqualityIds(values, meta)
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-    val files =
-      if (meta.partitionFields.isEmpty)
-        Seq(stageSingleDeleteFile(spark, tablePath, values.coalesce(1),
-          snapshotId, content = 2, equalityIds = ids))
-      else stageScopedEqDelete(values, tablePath, meta, snapshotId, ids)
-    commitStaged(tablePath, meta, root, priorVersion,
-      deletePartColTypes(meta), files, snapshotId, newSeq,
-      operation = "delete", carryForward = true,
-      summaryExtra = summaryExtra)
+    produce(tablePath, meta, "delete",
+      added = stageEqualityDeletes(values, tablePath, meta),
+      summary = summaryExtra)
   }
 
   /** MERGE-style UPSERT in ONE atomic snapshot: table rows whose
@@ -2254,7 +1805,6 @@ object IcebergWrite {
         maxRecordsPerFile = maxRecordsPerFile, summaryExtra = summaryExtra)
     }
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2, "upsert requires format v2 (equality deletes)")
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     require(keyCols.forall(df.columns.contains),
@@ -2263,22 +1813,11 @@ object IcebergWrite {
       "__gf-prefixed key columns collide with internal names")
     requireTableSchema(df, meta)
     val keys = df.select(keyCols.map(col): _*).distinct()
-    val ids = resolveEqualityIds(keys, meta)
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-    val delFiles =
-      if (meta.currentSnapshotId.isEmpty) Nil // empty table: plain append
-      else if (meta.partitionFields.isEmpty)
-        Seq(stageSingleDeleteFile(spark, tablePath, keys.coalesce(1),
-          snapshotId, content = 2, equalityIds = ids))
-      else stageScopedEqDelete(keys, tablePath, meta, snapshotId, ids)
-    val (dataFiles, partColTypes) =
-      stageDataFiles(df, tablePath, meta, snapshotId, maxRecordsPerFile)
-    commitStaged(tablePath, meta, root, priorVersion, partColTypes,
-      delFiles ++ dataFiles, snapshotId, newSeq,
-      operation = "overwrite", carryForward = true,
-      summaryExtra = summaryExtra)
+    val delFiles = stageEqualityDeletes(keys, tablePath, meta)
+    val dataFiles = stageAfter(delFiles)(
+      stageDataFiles(df, tablePath, meta, maxRecordsPerFile))
+    produce(tablePath, meta, "overwrite", added = delFiles ++ dataFiles,
+      summary = summaryExtra)
   }
 
   /** SQL-UPDATE semantics in ONE atomic snapshot: every current row
@@ -2307,7 +1846,6 @@ object IcebergWrite {
                   assignments: Map[String, Column],
                   maxRecordsPerFile: Option[Long] = None): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2, "updateWhere requires format v2 (position deletes)")
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
     assignments.keys.foreach { n =>
@@ -2316,76 +1854,27 @@ object IcebergWrite {
           s"(known: ${meta.schema.fieldNames.sorted.mkString(", ")})")
     }
     val assigned = storeAssigned(emptyTable(spark, meta), meta, assignments)
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot update an empty table: $tablePath"))
-    val rawFiles = IcebergIO.liveFiles(spark, snap).filter(_.content == 0)
+    val live = IcebergIO.liveFiles(spark, requireSnapshot(meta, tablePath, "update"))
+    val rawFiles = live.filter(_.content == 0)
     require(rawFiles.nonEmpty, s"no live data files in $tablePath")
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-
-    // (1) position pairs of the matching rows, pruned first: files
-    // whose tuple/stats exclude `cond` hold no match.
-    val prunedRaw = IcebergIO.pruneDataFilesWhere(meta, rawFiles, cond)
-    val posRows = matchedPositions(spark, meta, prunedRaw)(_.filter(cond))
-
-    // format v3: the position side becomes DELETION VECTORS; the
-    // rewritten rows ride the same snapshot as a separate data manifest,
-    // each carrying its CURRENT `_row_id` (materialized into the new
-    // files — an UPDATE rewrites content, not identity; only
-    // `_last_updated_sequence_number`, which this writer doesn't
-    // expose, would change). Input: the pruned raw files + every live
-    // delete file (existing deletes applied, same as readWhere).
-    if (meta.formatVersion >= 3) {
-      val deleteFiles = IcebergIO.liveFiles(spark, snap).filter(_.content != 0)
-      val updated = IcebergIO.lineageRead(spark, meta,
-          prunedRaw ++ deleteFiles)
-        .filter(cond)
-        .select(meta.schema.fields.toSeq.map { f =>
-          assigned.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
-        } :+ col(LineageCarryCol): _*)
-      requireTableSchema(updated.drop(LineageCarryCol), meta)
-      val (dataFiles, partColTypes) =
-        stageDataFiles(updated, tablePath, meta, snapshotId, maxRecordsPerFile)
-      return commitDvDelete(spark, tablePath, meta, root, priorVersion,
-        posRows, operation = "overwrite", extraData = dataFiles,
-        extraDataPct = partColTypes)
-    }
-    val delFile = stageSingleDeleteFile(spark, tablePath,
-      posRows.orderBy("file_path", "pos").coalesce(1), snapshotId,
-      content = 1, equalityIds = Nil)
-
-    try {
-      // (2) rewritten rows from the CURRENT state (existing deletes
-      // applied — a previously-deleted row must not be resurrected).
-      // readWhere prunes the same way the position side did; ONE
-      // projection applies every assignment against the old row.
-      val updated = IcebergIO.readWhere(spark, tablePath, cond)
-        .select(meta.schema.fields.toSeq.map { f =>
-          assigned.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
-        }: _*)
-      requireTableSchema(updated, meta)
-      val (dataFiles, partColTypes) =
-        stageDataFiles(updated, tablePath, meta, snapshotId, maxRecordsPerFile)
-      // no matched positions -> drop the empty delete file; an empty
-      // `files` list commits a clean no-op snapshot
-      val del =
-        if (delFile.records == 0) {
-          GraftFs.delete(delFile.path, recursive = false); Nil
-        } else Seq(delFile)
-      commitStaged(tablePath, meta, root, priorVersion, partColTypes,
-        del ++ dataFiles, snapshotId, newSeq,
-        operation = "overwrite", carryForward = true)
-    } catch {
-      case e: Throwable =>
-        // commitStaged rolls back only the files it was handed — if
-        // staging the data side throws first, reclaim the delete file
-        try { GraftFs.delete(delFile.path, recursive = false): Unit }
-        catch { case _: Exception => () }
-        throw e
-    }
+    // ONE plan at `meta`: files whose tuple/stats exclude `cond` hold no
+    // match — (1) the matching rows' position pairs from a raw scan,
+    // (2) their rewritten copies from the same files with every live
+    // delete applied (a previously-deleted row must not be resurrected);
+    // ONE projection applies every assignment against the old row. v3:
+    // each rewritten row carries its CURRENT `_row_id` (an UPDATE
+    // rewrites content, not identity).
+    val pruned = IcebergIO.pruneDataFilesWhere(meta, rawFiles, cond)
+    val v3 = meta.formatVersion >= 3
+    val updated = liveRows(spark, meta, pruned ++ live.filter(_.content != 0))
+      .filter(cond)
+      .select(meta.schema.fields.toSeq.map { f =>
+        assigned.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
+      } ++ (if (v3) Seq(col(LineageCarryCol)) else Nil): _*)
+    requireTableSchema(if (v3) updated.drop(LineageCarryCol) else updated, meta)
+    commitRowDelta(spark, tablePath, meta, live, "overwrite",
+      matchedPositions(spark, meta, pruned)(_.filter(cond)),
+      stageDataFiles(updated, tablePath, meta, maxRecordsPerFile))
   }
 
   /** Each assigned value cast to its column's type under Spark's ANSI
@@ -2476,7 +1965,6 @@ object IcebergWrite {
             maxRecordsPerFile: Option[Long] = None,
             summaryExtra: Map[String, String] = Map.empty): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2, "merge requires format v2 (position deletes)")
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(clauses.nonEmpty, "merge needs at least one WHEN clause")
@@ -2503,9 +1991,6 @@ object IcebergWrite {
       case _ =>
     }
 
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
     val src = source.alias(sourceAlias)
     // every SET / INSERT value store-assigned to its column, resolved
     // where its clause runs (matched UPDATE: target x source; NOT
@@ -2543,18 +2028,14 @@ object IcebergWrite {
       }
 
     // ---- empty table: every source row is NOT MATCHED; pure insert
-    if (meta.currentSnapshotId.isEmpty) {
+    val snap = currentSnapshot(meta).getOrElse {
       val rows = insertRows(src, insertClauses, actionIdx(insertClauses), meta)
-      val (files, partColTypes) =
-        stageDataFiles(rows, tablePath, meta, snapshotId, maxRecordsPerFile)
-      return commitStaged(tablePath, meta, root, priorVersion, partColTypes,
-        files, snapshotId, newSeq, operation = "append", carryForward = true,
-        summaryExtra = summaryExtra)
+      return produce(tablePath, meta, "append",
+        added = stageDataFiles(rows, tablePath, meta, maxRecordsPerFile),
+        summary = summaryExtra)
     }
-
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id)).get
-    val rawFiles = IcebergIO.liveFiles(spark, snap).filter(_.content == 0)
+    val live = IcebergIO.liveFiles(spark, snap)
+    val rawFiles = live.filter(_.content == 0)
 
     // ---- matched pairs from the CURRENT state (deletes applied — a
     // dead row must not be resurrected by an UPDATE). Persisted: the
@@ -2564,10 +2045,7 @@ object IcebergWrite {
     // `_row_id` (insert rows stage a NULL carry — the reader derives
     // their fresh ids from the new files' assignment).
     val v3 = meta.formatVersion >= 3
-    val cur =
-      if (v3) IcebergIO.lineageRead(spark, meta,
-        IcebergIO.liveFiles(spark, snap))
-      else IcebergIO.read(spark, tablePath)
+    val cur = liveRows(spark, meta, live)
     val pairs = cur.alias(targetAlias).join(src, keyJoin, "inner").persist()
     try {
       if (matchedClauses.nonEmpty) {
@@ -2668,36 +2146,9 @@ object IcebergWrite {
           .reduceOption(_ unionByName _)
         newRows.foreach(r => requireTableSchema(
           if (v3) r.drop(LineageCarryCol) else r, meta))
-        val (dataFiles, partColTypes) = newRows match {
-          case Some(rows) =>
-            stageDataFiles(rows, tablePath, meta, snapshotId, maxRecordsPerFile)
-          case None => (Nil, deletePartColTypes(meta))
-        }
-        // format v3: the position side becomes DELETION VECTORS in the
-        // same snapshot as the rewrite/insert data manifest
-        if (meta.formatVersion >= 3)
-          return commitDvDelete(spark, tablePath, meta, root, priorVersion,
-            allPosRows, operation = "overwrite", extraData = dataFiles,
-            extraDataPct = partColTypes, summaryExtra = summaryExtra)
-        val delFile =
-          try stageSingleDeleteFile(spark, tablePath,
-            allPosRows.orderBy("file_path", "pos").coalesce(1), snapshotId,
-            content = 1, equalityIds = Nil)
-          catch {
-            case e: Throwable => // data files staged first: reclaim them
-              dataFiles.foreach(f =>
-                try { GraftFs.delete(f.path, recursive = false): Unit }
-                catch { case _: Exception => () })
-              throw e
-          }
-        val del =
-          if (delFile.records == 0) {
-            GraftFs.delete(delFile.path, recursive = false); Nil
-          } else Seq(delFile)
-        commitStaged(tablePath, meta, root, priorVersion, partColTypes,
-          del ++ dataFiles, snapshotId, newSeq,
-          operation = "overwrite", carryForward = true,
-          summaryExtra = summaryExtra)
+        commitRowDelta(spark, tablePath, meta, live, "overwrite", allPosRows,
+          newRows.toSeq.flatMap(stageDataFiles(_, tablePath, meta, maxRecordsPerFile)),
+          summaryExtra)
       }
     } finally {
       pairs.unpersist(): Unit
@@ -2757,22 +2208,39 @@ object IcebergWrite {
     }
   }
 
-  /** The delete-manifest partition column types: same stored types as
-    * the data manifest, all NULLABLE (position deletes leave the tuple
-    * unset; scoped equality deletes may carry a null partition value). */
-  private def deletePartColTypes(meta: IcebergIO.TableMetadata)
-      : Seq[(String, DataType, Boolean)] =
-    meta.partitionFields.map { case (name, t, srcId) =>
-      val src = meta.fieldById(srcId)
-      (name, storedType(t, meta.schema(src).dataType), true)
-    }
+  /** Stage equality deletes of `values` (keyed on all its columns): ONE
+    * global file on an unpartitioned table, partition-scoped files
+    * ([[stageScopedEqDelete]]) on a partitioned one, none on an empty
+    * table. */
+  private def stageEqualityDeletes(values: DataFrame, tablePath: String,
+                                   meta: IcebergIO.TableMetadata): Seq[NewFile] = {
+    val ids = resolveEqualityIds(values, meta)
+    if (meta.currentSnapshotId.isEmpty) Nil
+    else if (meta.partitionFields.isEmpty)
+      Seq(stageSingleDeleteFile(values.sparkSession, tablePath, meta,
+        values.coalesce(1), content = 2, equalityIds = ids))
+    else stageScopedEqDelete(values, tablePath, meta, ids)
+  }
+
+  /** Stage position-delete `rows` as one file, or none when `rows` is
+    * empty. */
+  private def stagePositionDeletes(spark: SparkSession, tablePath: String,
+                                   meta: IcebergIO.TableMetadata,
+                                   rows: DataFrame): Seq[NewFile] = {
+    val nf = stageSingleDeleteFile(spark, tablePath, meta, rows,
+      content = 1, equalityIds = Nil)
+    if (nf.records > 0) Seq(nf)
+    else { GraftFs.delete(nf.path, recursive = false); Nil }
+  }
 
   /** Stage `rows` as ONE delete parquet under `data/` (position deletes,
     * or a GLOBAL equality delete on an unpartitioned table — its
     * manifest entry records no partition tuple). */
   private def stageSingleDeleteFile(spark: SparkSession, tablePath: String,
-                                    rows: DataFrame, snapshotId: Long,
-                                    content: Int, equalityIds: Seq[Int]): NewFile = {
+                                    meta: IcebergIO.TableMetadata,
+                                    rows: DataFrame, content: Int,
+                                    equalityIds: Seq[Int]): NewFile = {
+    val (snapshotId, _) = nextIds(meta)
     val tmp = GraftFs.child(tablePath, s"_tmp_delete_${snapshotId}_${java.util.UUID.randomUUID().toString.take(8)}")
     // delete files carry field ids too: position deletes the spec's
     // reserved ids, equality deletes the table ids they key on
@@ -2818,12 +2286,10 @@ object IcebergWrite {
     * in several partitions lands in each of them. */
   private def stageScopedEqDelete(values: DataFrame, tablePath: String,
                                   meta: IcebergIO.TableMetadata,
-                                  snapshotId: Long,
                                   equalityIds: Seq[Int]): Seq[NewFile] = {
     val spark = values.sparkSession
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-    val dataFiles = snap.toSeq
+    val (snapshotId, _) = nextIds(meta)
+    val dataFiles = currentSnapshot(meta).toSeq
       .flatMap(s => IcebergIO.liveFiles(spark, s)).filter(_.content == 0)
     if (dataFiles.isEmpty) return Nil // nothing live -> nothing to delete
     val partSources: Seq[(String, String, DataType)] = // (transform, src, type)
@@ -2920,23 +2386,6 @@ object IcebergWrite {
     }
   }
 
-  /** Stage one delete parquet file + commit the delete snapshot —
-    * [[deleteWhere]]'s commit tail (position deletes name exact files,
-    * so their manifest partition tuple stays unset). */
-  private def commitDelete(spark: SparkSession, tablePath: String,
-                           meta: IcebergIO.TableMetadata, root: ObjectNode,
-                           priorVersion: Int, rows: DataFrame, content: Int,
-                           equalityIds: Seq[Int]): Long = {
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-    val nf = stageSingleDeleteFile(spark, tablePath, rows, snapshotId,
-      content, equalityIds)
-    commitStaged(tablePath, meta, root, priorVersion,
-      deletePartColTypes(meta), Seq(nf), snapshotId, newSeq,
-      operation = "delete", carryForward = true)
-  }
-
   /**
    * Upgrade a v2 table to format-version 3 IN PLACE (the runtime jar's
    * `ALTER TABLE ... SET TBLPROPERTIES('format-version'='3')` path).
@@ -2953,83 +2402,42 @@ object IcebergWrite {
    * snapshot id (-1 for an empty table). */
   def upgradeFormatVersion(spark: SparkSession, tablePath: String): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion == 2,
       s"upgrade targets v2 tables only, got v${meta.formatVersion}")
-    val newRoot = root.deepCopy()
-    newRoot.put("format-version", 3)
-    newRoot.put("next-row-id", 0L)
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+    updateMetadata(tablePath, meta) { root =>
+      root.put("format-version", 3)
+      root.put("next-row-id", 0L): Unit
+    }
     val meta3 = IcebergIO.loadMetadata(tablePath)
-    val snapOpt = meta3.currentSnapshotId
-      .flatMap(id => meta3.snapshots.find(_.snapshotId == id))
-    val posFiles = snapOpt.toSeq
-      .flatMap(s => IcebergIO.liveFiles(spark, s))
-      .filter(f => f.content == 1 && f.format != "PUFFIN")
+    val snapOpt = currentSnapshot(meta3)
+    val live = snapOpt.toSeq.flatMap(IcebergIO.liveFiles(spark, _))
+    val posFiles = live.filter(f => f.content == 1 && f.format != "PUFFIN")
     if (posFiles.isEmpty) return snapOpt.map(_.snapshotId).getOrElse(-1L)
-    val (root3, pv3) = loadRawMetadata(meta3.metadataFile)
-    commitDvDelete(spark, tablePath, meta3, root3, pv3,
+    val dv = stageDvs(spark, tablePath, meta3, live,
       PositionDeletes.read(spark, posFiles).select("file_path", "pos"),
-      operation = "replace", absorbLegacyPos = true,
-      summaryExtra = Map(
-        "rewritten-manifests" -> "true",
-        "upgraded-format-version" -> "3",
+      absorbLegacyPos = true)
+    produce(tablePath, meta3, "replace", added = dv.added,
+      existing = live.filter(_.content == 2) ++ dv.kept, carry = CarryData,
+      summary = Map("upgraded-format-version" -> "3",
         "removed-delete-files" -> posFiles.size.toString))
   }
 
-  /** Rebuild EXISTING equality-delete manifests (one per spec, original
-    * sequence numbers made explicit — inheritance can't apply under the
-    * new snapshot) — the delete-side carry shared by
-    * [[rewritePositionDeletes]]' shape and the v3 DV commits. Returns
-    * manifest-list `added` tuples paired with their spec ids. */
-  private def carryEqManifests(meta: IcebergIO.TableMetadata,
-                               root: ObjectNode, metaDir: String,
-                               eqFiles: Seq[IcebergIO.ContentFile],
-                               snapshotId: Long, newSeq: Long)
-      : Seq[((String, Long, Int, Long, Long, Long, Int), Int)] = {
-    val fieldIdsBySpec: Map[Int, Seq[Int]] =
-      Option(root.get("partition-specs")).map { specs =>
-        specs.elements().asScala.map { s =>
-          s.get("spec-id").asInt() ->
-            s.get("fields").elements().asScala.map(f =>
-              if (f.has("field-id")) f.get("field-id").asInt() else -1).toSeq
-        }.toMap
-      }.getOrElse(Map.empty)
-    eqFiles.groupBy(_.specId).toSeq.sortBy(_._1)
-      .map { case (sid, group) =>
-        val specFields = meta.specsById.getOrElse(sid, Nil)
-        val pct: Seq[(String, DataType, Boolean)] =
-          specFields.map { case (name, transform, srcId) =>
-            val src = meta.fieldById.getOrElse(srcId,
-              throw new IllegalArgumentException(
-                s"partition source field id $srcId not in table schema"))
-            (name, storedType(transform, meta.schema(src).dataType), true)
-          }
-        val nfs = group.map(existingEntry(_, pct))
-        val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-          meta.schema, pct, nfs, snapshotId, newSeq,
-          manifestContent = 1, specId = sid,
-          specFieldIds = fieldIdsBySpec.getOrElse(sid, Nil))
-        ((mPath, mLen, 1, snapshotId, newSeq,
-          nfs.map(_.records).sum, nfs.size), sid)
-      }
-  }
-
   /** EXISTING-status form of a live content file, carrying every field
-    * this reader consumes — stats, partition tuple (aligned with `pct`),
-    * equality ids, v3 DV blob range, v3 first_row_id — at its ORIGINAL
-    * sequence number and adding snapshot. The one construction every
-    * manifest-rebuilding verb shares; dropping a field here silently
-    * corrupts whichever reader consumed it (a rewrite that lost the DV
-    * blob range would fail every subsequent merge-on-read). */
-  private def existingEntry(f: IcebergIO.ContentFile,
-                            pct: Seq[(String, DataType, Boolean)]): NewFile = {
+    * this reader consumes — stats, partition tuple (aligned with its
+    * spec's fields), equality ids, v3 DV blob range, v3 first_row_id —
+    * at its ORIGINAL sequence number and adding snapshot. The one
+    * construction every manifest-rebuilding verb shares; dropping a
+    * field here silently corrupts whichever reader consumed it (a
+    * rewrite that lost the DV blob range would fail every subsequent
+    * merge-on-read). */
+  private def existingEntry(meta: IcebergIO.TableMetadata,
+                            f: IcebergIO.ContentFile): NewFile = {
     def missing(what: String) = throw new IllegalStateException(
       s"deletion-vector entry ${f.path} lacks $what")
     val boundKeys = f.lowerBounds.keySet.intersect(f.upperBounds.keySet)
     NewFile(f.path, f.recordCount, f.bytes,
-      partitionValues = pct.map { case (n, _, _) =>
-        f.partitionValues.getOrElse(n, null) },
+      partitionValues = meta.specsById.getOrElse(f.specId, Nil).map {
+        case (n, _, _) => f.partitionValues.getOrElse(n, null) },
       bounds = boundKeys.toSeq.sorted.map(k =>
         (k, f.lowerBounds(k), f.upperBounds(k))),
       nullCounts = f.nullCounts.toSeq.sortBy(_._1),
@@ -3042,82 +2450,57 @@ object IcebergWrite {
             f.contentOffset.getOrElse(missing("content_offset")),
             f.contentSize.getOrElse(missing("content_size_in_bytes"))))
         else None,
-      firstRowId = f.firstRowId)
+      firstRowId = f.firstRowId, specId = Some(f.specId))
   }
 
-  /** EXISTING-entry form of a live deletion-vector manifest entry (its
-    * blob range and original sequence number made explicit). */
-  private def carryDvEntry(f: IcebergIO.ContentFile): NewFile =
-    existingEntry(f, Nil)
+  /** A v3 commit's deletion-vector side ([[stageDvs]]): the ADDED DV
+    * entries (one puffin file), the live DVs that stay as they are, and
+    * how many live DVs the new ones replace. */
+  private final case class DvDelta(added: Seq[NewFile],
+                                   kept: Seq[IcebergIO.ContentFile],
+                                   removed: Int)
 
   /**
-   * Commit tail for DELETEs on a format-v3 table: matched (file_path,
-   * pos) rows become DELETION VECTORS — one Puffin file holding one
+   * Stage the DELETION VECTORS of a v3 commit: matched (file_path, pos)
+   * rows of the `live` data files become one Puffin file holding one
    * roaring bitmap per affected data file (spec v3 "Position Delete
    * Vectors"; [[graft.sources.PuffinIO]]). The spec's invariant — at
    * most ONE live DV per data file, and a new DV REPLACES the previous
    * one, which it must CONTAIN — makes every DV commit rebuild the
    * delete side of the manifest list, exactly the
-   * [[rewritePositionDeletes]] shape: data manifests carry VERBATIM,
-   * equality-delete entries carry EXISTING at their original seqs,
-   * unaffected DV entries carry EXISTING, and each affected file's new
-   * positions are OR-merged with its previous DV into an ADDED entry at
-   * the new sequence number (sound for the same reason consolidating
-   * position deletes at a new seq is: they name exact files).
+   * [[rewritePositionDeletes]] shape: the caller carries data manifests
+   * verbatim and hands the producer the unaffected DVs (`kept`) and the
+   * equality deletes it keeps as EXISTING, while each affected file's
+   * new positions are OR-merged with its previous DV into an ADDED
+   * entry at the new sequence number (sound for the same reason
+   * consolidating position deletes at a new seq is: they name exact
+   * files). `consolidate` ([[rewritePositionDeletes]]) folds EVERY live
+   * DV into the new file, dropping dangling targets;
+   * `absorbLegacyPos` ([[upgradeFormatVersion]]) lets `matches` replay
+   * legacy parquet position deletes, whose rows may name
+   * compacted-away targets.
    *
    * Scale shape: per-file bitmaps build in EXECUTORS (one groupByKey
    * over the matched rows — the same shuffle a parquet delete write
    * would pay); only the compressed bitmap bytes reach the driver,
    * which assembles the (one) Puffin file. Prior DVs for affected files
    * are read driver-side — bounded by blobs actually being replaced.
-   *
-   * `extraData` lets UPDATE/MERGE add rewritten data files in the SAME
-   * snapshot (their manifest is separate, same seq — the spec's strict
-   * `data seq < delete seq` can't bite because DVs name exact OLD
-   * files). Returns the snapshot id.
    */
-  private def commitDvDelete(spark: SparkSession, tablePath: String,
-                             meta: IcebergIO.TableMetadata, root: ObjectNode,
-                             priorVersion: Int, matches: DataFrame,
-                             operation: String = "delete",
-                             extraData: Seq[NewFile] = Nil,
-                             // spec partition column types for the
-                             // extraData manifest (stageDataFiles'
-                             // second return)
-                             extraDataPct: Seq[(String, DataType, Boolean)] = Nil,
-                             // convertEqualityDeletes: the eq manifests
-                             // are DROPPED (their effect is in matches)
-                             dropEq: Boolean = false,
-                             // rewritePositionDeletes: rewrite EVERY
-                             // live DV into the one new puffin file
-                             // (dangling targets dropped)
-                             consolidate: Boolean = false,
-                             // upgradeFormatVersion: legacy parquet
-                             // position-delete files are ABSORBED —
-                             // their rows arrive via `matches` (dangling
-                             // targets skipped) and their entries drop
-                             absorbLegacyPos: Boolean = false,
-                             summaryExtra: Map[String, String] = Map.empty)
-      : Long = {
+  private def stageDvs(spark: SparkSession, tablePath: String,
+                       meta: IcebergIO.TableMetadata,
+                       live: Seq[IcebergIO.ContentFile], matches: DataFrame,
+                       consolidate: Boolean = false,
+                       absorbLegacyPos: Boolean = false): DvDelta = {
     import org.roaringbitmap.longlong.Roaring64NavigableMap
-    val fv = meta.formatVersion
-    require(fv >= 3, "deletion vectors require format v3")
-    val snap = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot delete from an empty table: $tablePath"))
-    val live = IcebergIO.liveFiles(spark, snap)
+    require(meta.formatVersion >= 3, "deletion vectors require format v3")
     val dataFiles = live.filter(_.content == 0)
-    val eqFiles = live.filter(_.content == 2)
     val dvFiles = live.filter(f => f.content == 1 && f.format == "PUFFIN")
     val strayPos = live.filter(f => f.content == 1 && f.format != "PUFFIN")
     require(strayPos.isEmpty || absorbLegacyPos,
       s"v3 table holds parquet position-delete files (${strayPos.take(2).map(_.path).mkString(", ")}) " +
         "— this writer emits only deletion vectors on v3; run " +
         "upgradeFormatVersion (which absorbs them) or compact first")
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
+    val (snapshotId, newSeq) = nextIds(meta)
 
     // per-file bitmaps built in executors; only compressed bytes collect
     import spark.implicits._
@@ -3128,13 +2511,6 @@ object IcebergWrite {
         .groupByKey(_._1)
         .mapGroups((f, it) => PuffinIO.bitmapBytesOf(f, it.map(_._2)))
         .collect().toSeq
-    if (grouped.isEmpty && extraData.isEmpty && !dropEq && !consolidate &&
-        !absorbLegacyPos)
-      // nothing matched: a no-op delete snapshot carrying everything
-      return commitSnapshot(tablePath, meta, root, priorVersion,
-        deletePartColTypes(meta), Nil, snapshotId, newSeq,
-        operation, carryForward = true, summaryExtra)
-
     // matched paths come from the scan (scheme-carrying, URL-decoded);
     // manifests record the create-time form — key both by normalized
     val recByNorm = dataFiles
@@ -3183,7 +2559,6 @@ object IcebergWrite {
       }
     }
 
-    val metaDir = GraftFs.child(tablePath, "metadata")
     val dataDir = GraftFs.child(tablePath, "data")
     val addedDv: Seq[NewFile] =
       if (newBms.isEmpty) Nil
@@ -3206,64 +2581,46 @@ object IcebergWrite {
             dvRef = Some((t, off, len)))
         }
       }
-    val dvManifestFiles = addedDv ++ oldCarried.map(carryDvEntry)
-    val added =
-      (if (dropEq) Nil
-       else carryEqManifests(meta, root, metaDir, eqFiles, snapshotId, newSeq)) ++
-      (if (dvManifestFiles.isEmpty) Nil
-       else {
-         val (mPath, mLen) = writeManifest(metaDir, fv, meta.schema,
-           deletePartColTypes(meta), dvManifestFiles, snapshotId, newSeq,
-           manifestContent = 1, specId = meta.defaultSpecId,
-           specFieldIds = meta.partitionFieldIds)
-         Seq(((mPath, mLen, 1, snapshotId, newSeq,
-           addedDv.map(_.records).sum, dvManifestFiles.size),
-           meta.defaultSpecId))
-       }) ++
-      (if (extraData.isEmpty) Nil
-       else {
-         // v3 row lineage for the rewritten rows
-         val rowIdBase =
-           Option(root.get("next-row-id")).map(_.asLong).getOrElse(0L)
-         var next = rowIdBase
-         val stamped = extraData.map { f =>
-           val a = f.copy(firstRowId = Some(next)); next += f.records; a
-         }
-         val (mPath, mLen) = writeManifest(metaDir, fv, meta.schema,
-           extraDataPct, stamped, snapshotId, newSeq, manifestContent = 0,
-           specId = meta.defaultSpecId,
-           specFieldIds = meta.partitionFieldIds)
-         Seq(((mPath, mLen, 0, snapshotId, newSeq,
-           stamped.map(_.records).sum, stamped.size), meta.defaultSpecId))
-       })
-    val carriedData = priorManifestEntries(meta, Some(snap.snapshotId))
-      .filter { r =>
-        val c = if (r.getSchema.getField("content") == null) 0L
-          else r.get("content") match {
-            case n: Number => n.longValue(); case _ => 0L }
-        c == 0L
-      }
-    val mlPath = writeManifestList(metaDir, fv, carriedData,
-      added.map(_._1), snapshotId, specId = meta.defaultSpecId,
-      addedSpecIds = added.map(_._2))
-    val counts = Map(
-      "added-delete-files" -> addedDv.size.toString,
-      "added-data-files" -> extraData.size.toString,
-      "added-records" -> extraData.map(_.records).sum.toString,
-      "removed-delete-files" -> oldAffected.size.toString)
-    try publishSnapshot(meta, root, priorVersion, metaDir, mlPath,
-      snapshotId, newSeq, operation, counts ++ summaryExtra,
-      nextRowId = Some(
-        Option(root.get("next-row-id")).map(_.asLong).getOrElse(0L) +
-          extraData.map(_.records).sum))
-    catch {
-      case e: Throwable =>
-        (addedDv.map(_.path).distinct ++ extraData.map(_.path)).foreach(p =>
-          try { GraftFs.delete(p, recursive = false): Unit }
-          catch { case _: Exception => () })
-        throw e
-    }
+    DvDelta(addedDv, oldCarried, oldAffected.size)
   }
+
+  /** Commit a row-level change ([[deleteWhere]], [[updateWhere]],
+    * [[merge]]): `positions` (the `(file_path, pos)` of every replaced or
+    * deleted row) become one position-delete file — deletion vectors on
+    * v3 — in ONE snapshot with the staged `data` at one sequence number.
+    * Position deletes name explicit old-file paths, so the spec's
+    * `data seq <= delete seq` rule cannot touch the new files and a
+    * reader sees the old or the new state, never a mix. */
+  private def commitRowDelta(spark: SparkSession, tablePath: String,
+                             meta: IcebergIO.TableMetadata,
+                             live: Seq[IcebergIO.ContentFile],
+                             operation: String, positions: DataFrame,
+                             data: Seq[NewFile] = Nil,
+                             summary: Map[String, String] = Map.empty): Long =
+    if (meta.formatVersion >= 3) {
+      // the spec disallows new parquet position-delete files on v3
+      val dv = stageAfter(data)(stageDvs(spark, tablePath, meta, live, positions))
+      produce(tablePath, meta, operation, added = dv.added ++ data,
+        existing = live.filter(_.content == 2) ++ dv.kept, carry = CarryData,
+        summary = Map("removed-delete-files" -> dv.removed.toString) ++ summary)
+    } else {
+      // spec: position delete rows sorted by (file, position); coalesce
+      // AFTER the sort keeps the order in the single output file
+      val del = stageAfter(data)(stagePositionDeletes(spark, tablePath, meta,
+        positions.orderBy("file_path", "pos").coalesce(1)))
+      produce(tablePath, meta, operation, added = del ++ data, summary = summary)
+    }
+
+  /** Run `stage`, deleting the already-staged `files` if it throws: a
+    * verb that stages in two steps leaves no orphan behind. */
+  private def stageAfter[A](files: Seq[NewFile])(stage: => A): A =
+    try stage
+    catch { case e: Throwable => deleteQuietly(files.map(_.path)); throw e }
+
+  private def deleteQuietly(paths: Seq[String]): Unit =
+    paths.foreach(p =>
+      try { GraftFs.delete(p, recursive = false): Unit }
+      catch { case _: Exception => () })
 
   /** `(file_path, pos)` of every row `keep` retains from a RAW scan of
     * `files` — existing deletes not applied: re-deleting an
@@ -3362,7 +2719,6 @@ object IcebergWrite {
                          // commit's files with rows read before it
                          base: Option[IcebergIO.TableMetadata] = None): Long = {
     val meta = base.getOrElse(IcebergIO.loadMetadata(tablePath))
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     // v3 lineage carry ([[compact]]'s id-preserving rewrite): the frame
     // is a full-schema table read plus the internal lineage column —
     // validate the data columns, stage the carry through untouched.
@@ -3390,17 +2746,10 @@ object IcebergWrite {
       require(operation == "append",
         s"branch writes support append only, got '$operation'")
     }
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      if (meta.formatVersion >= 2)
-        Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-      else snapshotId
-    val (files, partColTypes) =
-      stageDataFiles(df1, tablePath, meta, snapshotId, maxRecordsPerFile)
-    commitStaged(tablePath, meta, root, priorVersion, partColTypes,
-      files, snapshotId, newSeq, operation,
-      carryForward = operation == "append", summaryExtra = summaryExtra,
-      branch = branch)
+    produce(tablePath, meta, operation,
+      added = stageDataFiles(df1, tablePath, meta, maxRecordsPerFile),
+      carry = if (operation == "append") CarryAll else CarryNone,
+      summary = summaryExtra, branch = branch)
   }
 
   /** Fill `write-default` literals for defaulted columns the input frame
@@ -3426,13 +2775,12 @@ object IcebergWrite {
 
   /** Stage `df`'s rows as new data files under `data/` (ONE distributed
     * write job + ONE stats read-back + renames); returns the staged
-    * [[NewFile]]s and the spec's partition column types. The caller owns
-    * the commit — [[upsert]] stages delete files alongside and commits
-    * both manifests as one snapshot. */
+    * [[NewFile]]s. The caller owns the commit — [[upsert]] stages delete
+    * files alongside and commits both manifests as one snapshot. */
   private def stageDataFiles(df: DataFrame, tablePath: String,
-                             meta: IcebergIO.TableMetadata, snapshotId: Long,
-                             maxRecordsPerFile: Option[Long])
-      : (Seq[NewFile], Seq[(String, DataType, Boolean)]) = {
+                             meta: IcebergIO.TableMetadata,
+                             maxRecordsPerFile: Option[Long]): Seq[NewFile] = {
+    val (snapshotId, _) = nextIds(meta)
     // v3 ns-timestamp tables are READ-ONLY to this writer: Spark cannot
     // produce a NANOS-annotated parquet value, so any data write would
     // store a plain INT64 under a timestamp_ns schema — refused at the
@@ -3473,10 +2821,6 @@ object IcebergWrite {
     val storedCols: Seq[Column] = partFields.map { case (_, t, src, dt) =>
       IcebergTransforms.storedColumn(t, src, dt)
     }
-    val partColTypes: Seq[(String, DataType, Boolean)] =
-      partFields.map { case (name, t, src, dt) =>
-        (name, storedType(t, dt), t == "void" || meta.schema(src).nullable)
-      }
 
     // ---- 1. ONE distributed write job into a staging dir. Table
     // columns are stamped with their spec field ids (the reader's
@@ -3578,187 +2922,177 @@ object IcebergWrite {
       val dataDir = GraftFs.child(tablePath, "data")
       GraftFs.mkdirs(dataDir)
       var renamed = List.empty[(String, String)] // (from, to)
-      val files: Seq[NewFile] =
-        try {
-          withStats.zipWithIndex.map { case (s, i) =>
-            val from = s.getPath.toString
-            // the index disambiguates: one partitionBy task writes the
-            // SAME basename into every partition dir it touches
-            val to = GraftFs.child(dataDir, s"data-$snapshotId-$i-${s.getPath.getName}")
-            if (!GraftFs.rename(from, to))
-              throw new java.io.IOException(s"rename failed: $from -> $to")
-            renamed ::= (from, to)
-            val key = IcebergIO.normalizePath(from)
-            val (records, partVals, bounds, nulls, nans) = stats.getOrElse(key,
-              throw new IllegalStateException(s"no stats for staged file $from"))
-            NewFile(to, records, bytesByPath(key), partVals, bounds, nulls, nans)
-          }
-        } catch {
-          case e: Throwable =>
-            renamed.foreach { case (from, to) => GraftFs.rename(to, from) }
-            throw e
+      try {
+        withStats.zipWithIndex.map { case (s, i) =>
+          val from = s.getPath.toString
+          // the index disambiguates: one partitionBy task writes the
+          // SAME basename into every partition dir it touches
+          val to = GraftFs.child(dataDir, s"data-$snapshotId-$i-${s.getPath.getName}")
+          if (!GraftFs.rename(from, to))
+            throw new java.io.IOException(s"rename failed: $from -> $to")
+          renamed ::= (from, to)
+          val key = IcebergIO.normalizePath(from)
+          val (records, partVals, bounds, nulls, nans) = stats.getOrElse(key,
+            throw new IllegalStateException(s"no stats for staged file $from"))
+          NewFile(to, records, bytesByPath(key), partVals, bounds, nulls, nans)
         }
-      (files, partColTypes)
+      } catch {
+        case e: Throwable =>
+          renamed.foreach { case (from, to) => GraftFs.rename(to, from) }
+          throw e
+      }
     } finally {
       GraftFs.delete(tmp, recursive = true)
     }
   }
 
-  /** Commit staged files; on ANY commit failure (losing the optimistic-
-    * concurrency race being the expected one) best-effort delete the
-    * staged files so the loser leaves no orphans in `data/`, then
-    * rethrow. Orphaned manifests are harmless (never referenced). */
-  private def commitStaged(tablePath: String, meta: IcebergIO.TableMetadata,
-                           root: ObjectNode, priorVersion: Int,
-                           partColTypes: Seq[(String, DataType, Boolean)],
-                           files: Seq[NewFile], snapshotId: Long,
-                           newSeq: Long, operation: String,
-                           carryForward: Boolean,
-                           summaryExtra: Map[String, String] = Map.empty,
-                           branch: Option[String] = None): Long =
-    try commitSnapshot(tablePath, meta, root, priorVersion, partColTypes,
-      files, snapshotId, newSeq, operation, carryForward, summaryExtra,
-      branch)
-    catch {
-      case e: Throwable =>
-        files.foreach { f =>
-          try { GraftFs.delete(f.path, recursive = false): Unit }
-          catch { case _: Exception => () }
-        }
-        throw e
-    }
+  /** The base manifests a snapshot carries verbatim: every one, the
+    * data manifests only (the verb rebuilds the delete side), or none
+    * (the verb names every live entry it keeps itself). */
+  private sealed trait Carry
+  private case object CarryAll extends Carry
+  private case object CarryData extends Carry
+  private case object CarryNone extends Carry
 
-  /** Shared commit tail: write the new manifest + manifest list (prior
-    * entries carried forward unless this is an overwrite), build the new
-    * metadata json, publish optimistically. Returns the snapshot id. */
-  private def commitSnapshot(tablePath: String, meta: IcebergIO.TableMetadata,
-                             root: ObjectNode, priorVersion: Int,
-                             partColTypes: Seq[(String, DataType, Boolean)],
-                             files: Seq[NewFile], snapshotId: Long,
-                             newSeq: Long, operation: String,
-                             carryForward: Boolean,
-                             summaryExtra: Map[String, String] = Map.empty,
-                             branch: Option[String] = None): Long = {
-    val fv = meta.formatVersion
+  /** The next snapshot id and sequence number after `base`. A verb reads
+    * them before staging (staged file names carry the snapshot id); the
+    * producer commits under the same pair. */
+  private def nextIds(base: IcebergIO.TableMetadata): (Long, Long) =
+    (base.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1,
+      base.lastSequenceNumber + 1)
+
+  /** The one snapshot producer, after Iceberg Java's `SnapshotProducer`:
+    * every snapshot this writer commits goes through it. The verb plans
+    * against `base` and hands over only its own work: the ADDED files
+    * (staged data, parquet deletes, DVs), the live entries it rewrites
+    * as EXISTING, and which base manifests carry verbatim. The producer
+    * does the work every commit shares, once: v3 `first_row_id`s for
+    * added data files without a preset one and the `next-row-id`
+    * advance; one manifest per (content kind, partition spec) — v2
+    * keeps data and deletes in separate manifests, and a mixed commit
+    * (upsert) puts both at the SAME sequence number, where the spec's
+    * strict `data seq < delete seq` rule keeps the delete off its own
+    * rows; the manifest list; the standard `added-*` summary counts
+    * (`summary` wins on a key collision) and the `rewritten-manifests`
+    * marker on a `replace` that adds no data file — the one rewrite
+    * incremental readers may cross, since no file changes its sequence
+    * number; then the snapshot, its ref (`branch`, else main with
+    * `current-snapshot-id` and the snapshot log) and `properties`,
+    * published through [[updateMetadata]]. A lost race deletes the
+    * added files unless `ownsAdded` is false ([[addFiles]]' files are the
+    * user's source data, [[cherrypickSnapshot]]'s the branch's). Returns
+    * the snapshot id. */
+  private def produce(tablePath: String, base: IcebergIO.TableMetadata,
+                      operation: String,
+                      added: Seq[NewFile] = Nil,
+                      existing: Seq[IcebergIO.ContentFile] = Nil,
+                      carry: Carry = CarryAll,
+                      summary: Map[String, String] = Map.empty,
+                      branch: Option[String] = None,
+                      properties: Map[String, String] = Map.empty,
+                      ownsAdded: Boolean = true): Long = {
+    val fv = base.formatVersion
+    val (snapshotId, seq) = nextIds(base)
     val metaDir = GraftFs.child(tablePath, "metadata")
-    // the commit's BASE: the branch head when writing to a branch (a
-    // missing branch bases on the table's current state), else main
-    val baseId: Option[Long] = branch match {
-      case Some(b) => meta.refs.get(b).orElse(meta.currentSnapshotId)
-      case None => meta.currentSnapshotId
+    // the parent: the branch head when writing to a branch (a missing
+    // branch bases on the table's current state), else main
+    val parent = branch.flatMap(base.refs.get).orElse(base.currentSnapshotId)
+    var nextRowId = base.nextRowId
+    val stamped = added.map { f =>
+      if (fv < 3 || f.content != 0 || f.firstRowId.isDefined) f
+      else { val a = f.copy(firstRowId = Some(nextRowId)); nextRowId += f.records; a }
     }
-    // v3 row lineage: ADDED data files get explicit first_row_id values
-    // assigned sequentially from the table's next-row-id counter
-    val rowIdBase =
-      if (fv >= 3) Option(root.get("next-row-id")).map(_.asLong).getOrElse(0L)
-      else 0L
-    // a PRESET firstRowId (cherry-pick carrying branch-assigned ids) is
-    // respected — its rows' ids were consumed from the counter at the
-    // original commit, so neither assignment nor the advance applies
-    val files0 =
-      if (fv < 3) files
-      else {
-        var next = rowIdBase
-        files.map { f =>
-          if (f.content == 0 && f.existingSeq.isEmpty && f.firstRowId.isEmpty) {
-            val assigned = f.copy(firstRowId = Some(next))
-            next += f.records
-            assigned
-          } else f
-        }
-      }
-    val addedDataRecords = files
-      .filter(f => f.content == 0 && f.existingSeq.isEmpty && f.firstRowId.isEmpty)
-      .map(_.records).sum
-    // v2 keeps data and delete files in SEPARATE manifests (a manifest's
-    // content is all-data or all-deletes); one commit may carry both
-    // kinds — upsert publishes a delete manifest + a data manifest in
-    // ONE snapshot at the SAME sequence number, and the spec's strict
-    // `data seq < delete seq` rule keeps the delete off its own rows
-    val added = files0.groupBy(f => if (f.content > 0) 1 else 0).toSeq
-      .sortBy(_._1).map { case (kind, group) =>
-        // delete manifests declare partition fields NULLABLE: position
-        // deletes leave the tuple unset; scoped equality deletes set it
-        val pct = if (kind == 0) partColTypes
-          else partColTypes.map { case (n, t, _) => (n, t, true) }
-        val (mPath, mLen) = writeManifest(metaDir, fv, meta.schema, pct,
-          group, snapshotId, newSeq, manifestContent = kind,
-          specId = meta.defaultSpecId, specFieldIds = meta.partitionFieldIds)
-        (mPath, mLen, kind, snapshotId, newSeq, group.map(_.records).sum,
-          group.size)
-      }
-    val carried: Seq[GenericRecord] =
-      if (carryForward) priorManifestEntries(meta, baseId) else Nil
-    val mlPath = writeManifestList(metaDir, fv, carried, added, snapshotId,
-      specId = meta.defaultSpecId)
-    // the standard added-* summary counts real writers stamp (callers'
-    // summaryExtra wins on key collision)
+    val addedData = added.filter(_.content == 0)
     val counts = Map(
-      "added-data-files" -> files.count(_.content == 0).toString,
-      "added-delete-files" -> files.count(_.content > 0).toString,
-      "added-records" -> files.filter(_.content == 0).map(_.records).sum.toString,
-      "added-files-size" -> files.map(_.bytes).sum.toString)
-    publishSnapshot(meta, root, priorVersion, metaDir, mlPath,
-      snapshotId, newSeq, operation, counts ++ summaryExtra, branch, baseId,
-      nextRowId = if (fv >= 3) Some(rowIdBase + addedDataRecords) else None)
+      "added-data-files" -> addedData.size.toString,
+      "added-delete-files" -> added.count(_.content > 0).toString,
+      "added-records" -> addedData.map(_.records).sum.toString,
+      "added-files-size" -> added.distinctBy(_.path).map(_.bytes).sum.toString) ++
+      (if (operation == "replace" && addedData.isEmpty)
+         Map("rewritten-manifests" -> "true") else Map.empty)
+    updateMetadata(tablePath, base,
+        created = if (ownsAdded) added.map(_.path).distinct else Nil) { root =>
+      val manifests = (stamped ++ existing.map(existingEntry(base, _)))
+        .groupBy(f => (if (f.content > 0) 1 else 0, f.specId.getOrElse(base.defaultSpecId)))
+        .toSeq.sortBy(_._1).map { case ((kind, specId), files) =>
+          writeManifest(metaDir, base, specId, kind, files, snapshotId, seq)
+        }
+      val carried = carry match {
+        case CarryNone => Nil
+        case CarryAll => priorManifestEntries(base, parent)
+        case CarryData => priorManifestEntries(base, parent)
+          .filter(listNum(_, "content", 0L) == 0L)
+      }
+      val now = System.currentTimeMillis()
+      if (fv >= 2) root.put("last-sequence-number", seq)
+      if (fv >= 3) root.put("next-row-id", nextRowId)
+      val sn = arrayNode(root, "snapshots").addObject()
+      sn.put("snapshot-id", snapshotId)
+      parent.foreach(sn.put("parent-snapshot-id", _))
+      sn.put("timestamp-ms", now)
+      if (fv >= 2) sn.put("sequence-number", seq)
+      Option(root.get("current-schema-id")).foreach(n => sn.put("schema-id", n.asInt))
+      val sum = sn.putObject("summary")
+      sum.put("operation", operation)
+      (counts ++ summary).foreach { case (k, v) => sum.put(k, v) }
+      sn.put("manifest-list", writeManifestList(metaDir, fv, carried,
+        manifests, snapshotId, seq))
+      // a BRANCH commit moves only its own ref — the main lineage (and
+      // time travel over it) never sees branch snapshots
+      branch match {
+        case Some(b) => setRef(root, b, snapshotId)
+        case None => moveMain(root, snapshotId, Seq(snapshotId), now)
+      }
+      properties.foreach { case (k, v) => objectNode(root, "properties").put(k, v) }
+    }
+    snapshotId
   }
 
-  /** The metadata.json tail every snapshot commit shares: bump
-    * last-sequence-number, record the snapshot + log entries, move the
-    * target ref, publish optimistically. A main-lineage commit
-    * (`branch = None`) moves `current-snapshot-id`, the main ref and the
-    * snapshot-log; a BRANCH commit moves only its own ref — the main
-    * lineage (and time travel over it) never sees branch snapshots. */
-  private def publishSnapshot(meta: IcebergIO.TableMetadata,
-                              root: ObjectNode, priorVersion: Int,
-                              metaDir: String, mlPath: String,
-                              snapshotId: Long, newSeq: Long,
-                              operation: String,
-                              summaryExtra: Map[String, String],
-                              branch: Option[String] = None,
-                              parentId: Option[Long] = None,
-                              // v3: advance the row-lineage counter
-                              // (None = delete/metadata-only commit,
-                              // counter untouched)
-                              nextRowId: Option[Long] = None): Long = {
-    val fv = meta.formatVersion
-    val now = System.currentTimeMillis()
-    val newRoot = root.deepCopy()
-    if (fv >= 2) newRoot.put("last-sequence-number", newSeq)
-    nextRowId.foreach(v => newRoot.put("next-row-id", v))
-    val priorUpdated = Option(newRoot.get("last-updated-ms")).map(_.asLong).getOrElse(now)
-    newRoot.put("last-updated-ms", now)
-    val sn = mapper.createObjectNode()
-    sn.put("snapshot-id", snapshotId)
-    parentId.orElse(meta.currentSnapshotId)
-      .foreach(p => sn.put("parent-snapshot-id", p))
-    sn.put("timestamp-ms", now)
-    if (fv >= 2) sn.put("sequence-number", newSeq)
-    Option(newRoot.get("current-schema-id")).foreach(n => sn.put("schema-id", n.asInt))
-    val summary = sn.putObject("summary")
-    summary.put("operation", operation)
-    summaryExtra.foreach { case (k, v) => summary.put(k, v) }
-    sn.put("manifest-list", mlPath)
-    arrayNode(newRoot, "snapshots").add(sn)
-    val mlog = arrayNode(newRoot, "metadata-log").addObject()
-    mlog.put("timestamp-ms", priorUpdated)
-    mlog.put("metadata-file", meta.metadataFile)
-    val refs = Option(newRoot.get("refs")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("refs")
-    }
-    val targetRef = refs.putObject(branch.getOrElse("main"))
-    targetRef.put("snapshot-id", snapshotId)
-    targetRef.put("type", "branch")
-    if (branch.isEmpty) {
-      newRoot.put("current-snapshot-id", snapshotId)
-      val slog = arrayNode(newRoot, "snapshot-log").addObject()
-      slog.put("timestamp-ms", now)
-      slog.put("snapshot-id", snapshotId)
+  /** The one metadata tail: every commit — the producer's snapshots and
+    * every metadata-only verb — re-reads `base`'s metadata JSON, applies
+    * `edit`, stamps `last-updated-ms`, logs `base`'s file in
+    * `metadata-log` (spec: each new metadata file records its
+    * predecessor) and publishes version + 1. A writer that committed
+    * since `base` was loaded owns that version, so this commit fails as
+    * a concurrent commit (the caller retries from a fresh load), and
+    * deletes `created`, the files it wrote for itself. */
+  private def updateMetadata(tablePath: String, base: IcebergIO.TableMetadata,
+                             created: Seq[String] = Nil)
+                            (edit: ObjectNode => Unit): Unit =
+    try {
+      val (root, version) = loadRawMetadata(base.metadataFile)
+      val priorUpdated = Option(root.get("last-updated-ms")).map(_.asLong)
+      edit(root)
+      val now = System.currentTimeMillis()
+      root.put("last-updated-ms", now)
+      val log = arrayNode(root, "metadata-log").addObject()
+      log.put("timestamp-ms", priorUpdated.getOrElse(now))
+      log.put("metadata-file", base.metadataFile)
+      publish(GraftFs.child(tablePath, "metadata"), version + 1, root)
+    } catch {
+      case e: Throwable => deleteQuietly(created); throw e
     }
 
-    publish(metaDir, priorVersion + 1, newRoot)
-    snapshotId
+  /** Point ref `name` at `snapshotId`. */
+  private def setRef(root: ObjectNode, name: String, snapshotId: Long,
+                     refType: String = "branch"): ObjectNode = {
+    val r = objectNode(root, "refs").putObject(name)
+    r.put("snapshot-id", snapshotId)
+    r.put("type", refType)
+  }
+
+  /** Move main and `current-snapshot-id` to `snapshotId`, logging each of
+    * `adopted` (in commit order) in the snapshot log at `now`. */
+  private def moveMain(root: ObjectNode, snapshotId: Long, adopted: Seq[Long],
+                       now: Long): Unit = {
+    root.put("current-snapshot-id", snapshotId)
+    setRef(root, "main", snapshotId)
+    val log = arrayNode(root, "snapshot-log")
+    adopted.foreach { id =>
+      val e = log.addObject()
+      e.put("timestamp-ms", now)
+      e.put("snapshot-id", id)
+    }
   }
 
   /** Fast-forward MAIN to a branch head — the publish half of
@@ -3770,7 +3104,6 @@ object IcebergWrite {
     * overwrite. The branch ref itself stays (drop it separately). */
   def fastForward(tablePath: String, branch: String): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     val head = meta.refs.getOrElse(branch,
       throw new IllegalArgumentException(
         s"no such branch '$branch' (refs: " +
@@ -3789,17 +3122,6 @@ object IcebergWrite {
             s"($head) — fast-forward would abandon main-lineage commits")
       }
     }
-    val now = System.currentTimeMillis()
-    val newRoot = root.deepCopy()
-    newRoot.put("last-updated-ms", now)
-    newRoot.put("current-snapshot-id", head)
-    val refs = Option(newRoot.get("refs")) match {
-      case Some(o: ObjectNode) => o
-      case _ => newRoot.putObject("refs")
-    }
-    val mainRef = refs.putObject("main")
-    mainRef.put("snapshot-id", head)
-    mainRef.put("type", "branch")
     // snapshot-log entries for every branch commit main just adopted, in
     // commit order — time travel over the main lineage must resolve
     // through them exactly as if they had been committed to main
@@ -3812,13 +3134,8 @@ object IcebergWrite {
       }
       walk(Some(head), Nil)
     }
-    val slog = arrayNode(newRoot, "snapshot-log")
-    adopted.foreach { id =>
-      val e = slog.addObject()
-      e.put("timestamp-ms", now)
-      e.put("snapshot-id", id)
-    }
-    publish(GraftFs.child(tablePath, "metadata"), priorVersion + 1, newRoot)
+    updateMetadata(tablePath, meta)(
+      moveMain(_, head, adopted, System.currentTimeMillis()))
     head
   }
 
@@ -3844,7 +3161,6 @@ object IcebergWrite {
   def cherrypickSnapshot(spark: SparkSession, tablePath: String,
                          sourceSnapshotId: Long): Long = {
     val meta = IcebergIO.loadMetadata(tablePath)
-    val (root, priorVersion) = loadRawMetadata(meta.metadataFile)
     require(meta.formatVersion >= 2,
       "cherrypickSnapshot requires format v2 (sequence numbers)")
     val source = meta.snapshots.find(_.snapshotId == sourceSnapshotId)
@@ -3870,8 +3186,7 @@ object IcebergWrite {
           s"(added at seq ${d.addSeq}) — their initial-default rows would " +
           "silently read NULL; compact the source branch first")
     }
-    val mainLive: Set[String] = meta.currentSnapshotId
-      .flatMap(id => meta.snapshots.find(_.snapshotId == id)).toSeq
+    val mainLive: Set[String] = currentSnapshot(meta).toSeq
       .flatMap(s => IcebergIO.liveFiles(spark, s))
       .map(f => IcebergIO.normalizePath(f.path)).toSet
     val dupes = picked.filter(f => mainLive(IcebergIO.normalizePath(f.path)))
@@ -3880,71 +3195,35 @@ object IcebergWrite {
         s"${dupes.size} file(s) already live on main (first: " +
         s"${dupes.head.path}) — already applied?")
 
-    val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val newSeq =
-      Option(root.get("last-sequence-number")).map(_.asLong).getOrElse(0L) + 1
-    val metaDir = GraftFs.child(tablePath, "metadata")
-    val fieldIdsBySpec: Map[Int, Seq[Int]] =
-      Option(root.get("partition-specs")).map { specs =>
-        specs.elements().asScala.map { s =>
-          s.get("spec-id").asInt() ->
-            s.get("fields").elements().asScala.map(f =>
-              if (f.has("field-id")) f.get("field-id").asInt() else -1).toSeq
-        }.toMap
-      }.getOrElse(Map.empty)
-    // one fresh ADDED manifest per spec the picked files were written
-    // under (status ADDED, seq inherited = newSeq — the re-sequencing)
-    val added = picked.groupBy(_.specId).toSeq.sortBy(_._1)
-      .map { case (sid, group) =>
-        val specFields = meta.specsById.getOrElse(sid, Nil)
-        val pct: Seq[(String, DataType, Boolean)] =
-          specFields.map { case (name, transform, srcId) =>
-            val src = meta.fieldById.getOrElse(srcId,
-              throw new IllegalArgumentException(
-                s"partition source field id $srcId not in table schema"))
-            (name, storedType(transform, meta.schema(src).dataType), true)
-          }
-        val nfs = group.map { f =>
-          val boundKeys = f.lowerBounds.keySet.intersect(f.upperBounds.keySet)
-          NewFile(f.path, f.recordCount, f.bytes,
-            partitionValues = pct.map { case (n, _, _) =>
-              f.partitionValues.getOrElse(n, null) },
-            bounds = boundKeys.toSeq.sorted.map(k =>
-              (k, f.lowerBounds(k), f.upperBounds(k))),
-            nullCounts = f.nullCounts.toSeq.sortBy(_._1),
-            nanCounts = f.nanCounts.toSeq.sortBy(_._1),
-            // v3 row lineage: the branch commit already assigned (and
-            // consumed from next-row-id) these files' row ids — the
-            // pick must CARRY them, not re-assign (firstRowId set here
-            // stops commitSnapshot's assignment: existingSeq is empty
-            // but writeManifest writes the explicit value)
-            firstRowId = f.firstRowId)
-        }
-        val (mPath, mLen) = writeManifest(metaDir, meta.formatVersion,
-          meta.schema, pct, nfs, snapshotId, newSeq,
-          manifestContent = 0, specId = sid,
-          specFieldIds = fieldIdsBySpec.getOrElse(sid, Nil))
-        ((mPath, mLen, 0, snapshotId, newSeq,
-          nfs.map(_.records).sum, nfs.size), sid)
-      }
-    val carried = priorManifestEntries(meta, meta.currentSnapshotId)
-    val mlPath = writeManifestList(metaDir, meta.formatVersion,
-      carried, added.map(_._1), snapshotId,
-      specId = meta.defaultSpecId, addedSpecIds = added.map(_._2))
-    publishSnapshot(meta, root, priorVersion, metaDir, mlPath,
-      snapshotId, newSeq, operation = "append",
-      summaryExtra = Map(
-        "cherry-picked-snapshot-id" -> sourceSnapshotId.toString,
-        "added-data-files" -> picked.size.toString,
-        "added-records" -> picked.map(_.recordCount).sum.toString,
-        "added-files-size" -> picked.map(_.bytes).sum.toString))
+    // the picked files ADD to main at its next sequence number (the
+    // re-sequencing); v3: their row ids were consumed from next-row-id
+    // at the branch commit, so the preset first_row_id carries
+    produce(tablePath, meta, "append",
+      added = picked.map(existingEntry(meta, _)
+        .copy(existingSeq = None, addedSnapshotId = None)),
+      summary = Map("cherry-picked-snapshot-id" -> sourceSnapshotId.toString),
+      ownsAdded = false)
   }
 
-  private def arrayNode(root: ObjectNode, name: String) =
+  private def arrayNode(root: ObjectNode, name: String): ArrayNode =
     Option(root.get(name)) match {
-      case Some(a: com.fasterxml.jackson.databind.node.ArrayNode) => a
+      case Some(a: ArrayNode) => a
       case _ => root.putArray(name)
     }
+
+  private def objectNode(root: ObjectNode, name: String): ObjectNode =
+    Option(root.get(name)) match {
+      case Some(o: ObjectNode) => o
+      case _ => root.putObject(name)
+    }
+
+  /** Keep only the elements of `arr` that satisfy `keep`. */
+  private def retain(arr: ArrayNode)(keep: JsonNode => Boolean): ArrayNode = {
+    val kept = arr.elements().asScala.filter(keep).toSeq
+    arr.removeAll()
+    kept.foreach(arr.add)
+    arr
+  }
 
   /** Parse the current metadata json raw (carried forward verbatim on
     * commit) + its Hadoop-layout version number. */
@@ -3977,14 +3256,34 @@ object IcebergWrite {
     }
   }
 
-  /** Write the new snapshot's manifest (ADDED entries only) through
-    * GraftFs; returns (recorded path, length). */
-  private def writeManifest(metaDir: String, fv: Int, schema: StructType,
-                            partColTypes: Seq[(String, DataType, Boolean)],
+  /** A manifest a commit wrote, as its manifest-list entry records it. */
+  private final case class NewManifest(path: String, length: Long, content: Int,
+                                       specId: Int, rows: Long, files: Int)
+
+  /** The manifest partition type of spec `specId`: each field's name and
+    * STORED type, every field optional as Iceberg Java's
+    * `PartitionSpec.partitionType()` writes it (identity values can be
+    * null; position deletes leave the tuple unset), plus the spec's
+    * field ids. */
+  private def partitionType(meta: IcebergIO.TableMetadata, specId: Int)
+      : (Seq[(String, DataType, Boolean)], Seq[Int]) = {
+    val pct = meta.specsById.getOrElse(specId, Nil).map { case (name, transform, srcId) =>
+      val src = meta.fieldById.getOrElse(srcId, throw new IllegalArgumentException(
+        s"partition source field id $srcId not in table schema"))
+      (name, storedType(transform, meta.schema(src).dataType), true)
+    }
+    (pct, meta.specFieldIds.getOrElse(specId, Nil))
+  }
+
+  /** Write one manifest of `files` (content kind `manifestContent`,
+    * partition spec `specId`) through GraftFs: ADDED entries inherit
+    * `seq`, EXISTING ones keep their own. */
+  private def writeManifest(metaDir: String, meta: IcebergIO.TableMetadata,
+                            specId: Int, manifestContent: Int,
                             files: Seq[NewFile], snapshotId: Long,
-                            seq: Long, manifestContent: Int,
-                            specId: Int = 0,
-                            specFieldIds: Seq[Int] = Nil): (String, Long) = {
+                            seq: Long): NewManifest = {
+    val fv = meta.formatVersion
+    val (partColTypes, specFieldIds) = partitionType(meta, specId)
     val es = IcebergFixture.manifestEntrySchema(fv, partColTypes)
     val dfSchema = es.getField("data_file").schema()
     val partSchema = dfSchema.getField("partition").schema()
@@ -3992,12 +3291,11 @@ object IcebergWrite {
       f"manifest-$snapshotId%05d-${java.util.UUID.randomUUID()}.avro")
     val w = new DataFileWriter[GenericRecord](
       new GenericDatumWriter[GenericRecord](es))
-    w.setMeta("schema", IcebergFixture.schemaJson(schema, 0).toString)
+    w.setMeta("schema", IcebergFixture.schemaJson(meta.schema, 0).toString)
     w.setMeta("partition-spec",
-      partColTypes.zipWithIndex.map { case ((n, _, _), i) =>
+      partColTypes.zip(specFieldIds).map { case ((n, _, _), fid) =>
         // transform/source-id live in the table metadata; manifest
         // container metadata repeats name/field-id for spec readers
-        val fid = specFieldIds.lift(i).filter(_ >= 0).getOrElse(1000 + i)
         s"""{"name":"$n","field-id":$fid}"""
       }.mkString("[", ",", "]"))
     w.setMeta("partition-spec-id", specId.toString)
@@ -4082,24 +3380,23 @@ object IcebergWrite {
     } finally w.close()
     val len = GraftFs.status(out).map(_.getLen).getOrElse(
       throw new IllegalStateException(s"manifest vanished after write: $out"))
-    (out, len)
+    NewManifest(out, len, manifestContent, specId, files.map(_.records).sum,
+      files.size)
   }
 
+  /** A numeric field of a manifest-list entry, `dflt` when absent. */
+  private def listNum(r: GenericRecord, f: String, dflt: Long): Long =
+    if (r.getSchema.getField(f) == null) dflt
+    else r.get(f) match { case n: Number => n.longValue(); case _ => dflt }
+
   /** Write the new manifest list: carried prior entries (converted
-    * defensively across schema revisions) + one entry per new manifest
-    * (data and delete manifests of a mixed commit each get their own). */
+    * defensively across schema revisions) + one entry per new manifest,
+    * each recording ITS manifest's spec — the reader keys per-file spec
+    * resolution (pruning, delete scoping) on it. */
   private def writeManifestList(metaDir: String, fv: Int,
                                 carried: Seq[GenericRecord],
-                                added: Seq[(String, Long, Int, Long, Long, Long, Int)],
-                                snapshotId: Long,
-                                specId: Int = 0,
-                                // per-added-entry spec ids (aligned with
-                                // `added`; rewriteManifests emits one
-                                // manifest per spec) — empty = all under
-                                // `specId`
-                                addedSpecIds: Seq[Int] = Nil): String = {
-    require(addedSpecIds.isEmpty || addedSpecIds.size == added.size,
-      "addedSpecIds must align with added")
+                                added: Seq[NewManifest],
+                                snapshotId: Long, seq: Long): String = {
     val ls = IcebergFixture.manifestListSchema(fv)
     val out = GraftFs.child(metaDir,
       f"snap-$snapshotId%05d-manifest-list-${java.util.UUID.randomUUID()}.avro")
@@ -4107,44 +3404,41 @@ object IcebergWrite {
       new GenericDatumWriter[GenericRecord](ls))
     w.setMeta("format-version", fv.toString)
     w.create(ls, GraftFs.create(out))
-    def num(r: GenericRecord, f: String, dflt: Long): Long =
-      if (r.getSchema.getField(f) == null) dflt
-      else r.get(f) match { case n: Number => n.longValue(); case _ => dflt }
     try {
       carried.foreach { old =>
         val r = new GenericData.Record(ls)
         r.put("manifest_path", old.get("manifest_path").toString)
-        r.put("manifest_length", num(old, "manifest_length", 0L))
-        r.put("partition_spec_id", num(old, "partition_spec_id", 0L).toInt)
+        r.put("manifest_length", listNum(old, "manifest_length", 0L))
+        r.put("partition_spec_id", listNum(old, "partition_spec_id", 0L).toInt)
         if (fv >= 2) {
-          r.put("content", num(old, "content", 0L).toInt)
-          r.put("sequence_number", num(old, "sequence_number", 0L))
-          r.put("min_sequence_number", num(old, "min_sequence_number", 0L))
+          r.put("content", listNum(old, "content", 0L).toInt)
+          r.put("sequence_number", listNum(old, "sequence_number", 0L))
+          r.put("min_sequence_number", listNum(old, "min_sequence_number", 0L))
         }
-        r.put("added_snapshot_id", num(old, "added_snapshot_id", -1L))
-        r.put("added_files_count", num(old, "added_files_count", 0L).toInt)
-        r.put("existing_files_count", num(old, "existing_files_count", 0L).toInt)
-        r.put("deleted_files_count", num(old, "deleted_files_count", 0L).toInt)
-        r.put("added_rows_count", num(old, "added_rows_count", 0L))
-        r.put("existing_rows_count", num(old, "existing_rows_count", 0L))
-        r.put("deleted_rows_count", num(old, "deleted_rows_count", 0L))
+        r.put("added_snapshot_id", listNum(old, "added_snapshot_id", -1L))
+        r.put("added_files_count", listNum(old, "added_files_count", 0L).toInt)
+        r.put("existing_files_count", listNum(old, "existing_files_count", 0L).toInt)
+        r.put("deleted_files_count", listNum(old, "deleted_files_count", 0L).toInt)
+        r.put("added_rows_count", listNum(old, "added_rows_count", 0L))
+        r.put("existing_rows_count", listNum(old, "existing_rows_count", 0L))
+        r.put("deleted_rows_count", listNum(old, "deleted_rows_count", 0L))
         w.append(r)
       }
-      added.zipWithIndex.foreach { case ((mPath, mLen, mContent, snapId, seq, rows, nFiles), i) =>
+      added.foreach { m =>
         val r = new GenericData.Record(ls)
-        r.put("manifest_path", mPath)
-        r.put("manifest_length", mLen)
-        r.put("partition_spec_id", addedSpecIds.lift(i).getOrElse(specId))
+        r.put("manifest_path", m.path)
+        r.put("manifest_length", m.length)
+        r.put("partition_spec_id", m.specId)
         if (fv >= 2) {
-          r.put("content", mContent)
+          r.put("content", m.content)
           r.put("sequence_number", seq)
           r.put("min_sequence_number", seq)
         }
-        r.put("added_snapshot_id", snapId)
-        r.put("added_files_count", nFiles)
+        r.put("added_snapshot_id", snapshotId)
+        r.put("added_files_count", m.files)
         r.put("existing_files_count", 0)
         r.put("deleted_files_count", 0)
-        r.put("added_rows_count", rows)
+        r.put("added_rows_count", m.rows)
         r.put("existing_rows_count", 0L)
         r.put("deleted_rows_count", 0L)
         w.append(r)

@@ -122,7 +122,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
     // pair weights: (a,a) = 3*2 + 4 = 10 beats (l,o) = (o,w) = 7; after
     // fusing aa the runs collapse, so (l,o) then (lo,w) follow
     val merges = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(docs, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(docs, "text", 3))
     assert(merges === Seq(("a", "a"), ("l", "o"), ("lo", "w")))
     // greedy-left on runs: aaaa -> [aa, aa], aaaaa -> [aa, aa, a] —
     // the pathological case a string replace CANNOT express (it misses
@@ -150,7 +150,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
     // asking for more merges than the corpus can yield fails loudly
     val tiny = Seq((1L, "ab ab")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException](
-      TextAnalysis.trainBpeMerges(tiny, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(tiny, "text", 3))
     assert(e.getMessage.contains("exhausted"))
     // a longer merge list still matches a sequential reference
     // application
@@ -291,7 +291,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val docs = Seq((1L, "aaaa aabb abab bbbb"), (2L, "aaaaa bbb aab"))
       .toDF("doc_id", "text")
     val merges = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(docs, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(docs, "text", 3))
     val got = TextAnalysis.bpeSegmentCount(docs, "doc_id", "text", merges)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     def countRef(text: String): Long = text.split(" ").filter(_.nonEmpty)

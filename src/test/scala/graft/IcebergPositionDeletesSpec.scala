@@ -57,6 +57,32 @@ class IcebergPositionDeletesSpec extends AnyFunSuite {
       "upgradeFormatVersion" -> 2))
   }
 
+  test("job pins: append, upsert, updateWhere, compact, compactWhere, rewriteManifests, convertEqualityDeletes, cherrypickSnapshot") {
+    val dir = s"$root/pins_commit"
+    IcebergWrite.create(spark, dir, schema)
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    jobs("append") = TestSpark.jobs(IcebergWrite.append(df(1L, 2L, 3L), dir))
+    IcebergWrite.append(df(4L, 5L, 6L), dir)
+    jobs("upsert") = TestSpark.jobs(
+      IcebergWrite.upsert(df(2L, 7L), dir, Seq("id")))
+    jobs("updateWhere") = TestSpark.jobs(IcebergWrite.updateWhere(spark, dir,
+      col("id") === 4L, Map("score" -> org.apache.spark.sql.functions.lit(0.0))))
+    jobs("convertEqualityDeletes") = TestSpark.jobs(
+      IcebergWrite.convertEqualityDeletes(spark, dir))
+    jobs("rewriteManifests") = TestSpark.jobs(
+      IcebergWrite.rewriteManifests(spark, dir))
+    jobs("compactWhere") = TestSpark.jobs(
+      IcebergWrite.compactWhere(spark, dir, col("id") <= 3L))
+    jobs("compact") = TestSpark.jobs(IcebergWrite.compact(spark, dir))
+    val picked = IcebergWrite.append(df(8L), dir, branch = Some("audit"))
+    jobs("cherrypickSnapshot") = TestSpark.jobs(
+      IcebergWrite.cherrypickSnapshot(spark, dir, picked))
+    assert(ids(IcebergIO.read(spark, dir)) === (1L to 8L))
+    assert(jobs.toMap === Map("append" -> 3, "upsert" -> 4, "updateWhere" -> 8,
+      "convertEqualityDeletes" -> 7, "rewriteManifests" -> 0,
+      "compactWhere" -> 4, "compact" -> 4, "cherrypickSnapshot" -> 0))
+  }
+
   test("a foreign delete file's optional row column is not read") {
     val dir = s"$root/row_col"
     val w = new IcebergFixture.Writer(spark, dir, schema)

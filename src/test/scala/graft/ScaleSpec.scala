@@ -440,7 +440,7 @@ class ScaleSpec extends AnyFunSuite {
     import graft.operators.{Curation, TextAnalysis}
     val docs = spark.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
     val ms = TextAnalysis.collectMerges(
-      TextAnalysis.trainBpeMerges(docs, "doc_id", "text", 3))
+      TextAnalysis.trainBpeMerges(docs, "text", 3))
     val segs = TextAnalysis.bpeSegments(docs, "doc_id", "text", ms)
       .withColumn("cp", org.apache.spark.sql.functions.pmod(
         org.apache.spark.sql.functions.col("id"),

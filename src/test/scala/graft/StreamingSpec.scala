@@ -1074,7 +1074,7 @@ class StreamingSpec extends AnyFunSuite {
     // train once batch-side, meter the stream with the frozen merges
     val merges = graft.operators.TextAnalysis.collectMerges(
       graft.operators.TextAnalysis
-        .trainBpeMerges(docsDf, "doc_id", "text", nMerges = 3))
+        .trainBpeMerges(docsDf, "text", nMerges = 3))
     assert(merges.size === 3)
 
     val in = org.apache.spark.sql.execution.streaming.runtime
