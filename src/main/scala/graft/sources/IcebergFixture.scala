@@ -546,6 +546,29 @@ object IcebergFixture {
       next
     }
 
+    /** Append `df` as one data file and position-delete `positions` of
+      * it in the SAME snapshot — a writer may add a file and delete some
+      * of its rows in one commit (the delete's sequence number equals the
+      * file's). Unpartitioned v2 tables only. */
+    def appendWithPositionDeletes(df: DataFrame, positions: Seq[Long]): Long = {
+      import spark.implicits._
+      require(formatVersion >= 2, "position deletes require format v2")
+      require(partitionCols.isEmpty, "unpartitioned tables only")
+      val next = seq + 1
+      val target = new File(dataDir, f"data-$next%05d.parquet")
+      val (rows, bytes) = writeParquetFile(df, target)
+      val (bounds, nulls, nans) = fileStats(df)
+      val data = FileMeta(rec(target.getAbsolutePath), 0, rows, bytes,
+        bounds = bounds, nullCounts = nulls, nanCounts = nans)
+      val delTarget = new File(dataDir, f"delete-$next%05d.parquet")
+      val (delRows, delBytes) = writeParquetFile(positions.sorted
+        .map(p => (data.path, p)).toDF("file_path", "pos"), delTarget)
+      val del = FileMeta(rec(delTarget.getAbsolutePath), 1, delRows, delBytes)
+      allFiles ++= Seq(data, del)
+      commit(Seq(data, del), next, "overwrite")
+      next
+    }
+
     /** Position-delete `positions` of `dataFilePath`; commits a snapshot
       * with a delete manifest (v2 only). */
     def deletePositions(dataFilePath: String, positions: Seq[Long]): Long = {
@@ -679,11 +702,12 @@ object IcebergFixture {
         s"""{"name":"$n","transform":"$t","source-id":$sourceId,"field-id":${1000 + i}}"""
       }.mkString("[", ",", "]")
 
-    private def writeManifest(files: Seq[FileMeta], snapshotId: Long): (String, Long) = {
+    private def writeManifest(files: Seq[FileMeta], snapshotId: Long,
+                              suffix: String): (String, Long) = {
       val es = manifestEntrySchema(formatVersion, partColTypes)
       val dfSchema = es.getField("data_file").schema()
       val partSchema = dfSchema.getField("partition").schema()
-      val out = new File(metaDir, f"manifest-$snapshotId%05d.avro")
+      val out = new File(metaDir, f"manifest-$snapshotId%05d$suffix.avro")
       val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](es))
       // spec-required manifest container metadata
       w.setMeta("schema", schemaJson(schema, 0).toString)
@@ -803,10 +827,14 @@ object IcebergFixture {
 
     private def commit(newFiles: Seq[FileMeta], snapshotId: Long,
                        operation: String): Unit = {
-      val (mPath, mLen) = writeManifest(newFiles, snapshotId)
-      val content = if (newFiles.exists(_.content > 0)) 1 else 0
-      manifests :+= ((mPath, mLen, content, snapshotId, snapshotId,
-        newFiles.map(_.records).sum, newFiles.size))
+      // one manifest per content kind (data, deletes)
+      newFiles.groupBy(f => if (f.content > 0) 1 else 0).toSeq.sortBy(_._1)
+        .foreach { case (content, files) =>
+          val (mPath, mLen) = writeManifest(files, snapshotId,
+            suffix = if (content > 0 && files.size < newFiles.size) "-deletes" else "")
+          manifests :+= ((mPath, mLen, content, snapshotId, snapshotId,
+            files.map(_.records).sum, files.size))
+        }
 
       val sn = mapper.createObjectNode()
       sn.put("snapshot-id", snapshotId)

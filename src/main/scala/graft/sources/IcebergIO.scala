@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1035,12 +1035,14 @@ object IcebergIO {
 
   private final val SchemePrefix = "^[A-Za-z][A-Za-z0-9+.-]*:/+"
 
-  /** Below this manifest count, planning stays a driver loop (a Spark
-    * job per read would dominate at toy table sizes); at or above it,
-    * manifests parse DISTRIBUTED — one flatMap task per manifest slice,
-    * returning only the kept entry tuples — which keeps very large
-    * tables (1e7 files across 1e4+ manifests) plannable. */
-  private[graft] val ParallelManifestThreshold = 8
+  /** Below this manifest count, planning stays a driver loop; at or
+    * above it, manifests parse DISTRIBUTED — one task per manifest slice,
+    * returning only the kept entries — which keeps very large tables (1e7
+    * files across 1e4+ manifests) plannable. On `local[4]`, planning a
+    * snapshot of 4-file manifests took 9 / 13 / 18 / 34 ms as a driver
+    * loop against 92 / 94 / 83 / 80 ms as a Spark job at 8 / 16 / 32 /
+    * 64 manifests: the job's fixed cost dominates well past 32. */
+  private[graft] val ParallelManifestThreshold = 32
 
   /** Scheme-normalized FULL paths of the current snapshot's live data
     * files (content=0) — empty for a table with no snapshot yet. The
@@ -1062,45 +1064,59 @@ object IcebergIO {
     }
   }
 
-  /** Collect live content files for a snapshot: manifest list -> manifests
-    * -> entries with status != DELETED (2). Manifest parsing runs on
-    * executors when the manifest count crosses
-    * [[ParallelManifestThreshold]] (constant driver memory per task
-    * result; `collect` carries file metadata only, never rows). */
-  private[sources] def liveFiles(spark: SparkSession, snap: SnapshotInfo): Seq[ContentFile] = {
-    // (manifest path, content, manifest sequence number, spec id) —
-    // manifest-list `content` field (v2): 0 = data manifests, 1 = delete
-    // manifests; v1 lists are all data with no sequence numbers (0).
-    // `partition_spec_id` (field 502) names the spec the manifest's files
-    // were written under — partition evolution keys pruning on it.
-    val manifestFiles: Seq[(String, Int, Long, Int)] =
-      snap.manifestList match {
-        case Some(ml) =>
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long, Int)]
-          foreachAvroRecord(ml) { r =>
-            val mSeq =
-              if (r.getSchema.getField("sequence_number") == null) 0L
-              else r.get("sequence_number") match {
-                case null => 0L; case n: Number => n.longValue()
-              }
-            buf += ((r.get("manifest_path").toString,
-              intFieldOrZero(r, "content"), mSeq,
-              intFieldOrZero(r, "partition_spec_id")))
-          }
-          buf.toSeq
-        case None => snap.manifests.map((_, 0, 0L, 0))
-      }
-    if (manifestFiles.size < ParallelManifestThreshold) {
+  /** A manifest as its manifest-list entry names it: path, content kind
+    * (v2 `content`: 0 data, 1 deletes; v1 lists are all data), manifest
+    * sequence number (0 in v1) and `partition_spec_id` (field 502, the
+    * spec its files were written under — partition evolution keys
+    * pruning on it). Manifests are immutable, so one parse serves every
+    * snapshot whose list names the same entry. */
+  private type ManifestRef = (String, Int, Long, Int)
+
+  /** The manifests of a snapshot's manifest list. */
+  private def manifestRefs(snap: SnapshotInfo): Seq[ManifestRef] =
+    snap.manifestList match {
+      case Some(ml) =>
+        val buf = scala.collection.mutable.ArrayBuffer.empty[ManifestRef]
+        foreachAvroRecord(ml) { r =>
+          val mSeq =
+            if (r.getSchema.getField("sequence_number") == null) 0L
+            else r.get("sequence_number") match {
+              case null => 0L; case n: Number => n.longValue()
+            }
+          buf += ((r.get("manifest_path").toString,
+            intFieldOrZero(r, "content"), mSeq,
+            intFieldOrZero(r, "partition_spec_id")))
+        }
+        buf.toSeq
+      case None => snap.manifests.map((_, 0, 0L, 0))
+    }
+
+  /** Parse each of `refs` into its live content-file entries. Below
+    * [[ParallelManifestThreshold]] manifests this is a driver loop; at or
+    * above it, one Spark job parses them on executors (constant driver
+    * memory per task result; `collect` carries file metadata only, never
+    * rows). */
+  private def parseManifests(spark: SparkSession, refs: Seq[ManifestRef])
+      : Map[ManifestRef, Seq[ContentFile]] =
+    if (refs.size < ParallelManifestThreshold) {
       val c = GraftFs.conf()
-      manifestFiles.flatMap { case (p, mc, ms, sp) => parseManifest(p, mc, ms, sp, c) }
+      refs.map { case r @ (p, mc, ms, sp) => r -> parseManifest(p, mc, ms, sp, c) }.toMap
     } else {
       val sconf = GraftFs.serializableConf()
-      val slices = math.min(manifestFiles.size,
+      val slices = math.min(refs.size,
         math.max(1, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(manifestFiles, slices)
-        .flatMap { case (p, mc, ms, sp) => parseManifest(p, mc, ms, sp, sconf.value) }
-        .collect().toSeq
+      spark.sparkContext.parallelize(refs, slices)
+        .map { case r @ (p, mc, ms, sp) => r -> parseManifest(p, mc, ms, sp, sconf.value) }
+        .collect().toMap
     }
+
+  /** Collect live content files for a snapshot: manifest list -> manifests
+    * -> entries with status != DELETED (2), parsed per
+    * [[parseManifests]]. */
+  private[sources] def liveFiles(spark: SparkSession, snap: SnapshotInfo): Seq[ContentFile] = {
+    val refs = manifestRefs(snap)
+    val parsed = parseManifests(spark, refs)
+    refs.flatMap(parsed)
   }
 
   /** Parse ONE manifest into its live content-file entries — pure
@@ -1535,8 +1551,7 @@ object IcebergIO {
     * ([[IcebergWrite.compact]]/compactWhere/updateWhere stage this
     * column back out into the rewritten files). */
   private[sources] def lineageRead(spark: SparkSession, meta: TableMetadata,
-                                   files: Seq[ContentFile],
-                                   keepIdentity: Boolean = false): DataFrame = {
+                                   files: Seq[ContentFile]): DataFrame = {
     val base = mergeRead(spark, meta, files, withIdentity = true,
       withRowId = true)
     val mapRows = files.filter(_.content == 0).map(f =>
@@ -1556,9 +1571,7 @@ object IcebergIO {
       .withColumn("__gf_lseq", coalesce(col("__gf_mlseq"), col("__gf_fseq")))
       .drop("__gf_mrowid", "__gf_mlseq", "__gf_rfile", "__gf_first",
         "__gf_fseq")
-    // the changelog's delete diff anti-joins on physical row identity
-    // AFTER deriving lineage — keep (file, pos) only for that caller
-    if (keepIdentity) joined else joined.drop("__gf_file", "__gf_pos")
+    joined.drop("__gf_file", "__gf_pos")
   }
 
   private def readImpl(spark: SparkSession, tablePath: String,
@@ -1900,27 +1913,17 @@ object IcebergIO {
   /** Merge-on-read over an EXPLICIT content-file set: reads the data
     * files in `files` and applies the position/equality delete files in
     * `files` per the v2 rules. The snapshot scan above is this applied
-    * to a snapshot's pruned live files; the changelog scan
-    * ([[readChangelog]]) calls it with file SUBSETS of two adjacent
-    * snapshots to diff them. With `withIdentity` the result keeps the
+    * to a snapshot's pruned live files; the rewrite verbs call it with
+    * the files they rewrite. With `withIdentity` the result keeps the
     * row's physical identity — `__gf_file` (scheme-normalized data file
-    * path) and `__gf_pos` (row ordinal in that file) — which is what
-    * makes a before/after anti-join well-defined without comparing row
-    * values (two equal rows in different files stay distinct). */
+    * path) and `__gf_pos` (row ordinal in that file). */
   private[sources] def mergeRead(spark: SparkSession, meta: TableMetadata,
                                  files: Seq[ContentFile],
                                  withIdentity: Boolean,
                                  withRowId: Boolean = false): DataFrame = {
     require(!withRowId || withIdentity,
       "withRowId requires withIdentity (lineage derivation needs file+pos)")
-    // v3 deletion vectors: content-1 entries in PUFFIN format reference
-    // a data file + a blob byte range instead of holding parquet rows
-    val badFmt = files.filter(f => f.format != "PARQUET" &&
-      !(f.content == 1 && f.format == "PUFFIN"))
-    if (badFmt.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"non-parquet Iceberg content files are not supported: " +
-          badFmt.map(f => s"${f.format}:${f.path}").take(3).mkString(", "))
+    requireReadable(files)
     val dataFiles = files.filter(_.content == 0)
     val posFiles  = files.filter(_.content == 1)
     val eqFiles   = files.filter(_.content == 2)
@@ -1980,36 +1983,62 @@ object IcebergIO {
     }
 
     if (eqFiles.nonEmpty) {
-      // v2 EQUALITY deletes: a data row is deleted when it equals any
-      // delete row on the columns named by the delete file's equality
-      // field ids AND its data sequence number is strictly below the
-      // delete file's (spec rule — rows re-inserted after the delete
-      // survive). Null keys match null (<=>), per spec. Sequence numbers
-      // reach the rows via a broadcast join on the (tiny, driver-known)
-      // file -> seq list; the delete join itself is distributed and
-      // AQE-broadcast-promoted when the delete set is small.
+      // v2 EQUALITY deletes. Sequence numbers reach the rows via a
+      // broadcast join on the (tiny, driver-known) file -> seq list; the
+      // delete join itself is distributed and AQE-broadcast-promoted when
+      // the delete set is small.
       val seqRows = dataFiles.map(f => Row(normalizePath(f.path), f.seq))
       val seqDf = spark.createDataFrame(
         spark.sparkContext.parallelize(seqRows, 1),
         StructType(Seq(StructField("__gf_file", StringType, nullable = false),
           StructField("__gf_dataseq", LongType, nullable = false))))
       data = data.join(broadcast(seqDf), Seq("__gf_file"), "left")
-      // Scope: a delete file written into a PARTITION applies only to
-      // that partition's rows (spec); only an unpartitioned-spec delete
-      // file (empty tuple) is global.
-      // ONE anti-join per distinct equality-id set (usually one), not one
-      // per (ids, partition-tuple) group: with per-tuple joins the plan
-      // grows linearly in distinct delete partitions — thousands of
-      // tuples would mean thousands of stacked joins. Instead every
-      // delete file's rows carry their scope as COLUMNS (the stored
-      // partition tuple values, null + scoped=false for a global file),
-      // the files union into one relation, and the scope check moves
-      // into the single join condition — plan size constant in the
-      // number of delete files/partitions. The `<=>` key columns still
-      // extract as hash-join keys; seq + scope ride as residual filter.
-      eqFiles.groupBy(f => (f.equalityIds, f.specId))
-        .toSeq.sortBy(_._2.head.path) // deterministic plan order
-        .foreach { case ((ids, delSpecId), group) =>
+      equalityDeletes(spark, meta, eqFiles).foreach { case (dels, cond) =>
+        data = data.join(dels, cond, "left_anti")
+      }
+    }
+    stripFieldIds(data.select(outCols: _*))
+  }
+
+  /** Fails with `UnsupportedOperationException` on a content file graft
+    * cannot read: anything but parquet, and v3 deletion vectors (content-1
+    * PUFFIN entries, which reference a data file and a blob byte range
+    * instead of holding parquet rows). */
+  private def requireReadable(files: Seq[ContentFile]): Unit = {
+    val badFmt = files.filter(f => f.format != "PARQUET" &&
+      !(f.content == 1 && f.format == "PUFFIN"))
+    if (badFmt.nonEmpty)
+      throw new UnsupportedOperationException(
+        s"non-parquet Iceberg content files are not supported: " +
+          badFmt.map(f => s"${f.format}:${f.path}").take(3).mkString(", "))
+  }
+
+  /** The equality-delete side of a merge-on-read over `eqFiles`: per
+    * distinct (equality ids, spec) group, the group's delete rows and the
+    * condition under which one of them deletes a data row. A data row is
+    * deleted when it equals a delete row on the columns the delete file's
+    * equality field ids name (null matches null, `<=>`, per spec) AND its
+    * data sequence number `__gf_dataseq` (a column the caller puts on the
+    * data side) is strictly below the delete row's `__gf_delseq` — rows
+    * re-inserted after the delete survive. Each delete row also carries
+    * `__gf_delfile`, its file's scheme-normalized path.
+    *
+    * Scope: a delete file written into a PARTITION applies only to that
+    * partition's rows (spec); only an unpartitioned-spec delete file
+    * (empty tuple) is global. There is ONE relation per distinct
+    * equality-id set (usually one), not one per (ids, partition-tuple)
+    * group: with per-tuple joins the plan grows linearly in distinct
+    * delete partitions. Instead every delete row carries its scope as
+    * COLUMNS (the stored partition tuple values, null + scoped=false for
+    * a global file), the files union into one relation, and the scope
+    * check moves into the single condition — plan size constant in the
+    * number of delete files/partitions. The `<=>` key columns still
+    * extract as hash-join keys; seq + scope ride as residual filter. */
+  private def equalityDeletes(spark: SparkSession, meta: TableMetadata,
+                              eqFiles: Seq[ContentFile]): Seq[(DataFrame, Column)] =
+    eqFiles.groupBy(f => (f.equalityIds, f.specId))
+      .toSeq.sortBy(_._2.head.path) // deterministic plan order
+      .map { case ((ids, delSpecId), group) =>
         require(ids.nonEmpty, s"equality-delete file without equality_ids: " +
           group.head.path)
         val names = ids.map(id => meta.fieldById.getOrElse(id,
@@ -2073,7 +2102,8 @@ object IcebergIO {
               })
               spark.read.schema(legSchema).parquet(f.path)
                 .select(ids.zip(names).map { case (id, n) =>
-                  col(mapping(id)).as(n) }: _*)
+                  col(mapping(id)).as(n) } :+
+                  col("_metadata.file_path").as("__gf_delfileraw"): _*)
             } else if (resolveByFieldIds(meta)) {
               val eqSchema = StructType(ids.zip(names).map { case (id, n) =>
                 StructField(n, meta.schema(n).dataType, nullable = true,
@@ -2081,9 +2111,12 @@ object IcebergIO {
                     .putLong("parquet.field.id", id.toLong).build())
               })
               spark.read.schema(eqSchema).parquet(f.path)
+                .withColumn("__gf_delfileraw", col("_metadata.file_path"))
             } else spark.read.parquet(f.path)
+              .withColumn("__gf_delfileraw", col("_metadata.file_path"))
           rd.select(names.map(n => col(n).as(s"__gf_eq_$n")) ++
               (lit(f.seq).as("__gf_delseq") +:
+                normalizedPath(col("__gf_delfileraw")).as("__gf_delfile") +:
                 lit(scoped).as("__gf_scoped") +: scopeVals): _*)
         }.reduce(_ unionByName _)
         val eqCond = names.map(n => col(n) <=> col(s"__gf_eq_$n"))
@@ -2094,11 +2127,8 @@ object IcebergIO {
             !col("__gf_scoped") || (stored <=> col(s"__gf_part_$i"))
           }
           .foldLeft(eqCond)(_ && _)
-        data = data.join(dels, cond, "left_anti")
+        (dels, cond)
       }
-    }
-    stripFieldIds(data.select(outCols: _*))
-  }
 
   /** Resolve at most one of snapshotId / asOfTimestampMs / ref to a
     * concrete snapshot id (None = current) — THE single copy of the
@@ -2288,29 +2318,41 @@ object IcebergIO {
     * `_commit_snapshot_id` appended. An UPDATE surfaces as its
     * delete+insert pair at the same ordinal, exactly how the
     * merge-on-read verbs committed it. `fromSnapshotId = None` starts at
-    * the table's first snapshot (its inserts included).
+    * the table's first snapshot (its inserts included). Data-preserving
+    * `replace` snapshots (compaction, manifest and delete-file rewrites)
+    * change no rows BY CONTRACT and emit nothing — a changelog consumer
+    * survives table maintenance. v2 only (sequence numbers order the
+    * delete rules).
     *
-    * Scale shape: per snapshot the scan touches only the CHANGED file
-    * set, never the full table — inserts read the files whose data
-    * sequence number equals the snapshot's; deletes diff the AFFECTED
-    * files between the parent state and this state (removed files,
-    * files named by new position-delete files, and — only when the
-    * snapshot adds equality deletes, whose reach is value-based — the
-    * parent files the eq-delete could apply to). The before/after diff
-    * anti-joins on physical row identity (file, pos), so it is exact
-    * under any mix of position deletes, equality deletes and rewrites,
-    * and never compares row values. Data-preserving `replace` snapshots
-    * (compaction, manifest rewrites) change no rows BY CONTRACT and are
-    * skipped — a changelog consumer survives table maintenance. v2 only
-    * (sequence numbers define "added at this snapshot"). */
-  /** @param withRowId v3 only: every change row also carries `_row_id`
-    *                    + `_last_updated_sequence_number` — an UPDATE's
-    *                    delete+insert pair shares ONE `_row_id` (the
-    *                    rewrite materializes it), so a CDC consumer can
-    *                    track rows by PERMANENT identity instead of by
-    *                    key columns; an upsert's replace shows as an
-    *                    identity change (delete old id, insert new),
-    *                    exactly the delete+insert it is. */
+    * One plan and one data scan serve the whole range
+    * ([[planChangelog]], [[scanChangelog]]):
+    *  - every distinct manifest of the range's snapshots and of its base
+    *    (the `from` snapshot) parses once, and each content file gets
+    *    its live span over those states;
+    *  - the scan touches only the CHANGED data files — inserted,
+    *    removed, named by a new position delete or deletion vector, or
+    *    within reach of a new equality delete (older sequence number,
+    *    partition scope) — never the full table; one Spark job collects
+    *    the files that new parquet position deletes name;
+    *  - each touched file is read once, keeping each row's physical
+    *    identity (file, pos), and so is every delete file that can apply
+    *    to those rows. A row is live from its file's first state until
+    *    its file's removal or the first state holding a delete file that
+    *    applies to it (the spec's `<=` rule for position deletes, `<`
+    *    plus partition scope for equality deletes); it is inserted by the
+    *    snapshot that starts that span and deleted by the one that ends
+    *    it, unless that snapshot is a `replace`. Rows never compare by
+    *    value, so the result is exact under any mix of deletes and
+    *    rewrites.
+    *
+    * @param withRowId v3 only: every change row also carries `_row_id`
+    *                  + `_last_updated_sequence_number` — an UPDATE's
+    *                  delete+insert pair shares ONE `_row_id` (the
+    *                  rewrite materializes it), so a CDC consumer can
+    *                  track rows by PERMANENT identity instead of by key
+    *                  columns; an upsert's replace shows as an identity
+    *                  change (delete old id, insert new), exactly the
+    *                  delete+insert it is. */
   def readChangelog(spark: SparkSession, tablePath: String,
                     fromSnapshotId: Option[Long] = None,
                     toSnapshotId: Option[Long] = None,
@@ -2325,17 +2367,14 @@ object IcebergIO {
       throw new IllegalArgumentException(
         s"snapshot $id not found; available: " +
           meta.snapshots.map(_.snapshotId).sorted.mkString(", ")))
-    val outSchema = StructType(meta.schema.fields.toSeq ++
-      (if (withRowId) lineageFields else Nil) ++ changelogFields)
-    def emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], outSchema)
     val toSnapOpt = toSnapshotId.map(snapOf)
       .orElse(meta.currentSnapshotId.map(snapOf))
-    if (toSnapOpt.isEmpty) return emptyOut // created, nothing committed yet
-    val toSnap = toSnapOpt.get
     fromSnapshotId.foreach(snapOf) // loud unknown-id check up front
-    if (fromSnapshotId.contains(toSnap.snapshotId)) return emptyOut
-    changelogImpl(spark, meta, fromSnapshotId, None, toSnap, withRowId)
+    toSnapOpt match {
+      case Some(toSnap) if !fromSnapshotId.contains(toSnap.snapshotId) =>
+        changelogImpl(spark, meta, fromSnapshotId, None, toSnap, withRowId)
+      case _ => emptyChangelog(spark, meta, withRowId) // nothing committed, or an empty range
+    }
   }
 
   /** Changes with sequence numbers in `(fromSeq, toSeq]` — the streaming
@@ -2359,6 +2398,13 @@ object IcebergIO {
     changelogImpl(spark, meta, None, Some(fromSeq), toSnap, withRowId)
   }
 
+  /** An empty frame of the changelog schema. */
+  private def emptyChangelog(spark: SparkSession, meta: TableMetadata,
+                             withRowId: Boolean): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(meta.schema.fields.toSeq ++
+        (if (withRowId) lineageFields else Nil) ++ changelogFields))
+
   /** Shared changelog body. The lineage cut is `fromId` (exclusive
     * snapshot-id bound) or `fromSeq` (exclusive sequence bound — the
     * walk stops at the first ancestor at or below it); with neither, the
@@ -2366,12 +2412,8 @@ object IcebergIO {
   private def changelogImpl(spark: SparkSession, meta: TableMetadata,
                             fromId: Option[Long], fromSeq: Option[Long],
                             toSnap: SnapshotInfo,
-                            withRowId: Boolean = false): DataFrame = {
+                            withRowId: Boolean): DataFrame = {
     val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    val outSchema = StructType(meta.schema.fields.toSeq ++
-      (if (withRowId) lineageFields else Nil) ++ changelogFields)
-    def emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], outSchema)
     // Ancestor lineage (from, to], oldest first. Unlike the incremental
     // scan there is no sequence-range fallback: attributing deletes to
     // the right snapshot REQUIRES the parent chain, so a broken chain
@@ -2400,121 +2442,258 @@ object IcebergIO {
               "unavailable")
           cur :: acc
       }
-    val lineage = walk(toSnap, Nil)
-    // Manifests of each snapshot parse once even though a snapshot is
-    // read as itself and as the next one's parent.
-    val filesCache = scala.collection.mutable.Map.empty[Long, Seq[ContentFile]]
-    def filesOf(s: SnapshotInfo): Seq[ContentFile] =
-      filesCache.getOrElseUpdate(s.snapshotId, liveFiles(spark, s))
-    val frames = Seq.newBuilder[DataFrame]
-    var ord = 0
-    lineage.foreach { s =>
-      val dataPreserving = s.operation == "replace" ||
-        s.summary.get("rewritten-manifests").contains("true")
-      if (!dataPreserving) {
-        val sFiles = filesOf(s)
-        val sData = sFiles.filter(_.content == 0)
-        val sDeletes = sFiles.filter(_.content != 0)
-        val sDataPaths = sData.map(f => normalizePath(f.path)).toSet
-        def mark(df: DataFrame, tpe: String): DataFrame = df
-          .withColumn("_change_type", lit(tpe))
-          .withColumn("_change_ordinal", lit(ord))
-          .withColumn("_commit_snapshot_id", lit(s.snapshotId))
-        // inserts: rows live in THIS snapshot among the files it added.
-        // Only SAME-sequence position deletes can touch them (a writer
-        // may add a file and delete some of its rows in one commit):
-        // older position deletes name older files, and equality deletes
-        // never apply to same-or-later sequence data (strict <) — so the
-        // insert scan carries just those, not every historical delete
-        // file.
-        val newData = sData.filter(_.seq == s.sequenceNumber)
-        val newPosForInserts = sFiles.filter(f =>
-          f.content == 1 && f.seq == s.sequenceNumber)
-        if (newData.nonEmpty)
-          frames += mark(
-            if (withRowId)
-              renameLineage(lineageRead(spark, meta,
-                newData ++ newPosForInserts))
-            else mergeRead(spark, meta, newData ++ newPosForInserts,
-              withIdentity = false),
-            "insert")
-        // deletes: before/after diff of the affected parent files
-        s.parentId.flatMap(byId.get).foreach { p =>
-          val pFiles = filesOf(p)
-          val pData = pFiles.filter(_.content == 0)
-          val pDeletes = pFiles.filter(_.content != 0)
-          val removed = pData.filterNot(f => sDataPaths(normalizePath(f.path)))
-          val newPos = sFiles.filter(f =>
-            f.content == 1 && f.seq == s.sequenceNumber)
-          val newEq = sFiles.filter(f =>
-            f.content == 2 && f.seq == s.sequenceNumber)
-          // files a new position delete names: a metadata-scale read of
-          // the (small) delete files' distinct file_path column — never
-          // row data. v3 deletion vectors are cheaper still: the target
-          // rides IN the manifest entry (referenced_data_file)
-          val (newDv, newPosParquet) = newPos.partition(_.format == "PUFFIN")
-          val posTargets: Set[String] =
-            newDv.flatMap(_.referencedDataFile).map(normalizePath).toSet ++
-              (if (newPosParquet.isEmpty) Set.empty[String]
-               else PositionDeletes.read(spark, newPosParquet)
-                 .select("__gf_file").distinct().collect()
-                 .map(_.getString(0)).toSet)
-          // eq-delete candidates honor the delete files' PARTITION scope
-          // (a partition-scoped upsert diffs only its partitions, not the
-          // whole parent table): a parent file is a candidate when some
-          // new eq-delete file might apply to it — global file, matching
-          // stored tuple, or (conservatively) a different spec / missing
-          // tuple field. String-normalized compare like the scan's
-          // pruning (Int/Long boxing must not defeat equal values).
-          val eqGlobal = newEq.exists(_.partitionValues.isEmpty)
-          val eqScopes: Seq[(Int, Map[String, Any])] =
-            newEq.filter(_.partitionValues.nonEmpty)
-              .map(f => (f.specId, f.partitionValues))
-          def eqCandidate(f: ContentFile): Boolean =
-            newEq.nonEmpty && f.seq < s.sequenceNumber &&
-              (eqGlobal || eqScopes.exists { case (sid, tuple) =>
-                f.specId != sid || tuple.forall { case (k, v) =>
-                  f.partitionValues.get(k)
-                    .forall(pv => String.valueOf(pv) == String.valueOf(v))
-                }
-              })
-          val candidates = (removed ++ pData.filter(f =>
-              posTargets(normalizePath(f.path)) || eqCandidate(f)))
-            .groupBy(_.path).map(_._2.head).toSeq.sortBy(_.path)
-          if (candidates.nonEmpty) {
-            // the BEFORE state carries lineage when asked (derived from
-            // the PARENT's files — the deleted row's identity); the
-            // anti-join right side never needs it
-            val before =
-              if (withRowId)
-                renameLineage(lineageRead(spark, meta,
-                  candidates ++ pDeletes, keepIdentity = true))
-              else mergeRead(spark, meta, candidates ++ pDeletes,
-                withIdentity = true)
-            val still = candidates.filter(f => sDataPaths(normalizePath(f.path)))
-            val deleted =
-              if (still.isEmpty) before
-              else before.join(
-                mergeRead(spark, meta, still ++ sDeletes, withIdentity = true)
-                  .select("__gf_file", "__gf_pos"),
-                Seq("__gf_file", "__gf_pos"), "left_anti")
-            frames += mark(deleted.drop("__gf_file", "__gf_pos"), "delete")
-          }
-        }
-        ord += 1
-      }
+    val lineage = walk(toSnap, Nil).toIndexedSeq
+    val plan =
+      if (lineage.isEmpty) None
+      else Some(planChangelog(spark,
+        lineage.head.parentId.flatMap(byId.get), lineage))
+    plan.filter(_.data.nonEmpty) match {
+      case Some(p) => scanChangelog(spark, meta, p, withRowId)
+      case None => emptyChangelog(spark, meta, withRowId)
     }
-    val fs = frames.result()
-    if (fs.isEmpty) emptyOut else fs.reduce(_ unionByName _)
   }
 
-  /** Live content files of a snapshot as a relation — the `.files`
-    * metadata table the runtime jar exposes: one row per live content
-    * file (file_name is the path's basename so results stay stable
-    * across table locations; content 0 = data, 1 = position deletes,
-    * 2 = equality deletes; partition is the canonical `k=v/k=v` tuple
-    * string, '' for unpartitioned). Metadata grain: rows come from the
-    * manifests, no data file is opened. */
+  /** A changed data file's live span over a changelog range's states —
+    * state 0 is the range's base (the first snapshot's parent; empty at
+    * the table's root), state i its i-th snapshot: live in `[first,
+    * end)`, `end` one past the last state when it outlives the range.
+    * `key` is the scheme-normalized path its rows are keyed by. */
+  private final case class ChangeSpan(key: String, first: Int, end: Int,
+                                      seq: Long, firstRowId: Option[Long])
+
+  /** One changelog range as planned on the driver: the changed data files
+    * with their spans, every delete file that can apply to their rows
+    * with the first state it is live in, and, for each state whose
+    * snapshot emits changes (not a `replace`), its ordinal and snapshot
+    * id. */
+  private final case class ChangelogPlan(data: Seq[(ContentFile, ChangeSpan)],
+                                         deletes: Seq[(ContentFile, Int)],
+                                         emits: Map[Int, (Int, Long)])
+
+  /** Plan the changelog of `lineage` (oldest first) over its `base`.
+    * Each snapshot's manifest list is read once and each distinct
+    * manifest parsed once; the only Spark jobs are the distributed
+    * manifest parse (from [[ParallelManifestThreshold]] manifests) and
+    * at most one job collecting the data files that new parquet position
+    * deletes name (deletion vectors name theirs in the manifest). */
+  private def planChangelog(spark: SparkSession, base: Option[SnapshotInfo],
+                            lineage: IndexedSeq[SnapshotInfo]): ChangelogPlan = {
+    val refs = (base.toSeq ++ lineage).map(s => s.snapshotId -> manifestRefs(s)).toMap
+    val parsed = parseManifests(spark, refs.values.flatten.toSeq.distinct)
+    // a content entry's identity: its normalized path, plus the blob
+    // offset for a deletion vector (one puffin file holds several)
+    def key(f: ContentFile): (String, Long) =
+      (normalizePath(f.path), f.contentOffset.getOrElse(-1L))
+    def liveAt(s: SnapshotInfo): Map[(String, Long), ContentFile] =
+      refs(s.snapshotId).flatMap(parsed).map(f => key(f) -> f).toMap
+    val emitting = lineage.map(s => s.operation != "replace" &&
+      !s.summary.get("rewritten-manifests").contains("true"))
+    val emits = (1 to lineage.size).filter(i => emitting(i - 1)).zipWithIndex
+      .map { case (i, ord) => i -> ((ord, lineage(i - 1).snapshotId)) }.toMap
+    val files = scala.collection.mutable.LinkedHashMap.empty[(String, Long), ContentFile]
+    val first = scala.collection.mutable.Map.empty[(String, Long), Int]
+    val end = scala.collection.mutable.Map.empty[(String, Long), Int]
+    val touched = scala.collection.mutable.Set.empty[(String, Long)]
+    val newPosParquet = Seq.newBuilder[ContentFile]
+    // the data files a new parquet position delete can name: those live
+    // at its snapshot's parent (files it adds are inserts, touched anyway)
+    val posReach = scala.collection.mutable.Set.empty[(String, Long)]
+    var prev = base.map(liveAt).getOrElse(Map.empty)
+    prev.foreach { case (k, f) => files(k) = f; first(k) = 0 }
+    lineage.indices.foreach { j =>
+      val cur = liveAt(lineage(j))
+      val added = cur.filter { case (k, _) => !prev.contains(k) }
+      val removed = prev.filter { case (k, _) => !cur.contains(k) }
+      added.foreach { case (k, f) =>
+        // a span has one start: a file that leaves and returns would
+        // need two, which no graft verb produces
+        if (first.contains(k)) throw new IllegalStateException(
+          s"content file ${f.path} leaves the table and returns at snapshot " +
+            s"${lineage(j).snapshotId} — changelog over this range is unavailable")
+        files(k) = f; first(k) = j + 1
+      }
+      removed.keys.foreach(end(_) = j + 1)
+      if (emitting(j)) {
+        val (addedData, addedDeletes) = added.values.toSeq.partition(_.content == 0)
+        touched ++= (addedData ++ removed.values.filter(_.content == 0)).map(key)
+        val (dvs, posParquet) = addedDeletes.filter(_.content == 1)
+          .partition(_.format == "PUFFIN")
+        touched ++= dvs.flatMap(_.referencedDataFile)
+          .map(p => (normalizePath(p), -1L)).filter(prev.contains)
+        if (posParquet.nonEmpty) {
+          newPosParquet ++= posParquet
+          posReach ++= prev.collect { case (k, f) if f.content == 0 => k }
+        }
+        val newEq = addedDeletes.filter(_.content == 2)
+        if (newEq.nonEmpty) touched ++= prev.collect {
+          case (k, f) if f.content == 0 && eqReaches(newEq, f) => k
+        }
+      }
+      prev = cur
+    }
+    // the targets job only runs when it can add a file: when every file
+    // within reach is already touched (an unpartitioned upsert touches
+    // them all), it cannot
+    if (!posReach.subsetOf(touched))
+      touched ++= positionDeleteTargets(spark, newPosParquet.result())
+        .map((_, -1L)).filter(posReach)
+    val afterLast = lineage.size + 1
+    val data = touched.toSeq.map(files).sortBy(_.path).map { f =>
+      val k = key(f)
+      f -> ChangeSpan(k._1, first(k), end.getOrElse(k, afterLast), f.seq, f.firstRowId)
+    }
+    // the delete files whose rows can reach a touched file: a deletion
+    // vector names its one target; a parquet position delete applies to
+    // data at or below its sequence number, an equality delete to data
+    // strictly below it
+    val targets = touched.map(_._1)
+    val minSeq = data.map(_._1.seq).minOption.getOrElse(Long.MaxValue)
+    val deletes = files.toSeq.collect {
+      case (k, f) if f.content == 1 && (
+          if (f.format == "PUFFIN")
+            f.referencedDataFile.exists(p => targets(normalizePath(p)))
+          else f.seq >= minSeq) => f -> first(k)
+      case (k, f) if f.content == 2 && f.seq > minSeq => f -> first(k)
+    }.sortBy { case (f, _) => (f.path, f.contentOffset.getOrElse(-1L)) }
+    ChangelogPlan(data, deletes, emits)
+  }
+
+  /** Whether one of the equality deletes `eq` can reach data file `f`: an
+    * older data sequence number and a scope that covers it — a global
+    * delete file, the same stored partition tuple, or (conservatively) a
+    * different spec or a tuple missing the field. String-normalized
+    * compare like the scan's pruning (Int/Long boxing must not defeat
+    * equal values). */
+  private def eqReaches(eq: Seq[ContentFile], f: ContentFile): Boolean =
+    eq.exists(d => f.seq < d.seq && (d.partitionValues.isEmpty ||
+      f.specId != d.specId || d.partitionValues.forall { case (k, v) =>
+        f.partitionValues.get(k)
+          .forall(pv => String.valueOf(pv) == String.valueOf(v))
+      }))
+
+  /** Scheme-normalized paths of the data files that the parquet position
+    * deletes `files` name: one Spark job; each task deduplicates its own
+    * paths, so only distinct paths per task reach the driver, never
+    * rows. */
+  private def positionDeleteTargets(spark: SparkSession,
+                                    files: Seq[ContentFile]): Set[String] =
+    PositionDeletes.read(spark, files).select("__gf_file")
+      .as[String](Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().toSet
+
+  /** The one data scan of a planned changelog range. The range's small
+    * tables — file key -> span, delete file -> first live state and
+    * sequence number, state -> (ordinal, snapshot id) — ride in UDF
+    * closures, so their lookups are map-side and cost no Spark job, and
+    * generated code never inlines a snapshot id or sequence number (it
+    * stays the same from one range to the next). */
+  private def scanChangelog(spark: SparkSession, meta: TableMetadata,
+                            plan: ChangelogPlan, withRowId: Boolean): DataFrame = {
+    requireReadable(plan.data.map(_._1) ++ plan.deletes.map(_._1))
+    def struct2(a: (String, DataType), b: (String, DataType)*): StructType =
+      StructType((a +: b).map { case (n, t) => StructField(n, t) })
+    val spans = plan.data.flatMap { case (f, s) =>
+      val row = Row(s.key, s.first, s.end, s.seq, s.firstRowId.map(Long.box).orNull)
+      pathJoinKeys(f.path).map(_ -> row)
+    }.toMap
+    val deleteFirst = plan.deletes
+      .map { case (f, i) => normalizePath(f.path) -> Row(i, f.seq) }.toMap
+    val emits = plan.emits.map { case (i, (ord, id)) => Int.box(i) -> Row(ord, id) }
+    // Java UDFs with explicit result types: no Scala reflection per call
+    def lookup[K](m: Map[K, Row], t: StructType)(missing: K => Row) =
+      udf(new org.apache.spark.sql.api.java.UDF1[K, Row] {
+        override def call(k: K): Row = m.getOrElse(k, missing(k))
+      }, t)
+    val spanType = struct2("key" -> StringType, "first" -> IntegerType,
+      "end" -> IntegerType, "seq" -> LongType, "firstRowId" -> LongType)
+    // a row's file is always planned; a delete row's target may not be
+    val rowSpan = lookup(spans, spanType)(k => throw new IllegalStateException(
+      s"changelog scan read a file outside its plan: $k"))
+    val spanOf = lookup(spans, spanType)(_ => null)
+    val deleteOf = lookup(deleteFirst,
+      struct2("first" -> IntegerType, "seq" -> LongType))(_ => null)
+    val emitAt = lookup(emits,
+      struct2("ordinal" -> IntegerType, "snapshot" -> LongType))(_ => null)
+
+    val read = dataBranches(spark, meta, plan.data.map(_._1), withPos = true,
+        withRowId = withRowId)
+      .reduce(_ unionByName _)
+    val span = rowSpan(normalizedPath(col("__gf_fileraw")))
+    var data = read.select(read.columns.toSeq.map(col) ++ Seq(
+      span("key").as("__gf_file"), span("seq").as("__gf_dataseq"),
+      span("first").as("__gf_first"), span("end").as("__gf_end"),
+      span("firstRowId").as("__gf_firstrow"),
+      lit(null).cast(IntegerType).as("__gf_kill")): _*)
+    // each equality delete that matches a row lowers its kill state to
+    // the first state its delete file is live in
+    val (posFiles, eqFiles) = plan.deletes.map(_._1).partition(_.content == 1)
+    equalityDeletes(spark, meta, eqFiles).foreach { case (dels, cond) =>
+      val del = deleteOf(col("__gf_delfile"))
+      val d = dels.select(dels.columns.toSeq.filter(_ != "__gf_delseq").map(col) ++
+        Seq(del("seq").as("__gf_delseq"), del("first").as("__gf_eqkill")): _*)
+      data = data.join(d, cond, "left").select(data.columns.toSeq.map(c =>
+        if (c == "__gf_kill") least(col(c), col("__gf_eqkill")).as(c) else col(c)): _*)
+    }
+    val keys = Seq("__gf_file", "__gf_pos", "__gf_first", "__gf_end", "__gf_kill")
+    val rowCols = meta.schema.fieldNames.toSeq.map(col) ++
+      (if (withRowId) Seq(
+        coalesce(col("__gf_mrowid"), col("__gf_firstrow") + col("__gf_pos"))
+          .as(RowLineageCol),
+        coalesce(col("__gf_mlseq"), col("__gf_dataseq")).as(LastUpdatedCol))
+      else Nil)
+    val rows = data.select(keys.map(col) ++ rowCols: _*)
+    val outNames = rows.columns.toSeq.drop(keys.size)
+    // a row meets its position deletes, and its copies from several
+    // matching equality deletes, in one (file, pos) group that keeps the
+    // row once with its lowest kill state; a group of delete rows alone
+    // (a position no scanned row holds) has no span and drops out
+    val killed =
+      if (posFiles.isEmpty && eqFiles.isEmpty) rows
+      else {
+        val posKills =
+          if (posFiles.isEmpty) Nil
+          else {
+            val target = spanOf(col("__gf_file"))
+            val del = deleteOf(col("__gf_delfile"))
+            Seq(PositionDeletes.read(spark, posFiles)
+              .where(target.isNotNull && del("seq") >= target("seq"))
+              .select(Seq(target("key").as("__gf_file"), col("pos").as("__gf_pos"),
+                lit(null).cast(IntegerType).as("__gf_first"),
+                lit(null).cast(IntegerType).as("__gf_end"),
+                del("first").as("__gf_kill")) ++
+                outNames.map(n => lit(null).cast(rows.schema(n).dataType).as(n)): _*))
+          }
+        (rows +: posKills).reduce(_ unionByName _)
+          .groupBy("__gf_file", "__gf_pos")
+          .agg(first("__gf_first", ignoreNulls = true).as("__gf_first"),
+            (first("__gf_end", ignoreNulls = true).as("__gf_end") +:
+              min("__gf_kill").as("__gf_kill") +:
+              outNames.map(n => first(n, ignoreNulls = true).as(n))): _*)
+          .where(col("__gf_first").isNotNull)
+      }
+    // the row is live in [first, end): inserted where the span starts,
+    // deleted where it ends, by a snapshot that emits changes
+    val end = least(col("__gf_end"), col("__gf_kill"))
+    def change(tpe: String, at: Column): Column = {
+      val e = emitAt(at)
+      when(end > col("__gf_first") && e.isNotNull,
+        struct(lit(tpe).as("t"), e("ordinal").as("o"), e("snapshot").as("s")))
+    }
+    def notNull(c: Column): Column = org.apache.spark.sql.GraftShim.column(
+      org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+        org.apache.spark.sql.GraftShim.expression(c)))
+    stripFieldIds(killed
+      .select(outNames.map(col) :+ explode(array(
+        change("insert", col("__gf_first")), change("delete", end))).as("__gf_ev"): _*)
+      .where(col("__gf_ev").isNotNull)
+      .select(outNames.map(col) ++ Seq(
+        notNull(col("__gf_ev.t")).as("_change_type"),
+        notNull(col("__gf_ev.o")).as("_change_ordinal"),
+        notNull(col("__gf_ev.s")).as("_commit_snapshot_id")): _*))
+  }
+
+  /** The snapshot `snapshotId` names, else the current one. */
   private def snapshotOf(meta: TableMetadata, snapshotId: Option[Long],
                          tablePath: String): SnapshotInfo = snapshotId match {
     case Some(id) => meta.snapshots.find(_.snapshotId == id).getOrElse(
@@ -2748,6 +2927,13 @@ object IcebergIO {
       s"unknown Iceberg metadata relation: $other")
   }
 
+  /** Live content files of a snapshot as a relation — the `.files`
+    * metadata table the runtime jar exposes: one row per live content
+    * file (file_name is the path's basename so results stay stable
+    * across table locations; content 0 = data, 1 = position deletes,
+    * 2 = equality deletes; partition is the canonical `k=v/k=v` tuple
+    * string, '' for unpartitioned). Metadata grain: rows come from the
+    * manifests, no data file is opened. */
   def files(spark: SparkSession, tablePath: String,
             snapshotId: Option[Long] = None): DataFrame =
     filesOf(spark, loadMetadata(tablePath), tablePath, snapshotId)

@@ -53,7 +53,7 @@ class IcebergPositionDeletesSpec extends AnyFunSuite {
       IcebergWrite.upgradeFormatVersion(spark, dir))
     assert(ids(IcebergIO.read(spark, dir)) === Seq(3L, 4L, 6L))
     assert(jobs.toMap === Map("scan" -> 2, "deleteWhere" -> 3,
-      "readChangelog" -> 6, "rewritePositionDeletes" -> 3,
+      "readChangelog" -> 3, "rewritePositionDeletes" -> 3,
       "upgradeFormatVersion" -> 2))
   }
 
@@ -81,6 +81,30 @@ class IcebergPositionDeletesSpec extends AnyFunSuite {
     assert(jobs.toMap === Map("append" -> 3, "upsert" -> 4, "updateWhere" -> 8,
       "convertEqualityDeletes" -> 7, "rewriteManifests" -> 0,
       "compactWhere" -> 4, "compact" -> 4, "cherrypickSnapshot" -> 0))
+  }
+
+  test("job pin: changelog over append, deleteWhere and upsert on a many-manifest table") {
+    val dir = s"$root/pins_changelog"
+    IcebergWrite.create(spark, dir, schema)
+    (0L until IcebergIO.ParallelManifestThreshold.toLong).foreach(i =>
+      IcebergWrite.append(df(3 * i + 1, 3 * i + 2, 3 * i + 3), dir))
+    assert(IcebergIO.manifests(spark, dir).count() >=
+      IcebergIO.ParallelManifestThreshold)
+    val from = IcebergIO.loadMetadata(dir).currentSnapshotId.get
+    IcebergWrite.append(df(100L, 101L), dir)
+    IcebergWrite.deleteWhere(spark, dir, col("id") === 2L || col("id") === 100L)
+    IcebergWrite.upsert(df(5L, 200L).select(col("id"),
+      org.apache.spark.sql.functions.concat(col("name"),
+        org.apache.spark.sql.functions.lit("'")).as("name"), col("score")),
+      dir, Seq("id"))
+    val jobs = TestSpark.jobs(assert(
+      IcebergIO.readChangelog(spark, dir, fromSnapshotId = Some(from))
+        .select("id", "_change_type", "_change_ordinal").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq.sorted ===
+        Seq((2L, "delete", 1), (5L, "delete", 2), (5L, "insert", 2),
+          (100L, "delete", 1), (100L, "insert", 0), (101L, "insert", 0),
+          (200L, "insert", 2))))
+    assert(jobs === 5)
   }
 
   test("a foreign delete file's optional row column is not read") {
