@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.BpeMerge
+import graft.functions.{BpeMerge, LookupSum}
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
  * All are composed from codegen'd built-ins (no UDFs in the hot path) and
  * are embarrassingly parallel — per-row projections that survive any
  * scale-up; the only aggregations are standard group-bys.
+ *
+ * The five trained text models (unigram, bigram and trigram LMs, Naive
+ * Bayes, hashed-linear) train into driver-side values through bounded
+ * aggregates and score through ONE Column, [[textScores]] — the
+ * [[graft.functions.LookupSum]] kernel. Every scoring entry is a select
+ * over it, so one entry serves a batch frame, a stream and the registry.
  */
 object TextAnalysis {
 
@@ -82,99 +88,184 @@ object TextAnalysis {
       .select(col("e._1").as("tok"), col("e._2").as("cnt"))
   }
 
+  // ---- trained text models: one scorer ---------------------------------
+
+  /** `round(1e6 · ln(num/den))` exactly as Spark evaluates
+    * `round(log(num / den) * 1e6)`: `StrictMath.log` (the function
+    * Spark's `log` calls) and HALF_UP through the double's decimal
+    * string (Spark's `round` on a double). The ONE driver-side spelling
+    * of a micro-nat: every trained model's table goes through it, so the
+    * tables hold what a Spark expression over the same counts would. */
+  def micro(num: Long, den: Long): Long =
+    BigDecimal(StrictMath.log(num.toDouble / den.toDouble) * 1e6)
+      .setScale(0, BigDecimal.RoundingMode.HALF_UP).longValue
+
+  /** A trained text model held on the driver. Every one scores through
+    * [[textScores]]; `table` is the model as the kernel reads it. */
+  sealed trait TextModel {
+    private[operators] def table: LookupSum.Model
+    /** The per-row key array the model's windows run over. */
+    private[operators] def keys(text: Column): Column = tokens(text)
+  }
+
+  /** THE scoring Column of every trained text model: per row, an
+    * `array<bigint>` of micro-nat scores — one per label, labels in the
+    * model's ascending `labels` order, for a classifier; one log-prob sum
+    * for a language model. It is one [[graft.functions.LookupSum]]
+    * kernel over the row's tokens (hashed-linear: its feature slots), a
+    * pure projection: the same Column serves a batch frame, a stream and
+    * the registry. NULL text scores NULL. Building it launches no Spark
+    * job. */
+  def textScores(model: TextModel, text: Column): Column =
+    GraftShim.column(LookupSum(GraftShim.expression(model.keys(text)), model.table))
+
+  /** The top-`vocabSize` tokens with their counts, count descending and
+    * ties to the smaller token: one token-grain aggregate, collected
+    * (≤ `vocabSize` rows). */
+  private def topVocab(docs: DataFrame, textCol: String,
+                       vocabSize: Int): Seq[(String, Long)] = {
+    require(vocabSize > 0, s"vocabSize must be > 0, got $vocabSize")
+    docs.select(explode(tokens(col(textCol))).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+  }
+
+  /** Counts of every n-gram of arity 1..`n` over the token stream with
+    * each token outside `vocab` read as [[LookupSum.Oov]], keyed by the
+    * space-joined tokens (tokens hold no space, so a key's arity is its
+    * space count + 1). N-grams form per row by slicing the mapped array —
+    * no window sorts the corpus — and the one aggregate is collected,
+    * (V+1)^n-bounded. */
+  private def ngramCounts(docs: DataFrame, textCol: String, vocab: Set[String],
+                          n: Int): Map[String, Long] = {
+    val w = col("__w")
+    val grams = (1 to n).map(k => if (k == 1) w else
+      transform(slice(w, lit(1), greatest(size(w) - (k - 1), lit(0))),
+        (_, i) => array_join(slice(w, i + 1, lit(k)), " ")))
+    docs.select(transform(tokens(col(textCol)), t =>
+        when(t.isInCollection(vocab), t).otherwise(lit(LookupSum.Oov))).as("__w"))
+      .select(explode(concat(grams: _*)).as("g"))
+      .groupBy("g").agg(count(lit(1)).as("c"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  /** Per-row language-model frame: `(id, <countName>, lp_sum_micro)`,
+    * the count being the row's n-gram windows. Rows without one (fewer
+    * than n tokens, NULL text) are absent. */
+  private def lmScored(model: TextModel, docs: DataFrame, idCol: String,
+                       textCol: String, countName: String): DataFrame =
+    docs.select(col(idCol).as("id"),
+        (size(tokens(col(textCol))) - lit(model.table.n - 1)).cast("long")
+          .as(countName),
+        textScores(model, col(textCol)).as("__s"))
+      .filter(col(countName) > 0)
+      .select(col("id"), col(countName),
+        element_at(col("__s"), 1).as("lp_sum_micro"))
+
+  /** A trained add-one-smoothed unigram LM: the top-V tokens with their
+    * counts and `nTotal`, the count of ALL tokens (OOV included). A
+    * token scores ln((cnt+1)/(N+V+1)), an OOV token ln(1/(N+V+1)). */
+  final case class UnigramModel(vocab: Map[String, Long], nTotal: Long)
+      extends TextModel {
+    private[operators] lazy val table: LookupSum.Model = {
+      val den = nTotal + vocab.size + 1L
+      LookupSum.Model(1, None,
+        Seq(LookupSum.Level(0, 1, vocab.map { case (t, c) => t -> Seq(micro(c + 1L, den)) })),
+        Seq(micro(1L, den)), Seq(0L))
+    }
+  }
+
+  /** Train [[UnigramModel]]: the top-`vocabSize` vocabulary, then the
+    * token total. */
+  def unigramModel(docs: DataFrame, textCol: String,
+                   vocabSize: Int = 1000): UnigramModel =
+    UnigramModel(topVocab(docs, textCol, vocabSize).toMap,
+      docs.select(explode(tokens(col(textCol)))).count())
+
   /**
    * CCNet-style unigram language-model quality score: per-document mean
    * token log-probability under an add-one-smoothed unigram model fit on
    * the corpus itself (low = rare/garbled tokens; the standard cheap
    * perplexity proxy for corpus filtering). Returns
    * (id, n_toks, lp_sum_micro, avg_logprob) — the exact integer micro-nat
-   * sum alongside the human-readable double mean.
+   * sum alongside the human-readable double mean; NULL-text rows are
+   * absent.
    *
-   * Scale shape (the 100 TB path): the model is a top-`vocabSize`
-   * VOCABULARY aggregate — map-side partial counts, one shuffle bounded
-   * by vocabulary (not corpus) cardinality, top-k via TakeOrdered — and
-   * the resulting ≤vocabSize-row model table is BROADCAST, so scoring is
-   * a map-side hash join plus one per-doc aggregate. Nothing larger than
-   * (id, token) ever shuffles.
+   * Scale shape (the 100 TB path): training is two vocabulary-bounded
+   * aggregates, collected to the driver ([[unigramModel]]); scoring is
+   * one per-row projection ([[textScores]]) — no join, no shuffle.
    *
    * Cross-engine determinism: per-token log-probs are quantized to
-   * integer MICRO-NATS and summed as BIGINT — exact and order-independent
-   * regardless of partitioning; only one final division is floating
-   * point. (`ln` is the single libm call over exact integer ratios, but
-   * Math.log is spec'd to 1 ulp, not correctly rounded, so it need not
-   * bit-match DuckDB's libm: a token whose ln(ratio)*1e6 lands within
-   * ~1 ulp of a .5 rounding boundary could shift lp_micro by 1. The
-   * residual risk is per-token-TYPE and vanishingly small — green on
-   * this corpus — but the determinism is empirical, not guaranteed.)
+   * integer MICRO-NATS ([[micro]]) and summed as BIGINT — exact and
+   * order-independent; only the final mean is floating point. (`ln` is
+   * the single libm call over exact integer ratios; StrictMath need not
+   * bit-match DuckDB's libm, so a token whose ln(ratio)*1e6 lands within
+   * ~1 ulp of a .5 rounding boundary could shift lp_micro by 1 there —
+   * green on this corpus, empirical rather than guaranteed.)
    */
   def unigramLogProb(docs: DataFrame, idCol: String, textCol: String,
-                     vocabSize: Int = 1000): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-      explode(tokens(col(textCol))).as("tok"))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-    // corpus totals: N counts ALL tokens (OOV included), V = model rows
-    val totals = counts.agg(sum("cnt").cast("long").as("n_total"))
-      .crossJoin(vocab.agg(count(lit(1)).cast("long").as("v_size")))
-    toks
-      .join(broadcast(vocab), Seq("tok"), "left")
-      .crossJoin(broadcast(totals))
-      .select(col("id"),
-        round(log((coalesce(col("cnt"), lit(0L)) + lit(1L)).cast("double") /
-            (col("n_total") + col("v_size") + lit(1L)).cast("double")) * 1e6)
-          .cast("long").as("lp_micro"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_toks"),
-        sum("lp_micro").as("lp_sum_micro"))
+                     vocabSize: Int = 1000): DataFrame =
+    unigramLogProb(unigramModel(docs, textCol, vocabSize),
+      docs, idCol, textCol)
+
+  /** Score `docs` (a batch frame or a stream) under a trained
+    * [[UnigramModel]]; the [[unigramLogProb]] output contract. */
+  def unigramLogProb(model: UnigramModel, docs: DataFrame, idCol: String,
+                     textCol: String): DataFrame =
+    lmScored(model, docs, idCol, textCol, "n_toks")
       .select(col("id"), col("n_toks"), col("lp_sum_micro"),
         (col("lp_sum_micro").cast("double") / col("n_toks") / lit(1e6))
           .as("avg_logprob"))
+
+  /** A trained bigram LM: the top-V `vocab` (every other token reads as
+    * OOV first), `c1` the mapped-token counts and `c12` the mapped-pair
+    * counts keyed "w1 w2". A pair scores ln((c12+1)/(c1(w1)+V+1)); an
+    * unseen pair ln(1/(c1(w1)+V+1)), with c1 = 0 for a first token never
+    * seen in training. */
+  final case class BigramModel(vocab: Set[String], c1: Map[String, Long],
+                               c12: Map[String, Long]) extends TextModel {
+    def vSize: Long = vocab.size.toLong
+    private[operators] lazy val table: LookupSum.Model = {
+      def den(w1: String) = c1.getOrElse(w1, 0L) + vSize + 1L
+      LookupSum.Model(2, Some(vocab), Seq(
+        LookupSum.Level(0, 2, c12.map { case (k, c) =>
+          k -> Seq(micro(c + 1L, den(k.substring(0, k.indexOf(' '))))) }),
+        LookupSum.Level(0, 1, c1.map { case (w, _) => w -> Seq(micro(1L, den(w))) })),
+        Seq(micro(1L, vSize + 1L)), Seq(0L))
+    }
+  }
+
+  /** Train [[BigramModel]]: the top-`vocabSize` vocabulary, then one
+    * aggregate of mapped tokens and pairs. */
+  def bigramModel(docs: DataFrame, textCol: String,
+                  vocabSize: Int = 20): BigramModel = {
+    val vocab = topVocab(docs, textCol, vocabSize).map(_._1).toSet
+    val (c1, c12) = ngramCounts(docs, textCol, vocab, 2)
+      .partition { case (k, _) => !k.contains(' ') }
+    BigramModel(vocab, c1, c12)
   }
 
   /**
    * Bigram-LM quality score — the conditional upgrade of
-   * [[unigramLogProb]]: per-doc mean log P(w_i | w_{i-1}) with add-one
+   * [[unigramLogProb]]: per-doc log P(w_i | w_{i-1}) summed, add-one
    * smoothing over a top-`vocabSize` vocabulary (everything else maps to
-   * one OOV bucket FIRST, so the bigram table is bounded by
-   * (vocab+1)² — the corpus-sized raw-bigram shuffle never happens).
-   *
-   * Scale shape: one token-grain shuffle keyed on the doc id (the LAG
-   * window that forms bigrams), vocabulary-bounded count aggregations,
-   * and broadcast model joins; p = (c12+1)/(c1+V+1) over exact integer
-   * counts, quantized to micro-nats and summed as BIGINT (same
-   * determinism envelope as the unigram scorer, incl. the documented
-   * 1-ulp `ln` residual).
+   * one OOV bucket FIRST, so the model is bounded by (vocab+1)²).
+   * Returns (id, n_bigrams, lp_sum_micro); docs with fewer than two
+   * tokens have no bigram and are absent. Same scale shape and
+   * determinism envelope as [[unigramLogProb]] ([[bigramModel]] trains,
+   * [[textScores]] scores).
    */
   def bigramLogProb(docs: DataFrame, idCol: String, textCol: String,
-                    vocabSize: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val bi = mapped.withColumn("w1", lag("w", 1).over(byDoc))
-      .filter(col("w1").isNotNull)
-      .select(col("id"), col("w1"), col("w").as("w2"))
-    // model tables: bounded by (vocab+1) and (vocab+1)^2 — broadcastable
-    val c1 = mapped.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
-    val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val vsize = vocab.agg(count(lit(1)).cast("long").as("v_size"))
-    bi.join(broadcast(c12), Seq("w1", "w2"))
-      .join(broadcast(c1), Seq("w1"))
-      .crossJoin(broadcast(vsize))
-      .select(col("id"),
-        round(log((col("c12") + lit(1L)).cast("double") /
-            (col("c1") + col("v_size") + lit(1L)).cast("double")) * 1e6)
-          .cast("long").as("lp_micro"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_bigrams"),
-        sum("lp_micro").as("lp_sum_micro"))
-  }
+                    vocabSize: Int = 20): DataFrame =
+    bigramLogProb(bigramModel(docs, textCol, vocabSize),
+      docs, idCol, textCol)
+
+  /** Score `docs` (a batch frame or a stream) under a trained
+    * [[BigramModel]]; the [[bigramLogProb]] output contract. */
+  def bigramLogProb(model: BigramModel, docs: DataFrame, idCol: String,
+                    textCol: String): DataFrame =
+    lmScored(model, docs, idCol, textCol, "n_bigrams")
 
   /**
    * C4-style LINE-GRAIN page cleaning (Raffel et al. 2020, the C4
@@ -243,6 +334,53 @@ object TextAnalysis {
     * pure integer addition with zero cross-engine libm exposure. */
   val StupidBackoffPenaltyMicro: Long = -916291L
 
+  /** A trained stupid-backoff trigram LM held on the driver — the
+    * artifact of [[trigramModel]]. `tri` holds only count-pruned
+    * trigrams (`ct >= trigramMin`); `bi` holds ALL bigrams (it serves
+    * both the c12 denominator and, via the `>= bigramMin` check, the
+    * backoff membership); keys are space-joined (tokens come from a space
+    * split, so the separator is collision-free). All maps are
+    * (vocab+1)^arity-bounded. On new text, a token absent from the
+    * training tables backs its unigram count to 1 (a singleton
+    * estimate). */
+  final case class TrigramModel(vocabSet: Set[String],
+                                tri: Map[String, Long],
+                                bi: Map[String, Long],
+                                uni: Map[String, Long], nTotal: Long,
+                                trigramMin: Long, bigramMin: Long)
+      extends TextModel {
+    private[operators] lazy val table: LookupSum.Model = {
+      val pen = StupidBackoffPenaltyMicro
+      def prefix(k: String) = k.substring(0, k.lastIndexOf(' '))
+      LookupSum.Model(3, Some(vocabSet), Seq(
+        LookupSum.Level(0, 3, tri.map { case (k, ct) =>
+          k -> Seq(micro(ct, bi.getOrElse(prefix(k), 1L))) }),
+        LookupSum.Level(1, 3, bi.filter(_._2 >= bigramMin).map { case (k, cb) =>
+          k -> Seq(pen + micro(cb, uni.getOrElse(prefix(k), 1L))) }),
+        LookupSum.Level(2, 3, uni.map { case (w, cu) =>
+          w -> Seq(2 * pen + micro(cu, nTotal)) })),
+        Seq(2 * pen + micro(1L, nTotal)), Seq(0L))
+    }
+  }
+
+  /** Train [[TrigramModel]]: the top-`vocabSize` vocabulary, then one
+    * aggregate of mapped tokens, pairs and triples. */
+  def trigramModel(docs: DataFrame, textCol: String,
+                   vocabSize: Int = 20, trigramMin: Long = 2L,
+                   bigramMin: Long = 2L): TrigramModel = {
+    require(vocabSize >= 1 && vocabSize <= 256,
+      s"vocabSize must be in [1, 256] (the (V+1)^3 trigram table is " +
+        s"collected — keep it bounded), got $vocabSize")
+    require(trigramMin >= 1L && bigramMin >= 1L,
+      "count-pruning thresholds must be >= 1")
+    val vocab = topVocab(docs, textCol, vocabSize).map(_._1).toSet
+    val byArity = ngramCounts(docs, textCol, vocab, 3)
+      .groupBy { case (k, _) => k.count(_ == ' ') }
+      .withDefaultValue(Map.empty[String, Long])
+    TrigramModel(vocab, byArity(2).filter(_._2 >= trigramMin), byArity(1),
+      byArity(0), byArity(0).values.sum, trigramMin, bigramMin)
+  }
+
   /**
    * Trigram STUPID-BACKOFF LM quality score (Brants et al. 2007,
    * "Large Language Models in Machine Translation" — the backoff scheme
@@ -260,167 +398,27 @@ object TextAnalysis {
    * where every observed trigram otherwise has c123 ≥ 1). Scores are
    * log micro-nats: the 0.4 penalty is the fixed integer literal
    * [[StupidBackoffPenaltyMicro]] per backoff level, so only the
-   * count-RATIO ln is libm (the same documented 1-ulp envelope as the
-   * bigram scorer); sums are exact BIGINT, order-independent.
+   * count-RATIO ln is libm (the [[unigramLogProb]] envelope); sums are
+   * exact BIGINT, order-independent.
    *
    * Scale shape: OOV maps to one bucket FIRST, so every model table is
-   * (vocab+1)^arity-bounded — (V+1)³ at worst — and broadcast; the
-   * token-grain work is the one LAG shuffle keyed on doc id plus
-   * map-side joins. Returns (id, n_trigrams, lp_sum_micro). Docs with
-   * fewer than 3 tokens have no trigram and are absent.
+   * (vocab+1)^arity-bounded; [[trigramModel]] trains, [[textScores]]
+   * scores each row with the three levels as one kernel's backoff.
+   * Returns (id, n_trigrams, lp_sum_micro). Docs with fewer than 3
+   * tokens have no trigram and are absent.
    */
   def trigramStupidBackoff(docs: DataFrame, idCol: String, textCol: String,
                            vocabSize: Int = 20, trigramMin: Long = 2L,
-                           bigramMin: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(vocabSize >= 1 && vocabSize <= 256,
-      s"vocabSize must be in [1, 256] (the (V+1)^3 trigram table is " +
-        s"broadcast — keep it bounded), got $vocabSize")
-    require(trigramMin >= 1L && bigramMin >= 1L,
-      "count-pruning thresholds must be >= 1")
-    val pen = lit(StupidBackoffPenaltyMicro)
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val tri = mapped
-      .withColumn("w2", lag("w", 1).over(byDoc))
-      .withColumn("w1", lag("w", 2).over(byDoc))
-      .filter(col("w1").isNotNull)
-      .select(col("id"), col("w1"), col("w2"), col("w").as("w3"))
-    val uni = mapped.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-    val bi = mapped.withColumn("wp", lag("w", 1).over(byDoc))
-      .filter(col("wp").isNotNull)
-      .groupBy(col("wp").as("b1"), col("w").as("b2"))
-      .agg(count(lit(1)).as("cb"))
-    val triKept = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ct"))
-      .filter(col("ct") >= lit(trigramMin))
-    val nTotal = mapped.agg(count(lit(1)).cast("long").as("n_total"))
-    val lnMicro = (num: Column, den: Column) =>
-      round(log(num.cast("double") / den.cast("double")) * 1e6).cast("long")
-    tri
-      .join(broadcast(triKept), Seq("w1", "w2", "w3"), "left")
-      .join(broadcast(bi.select(col("b1").as("w1"), col("b2").as("w2"),
-        col("cb").as("c12"))), Seq("w1", "w2"))
-      .join(broadcast(bi.filter(col("cb") >= lit(bigramMin))
-        .select(col("b1").as("w2"), col("b2").as("w3"),
-          col("cb").as("c23"))), Seq("w2", "w3"), "left")
-      .join(broadcast(uni.select(col("w").as("w2"), col("cu").as("c2"))),
-        Seq("w2"))
-      .join(broadcast(uni.select(col("w").as("w3"), col("cu").as("c3"))),
-        Seq("w3"))
-      .crossJoin(broadcast(nTotal))
-      .select(col("id"),
-        when(col("ct").isNotNull, lnMicro(col("ct"), col("c12")))
-          .when(col("c23").isNotNull,
-            pen + lnMicro(col("c23"), col("c2")))
-          .otherwise(pen + pen + lnMicro(col("c3"), col("n_total")))
-          .as("lp_micro"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_trigrams"),
-        sum("lp_micro").as("lp_sum_micro"))
-  }
+                           bigramMin: Long = 2L): DataFrame =
+    trigramStupidBackoff(
+      trigramModel(docs, textCol, vocabSize, trigramMin, bigramMin),
+      docs, idCol, textCol)
 
-  /** A trained stupid-backoff trigram LM as driver-side literals — the
-    * deployable artifact of [[trigramStupidBackoff]]'s training pass.
-    * `tri` holds only count-pruned trigrams (`ct >= trigramMin`); `bi`
-    * holds ALL bigrams (it serves both the c12 denominator and, via the
-    * `>= bigramMin` check at lookup, the backoff membership); keys are
-    * space-joined (tokens come from a space split, so the separator is
-    * collision-free). All maps are (vocab+1)^arity-bounded. */
-  final case class TrigramModel(vocabSet: Set[String],
-                                tri: Map[String, Long],
-                                bi: Map[String, Long],
-                                uni: Map[String, Long], nTotal: Long,
-                                trigramMin: Long, bigramMin: Long)
-
-  /** Train the trigram model batch-side — the exact table derivation of
-    * [[trigramStupidBackoff]], collected (bounded by (V+1)³). */
-  def trigramModel(docs: DataFrame, idCol: String, textCol: String,
-                   vocabSize: Int = 20, trigramMin: Long = 2L,
-                   bigramMin: Long = 2L): TrigramModel = {
-    import org.apache.spark.sql.expressions.Window
-    require(vocabSize >= 1 && vocabSize <= 256,
-      s"vocabSize must be in [1, 256], got $vocabSize")
-    require(trigramMin >= 1L && bigramMin >= 1L,
-      "count-pruning thresholds must be >= 1")
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val triC = mapped
-      .withColumn("w2", lag("w", 1).over(byDoc))
-      .withColumn("w1", lag("w", 2).over(byDoc))
-      .filter(col("w1").isNotNull)
-      .groupBy(col("w1"), col("w2"), col("w").as("w3"))
-      .agg(count(lit(1)).as("ct"))
-      .filter(col("ct") >= lit(trigramMin))
-      .collect().map(r => (r.getString(0) + " " + r.getString(1) + " " +
-        r.getString(2)) -> r.getLong(3)).toMap
-    val biC = mapped.withColumn("wp", lag("w", 1).over(byDoc))
-      .filter(col("wp").isNotNull)
-      .groupBy(col("wp"), col("w"))
-      .agg(count(lit(1)).as("cb"))
-      .collect().map(r =>
-        (r.getString(0) + " " + r.getString(1)) -> r.getLong(2)).toMap
-    val uniC = mapped.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    TrigramModel(vocab.collect().map(_.getString(0)).toSet, triC, biC,
-      uniC, uniC.values.sum, trigramMin, bigramMin)
-  }
-
-  /** Per-row stupid-backoff scoring Columns — the FOLD form of
-    * [[trigramStupidBackoff]]'s inference for a trained
-    * [[TrigramModel]] (map literals, one pure projection — no join, no
-    * window, streaming-safe) and bit-equal to the batch scorer on every
-    * doc both emit (same three-branch CASE, same pruning predicates).
-    * On NEW text, a token absent from the training tables backs its
-    * unigram count to 1 (a singleton estimate — the batch form never
-    * meets this case on its own corpus). Returns
-    * (n_trigrams, lp_sum_micro); docs under 3 tokens fold to (0, 0). */
-  def trigramScoreColumns(m: TrigramModel, text: Column): (Column, Column) = {
-    val sep = " "
-    val pen = lit(StupidBackoffPenaltyMicro)
-    val t = tokens(text)
-    val mapped = transform(t, w =>
-      when(w.isInCollection(m.vocabSet), w).otherwise(lit("<oov>")))
-    val len3 = greatest(size(mapped) - lit(2), lit(0))
-    val trips = arrays_zip(
-      slice(mapped, lit(1), len3),
-      slice(mapped, lit(2), len3),
-      slice(mapped, lit(3), len3))
-    def lnM(num: Column, den: Column): Column =
-      round(log(num.cast("double") / den.cast("double")) * 1e6).cast("long")
-    val lps = transform(trips, p => {
-      val ct = element_at(typedLit(m.tri),
-        concat(p.getField("0"), lit(sep), p.getField("1"), lit(sep),
-          p.getField("2")))
-      val c12 = coalesce(element_at(typedLit(m.bi),
-        concat(p.getField("0"), lit(sep), p.getField("1"))), lit(1L))
-      val c23 = element_at(typedLit(m.bi),
-        concat(p.getField("1"), lit(sep), p.getField("2")))
-      val c2 = coalesce(element_at(typedLit(m.uni), p.getField("1")), lit(1L))
-      val c3 = coalesce(element_at(typedLit(m.uni), p.getField("2")), lit(1L))
-      when(ct.isNotNull, lnM(ct, c12))
-        .when(c23.isNotNull && c23 >= lit(m.bigramMin),
-          pen + lnM(c23, c2))
-        .otherwise(pen + pen + lnM(c3, lit(m.nTotal)))
-    })
-    // |trips| = max(|tokens| - 2, 0) exactly — don't size(lps) (the
-    // r16 duplication trap would re-run every map lookup just to count)
-    (greatest(size(t).cast("long") - lit(2L), lit(0L)),
-      coalesce(aggregate(lps, lit(0L), (acc, x) => acc + x), lit(0L)))
-  }
+  /** Score `docs` (a batch frame or a stream) under a trained
+    * [[TrigramModel]]; the [[trigramStupidBackoff]] output contract. */
+  def trigramStupidBackoff(model: TrigramModel, docs: DataFrame, idCol: String,
+                           textCol: String): DataFrame =
+    lmScored(model, docs, idCol, textCol, "n_trigrams")
 
   /** Hashing-trick linear scorer over token BIGRAMS — the plumbing of a
     * fastText-style model-based quality filter: each bigram hashes into
@@ -460,85 +458,6 @@ object TextAnalysis {
       .groupBy("id")
       .agg(count(lit(1)).cast("long").as("n_bigrams"),
         sum("w_micro").as("score_sum_micro"))
-  }
-
-  /** A trained bigram LM, the deployable artifact of [[bigramLogProb]]'s
-    * training pass: `vocab` (tok, in_v) for the OOV mapping, `c1`/`c12`
-    * the smoothed-probability count tables (all (vocab+1)²-bounded —
-    * broadcastable), `vSize` the vocabulary size. Consumed by
-    * [[graft.streaming.StreamingOps.scoreStreamBigram]]. */
-  final case class BigramModel(vocab: DataFrame, c1: DataFrame,
-                               c12: DataFrame, vSize: Long)
-
-  /** Train the bigram model batch-side (same derivation as
-    * [[bigramLogProb]]'s internal tables: top-`vocabSize` vocabulary,
-    * OOV mapped FIRST, unigram + bigram counts over the mapped stream). */
-  def bigramModel(docs: DataFrame, idCol: String, textCol: String,
-                  vocabSize: Int = 20): BigramModel = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val bi = mapped.withColumn("w1", lag("w", 1).over(byDoc))
-      .filter(col("w1").isNotNull)
-      .select(col("id"), col("w1"), col("w").as("w2"))
-    val c1 = mapped.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
-    val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    BigramModel(vocab, c1, c12, vocab.count())
-  }
-
-  /** Per-row bigram-LM scoring Columns — the FOLD form of
-    * [[bigramLogProb]]'s inference pass for a TRAINED [[BigramModel]]:
-    * the model's (vocab+1)²-bounded count tables collapse into map
-    * literals and each document scores in one pure projection (no
-    * explode to a row fan-out, no join, no aggregation, no window) —
-    * the shape a streaming gate needs ([[graft.streaming.StreamingOps
-    * .curateStream]]'s `lmGate`) and bit-equal to the batch scorer on
-    * every doc both emit. Returns (n_bigrams, lp_sum_micro); a bigram
-    * UNSEEN in training scores with c12 = 0 under the same add-one
-    * smoothing (the batch trainer never emits such a pair for its own
-    * corpus, so bit-equality against [[bigramLogProb]] holds on the
-    * training corpus; on NEW text this fold is the definition).
-    * Single-token docs have no bigram: n_bigrams = 0, lp_sum_micro = 0.
-    *
-    * 100 TB shape: model state is O((vocab+1)²) literals riding the
-    * closure — vocabularies beyond literal scale belong to
-    * [[hashedLinearTrain]]'s hashing-trick family instead. */
-  def bigramScoreColumns(m: BigramModel, text: Column): (Column, Column) = {
-    // ' ' joins the pair key: tokens come from a space-split, so a
-    // space can never occur INSIDE a token and the key is unambiguous
-    // (an '_' or '|' separator could collide with token content)
-    val sep = " "
-    val vocabSet = m.vocab.collect().map(_.getString(0)).toSet
-    val c1m = m.c1.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val c12m = m.c12.collect()
-      .map(r => (r.getString(0) + sep + r.getString(1)) -> r.getLong(2)).toMap
-    val t = tokens(text)
-    val mapped = transform(t, w =>
-      when(w.isInCollection(vocabSet), w).otherwise(lit("<oov>")))
-    val pairs = arrays_zip(
-      slice(mapped, lit(1), size(mapped) - 1),
-      slice(mapped, lit(2), size(mapped) - 1))
-    val lps = transform(pairs, p => {
-      val c12v = coalesce(
-        element_at(typedLit(c12m),
-          concat(p.getField("0"), lit(sep), p.getField("1"))), lit(0L))
-      val c1v = coalesce(element_at(typedLit(c1m), p.getField("0")), lit(0L))
-      round(log((c12v + lit(1L)).cast("double") /
-          (c1v + lit(m.vSize) + lit(1L)).cast("double")) * 1e6).cast("long")
-    })
-    // the count does NOT reference `lps` — a Column val INLINES its
-    // whole tree at every reference (the r16 column-duplication trap),
-    // and size(lps) would re-run every map lookup just to count;
-    // |pairs| = |tokens| - 1 exactly (split always yields >= 1 token)
-    (size(t).cast("long") - lit(1L),
-      coalesce(aggregate(lps, lit(0L), (acc, x) => acc + x), lit(0L)))
   }
 
   /** Exact floor-division mean score in micro-nats — the ONE spelling
@@ -889,104 +808,128 @@ object TextAnalysis {
       .select("id", "tok", "rnk", "score_micro")
   }
 
-  /** A trained multinomial Naive Bayes text classifier — the deployable
-    * artifact of [[nbTrain]]: `vocab` (tok) the top-V vocabulary,
-    * `clsTok` (label, tok, ctk) per-class token counts over vocab
-    * tokens, `clsTot` (label, ctot) per-class TOTAL token counts (OOV
-    * included — the multinomial denominator), `prior` (label,
-    * prior_micro) the log-prior in integer micro-nats, `vSize` the
-    * vocabulary size. All tables are bounded by V (vocabulary) × L
-    * (labels) — broadcastable at any corpus scale. Consumed by
-    * [[nbPredict]] and the streaming twin
-    * [[graft.streaming.StreamingOps.nbPredictStream]]. */
-  final case class NbModel(vocab: DataFrame, clsTok: DataFrame,
-                           clsTot: DataFrame, prior: DataFrame, vSize: Long)
+  /** Documents per label (the prior's counts), collected — L rows. A
+    * NULL label fails: it would score as a class of its own. */
+  private def labelDocs(docs: DataFrame, labelCol: String): Map[String, Long] = {
+    val byLabel = docs.groupBy(col(labelCol).cast("string")).count()
+      .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    require(!byLabel.contains(None),
+      s"training labels must be non-NULL: column '$labelCol' holds NULL")
+    byLabel.map { case (l, c) => l.get -> c }
+  }
+
+  /** The log-priors ln(cdocs/n_docs) in micro-nats. */
+  private def logPriors(cdocs: Map[String, Long]): Map[String, Long] = {
+    val n = cdocs.values.sum
+    cdocs.map { case (l, c) => l -> micro(c, n) }
+  }
+
+  /** The kernel table of a Laplace-smoothed label-count classifier (NB
+    * over vocabulary tokens, hashed-linear over slots): per label l, a
+    * key counted c times weighs ln((c+1)/(ctot_l+k+1)), an unseen key
+    * ln(1/(ctot_l+k+1)), and every row starts from the log-prior. */
+  private def labelCountTable[K](labels: Seq[String], counts: Map[(String, K), Long],
+                                 ctot: Map[String, Long], prior: Map[String, Long],
+                                 k: Long): LookupSum.Model = {
+    val den = labels.map(l => ctot(l) + k + 1L)
+    val byKey = counts.groupBy(_._1._2).map { case (key, rows) =>
+      key -> labels.indices.map(i =>
+        micro(rows.getOrElse((labels(i), key), 0L) + 1L, den(i)))
+    }
+    LookupSum.Model(1, None, Seq(LookupSum.Level(0, 1, byKey)),
+      den.map(micro(1L, _)), labels.map(prior))
+  }
+
+  /** A trained multinomial Naive Bayes text classifier held on the
+    * driver — the artifact of [[nbTrain]]: `vocab` the top-V vocabulary,
+    * `clsTok` per-(label, tok) counts over vocab tokens, `clsTot`
+    * per-label TOTAL token counts (OOV included — the multinomial
+    * denominator), `prior` the log-prior in integer micro-nats, `vSize`
+    * the vocabulary size. All are bounded by V (vocabulary) × L
+    * (labels). `labels` (ascending) index every score array. */
+  final case class NbModel(vocab: Seq[String], clsTok: Map[(String, String), Long],
+                           clsTot: Map[String, Long], prior: Map[String, Long],
+                           vSize: Long) extends TextModel {
+    val labels: Seq[String] = clsTot.keys.toSeq.sorted
+    private[operators] lazy val table: LookupSum.Model =
+      labelCountTable(labels, clsTok, clsTot, prior, vSize)
+  }
 
   /** Train a multinomial Naive Bayes classifier over labeled documents
     * (the model-based quality/domain filter of a curation pipeline —
     * CCNet/fastText shape, reduced to pure count aggregates so training
-    * is exact, distributed, and SQL-replayable). One token-grain shuffle
-    * builds the vocabulary and the per-class counts; priors come from
-    * per-class DOCUMENT counts. Laplace (add-one) smoothing throughout:
-    * P(tok|c) = (ctk+1)/(ctot+V+1), with every token outside the top-V
-    * vocabulary falling to the OOV mass 1/(ctot+V+1). Probabilities are
-    * quantized to integer MICRO-NATS (the [[unigramLogProb]] envelope:
-    * exact counts, one `ln` per distinct (token, label), BIGINT sums —
-    * order-independent under any partitioning). */
-  def nbTrain(docs: DataFrame, idCol: String, textCol: String,
-              labelCol: String, vocabSize: Int = 1000): NbModel = {
-    val toks = docs.select(col(labelCol).as("label"),
-      explode(tokens(col(textCol))).as("tok"))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select("tok")
-    val clsTok = toks.join(broadcast(vocab), Seq("tok"))
-      .groupBy("label", "tok").agg(count(lit(1)).as("ctk"))
-    val clsTot = toks.groupBy("label").agg(count(lit(1)).as("ctot"))
-    val nDocs = docs.agg(count(lit(1)).cast("long").as("n_docs"))
-    val prior = docs.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("cdocs"))
-      .crossJoin(broadcast(nDocs))
-      .select(col("label"),
-        round(log(col("cdocs").cast("double") / col("n_docs").cast("double"))
-          * 1e6).cast("long").as("prior_micro"))
-    NbModel(vocab, clsTok, clsTot, prior, vocab.count())
+    * is exact, distributed, and SQL-replayable). Three bounded
+    * aggregates, collected: the vocabulary, the per-(label, token)
+    * counts, the per-label DOCUMENT counts behind the priors. Laplace
+    * (add-one) smoothing throughout: P(tok|c) = (ctk+1)/(ctot+V+1), with
+    * every token outside the top-V vocabulary falling to the OOV mass
+    * 1/(ctot+V+1). Probabilities are quantized to integer MICRO-NATS
+    * ([[micro]], the [[unigramLogProb]] envelope). A NULL label fails. */
+  def nbTrain(docs: DataFrame, textCol: String, labelCol: String,
+              vocabSize: Int = 1000): NbModel = {
+    val vocab = topVocab(docs, textCol, vocabSize).map(_._1)
+    val cdocs = labelDocs(docs, labelCol)
+    // (label, vocab token or NULL for OOV) -> count
+    val counts = docs.select(col(labelCol).cast("string").as("label"),
+        explode(tokens(col(textCol))).as("tok"))
+      .groupBy(col("label"),
+        when(col("tok").isInCollection(vocab), col("tok")).as("tok"))
+      .count().collect()
+      .map(r => (r.getString(0), Option(r.getString(1))) -> r.getLong(2))
+    NbModel(vocab,
+      counts.collect { case ((l, Some(t)), c) => (l, t) -> c }.toMap,
+      counts.groupMapReduce(_._1._1)(_._2)(_ + _), logPriors(cdocs),
+      vocab.size.toLong)
   }
 
   /** Score documents against every class of a trained [[NbModel]] and
     * keep the argmax: predicted label + its total score in micro-nats.
     * Ties break to the lexicographically smallest label (exact in
-    * integer space, so deterministic cross-engine).
-    *
-    * Scale shape: the only fan-out is tokens × L (labels — single
-    * digits in practice) through BROADCAST joins, immediately collapsed
-    * by a map-side-combined (id, label) aggregate; the final argmax is
-    * a per-doc window over L rows. No corpus-sized model join, no
-    * driver loop — every model table is V×L-bounded and broadcast.
-    * Docs whose text produces no tokens are absent from the output
-    * (`split` never returns an empty array, so only null text drops). */
+    * integer space, so deterministic cross-engine). One per-row
+    * projection over [[textScores]] — no join, no shuffle — so the same
+    * entry classifies a stream. NULL-text rows are absent. */
   def nbPredict(model: NbModel, docs: DataFrame, idCol: String,
-                textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("id"),
-      explode(tokens(col(textCol))).as("tok"))
-    val labels = model.clsTot.select(col("label"), col("ctot"))
-    val scored = toks
-      .crossJoin(broadcast(labels))
-      .join(broadcast(model.clsTok), Seq("label", "tok"), "left")
-      .select(col("id"), col("label"),
-        round(log((coalesce(col("ctk"), lit(0L)) + lit(1L)).cast("double") /
-            (col("ctot") + lit(model.vSize + 1L)).cast("double")) * 1e6)
-          .cast("long").as("lp_micro"))
-      .groupBy("id", "label").agg(sum("lp_micro").as("tok_lp"))
-      .join(broadcast(model.prior), Seq("label"))
-      .select(col("id"), col("label"),
-        (col("tok_lp") + col("prior_micro")).as("score_micro"))
-    val byDoc = Window.partitionBy("id")
-      .orderBy(col("score_micro").desc, col("label"))
-    scored.withColumn("rn", row_number().over(byDoc))
-      .filter(col("rn") === 1)
-      .select(col("id"), col("label").as("pred"), col("score_micro"))
-  }
+                textCol: String): DataFrame =
+    predicted(model, model.labels, docs, idCol, textCol)
 
   /** Persist a trained [[NbModel]] as parquet under `dir` (the
     * train-once / serve-everywhere artifact: a later batch job, a
     * streaming query, or another cluster loads it without re-reading
     * the training corpus). Four tiny V×L-bounded tables plus a 1-row
     * meta frame carrying `vSize`; written with overwrite so recomputed
-    * models replace cleanly. (Recompute from the CORPUS before
-    * re-saving — overwriting a dir with a model LOADED from that same
-    * dir is Spark's generic self-overwrite trap.) */
+    * models replace cleanly. */
   def saveNbModel(model: NbModel, dir: String): Unit = {
-    model.vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-    model.clsTok.write.mode("overwrite").parquet(s"$dir/cls_tok")
-    model.clsTot.write.mode("overwrite").parquet(s"$dir/cls_tot")
-    model.prior.write.mode("overwrite").parquet(s"$dir/prior")
-    val spark = model.vocab.sparkSession
-    import spark.implicits._
-    Seq(model.vSize).toDF("v_size")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    saveTable(model.vocab.map(Tuple1(_)), s"$dir/vocab", "tok STRING NOT NULL")
+    saveTable(model.clsTok.toSeq.map { case ((l, t), c) => (l, t, c) },
+      s"$dir/cls_tok", "label STRING, tok STRING NOT NULL, ctk BIGINT NOT NULL")
+    saveLabelTables(model.clsTot, model.prior, dir)
+    saveTable(Seq(Tuple1(model.vSize)), s"$dir/meta", "v_size BIGINT NOT NULL")
   }
+
+  /** Overwrite one persisted model table, `ddl` its parquet schema. */
+  private def saveTable(rows: Seq[Product], path: String, ddl: String): Unit =
+    org.apache.spark.sql.SparkSession.active.createDataFrame(
+        java.util.Arrays.asList(rows.map(org.apache.spark.sql.Row.fromTuple): _*),
+        org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .write.mode("overwrite").parquet(path)
+
+  /** The per-label tables both classifiers persist: `cls_tot` and
+    * `prior`. */
+  private def saveLabelTables(clsTot: Map[String, Long], prior: Map[String, Long],
+                              dir: String): Unit = {
+    saveTable(clsTot.toSeq, s"$dir/cls_tot", "label STRING, ctot BIGINT NOT NULL")
+    saveTable(prior.toSeq, s"$dir/prior", "label STRING, prior_micro BIGINT")
+  }
+
+  /** A persisted model table's rows, collected. */
+  private def loadTable(spark: org.apache.spark.sql.SparkSession,
+                        path: String): Seq[org.apache.spark.sql.Row] =
+    spark.read.parquet(path).collect().toSeq
+
+  /** `label → value` of a persisted per-label table. */
+  private def loadByLabel(spark: org.apache.spark.sql.SparkSession, path: String,
+                          col: String): Map[String, Long] =
+    loadTable(spark, path).map(r => r.getAs[String]("label") -> r.getAs[Long](col)).toMap
 
   /** Load a model persisted by [[saveNbModel]]; predictions from the
     * loaded model are bit-equal to the in-memory one (exact integer
@@ -994,11 +937,12 @@ object TextAnalysis {
   def loadNbModel(spark: org.apache.spark.sql.SparkSession,
                   dir: String): NbModel =
     NbModel(
-      vocab = spark.read.parquet(s"$dir/vocab"),
-      clsTok = spark.read.parquet(s"$dir/cls_tok"),
-      clsTot = spark.read.parquet(s"$dir/cls_tot"),
-      prior = spark.read.parquet(s"$dir/prior"),
-      vSize = spark.read.parquet(s"$dir/meta").head.getLong(0))
+      vocab = loadTable(spark, s"$dir/vocab").map(_.getAs[String]("tok")),
+      clsTok = loadTable(spark, s"$dir/cls_tok").map(r => (r.getAs[String]("label"),
+        r.getAs[String]("tok")) -> r.getAs[Long]("ctk")).toMap,
+      clsTot = loadByLabel(spark, s"$dir/cls_tot", "ctot"),
+      prior = loadByLabel(spark, s"$dir/prior", "prior_micro"),
+      vSize = loadTable(spark, s"$dir/meta").head.getAs[Long]("v_size"))
 
   /** Collect [[trainBpeMerges]]' (merge_rank, lhs, rhs) frame into the
     * ordered in-memory merge list the apply-side helpers take — the ONE
@@ -1035,139 +979,56 @@ object TextAnalysis {
     * serving splits into [[nbTrain]] + [[nbPredict]]). */
   def nbClassify(docs: DataFrame, idCol: String, textCol: String,
                  labelCol: String, vocabSize: Int = 1000): DataFrame =
-    nbPredict(nbTrain(docs, idCol, textCol, labelCol, vocabSize),
+    nbPredict(nbTrain(docs, textCol, labelCol, vocabSize),
       docs, idCol, textCol)
 
-  /** The per-row NB score ARRAY (one micro-nat log-posterior per label,
-    * labels sorted ascending) over a text Column, built from a
-    * driver-materialized model — the per-row fold shared by
-    * [[nbPredictFold]] and the streaming curation gate
-    * ([[graft.streaming.StreamingOps.curateStream]]). Returns the
-    * scores Column and the sorted label list (index i of the array is
-    * labels(i)); derive the prediction with [[nbPredFromScores]].
-    *
-    * `shards` splits the V×L token LUT into that many independent map
-    * literals whose per-shard folds SUM (long addition is associative —
-    * results are bit-equal to the single-literal form, pinned in
-    * OperatorsSpec): the escape hatch for vocabularies past broadcast
-    * comfort (~100 MB of literals in one expression), same shape as the
-    * PQ codebook boundary. OOV mass is added once via the token count
-    * minus the across-shard match count. */
-  def nbScoreArray(model: NbModel, text: Column,
-                   shards: Int = 1): (Column, Seq[String]) = {
-    require(shards >= 1, "shards must be >= 1")
-    // Spark's `round` routes doubles through Scala BigDecimal (the
-    // toString-based constructor) with HALF_UP — replicate exactly
-    def micro(num: Long, den: Long): Long =
-      BigDecimal(Math.log(num.toDouble / den.toDouble) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).longValue
-    val labels: Seq[String] = model.prior.select("label")
-      .collect().map(_.getString(0)).sorted.toSeq
-    val ctot: Map[String, Long] = model.clsTot.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val priorMicro: Map[String, Long] = model.prior.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val den = labels.map(l => ctot(l) + model.vSize + 1L)
-    val oovArr: Seq[Long] = den.map(d => micro(1L, d))
-    val priorArr: Seq[Long] = labels.map(priorMicro)
-    val tokMap: Map[String, Seq[Long]] = model.clsTok.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .groupBy(_._2)
-      .map { case (tok, rows) =>
-        val byLabel = rows.map(t => t._1 -> t._3).toMap
-        tok -> labels.indices.map(i =>
-          micro(byLabel.getOrElse(labels(i), 0L) + 1L, den(i))).toSeq
-      }
-    val oov = typedLit(oovArr)
-    val scores =
-      if (shards == 1) {
-        val lut = typedLit(tokMap)
-        aggregate(
-          tokens(text), typedLit(priorArr),
-          (acc, tok) => zip_with(acc,
-            coalesce(element_at(lut, tok), oov), (a, b) => a + b))
-      } else {
-        // deterministic split on the token's hash (any partition is
-        // correct — per-shard sums are order-independent long additions;
-        // String.hashCode is spec-defined, stable across JVMs)
-        val byShard: Map[Int, Map[String, Seq[Long]]] = tokMap.groupBy {
-          case (tok, _) => math.floorMod(tok.hashCode, shards)
-        }
-        val zeros = typedLit(labels.map(_ => 0L))
-        val toks = tokens(text)
-        val parts: Seq[(Column, Column)] = (0 until shards).map { s =>
-          val lutS = typedLit(byShard.getOrElse(s, Map.empty[String, Seq[Long]]))
-          val sum = aggregate(toks, zeros, (acc, t) => zip_with(acc,
-            coalesce(element_at(lutS, t), zeros), (a, b) => a + b))
-          val matched = aggregate(toks, lit(0L), (acc, t) =>
-            acc + when(element_at(lutS, t).isNotNull, lit(1L))
-              .otherwise(lit(0L)))
-          (sum, matched)
-        }
-        val oovCount = size(toks).cast("long") - parts.map(_._2).reduce(_ + _)
-        val shardSum = parts.map(_._1)
-          .reduce((a, b) => zip_with(a, b, (x, y) => x + y))
-        zip_with(zip_with(typedLit(priorArr), shardSum, (a, b) => a + b),
-          oov, (a, o) => a + o * oovCount)
-      }
-    (scores, labels)
-  }
-
-  /** The argmax label off an [[nbScoreArray]] scores Column —
-    * score-desc/label-asc tie-break, identical to [[nbPredict]]'s
-    * window form (array_position returns the FIRST max, labels sorted
-    * ascending). */
-  def nbPredFromScores(scores: Column, labels: Seq[String]): Column =
+  /** The argmax label of a [[textScores]] array — score-desc/label-asc
+    * tie-break (`array_position` returns the FIRST max and `labels` is
+    * ascending). `scores` must be a bound column: it is read twice. */
+  def predictedLabel(scores: Column, labels: Seq[String]): Column =
     element_at(typedLit(labels),
       array_position(scores, array_max(scores)).cast("int"))
 
-  /** The broadcast-fold serving form of [[nbPredict]] — the model
-    * collapsed to LITERALS (token → per-label log-prob array, one OOV
-    * array, one prior array) and the whole classification computed as a
-    * PURE PER-ROW PROJECTION: one SQL `aggregate` fold over the token
-    * array summing L-length vectors, then an argmax. No join, no
-    * aggregation, no window — so the SAME operator runs on an
-    * append-mode stream ([[graft.streaming.StreamingOps.nbPredictStream]])
-    * and is bit-equal to the batch argmax (`array_position` of the max
-    * returns the FIRST hit, and `labels` is sorted ascending — the same
-    * score-desc/label-asc tie-break).
-    *
-    * Driver-side model materialization is V×L longs (~1000 tokens × a
-    * handful of labels = KBs); the per-token log-probs replicate the
-    * distributed scorer's arithmetic exactly — same JVM `Math.log`,
-    * same HALF_UP rounding as Spark's `round`. Boundary: at V×L beyond
-    * broadcast comfort (~100 MB of literals in one expression) pass
-    * `shards > 1` — the LUT splits into that many map literals whose
-    * per-shard folds sum, bit-equal to the single-literal form (same
-    * shape as the PQ broadcast boundary; pinned in OperatorsSpec). */
-  def nbPredictFold(model: NbModel, docs: DataFrame, idCol: String,
-                    textCol: String, shards: Int = 1): DataFrame = {
-    val (scores, labels) = nbScoreArray(model, col(textCol), shards)
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), scores.as("scores"))
-      .select(col("id"),
-        nbPredFromScores(col("scores"), labels).as("pred"),
-        array_max(col("scores")).as("score_micro"))
-  }
+  /** `(id, pred, score_micro)` of a classifier over non-NULL text. */
+  private def predicted(model: TextModel, labels: Seq[String], docs: DataFrame,
+                        idCol: String, textCol: String): DataFrame =
+    scored(model, docs, idCol, textCol)
+      .select(col("id"), predictedLabel(col("__s"), labels).as("pred"),
+        array_max(col("__s")).as("score_micro"))
+
+  /** `(id, __s)`: each row's [[textScores]], NULL-text rows dropped by an
+    * explode rather than a filter — Catalyst pushes a filter below the
+    * projections that compute the text, evaluating them twice. */
+  private def scored(model: TextModel, docs: DataFrame, idCol: String,
+                     textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), explode(filter(
+      array(textScores(model, col(textCol))), _.isNotNull)).as("__s"))
 
   // ---- fastText-style hashed n-gram LINEAR classifier -----------------
 
-  /** The deployable artifact of [[hashedLinearTrain]] — the
-    * fastText-shaped quality/domain router: linear inference over
-    * HASHED unigram + bigram features (the hashing trick bounds the
-    * feature space at `buckets` slots regardless of corpus vocabulary,
-    * so the model is O(buckets × labels) at ANY corpus scale — no
-    * vocabulary selection pass, bigrams included for word order).
-    * `bucketTok` (label, slot, ctk) per-class slot counts, `clsTot`
-    * (label, ctot) per-class total feature counts, `prior` (label,
-    * prior_micro) — all broadcastable. Training is closed-form count
-    * aggregation (the NB likelihood over the hashed feature space —
-    * exact, distributed, one shuffle, SQL-replayable) rather than
+  /** The deployable artifact of [[hashedLinearTrain]], held on the
+    * driver — the fastText-shaped quality/domain router: linear
+    * inference over HASHED unigram + bigram features (the hashing trick
+    * bounds the feature space at `buckets` slots regardless of corpus
+    * vocabulary, so the model is O(buckets × labels) at ANY corpus scale
+    * — no vocabulary selection pass, bigrams included for word order).
+    * `bucketTok` per-(label, slot) counts, `clsTot` per-label total
+    * feature counts, `prior` the log-prior in micro-nats. Training is
+    * closed-form count aggregation (the NB likelihood over the hashed
+    * feature space — exact, distributed, SQL-replayable) rather than
     * fastText's SGD, which no second engine could replay; inference is
-    * the same dot-product-plus-bias linear form fastText serves. */
-  final case class HashedLinearModel(bucketTok: DataFrame, clsTot: DataFrame,
-                                     prior: DataFrame, buckets: Int,
-                                     seed: String)
+    * the same dot-product-plus-bias linear form fastText serves.
+    * `labels` (ascending) index every score array. */
+  final case class HashedLinearModel(bucketTok: Map[(String, Long), Long],
+                                     clsTot: Map[String, Long],
+                                     prior: Map[String, Long], buckets: Int,
+                                     seed: String) extends TextModel {
+    val labels: Seq[String] = clsTot.keys.toSeq.sorted
+    private[operators] lazy val table: LookupSum.Model =
+      labelCountTable(labels, bucketTok, clsTot, prior, buckets.toLong)
+    private[operators] override def keys(text: Column): Column =
+      featureSlots(text, buckets, seed)
+  }
 
   /** Per-feature hash slot: 52-bit md5 prefix of (seed, feature) mod
     * `buckets` — the [[hashedBigramScore]] idiom, portable to any
@@ -1189,96 +1050,61 @@ object TextAnalysis {
     transform(concat(w, bigrams), f => featureSlot(f, buckets, seed))
   }
 
-  /** Train the hashed linear classifier: one feature-grain shuffle to
-    * per-(label, slot) counts plus per-label totals and document-count
-    * priors. Laplace smoothing over the BUCKET space:
+  /** Train the hashed linear classifier: one feature-grain aggregate to
+    * per-(label, slot) counts (per-label totals are their sums) plus the
+    * document-count priors, both collected — O(buckets × labels).
+    * Laplace smoothing over the BUCKET space:
     * `w(slot|l) = ln((ctk+1)/(ctot+buckets+1))` in integer micro-nats;
     * slots never seen under a label fall to the default mass
-    * `ln(1/(ctot+buckets+1))`. */
-  def hashedLinearTrain(docs: DataFrame, idCol: String, textCol: String,
+    * `ln(1/(ctot+buckets+1))`. A NULL label fails. */
+  def hashedLinearTrain(docs: DataFrame, textCol: String,
                         labelCol: String, buckets: Int = 4096,
                         seed: String = "hl"): HashedLinearModel = {
     require(buckets > 0, "buckets must be positive")
-    val feats = docs.select(col(labelCol).as("label"),
-      explode(featureSlots(col(textCol), buckets, seed)).as("slot"))
-    val bucketTok = feats.groupBy("label", "slot")
-      .agg(count(lit(1)).as("ctk"))
-    val clsTot = feats.groupBy("label").agg(count(lit(1)).as("ctot"))
-    val nDocs = docs.agg(count(lit(1)).cast("long").as("n_docs"))
-    val prior = docs.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("cdocs"))
-      .crossJoin(broadcast(nDocs))
-      .select(col("label"),
-        round(log(col("cdocs").cast("double") / col("n_docs").cast("double"))
-          * 1e6).cast("long").as("prior_micro"))
-    HashedLinearModel(bucketTok, clsTot, prior, buckets, seed)
+    val cdocs = labelDocs(docs, labelCol)
+    val bucketTok = docs.select(col(labelCol).cast("string").as("label"),
+        explode(featureSlots(col(textCol), buckets, seed)).as("slot"))
+      .groupBy("label", "slot").count().collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    HashedLinearModel(bucketTok,
+      bucketTok.groupMapReduce(_._1._1)(_._2)(_ + _), logPriors(cdocs),
+      buckets, seed)
   }
 
-  /** Score documents against every class and keep the argmax — same
-    * scale shape as [[nbPredict]]: features × L through broadcast
-    * joins, collapsed by a map-side-combined aggregate, per-doc window
-    * argmax (score desc, label asc — deterministic cross-engine). */
+  /** Score documents against every class and keep the argmax — the
+    * [[nbPredict]] contract (score desc, label asc; NULL text absent;
+    * one per-row projection, stream-safe). */
   def hashedLinearPredict(model: HashedLinearModel, docs: DataFrame,
-                          idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byDoc = Window.partitionBy("id")
-      .orderBy(col("score_micro").desc, col("label"))
-    hashedLinearScored(model, docs, idCol, textCol)
-      .withColumn("rn", row_number().over(byDoc))
-      .filter(col("rn") === 1)
-      .select(col("id"), col("label").as("pred"), col("score_micro"))
-  }
+                          idCol: String, textCol: String): DataFrame =
+    predicted(model, model.labels, docs, idCol, textCol)
 
-  /** Per-(doc, label) micro-nat score frame — the join-form inference
-    * body shared by [[hashedLinearPredict]] (argmax on top) and
-    * [[hashedLinearMargin]] (target-vs-best-other margin on top). */
-  private def hashedLinearScored(model: HashedLinearModel, docs: DataFrame,
-                                 idCol: String, textCol: String): DataFrame = {
-    // collapse to (doc, slot, multiplicity) BEFORE the ×L label fan-out:
-    // a slot hit m times contributes m·w(slot,l) — one integer multiply,
-    // bit-equal to summing m occurrence rows, and the fan-out volume
-    // drops from features×L to distinct-slots×L (bounded by buckets)
-    val feats = docs.select(col(idCol).as("id"),
-        explode(featureSlots(col(textCol), model.buckets, model.seed))
-          .as("slot"))
-      .groupBy("id", "slot").agg(count(lit(1)).as("m"))
-    val labels = model.clsTot.select(col("label"), col("ctot"))
-    feats
-      .crossJoin(broadcast(labels))
-      .join(broadcast(model.bucketTok), Seq("label", "slot"), "left")
-      .select(col("id"), col("label"),
-        (col("m") *
-          round(log((coalesce(col("ctk"), lit(0L)) + lit(1L)).cast("double") /
-              (col("ctot") + lit(model.buckets.toLong + 1L)).cast("double"))
-            * 1e6).cast("long")).as("lp_micro"))
-      .groupBy("id", "label").agg(sum("lp_micro").as("feat_lp"))
-      .join(broadcast(model.prior), Seq("label"))
-      .select(col("id"), col("label"),
-        (col("feat_lp") + col("prior_micro")).as("score_micro"))
+  /** `score(target) − max_{l≠target} score(l)` over a bound
+    * [[textScores]] array of a model with `labels` — the Column form of
+    * [[hashedLinearMargin]]. Fails when it is built if `target` is not a
+    * label or is the only one. */
+  def scoreMargin(scores: Column, labels: Seq[String], target: String): Column = {
+    val ti = labels.indexOf(target)
+    require(ti >= 0, s"margin target '$target' is not a model label " +
+      s"(${labels.mkString(",")})")
+    require(labels.size >= 2, s"margin target '$target' is the only label")
+    element_at(scores, ti + 1) - array_max(concat(slice(scores, 1, ti),
+      slice(scores, ti + 2, labels.size - ti - 1)))
   }
 
   /** Binary-selection MARGIN of `target` against the best OTHER label,
-    * in exact integer micro-nats: `score(target) − max_{l≠target}
-    * score(l)` per document — positive means the classifier would pick
-    * `target`. This is the quantity a DCLM-style data-selection
-    * pipeline thresholds on (argmax alone cannot trade precision
-    * against recall). Same scale shape as [[hashedLinearPredict]]:
-    * broadcast model joins, one doc-grain aggregate, no new shuffle
-    * beyond the scored frame's. A document whose margin cannot be
-    * formed (target label or all other labels absent from the model)
-    * fails loudly rather than scoring NULL. */
+    * in exact integer micro-nats: `(id, margin)` with `margin =
+    * score(target) − max_{l≠target} score(l)` per document — positive
+    * means the classifier would pick `target`. This is the quantity a
+    * DCLM-style data-selection pipeline thresholds on (argmax alone
+    * cannot trade precision against recall). One per-row projection, so
+    * the same entry gates a stream. An unknown or sole target fails
+    * before any job; NULL-text rows are absent. */
   def hashedLinearMargin(model: HashedLinearModel, docs: DataFrame,
                          idCol: String, textCol: String,
-                         target: String): DataFrame =
-    hashedLinearScored(model, docs, idCol, textCol)
-      .groupBy("id")
-      .agg((max(when(col("label") === target, col("score_micro"))) -
-        max(when(col("label") =!= target, col("score_micro"))))
-        .as("margin"))
-      .filter(when(col("margin").isNull,
-        raise_error(lit(s"hashedLinearMargin: target '$target' or all " +
-          "other labels absent from the model")).cast("boolean"))
-        .otherwise(lit(true)))
+                         target: String): DataFrame = {
+    val margin = scoreMargin(col("__s"), model.labels, target)
+    scored(model, docs, idCol, textCol).select(col("id"), margin.as("margin"))
+  }
 
   /** Classifier calibration: the threshold sweep a selection pipeline
     * runs before choosing its operating point. For each candidate
@@ -1330,86 +1156,8 @@ object TextAnalysis {
                            labelCol: String, buckets: Int = 4096,
                            seed: String = "hl"): DataFrame =
     hashedLinearPredict(
-      hashedLinearTrain(docs, idCol, textCol, labelCol, buckets, seed),
+      hashedLinearTrain(docs, textCol, labelCol, buckets, seed),
       docs, idCol, textCol)
-
-  /** The broadcast-fold serving form of [[hashedLinearPredict]] — the
-    * model collapsed to one slot→weights map literal plus default and
-    * prior arrays, the whole classification a PURE PER-ROW PROJECTION
-    * (one fold over the feature-slot array, then an argmax) — bit-equal
-    * to the join form and streaming-safe, exactly the [[nbPredictFold]]
-    * contract. Driver-side materialization is min(buckets, distinct
-    * features) × L longs. */
-  def hashedLinearPredictFold(model: HashedLinearModel, docs: DataFrame,
-                              idCol: String, textCol: String): DataFrame = {
-    val (scores, labels) = hashedLinearScoreArray(model, col(textCol))
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), scores.as("scores"))
-      .select(col("id"),
-        nbPredFromScores(col("scores"), labels).as("pred"),
-        array_max(col("scores")).as("score_micro"))
-  }
-
-  /** The per-row hashed-linear score ARRAY (one micro-nat score per
-    * label, labels sorted ascending) over a text Column — the
-    * [[nbScoreArray]] twin: the model collapses to ONE slot→weights map
-    * literal plus default and prior arrays, the score is a single fold
-    * over the feature-slot array. Shared by [[hashedLinearPredictFold]]
-    * and the streaming curation gate. */
-  def hashedLinearScoreArray(model: HashedLinearModel,
-                             text: Column): (Column, Seq[String]) = {
-    def micro(num: Long, den: Long): Long =
-      BigDecimal(Math.log(num.toDouble / den.toDouble) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).longValue
-    val labels: Seq[String] = model.prior.select("label")
-      .collect().map(_.getString(0)).sorted.toSeq
-    val ctot: Map[String, Long] = model.clsTot.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val priorMicro: Map[String, Long] = model.prior.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val den = labels.map(l => ctot(l) + model.buckets.toLong + 1L)
-    val defaultArr: Seq[Long] = den.map(d => micro(1L, d))
-    val priorArr: Seq[Long] = labels.map(priorMicro)
-    val slotMap: Map[Long, Seq[Long]] = model.bucketTok.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._2)
-      .map { case (slot, rows) =>
-        val byLabel = rows.map(t => t._1 -> t._3).toMap
-        slot -> labels.indices.map(i =>
-          micro(byLabel.getOrElse(labels(i), 0L) + 1L, den(i))).toSeq
-      }
-    val lut = typedLit(slotMap)
-    val dflt = typedLit(defaultArr)
-    val scores = aggregate(
-      featureSlots(text, model.buckets, model.seed),
-      typedLit(priorArr),
-      (acc, s) => zip_with(acc,
-        coalesce(element_at(lut, s), dflt), (a, b) => a + b))
-    (scores, labels)
-  }
-
-  /** Per-row FOLD form of [[hashedLinearMargin]]: `score(target) −
-    * max_{l≠target} score(l)` as one Column over the
-    * [[hashedLinearScoreArray]] fold — bit-equal to the join form and
-    * streaming-safe (pure projection, no shuffle). The score array is
-    * BOUND through a transform lambda before being read twice (the
-    * round-16 column-tree lesson: a Scala `val c: Column` inlines its
-    * whole subtree at every reference, and this one is a fold over all
-    * feature slots). */
-  def hashedLinearMarginFold(model: HashedLinearModel, text: Column,
-                             target: String): Column = {
-    val (scores, labels) = hashedLinearScoreArray(model, text)
-    val ti = labels.indexOf(target)
-    require(ti >= 0,
-      s"hashedLinearMarginFold: target '$target' not a model label " +
-        s"(${labels.mkString(",")})")
-    require(labels.size >= 2,
-      "hashedLinearMarginFold needs at least one non-target label")
-    element_at(transform(array(scores), s =>
-      element_at(s, lit(ti + 1)) -
-        array_max(concat(slice(s, 1, ti),
-          slice(s, ti + 2, labels.size - ti - 1)))), 1)
-  }
 
   /** Pick the OPERATING threshold from a [[calibrationSweep]] frame:
     * the smallest threshold whose precision reaches
@@ -1611,24 +1359,23 @@ object TextAnalysis {
     * train-once / serve-everywhere contract as [[saveNbModel]]):
     * three bounded tables plus a 1-row meta frame (buckets, seed). */
   def saveHashedLinear(model: HashedLinearModel, dir: String): Unit = {
-    model.bucketTok.write.mode("overwrite").parquet(s"$dir/bucket_tok")
-    model.clsTot.write.mode("overwrite").parquet(s"$dir/cls_tot")
-    model.prior.write.mode("overwrite").parquet(s"$dir/prior")
-    val spark = model.bucketTok.sparkSession
-    import spark.implicits._
-    Seq((model.buckets, model.seed)).toDF("buckets", "seed")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    saveTable(model.bucketTok.toSeq.map { case ((l, s), c) => (l, s, c) },
+      s"$dir/bucket_tok", "label STRING, slot BIGINT, ctk BIGINT NOT NULL")
+    saveLabelTables(model.clsTot, model.prior, dir)
+    saveTable(Seq((model.buckets, model.seed)), s"$dir/meta",
+      "buckets INT NOT NULL, seed STRING")
   }
 
   /** Load a model persisted by [[saveHashedLinear]]; predictions are
     * bit-equal to the in-memory one. */
   def loadHashedLinear(spark: org.apache.spark.sql.SparkSession,
                        dir: String): HashedLinearModel = {
-    val meta = spark.read.parquet(s"$dir/meta").head
+    val meta = loadTable(spark, s"$dir/meta").head
     HashedLinearModel(
-      bucketTok = spark.read.parquet(s"$dir/bucket_tok"),
-      clsTot = spark.read.parquet(s"$dir/cls_tot"),
-      prior = spark.read.parquet(s"$dir/prior"),
-      buckets = meta.getInt(0), seed = meta.getString(1))
+      bucketTok = loadTable(spark, s"$dir/bucket_tok").map(r => (r.getAs[String]("label"),
+        r.getAs[Long]("slot")) -> r.getAs[Long]("ctk")).toMap,
+      clsTot = loadByLabel(spark, s"$dir/cls_tot", "ctot"),
+      prior = loadByLabel(spark, s"$dir/prior", "prior_micro"),
+      buckets = meta.getAs[Int]("buckets"), seed = meta.getAs[String]("seed"))
   }
 }

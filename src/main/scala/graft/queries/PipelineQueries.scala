@@ -2112,6 +2112,16 @@ object PipelineQueries {
   /** The exact floor-division mean the Spark side computes via
     * [[TextAnalysis.avgLpMicro]] — lp sums are NEGATIVE, so the replay
     * needs the `((x % n) + n) % n` floor idiom, not `/`. */
+  /** An LM entry's rows as `(id, lang, score_micro)`: each document's
+    * floor-mean micro-nat score beside its language from `langOf`
+    * `(doc_id, lang)` — the scored input of the CCNet tercile entries. */
+  private def langScores(scored: DataFrame, nCol: String,
+                         langOf: DataFrame): DataFrame =
+    scored.join(langOf.toDF("id", "lang"), Seq("id"))
+      .select(col("id"), col("lang"),
+        TextAnalysis.avgLpMicro(col("lp_sum_micro"), col(nCol))
+          .as("score_micro"))
+
   private def avgLpSql(sum: String, n: String): String =
     s"CAST(($sum - ((($sum % $n) + $n) % $n)) / $n AS BIGINT)"
 
@@ -2223,11 +2233,9 @@ object PipelineQueries {
       |FROM rk ORDER BY lang, rk""".stripMargin,
     bench = false) { (s, _) =>
     val docs = s.table("documents")
-    val scored = TextAnalysis.trigramStupidBackoff(docs, "doc_id", "text", 20)
-      .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-      .select(col("id"), col("lang"),
-        TextAnalysis.avgLpMicro(col("lp_sum_micro"), col("n_trigrams"))
-          .as("score_micro"))
+    val scored = langScores(
+      TextAnalysis.trigramStupidBackoff(docs, "doc_id", "text", 20),
+      "n_trigrams", docs.select("doc_id", "lang"))
     TextAnalysis.pplBuckets(scored, "id", "lang", "score_micro")
       .select(col("id").as("doc_id"), col("lang"), col("score_micro"),
         col("rk"), col("n_lang"), col("bucket"))
@@ -2329,12 +2337,9 @@ object PipelineQueries {
       |       ELSE 'tail' END AS bucket
       |FROM rk ORDER BY lang, rk""".stripMargin) { (s, _) =>
     val docs = s.table("documents")
-    val scoredRaw = TextAnalysis.bigramLogProb(docs, "doc_id", "text", 20)
-    val scored = scoredRaw
-      .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-      .select(col("id"), col("lang"),
-        TextAnalysis.avgLpMicro(col("lp_sum_micro"), col("n_bigrams"))
-          .as("score_micro"))
+    val scored = langScores(
+      TextAnalysis.bigramLogProb(docs, "doc_id", "text", 20),
+      "n_bigrams", docs.select("doc_id", "lang"))
     TextAnalysis.pplBuckets(scored, "id", "lang", "score_micro")
       .select(col("id").as("doc_id"), col("lang"), col("score_micro"),
         col("rk"), col("n_lang"), col("bucket"))
@@ -2374,11 +2379,9 @@ object PipelineQueries {
       |FROM pr JOIN pk2 ON pr.lang = pk2.lang WHERE rn <= keep
       |ORDER BY 1, 2""".stripMargin, bench = false) { (s, _) =>
     val docs = s.table("documents")
-    val scored = TextAnalysis.bigramLogProb(docs, "doc_id", "text", 20)
-      .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-      .select(col("id"), col("lang"),
-        TextAnalysis.avgLpMicro(col("lp_sum_micro"), col("n_bigrams"))
-          .as("score_micro"))
+    val scored = langScores(
+      TextAnalysis.bigramLogProb(docs, "doc_id", "text", 20),
+      "n_bigrams", docs.select("doc_id", "lang"))
     val kept = TextAnalysis.pplBuckets(scored, "id", "lang", "score_micro")
       .filter(col("bucket") =!= "tail")
       .select(col("id").as("doc_id"), col("lang"))
@@ -2831,6 +2834,17 @@ object PipelineQueries {
       .orderBy("doc_id")
   }
 
+  /** The 'en' margin of every document under the hashed-linear model
+    * the calibrate/eval entries train (64 buckets, seed "hl"):
+    * `(id, margin, pos, <extra>)`, `pos` = the document is 'en'. */
+  private def enMargins(docs: DataFrame, extra: String*): DataFrame =
+    TextAnalysis.hashedLinearMargin(
+        TextAnalysis.hashedLinearTrain(docs, "text", "lang",
+          buckets = 64, seed = "hl"),
+        docs, "doc_id", "text", target = "en")
+      .join(docs.select(Seq(col("doc_id").as("id"),
+        (col("lang") === "en").as("pos")) ++ extra.map(col): _*), Seq("id"))
+
   /** Classifier CALIBRATION sweep ([[TextAnalysis.hashedLinearMargin]] +
     * [[TextAnalysis.calibrationSweep]]): the DCLM-style data-selection
     * workflow — score every doc's 'en'-vs-best-other micro-nat margin,
@@ -2872,14 +2886,7 @@ object PipelineQueries {
       |  CASE WHEN tp + fn = 0 THEN CAST(1000000 AS BIGINT)
       |    ELSE tp * 1000000 // (tp + fn) END AS recall_micro
       |FROM cnt ORDER BY thr""".stripMargin, bench = false) { (s, _) =>
-    val docs = s.table("documents")
-    val model = TextAnalysis.hashedLinearTrain(docs, "doc_id", "text",
-      "lang", buckets = 64, seed = "hl")
-    val marg = TextAnalysis.hashedLinearMargin(model, docs, "doc_id",
-      "text", target = "en")
-    val scored = marg.join(
-      docs.select(col("doc_id").as("id"), (col("lang") === "en").as("pos")),
-      Seq("id"))
+    val scored = enMargins(s.table("documents"))
     TextAnalysis.calibrationSweep(scored, "margin", "pos",
         Seq(-2000000L, -1000000L, -500000L, -200000L, 0L, 200000L, 1000000L))
       .orderBy("thr")
@@ -2912,15 +2919,7 @@ object PipelineQueries {
       |  CAST((auc_num * 1000000) // (2 * n_pos * n_neg) AS BIGINT)
       |    AS auc_micro
       |FROM aucfin""".stripMargin, bench = false) { (s, _) =>
-    val docs = s.table("documents")
-    val model = TextAnalysis.hashedLinearTrain(docs, "doc_id", "text",
-      "lang", buckets = 64, seed = "hl")
-    val marg = TextAnalysis.hashedLinearMargin(model, docs, "doc_id",
-      "text", target = "en")
-    val scored = marg.join(
-      docs.select(col("doc_id").as("id"), (col("lang") === "en").as("pos")),
-      Seq("id"))
-    TextAnalysis.rocAuc(scored, "margin", "pos")
+    TextAnalysis.rocAuc(enMargins(s.table("documents")), "margin", "pos")
   }
 
   /** EXACT average precision ([[TextAnalysis.averagePrecision]]): the
@@ -2947,15 +2946,8 @@ object PipelineQueries {
       |SELECT n_pos, n, sum_term_micro,
       |  CAST(sum_term_micro // n_pos AS BIGINT) AS ap_micro
       |FROM apt CROSS JOIN apn""".stripMargin, bench = false) { (s, _) =>
-    val docs = s.table("documents")
-    val model = TextAnalysis.hashedLinearTrain(docs, "doc_id", "text",
-      "lang", buckets = 64, seed = "hl")
-    val marg = TextAnalysis.hashedLinearMargin(model, docs, "doc_id",
-      "text", target = "en")
-    val scored = marg.join(
-      docs.select(col("doc_id").as("id"), (col("lang") === "en").as("pos")),
-      Seq("id"))
-    TextAnalysis.averagePrecision(scored, "margin", "pos", "id")
+    TextAnalysis.averagePrecision(enMargins(s.table("documents")), "margin",
+      "pos", "id")
   }
 
   /** Per-GROUP exact AUC ([[TextAnalysis.rocAuc]] with `byCols`): the
@@ -2987,16 +2979,8 @@ object PipelineQueries {
       |    THEN CAST((auc_num * 1000000) // (2 * n_pos * n_neg) AS BIGINT)
       |    END AS auc_micro
       |FROM aucfin ORDER BY source""".stripMargin, bench = false) { (s, _) =>
-    val docs = s.table("documents")
-    val model = TextAnalysis.hashedLinearTrain(docs, "doc_id", "text",
-      "lang", buckets = 64, seed = "hl")
-    val marg = TextAnalysis.hashedLinearMargin(model, docs, "doc_id",
-      "text", target = "en")
-    val scored = marg.join(
-      docs.select(col("doc_id").as("id"),
-        (col("lang") === "en").as("pos"), col("source")),
-      Seq("id"))
-    TextAnalysis.rocAuc(scored, "margin", "pos", byCols = Seq("source"))
+    TextAnalysis.rocAuc(enMargins(s.table("documents"), "source"), "margin",
+        "pos", byCols = Seq("source"))
       .orderBy("source")
   }
 
@@ -3020,19 +3004,11 @@ object PipelineQueries {
       |  (SELECT CAST(pthr AS BIGINT) FROM pk) AS thr
       |FROM sel GROUP BY lang ORDER BY lang""".stripMargin,
     bench = false) { (s, _) =>
-    val docs = s.table("documents")
-    val model = TextAnalysis.hashedLinearTrain(docs, "doc_id", "text",
-      "lang", buckets = 64, seed = "hl")
-    val marg = TextAnalysis.hashedLinearMargin(model, docs, "doc_id",
-      "text", target = "en")
-    val scored = marg.join(
-      docs.select(col("doc_id").as("id"), (col("lang") === "en").as("pos")),
-      Seq("id"))
+    val scored = enMargins(s.table("documents"), "lang")
     val sweep = TextAnalysis.calibrationSweep(scored, "margin", "pos",
       Seq(-2000000L, -1000000L, -500000L, -200000L, 0L, 200000L, 1000000L))
     val thr = TextAnalysis.pickThreshold(sweep, minPrecisionMicro = 520000L)
-    marg.filter(col("margin") >= thr)
-      .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
+    scored.filter(col("margin") >= thr)
       .groupBy("lang")
       .agg(count(lit(1)).as("n"), min(col("id")).as("min_id"),
         max(col("id")).as("max_id"))
@@ -4125,12 +4101,9 @@ object PipelineQueries {
         Seq("doc_id"))
       .select("doc_id", "pred", "text")
       .persist()
-    val scoredRaw = TextAnalysis.bigramLogProb(ctext, "doc_id", "text", 20)
-    val scored = scoredRaw
-      .join(ctext.select(col("doc_id").as("id"), col("pred")), Seq("id"))
-      .select(col("id"), col("pred").as("lang"),
-        TextAnalysis.avgLpMicro(col("lp_sum_micro"), col("n_bigrams"))
-          .as("score_micro"))
+    val scored = langScores(
+      TextAnalysis.bigramLogProb(ctext, "doc_id", "text", 20),
+      "n_bigrams", ctext.select("doc_id", "pred"))
     val bucketed = TextAnalysis.pplBuckets(scored, "id", "lang",
       "score_micro")
     val thr = TextAnalysis.pplThresholds(bucketed)

@@ -15,6 +15,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * All transforms take/return streaming DataFrames from the public
  * `readStream`/`writeStream` API, so the same code runs on any source
  * (file, Kafka, rate) and sink.
+ *
+ * Trained text models have no streaming twin here: their batch entries
+ * (`unigramLogProb(model, …)`, `bigramLogProb`, `trigramStupidBackoff`,
+ * `nbPredict`, `hashedLinearPredict`/`Margin` in
+ * [[graft.operators.TextAnalysis]]) are per-row projections over the one
+ * scorer [[graft.operators.TextAnalysis.textScores]] and run on a stream
+ * unchanged.
  */
 object StreamingOps {
 
@@ -88,87 +95,6 @@ object StreamingOps {
         col("session_window.end").as("sess_end"), col(keyCol),
         col("n_events"))
 
-  /** Score a STREAM of documents against a STATIC unigram model trained
-    * batch-side ([[graft.operators.TextAnalysis.unigramLogProb]]'s model
-    * shape: a (tok, cnt) vocab plus corpus totals) — the deploy-time
-    * form of quality filtering: train once on the existing corpus, score
-    * every incoming document with a stream-static broadcast join. Emits
-    * (id, n_toks, lp_sum_micro, avg_logprob) per arriving doc; the
-    * micro-nat integer arithmetic matches the batch scorer exactly, so
-    * streaming and batch scores for the same doc are identical. */
-  def scoreStreamUnigram(docs: DataFrame, idCol: String, textCol: String,
-                         vocab: DataFrame, nTotal: Long, vSize: Long): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-      explode(split(lower(col(textCol)), " ")).as("tok"))
-    toks
-      .join(broadcast(vocab.select(col("tok"), col("cnt"))), Seq("tok"), "left")
-      .select(col("id"),
-        round(log((coalesce(col("cnt"), lit(0L)) + lit(1L)).cast("double") /
-            lit(nTotal + vSize + 1L).cast("double")) * 1e6)
-          .cast("long").as("lp_micro"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_toks"),
-        sum("lp_micro").as("lp_sum_micro"))
-      .select(col("id"), col("n_toks"), col("lp_sum_micro"),
-        (col("lp_sum_micro").cast("double") / col("n_toks") / lit(1e6))
-          .as("avg_logprob"))
-  }
-
-  /** Score a STREAM of documents against a STATIC bigram model trained
-    * batch-side ([[graft.operators.TextAnalysis.bigramModel]]) — the
-    * conditional-probability upgrade of [[scoreStreamUnigram]]. Bigrams
-    * are formed per arriving row by zipping the token array with its own
-    * tail (equivalent to the batch scorer's per-doc lag window, but with
-    * no window operator — streaming-safe); OOV mapping and the smoothed
-    * p = (c12+1)/(c1+V+1) then ride stream-static broadcast joins.
-    * Same micro-nat integer arithmetic as the batch scorer, so scores
-    * for the same doc are bit-identical. Docs with fewer than two
-    * tokens produce no output row (no bigrams — batch parity). */
-  def scoreStreamBigram(docs: DataFrame, idCol: String, textCol: String,
-                        model: graft.operators.TextAnalysis.BigramModel): DataFrame = {
-    val t = split(lower(col(textCol)), " ")
-    val pairs = docs.select(col(idCol).as("id"),
-        explode(arrays_zip(
-            slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1)))
-          .as("p"))
-      .select(col("id"),
-        col("p").getField("0").as("w1raw"), col("p").getField("1").as("w2raw"))
-    val v1 = model.vocab.select(col("tok").as("w1raw"), col("in_v").as("v1"))
-    val v2 = model.vocab.select(col("tok").as("w2raw"), col("in_v").as("v2"))
-    pairs
-      .join(broadcast(v1), Seq("w1raw"), "left")
-      .join(broadcast(v2), Seq("w2raw"), "left")
-      .select(col("id"),
-        when(col("v1").isNotNull, col("w1raw")).otherwise(lit("<oov>")).as("w1"),
-        when(col("v2").isNotNull, col("w2raw")).otherwise(lit("<oov>")).as("w2"))
-      .join(broadcast(model.c12), Seq("w1", "w2"))
-      .join(broadcast(model.c1), Seq("w1"))
-      .select(col("id"),
-        round(log((col("c12") + lit(1L)).cast("double") /
-            (col("c1") + lit(model.vSize) + lit(1L)).cast("double")) * 1e6)
-          .cast("long").as("lp_micro"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_bigrams"),
-        sum("lp_micro").as("lp_sum_micro"))
-  }
-
-  /** Score a STREAM of documents under a batch-trained stupid-backoff
-    * trigram model ([[graft.operators.TextAnalysis.trigramModel]]) via
-    * the per-row fold ([[graft.operators.TextAnalysis
-    * .trigramScoreColumns]] — map-literal tables, one pure projection,
-    * no window/join/state, append-mode safe). Bit-equal to the batch
-    * [[graft.operators.TextAnalysis.trigramStupidBackoff]] on every doc
-    * both emit. Emits (id, n_trigrams, lp_sum_micro) per arriving doc
-    * (trigram-less docs fold to (0, 0)). */
-  def scoreStreamTrigram(docs: DataFrame, idCol: String, textCol: String,
-                         model: graft.operators.TextAnalysis.TrigramModel)
-      : DataFrame = {
-    val (n, s) = graft.operators.TextAnalysis
-      .trigramScoreColumns(model, col(textCol))
-    docs.select(col(idCol).as("id"), n.as("n_trigrams"),
-      s.as("lp_sum_micro"))
-  }
-
   /** Count BPE tokens of ARRIVING documents under merges trained
     * batch-side ([[graft.operators.TextAnalysis.trainBpeMerges]]) — the
     * deploy-time token-budget meter: train the tokenizer once on the
@@ -185,34 +111,6 @@ object StreamingOps {
     docs.select(col(idCol).as("id"),
       graft.operators.TextAnalysis.bpeTokenCountTrained(textCol, merges)
         .as("n_bpe"))
-
-  /** Classify ARRIVING documents with a Naive Bayes model trained
-    * batch-side ([[graft.operators.TextAnalysis.nbTrain]]) — the
-    * deploy-time domain/quality router: train once on the existing
-    * corpus, tag every incoming document with its predicted class. The
-    * model rides as literals and the whole classification is one
-    * per-row `aggregate` fold + argmax
-    * ([[graft.operators.TextAnalysis.nbPredictFold]] — no join, no
-    * aggregation, no window), so the stream stays append-mode-safe and
-    * predictions are bit-equal to the batch
-    * [[graft.operators.TextAnalysis.nbPredict]] argmax. Emits
-    * (id, pred, score_micro) per arriving doc. */
-  def nbPredictStream(docs: DataFrame, idCol: String, textCol: String,
-                      model: graft.operators.TextAnalysis.NbModel): DataFrame =
-    graft.operators.TextAnalysis.nbPredictFold(model, docs, idCol, textCol)
-
-  /** Streaming hashed-linear classification — the fastText-shaped twin
-    * of [[nbPredictStream]]: a batch-trained
-    * [[graft.operators.TextAnalysis.HashedLinearModel]] served as one
-    * slot→weights literal fold per arriving doc
-    * ([[graft.operators.TextAnalysis.hashedLinearPredictFold]] — pure
-    * projection, append-mode-safe, bit-equal to the batch join form). */
-  def hashedLinearPredictStream(docs: DataFrame, idCol: String,
-                                textCol: String,
-                                model: graft.operators.TextAnalysis
-                                  .HashedLinearModel): DataFrame =
-    graft.operators.TextAnalysis
-      .hashedLinearPredictFold(model, docs, idCol, textCol)
 
   /** Streaming ingest curation — the deploy-time filter chain a
     * training-data pipeline runs on ARRIVING documents, composed from
@@ -231,13 +129,14 @@ object StreamingOps {
     *     `gopherQualityFlags`);
     *  4. OPTIONAL Naive-Bayes class gate (`nbGate` — a batch-trained
     *     [[graft.operators.TextAnalysis.NbModel]] plus the label set to
-    *     keep; the prediction is the same per-row fold + argmax as
-    *     [[nbPredictStream]], bit-equal to the batch `nbPredict`) — or
-    *     the hashed-linear twin (`hlGate`, a
+    *     keep; the prediction is the one scorer
+    *     [[graft.operators.TextAnalysis.textScores]] + argmax, the
+    *     Column the batch `nbPredict` selects) — or the hashed-linear
+    *     gate (`hlGate`, a
     *     [[graft.operators.TextAnalysis.HashedLinearModel]]) — or the
     *     CALIBRATED margin gate (`hlMargin` = (model, target,
     *     minMarginMicro): keep docs whose
-    *     [[graft.operators.TextAnalysis.hashedLinearMarginFold]] for
+    *     [[graft.operators.TextAnalysis.scoreMargin]] for
     *     `target` reaches the operating threshold a
     *     [[graft.operators.TextAnalysis.calibrationSweep]] +
     *     `pickThreshold` chose batch-side — the DCLM selection shape;
@@ -282,7 +181,7 @@ object StreamingOps {
     *  7b. `lmGate` = (bigramModel, perLangCutoffMicro) — the
     *     CCNet-style perplexity quality gate: each doc's exact
     *     floor-mean micro-nat bigram score
-    *     ([[graft.operators.TextAnalysis.bigramScoreColumns]] +
+    *     ([[graft.operators.TextAnalysis.textScores]] +
     *     [[graft.operators.TextAnalysis.avgLpMicro]]) must clear its
     *     language's frozen cutoff (typically
     *     [[graft.operators.TextAnalysis.pplThresholds]]' tercile
@@ -350,24 +249,25 @@ object StreamingOps {
       .transform(d => gopher.fold(d)(rules =>
         d.filter(TextAnalysis.gopherKeep(col(textCol), rules))))
     // CCNet-style LM-perplexity gate: a batch-trained bigram model
-    // scores each arriving doc via the PER-ROW fold
-    // (TextAnalysis.bigramScoreColumns — no join/agg/window, so append
-    // mode survives) and the doc passes iff its language has a frozen
+    // scores each arriving doc with the one per-row scorer
+    // (TextAnalysis.textScores — no join/agg/window, so append mode
+    // survives) and the doc passes iff its language has a frozen
     // cutoff (pplThresholds on a calibration run) and its exact
     // floor-mean micro-nat score clears it. Bigram-less docs (a single
     // token) have no score and drop — same absence rule as the batch
     // scorer's output.
     val gated = lmGate.fold(gated0) { case (m, cutoffs) =>
       require(cutoffs.nonEmpty, "lmGate needs at least one language cutoff")
-      val (nBg, lpSum) = TextAnalysis.bigramScoreColumns(m, col(textCol))
       gated0
-        // bind BOTH fold outputs once: avgLpMicro references its sum
+        // bind BOTH scorer outputs once: avgLpMicro references its sum
         // argument twice and its count three times, and an inlined
         // Column tree would re-run the whole tree per reference (the
         // r16 duplication trap) — the intermediate projection makes
         // every later reference a cheap attribute
-        .withColumn("__bg_s", lpSum)
-        .withColumn("__bg_n", nBg)
+        .withColumn("__bg_s",
+          element_at(TextAnalysis.textScores(m, col(textCol)), 1))
+        .withColumn("__bg_n",
+          size(TextAnalysis.tokens(col(textCol))).cast("long") - lit(1L))
         .withColumn("avg_lp_micro",
           TextAnalysis.avgLpMicro(col("__bg_s"), col("__bg_n")))
         .drop("__bg_s", "__bg_n")
@@ -380,28 +280,25 @@ object StreamingOps {
     }
     require(Seq(nbGate, hlGate, hlMargin).count(_.isDefined) <= 1,
       "at most one classifier gate (nbGate / hlGate / hlMargin)")
-    val scoreGate: Option[(org.apache.spark.sql.Column, Seq[String], Set[String])] =
-      nbGate.map { case (m, keep) =>
-        val (sc, ls) = TextAnalysis.nbScoreArray(m, col(textCol))
-        (sc, ls, keep)
-      }.orElse(hlGate.map { case (m, keep) =>
-        val (sc, ls) = TextAnalysis.hashedLinearScoreArray(m, col(textCol))
-        (sc, ls, keep)
-      })
+    val scoreGate: Option[(TextAnalysis.TextModel, Seq[String], Set[String])] =
+      nbGate.map { case (m, keep) => (m, m.labels, keep) }
+        .orElse(hlGate.map { case (m, keep) => (m, m.labels, keep) })
     val withPred = scoreGate match {
       case None => hlMargin.fold(gated) { case (m, target, minMargin) =>
+        val margin = TextAnalysis.scoreMargin(col("__hl_s"), m.labels, target)
         gated
-          .withColumn("margin_micro",
-            TextAnalysis.hashedLinearMarginFold(m, col(textCol), target))
+          .withColumn("__hl_s", TextAnalysis.textScores(m, col(textCol)))
+          .withColumn("margin_micro", margin)
+          .drop("__hl_s")
           .filter(col("margin_micro") >= minMargin)
       }
-      case Some((scores, labels, keepLabels)) =>
+      case Some((model, labels, keepLabels)) =>
         require(keepLabels.nonEmpty,
           "a classifier gate needs at least one keep label")
         gated
-          .withColumn("__nb_scores", scores)
+          .withColumn("__nb_scores", TextAnalysis.textScores(model, col(textCol)))
           .withColumn("pred",
-            TextAnalysis.nbPredFromScores(col("__nb_scores"), labels))
+            TextAnalysis.predictedLabel(col("__nb_scores"), labels))
           .filter(col("pred").isin(keepLabels.toSeq.sorted: _*))
     }
     val decontamed = decontam.fold(withPred) { case (fps, k, maxW) =>

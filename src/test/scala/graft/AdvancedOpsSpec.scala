@@ -316,28 +316,24 @@ class AdvancedOpsSpec extends AnyFunSuite {
   test("nbPredictFold: broadcast-fold serving is bit-equal to the join form") {
     import graft.operators.TextAnalysis
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val corpus = TextModelReference.collect(docs)
     // vocabSize 20 < distinct tokens, so the OOV fallback is exercised
-    val model = TextAnalysis.nbTrain(docs, "doc_id", "text", "lang", 20)
-    val join = TextAnalysis.nbPredict(model, docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-    val fold = TextAnalysis.nbPredictFold(model, docs, "doc_id", "text")
+    val model = TextAnalysis.nbTrain(docs, "text", "lang", 20)
+    // the reference is the plain-Scala scorer over the collected corpus
+    val join = TextModelReference.nb(corpus, 20, corpus.map(d => (d._1, d._2)))
+    val fold = TextAnalysis.nbPredict(model, docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(join.nonEmpty && fold.keySet === join.keySet)
     // exact integer micro-nat equality — label AND score, every doc
     fold.foreach { case (id, p) => assert(p === join(id),
       s"doc $id: fold $p != join ${join(id)}") }
-    // vocab-sharded fold (the >100 MB-LUT escape hatch): per-shard sums
-    // of long micro-nats are associative, so shards=4 is BIT-EQUAL —
-    // OOV mass added exactly once via the match-count complement
-    val sharded = TextAnalysis
-      .nbPredictFold(model, docs, "doc_id", "text", shards = 4)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-    assert(sharded === fold)
-    // degenerate shard counts: more shards than tokens still exact
-    val over = TextAnalysis
-      .nbPredictFold(model, docs, "doc_id", "text", shards = 64)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-    assert(over === fold)
+    // every label's score, not only the argmax
+    val (labels, scores) = TextModelReference.nbScores(corpus, 20,
+      corpus.map(d => (d._1, d._2)))
+    assert(model.labels === labels)
+    assert(docs.select(col("doc_id"),
+        TextAnalysis.textScores(model, col("text")))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap === scores)
     // NOTE: no accuracy assertion on this corpus — the synthetic `lang`
     // labels are independent of token content, so self-accuracy is
     // chance-level by construction. Learning is asserted on the
@@ -369,7 +365,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
   test("NB model save/load round-trip: predictions bit-equal") {
     import graft.operators.TextAnalysis
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val model = TextAnalysis.nbTrain(docs, "doc_id", "text", "lang", 20)
+    val model = TextAnalysis.nbTrain(docs, "text", "lang", 20)
     val dir = s"/tmp/graft_nb_model_${java.util.UUID.randomUUID().toString.take(8)}"
     TextAnalysis.saveNbModel(model, dir)
     val loaded = TextAnalysis.loadNbModel(spark, dir)
@@ -379,9 +375,10 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val fromDisk = TextAnalysis.nbPredict(loaded, docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(fromDisk === orig)
-    // the fold/serving form over the loaded model agrees too
-    val foldDisk = TextAnalysis.nbPredictFold(loaded, docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    // and both agree with the plain-Scala scorer
+    val corpus = TextModelReference.collect(docs)
+    val foldDisk = TextModelReference.nb(corpus, 20,
+      corpus.map(d => (d._1, d._2)))
     assert(foldDisk === orig)
     // re-save (from the in-memory model) overwrites cleanly; NOTE:
     // saving a LOADED model onto its own source dir is the standard
@@ -396,13 +393,15 @@ class AdvancedOpsSpec extends AnyFunSuite {
     // two perfectly symmetric classes -> every score ties; argmax must
     // pick the lexicographically smallest label in both serving forms
     val train = Seq((1L, "x x y", "b"), (2L, "x x y", "a")).toDF("doc_id", "text", "lang")
-    val model = TextAnalysis.nbTrain(train, "doc_id", "text", "lang", 10)
+    val model = TextAnalysis.nbTrain(train, "text", "lang", 10)
     val apply = Seq((5L, "x y"), (6L, null.asInstanceOf[String])).toDF("doc_id", "text")
     val j = TextAnalysis.nbPredict(model, apply, "doc_id", "text").collect()
-    val f = TextAnalysis.nbPredictFold(model, apply, "doc_id", "text").collect()
+    val f = TextModelReference.nb(
+      Seq((1L, "x x y", "b"), (2L, "x x y", "a")), 10,
+      Seq((5L, "x y"), (6L, null))).toSeq
     assert(j.map(_.getLong(0)).toSeq === Seq(5L) && j.head.getString(1) === "a")
-    assert(f.map(_.getLong(0)).toSeq === Seq(5L) && f.head.getString(1) === "a")
-    assert(j.head.getLong(2) === f.head.getLong(2))
+    assert(f.map(_._1) === Seq(5L) && f.head._2._1 === "a")
+    assert(j.head.getLong(2) === f.head._2._2)
   }
 
   test("range join matches a plain theta join on random data") {
@@ -461,7 +460,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val docs = ((0 until 40).map(i => (i.toLong, doc(sports), "sports")) ++
       (40 until 80).map(i => (i.toLong, doc(cooking), "cooking")))
       .toDF("doc_id", "text", "lang")
-    val model = TextAnalysis.hashedLinearTrain(docs, "doc_id", "text",
+    val model = TextAnalysis.hashedLinearTrain(docs, "text",
       "lang", buckets = 64, seed = "hl")
     val join = TextAnalysis.hashedLinearPredict(model, docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2))))
@@ -470,11 +469,10 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val acc = join.count { case (id, (p, _)) => truth(id) == p }
     assert(acc === 80, s"separable corpus must classify perfectly, got $acc/80")
 
-    // broadcast-fold serving form: bit-equal to the join form
-    val fold = TextAnalysis
-      .hashedLinearPredictFold(model, docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2))))
-      .toMap
+    // the plain-Scala scorer over the collected corpus: bit-equal
+    val corpus = TextModelReference.collect(docs)
+    val fold = TextModelReference.hl(corpus, 64, "hl",
+      corpus.map(d => (d._1, d._2)))
     assert(fold === join)
 
     // persistence: the loaded model predicts bit-equal

@@ -48,23 +48,28 @@ class OperatorsSpec extends AnyFunSuite {
   test("hashedLinearMarginFold ≡ join-form margin for every target position") {
     // real corpus so slots collide; targets at the FIRST, middle and
     // LAST label index exercise both zero-length slice edges of the
-    // max-over-others concat
+    // max-over-others concat. The reference is the plain-Scala scorer.
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val model = TextAnalysis.hashedLinearTrain(real, "doc_id", "text",
+    val corpus = TextModelReference.collect(real)
+    val model = TextAnalysis.hashedLinearTrain(real, "text",
       "lang", buckets = 64)
     Seq("de", "es", "zh").foreach { target =>
-      val joinForm = TextAnalysis.hashedLinearMargin(model, real,
-          "doc_id", "text", target)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val joinForm = TextModelReference.hlMargin(corpus, 64, "hl",
+        corpus.map(d => (d._1, d._2)), target)
       val foldForm = real.select(col("doc_id"),
-          TextAnalysis.hashedLinearMarginFold(model, col("text"), target)
-            .as("m"))
+          TextAnalysis.textScores(model, col("text")).as("s"))
+        .select(col("doc_id"),
+          TextAnalysis.scoreMargin(col("s"), model.labels, target).as("m"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(foldForm === joinForm, s"target $target fold != join")
+      val entry = TextAnalysis.hashedLinearMargin(model, real, "doc_id",
+          "text", target)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(entry === joinForm, s"target $target entry != reference")
     }
     // unknown target fails loudly at plan build
     val e = intercept[IllegalArgumentException](
-      TextAnalysis.hashedLinearMarginFold(model, col("text"), "xx"))
+      TextAnalysis.hashedLinearMargin(model, real, "doc_id", "text", "xx"))
     assert(e.getMessage.contains("not a model label"))
   }
 
@@ -1226,20 +1231,25 @@ class OperatorsSpec extends AnyFunSuite {
   test("bigramScoreColumns fold ≡ batch bigramLogProb on the training " +
       "corpus; bigram-less docs fold to (0, 0)") {
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val m = TextAnalysis.bigramModel(docsDf, "doc_id", "text", 20)
-    val (nBg, lpSum) = TextAnalysis.bigramScoreColumns(m, col("text"))
+    val corpus = TextModelReference.collect(docsDf).map(d => (d._1, d._2))
+    val m = TextAnalysis.bigramModel(docsDf, "text", 20)
+    // the per-row Column: windows = tokens - 1, sum = the scorer's one entry
+    val nBg = size(TextAnalysis.tokens(col("text"))).cast("long") - 1L
+    val lpSum = element_at(TextAnalysis.textScores(m, col("text")), 1)
     val fold = docsDf
       .select(col("doc_id"), nBg.as("n"), lpSum.as("s"))
       .unionByName(Seq((999999L, "solo")).toDF("doc_id", "text")
         .select(col("doc_id"), nBg.as("n"), lpSum.as("s")))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val batch = TextAnalysis.bigramLogProb(docsDf, "doc_id", "text", 20)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val batch = TextModelReference.bigram(corpus, 20, corpus)
     assert(batch.nonEmpty)
     batch.foreach { case (id, v) => assert(fold(id) === v,
       s"doc $id: fold ${fold(id)} != batch $v") }
     // the single-token doc has no bigram: absent from batch, (0,0) fold
     assert(fold(999999L) === ((0L, 0L)))
+    assert(TextAnalysis.bigramLogProb(docsDf, "doc_id", "text", 20)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap === batch)
     // exact floor-mean helper: NULL on 0 bigrams, floor on negatives
     val means = Seq(((-7L), 2L), (0L, 0L)).toDF("s", "n")
       .select(TextAnalysis.avgLpMicro(col("s"), col("n")).as("m"))
@@ -1252,21 +1262,25 @@ class OperatorsSpec extends AnyFunSuite {
       "training corpus; trigram-less docs fold to (0, 0)") {
     import spark.implicits._
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val m = TextAnalysis.trigramModel(docsDf, "doc_id", "text", 20)
-    val (n3, lpSum) = TextAnalysis.trigramScoreColumns(m, col("text"))
+    val corpus = TextModelReference.collect(docsDf).map(d => (d._1, d._2))
+    val m = TextAnalysis.trigramModel(docsDf, "text", 20)
+    val n3 = greatest(size(TextAnalysis.tokens(col("text"))).cast("long") - 2L,
+      lit(0L))
+    val lpSum = element_at(TextAnalysis.textScores(m, col("text")), 1)
     val fold = docsDf
       .select(col("doc_id"), n3.as("n"), lpSum.as("s"))
       .unionByName(Seq((999999L, "just two")).toDF("doc_id", "text")
         .select(col("doc_id"), n3.as("n"), lpSum.as("s")))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
-    val batch = TextAnalysis.trigramStupidBackoff(docsDf, "doc_id", "text", 20)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
-      .toMap
+    val batch = TextModelReference.trigram(corpus, 20, corpus)
     assert(batch.nonEmpty)
     batch.foreach { case (id, v) => assert(fold(id) === v,
       s"doc $id: fold ${fold(id)} != batch $v") }
     assert(fold(999999L) === ((0L, 0L)))
+    assert(TextAnalysis.trigramStupidBackoff(docsDf, "doc_id", "text", 20)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+      .toMap === batch)
   }
 
   test("c4Clean: line rules (terminal punct, min words), doc-grain drops " +

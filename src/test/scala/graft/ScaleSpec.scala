@@ -124,16 +124,14 @@ class ScaleSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject(limit=16"), s"plan:\n$p")
   }
 
-  test("text_bigram_lp plan: model joins broadcast, doc-keyed window shuffle only") {
+  test("text_bigram_lp plan: one lookup_sum projection, no join, window or hash exchange") {
     val p = planOf("text_bigram_lp")
-    // the c12/c1/vocab model tables are (V+1)-bounded and must reach the
-    // token stream as broadcasts, never as shuffle joins
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
-      s"expected >=3 broadcast model joins, plan:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"a model table went through a shuffle join:\n$p")
-    // bigram formation: a window partitioned by doc id, never global
-    assert(p.contains("lag"))
+    // the trained model rides the kernel as a referenced object: scoring
+    // is one per-row projection — no model join, no doc-keyed window
+    // (the only exchange left is the entry's ORDER BY range sort)
+    assert(p.contains("lookup_sum("), s"plan:\n$p")
+    assert(!p.contains("Join") && !p.contains("Window"), s"plan:\n$p")
+    assert(!p.contains("hashpartitioning"), s"plan:\n$p")
     assert(!p.contains("SinglePartition"),
       s"found a single-partition stage (global funnel):\n$p")
   }
@@ -141,11 +139,11 @@ class ScaleSpec extends AnyFunSuite {
   test("cur_ppl_buckets plan: scorer joins broadcast, tercile windows " +
       "lang-partitioned, no global funnel") {
     val p = planOf("cur_ppl_buckets")
-    // the bigram model tables still broadcast through the composed plan
-    // (the doc-grain lang attach may legitimately shuffle-join — it is
-    // corpus × corpus on the id)
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
-      s"expected >=3 broadcast model joins, plan:\n$p")
+    // the bigram scorer is one per-row kernel with no model join; the
+    // one join left, the doc-grain lang attach, broadcasts at this size
+    assert("lookup_sum\\(".r.findAllIn(p).size == 1, s"plan:\n$p")
+    assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
+      s"plan:\n$p")
     // rank + count windows both partition by lang — the per-language
     // CCNet sort, never a corpus-global window
     assert(p.contains("row_number"), s"plan:\n$p")
@@ -163,17 +161,14 @@ class ScaleSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"plan:\n$p")
   }
 
-  test("text_trigram_sb plan: all model tables broadcast, no cartesian") {
+  test("text_trigram_sb plan: one lookup_sum projection, no join or cartesian") {
     val p = planOf("text_trigram_sb")
-    // trigram/bigram/unigram count tables are (V+1)^arity-bounded and
-    // must ALL broadcast (tri, c12, c23, u2, u3); the N total is a 1-row
-    // broadcast (its upstream global agg legitimately contains a
-    // SinglePartition exchange — the tfidf pin lesson)
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 5,
-      s"expected >=5 broadcast model joins, plan:\n$p")
-    assert(!p.contains("CartesianProduct"), s"plan:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"a model join fell back to a shuffle join:\n$p")
+    // the three backoff levels are ONE kernel's tables — no trigram,
+    // bigram or unigram table reaches the documents as a join
+    assert(p.contains("lookup_sum("), s"plan:\n$p")
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      s"plan:\n$p")
+    assert(!p.contains("hashpartitioning"), s"plan:\n$p")
   }
 
   test("kmeans assignment plan: centroid argmin is a pure projection, no join") {
@@ -355,15 +350,13 @@ class ScaleSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), s"plan:\n$p")
   }
 
-  test("text_nb_classify plan: model joins broadcast, one doc-keyed argmax window") {
+  test("text_nb_classify plan: one lookup_sum projection, no join or argmax window") {
     val p = planOf("text_nb_classify")
-    // every model table (labels, class-token counts, priors) is V×L
-    // bounded and must BROADCAST — a sort-merge join against the token
-    // stream would shuffle the corpus once per model table
-    assert(p.contains("BroadcastHashJoin") ||
-      p.contains("BroadcastNestedLoopJoin"), s"plan:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"plan:\n$p")
-    assert(!p.contains("CartesianProduct"), s"plan:\n$p")
+    // V×L label scores come from one per-row kernel and the argmax is
+    // array arithmetic — no tokens × labels fan-out, no per-doc window
+    assert(p.contains("lookup_sum("), s"plan:\n$p")
+    assert(!p.contains("Join") && !p.contains("Window"), s"plan:\n$p")
+    assert(!p.contains("hashpartitioning"), s"plan:\n$p")
   }
 
   test("text_html_extract plan: pure per-row projection, zero exchange before the sort") {
@@ -378,28 +371,27 @@ class ScaleSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"plan:\n$p")
   }
 
-  test("text_hashlin_classify plan: model joins broadcast, one argmax window") {
+  test("text_hashlin_classify plan: one lookup_sum projection, no join or argmax window") {
     val p = planOf("text_hashlin_classify")
-    // hashed-slot model tables are O(buckets × labels) and must
-    // BROADCAST against the feature stream — same contract as NB
-    assert(p.contains("BroadcastHashJoin") ||
-      p.contains("BroadcastNestedLoopJoin"), s"plan:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"plan:\n$p")
-    assert(!p.contains("CartesianProduct"), s"plan:\n$p")
+    // hashed-slot model is O(buckets × labels) inside one per-row
+    // kernel — same contract as NB
+    assert(p.contains("lookup_sum("), s"plan:\n$p")
+    assert(!p.contains("Join") && !p.contains("Window"), s"plan:\n$p")
+    assert(!p.contains("hashpartitioning"), s"plan:\n$p")
   }
 
   test("hashedLinearMarginFold plan: pure per-row projection, zero exchange") {
-    // the serving-form margin (the streaming hlMargin gate's body) must
-    // stay a single codegen'd projection — model as literals, one fold,
-    // no join/aggregate exchange anywhere
+    // the margin (the streaming hlMargin gate's body) must stay a
+    // single codegen'd projection — model as a referenced object, one
+    // kernel, no join/aggregate exchange anywhere
     val spark = TestSpark.spark
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val model = graft.operators.TextAnalysis.hashedLinearTrain(
-      docs, "doc_id", "text", "lang", buckets = 64)
-    val p = docs.select(
-        graft.operators.TextAnalysis.hashedLinearMarginFold(
-          model, org.apache.spark.sql.functions.col("text"), "en"))
+      docs, "text", "lang", buckets = 64)
+    val p = graft.operators.TextAnalysis
+      .hashedLinearMargin(model, docs, "doc_id", "text", "en")
       .queryExecution.executedPlan.toString
+    assert(p.contains("lookup_sum("), s"plan:\n$p")
     assert(!p.contains("Exchange"), s"plan:\n$p")
     assert(!p.contains("Join"), s"plan:\n$p")
   }

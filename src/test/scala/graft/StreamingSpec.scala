@@ -487,25 +487,20 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming unigram scoring matches the batch scorer doc-for-doc") {
     import spark.implicits._
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    // train the model BATCH-side: vocab + totals, same derivation as the
-    // batch scorer
-    val toks = docsDf.select(col("doc_id"),
-      explode(split(lower(col("text")), " ")).as("tok"))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(20)
-    val nTotal = counts.agg(sum("cnt")).head.getLong(0)
-    val vSize = vocab.count()
+    // train the model BATCH-side
+    val model = graft.operators.TextAnalysis
+      .unigramModel(docsDf, "text", 20)
 
-    // stream the SAME documents through the static-model scorer
+    // stream the SAME documents through the batch entry
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
     val batch1 = docsDf.select("doc_id", "text").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     in.addData(batch1.toIndexedSeq)
-    val scored = StreamingOps.scoreStreamUnigram(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      vocab, nTotal, vSize)
-    StreamingOps.runToMemory(scored, "stream_scores", OutputMode.Update())
+    val scored = graft.operators.TextAnalysis.unigramLogProb(model,
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text")
+    assert(scored.isStreaming)
+    StreamingOps.runToMemory(scored, "stream_scores", OutputMode.Append())
 
     val streamed = spark.table("stream_scores").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -705,7 +700,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("__rn",
         org.apache.spark.sql.functions.row_number().over(fpw))
       .filter(col("__rn") === 1).select("doc_id", "text")
-    val model = TextAnalysis.hashedLinearTrain(docsDf, "doc_id", "text",
+    val model = TextAnalysis.hashedLinearTrain(docsDf, "text",
       "lang", buckets = 64)
     val keepLabels = Set("en", "de")
     val ts = new java.sql.Timestamp(1704067200000L)
@@ -735,7 +730,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch && streamed.nonEmpty)
     assert(batch.size < base.count(), "hl label gate dropped nothing")
     // the two classifier gates are mutually exclusive (both emit pred)
-    val nb = TextAnalysis.nbTrain(docsDf, "doc_id", "text", "lang", 20)
+    val nb = TextAnalysis.nbTrain(docsDf, "text", "lang", 20)
     val e = intercept[IllegalArgumentException](StreamingOps.curateStream(
       in.toDF().toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
       minQuality = 0.05, watermarkDelay = "10 seconds",
@@ -746,7 +741,7 @@ class StreamingSpec extends AnyFunSuite {
   test("curateStream hlMargin gate ≡ batch calibrated-margin filter") {
     // the CALIBRATED selection gate: a batch-side sweep picks the
     // operating threshold, the stream keeps docs whose per-row margin
-    // fold clears it — bit-equal to the batch margin filter, and
+    // clears it — bit-equal to the batch margin filter, and
     // mutually exclusive with the argmax gates
     import spark.implicits._
     import graft.operators.{Curation, TextAnalysis}
@@ -758,7 +753,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("__rn",
         org.apache.spark.sql.functions.row_number().over(fpw))
       .filter(col("__rn") === 1).select("doc_id", "text")
-    val model = TextAnalysis.hashedLinearTrain(docsDf, "doc_id", "text",
+    val model = TextAnalysis.hashedLinearTrain(docsDf, "text",
       "lang", buckets = 64)
     // operating point from the batch calibration workflow
     val marg = TextAnalysis.hashedLinearMargin(model, docsDf, "doc_id",
@@ -786,8 +781,8 @@ class StreamingSpec extends AnyFunSuite {
       TextAnalysis.langIdHeuristic(col("text")) === "en" &&
         TextAnalysis.qualityScore(col("text")) >= 0.05)
     val batch = base
-      .withColumn("m",
-        TextAnalysis.hashedLinearMarginFold(model, col("text"), "en"))
+      .join(TextAnalysis.hashedLinearMargin(model, base, "doc_id", "text", "en")
+        .select(col("id").as("doc_id"), col("margin").as("m")), Seq("doc_id"))
       .filter(col("m") >= thr)
       .select(col("doc_id"), col("m"),
         Curation.piiRedact(col("text")).as("text"))
@@ -801,8 +796,8 @@ class StreamingSpec extends AnyFunSuite {
     // the sweep row at the picked threshold — this closes the
     // sweep→pick→gate COMPOSITION, not just the gate
     val gatedScored = base
-      .withColumn("m",
-        TextAnalysis.hashedLinearMarginFold(model, col("text"), "en"))
+      .join(TextAnalysis.hashedLinearMargin(model, base, "doc_id", "text", "en")
+        .select(col("id").as("doc_id"), col("margin").as("m")), Seq("doc_id"))
       .join(docsDf.select(col("doc_id"),
         (col("lang") === "en").as("pos")), Seq("doc_id"))
     val gatedSweep = TextAnalysis.calibrationSweep(gatedScored, "m", "pos",
@@ -839,16 +834,16 @@ class StreamingSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.row_number().over(fpw))
       .filter(col("__rn") === 1).select("doc_id", "text")
     // calibration: train the LM batch-side, score the gated population
-    // with the SAME per-row fold the stream uses, freeze the en tercile
+    // with the SAME per-row scorer the stream uses, freeze the en tercile
     // boundary (keep head+middle — the CCNet operating point)
-    val model = TextAnalysis.bigramModel(docsDf, "doc_id", "text", 20)
+    val model = TextAnalysis.bigramModel(docsDf, "text", 20)
     val base = uniq.filter(
       TextAnalysis.langIdHeuristic(col("text")) === "en" &&
         TextAnalysis.qualityScore(col("text")) >= 0.05)
-    val (nBg, lpSum) = TextAnalysis.bigramScoreColumns(model, col("text"))
-    val calScored = base
-      .select(col("doc_id").as("id"), lit("en").as("lang"),
-        TextAnalysis.avgLpMicro(lpSum, nBg).as("score_micro"))
+    val calScored = TextAnalysis.bigramLogProb(model, base, "doc_id", "text")
+      .select(col("id"), lit("en").as("lang"),
+        TextAnalysis.avgLpMicro(col("lp_sum_micro"), col("n_bigrams"))
+          .as("score_micro"))
       .filter(col("score_micro").isNotNull)
     val thr = TextAnalysis.pplThresholds(
       TextAnalysis.pplBuckets(calScored, "id", "lang", "score_micro"))
@@ -867,10 +862,11 @@ class StreamingSpec extends AnyFunSuite {
     StreamingOps.runToMemory(curated, "curate_lm", OutputMode.Append())
     val streamed = spark.table("curate_lm").collect()
       .map(r => (r.getLong(0), r.getLong(4), r.getString(5))).toSet
-    // batch replay: same gates, same fold, same cutoff
+    // batch replay: same gates, same scorer, same cutoff
     val batch = base
-      .withColumn("m", TextAnalysis.avgLpMicro(lpSum, nBg))
-      .filter(col("m").isNotNull && col("m") >= cutoff)
+      .join(calScored.select(col("id").as("doc_id"), col("score_micro").as("m")),
+        Seq("doc_id"))
+      .filter(col("m") >= cutoff)
       .select(col("doc_id"), col("m"),
         Curation.piiRedact(col("text")).as("text"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
@@ -956,7 +952,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("__rn",
         org.apache.spark.sql.functions.row_number().over(fpw))
       .filter(col("__rn") === 1).select("doc_id", "lang", "text")
-    val model = TextAnalysis.nbTrain(docsDf, "doc_id", "text", "lang", 20)
+    val model = TextAnalysis.nbTrain(docsDf, "text", "lang", 20)
     val rules = TextAnalysis.GopherRules(minWords = 30, maxWords = 90,
       minMeanLen = 4, maxMeanLen = 10, minStopwords = 2)
     val keepLabels = Set("en", "de")
@@ -1020,16 +1016,17 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val model = graft.operators.TextAnalysis
-      .bigramModel(docsDf, "doc_id", "text", vocabSize = 20)
+      .bigramModel(docsDf, "text", vocabSize = 20)
 
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
     val batch1 = docsDf.select("doc_id", "text").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     in.addData(batch1.toIndexedSeq)
-    val scored = StreamingOps.scoreStreamBigram(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
-    StreamingOps.runToMemory(scored, "stream_bigram", OutputMode.Update())
+    val scored = graft.operators.TextAnalysis.bigramLogProb(model,
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text")
+    assert(scored.isStreaming)
+    StreamingOps.runToMemory(scored, "stream_bigram", OutputMode.Append())
 
     val streamed = spark.table("stream_bigram").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -1047,13 +1044,13 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val model = graft.operators.TextAnalysis
-      .trigramModel(docsDf, "doc_id", "text", vocabSize = 20)
+      .trigramModel(docsDf, "text", vocabSize = 20)
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
     in.addData(docsDf.select("doc_id", "text").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1))).toIndexedSeq)
-    val scored = StreamingOps.scoreStreamTrigram(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
+    val scored = graft.operators.TextAnalysis.trigramStupidBackoff(model,
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text")
     assert(scored.isStreaming)
     StreamingOps.runToMemory(scored, "stream_trigram", OutputMode.Append())
     val streamed = spark.table("stream_trigram").collect()
@@ -1110,15 +1107,15 @@ class StreamingSpec extends AnyFunSuite {
     // train BATCH-side on the corpus's own lang labels (vocab 20 < the
     // distinct-token count, so streamed docs hit the OOV fallback too)
     val model = graft.operators.TextAnalysis
-      .nbTrain(docsDf, "doc_id", "text", "lang", 20)
+      .nbTrain(docsDf, "text", "lang", 20)
 
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
     val rows = docsDf.select("doc_id", "text").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     in.addData(rows.toIndexedSeq)
-    val preds = StreamingOps.nbPredictStream(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
+    val preds = graft.operators.TextAnalysis.nbPredict(model,
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text")
     assert(preds.isStreaming)
     StreamingOps.runToMemory(preds, "stream_nb", OutputMode.Append())
 
@@ -1138,14 +1135,14 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val model = graft.operators.TextAnalysis
-      .hashedLinearTrain(docsDf, "doc_id", "text", "lang", buckets = 64)
+      .hashedLinearTrain(docsDf, "text", "lang", buckets = 64)
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
     val rows = docsDf.select("doc_id", "text").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     in.addData(rows.toIndexedSeq)
-    val preds = StreamingOps.hashedLinearPredictStream(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
+    val preds = graft.operators.TextAnalysis.hashedLinearPredict(model,
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text")
     assert(preds.isStreaming)
     StreamingOps.runToMemory(preds, "stream_hl", OutputMode.Append())
     val streamed = spark.table("stream_hl").collect()
@@ -1982,7 +1979,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("__rn",
         org.apache.spark.sql.functions.row_number().over(fpw))
       .filter(col("__rn") === 1).select("doc_id", "text")
-    val model = TextAnalysis.hashedLinearTrain(docsDf, "doc_id", "text",
+    val model = TextAnalysis.hashedLinearTrain(docsDf, "text",
       "lang", buckets = 64)
     val rules = TextAnalysis.GopherRules(minWords = 30, maxWords = 90,
       minMeanLen = 4, maxMeanLen = 10, minStopwords = 2)
